@@ -729,18 +729,20 @@ def bench_bloom_pruning(spark, sf_dir: str) -> dict:
 
 
 def bench_cow_dml(spark, sf_dir: str) -> dict:
-    """Directory-granular vs block-granular (CoW) DML, measured: the
-    same selective DELETE (a ~5% shipdate window on a shipdate-sorted
-    64-block lineitem layout) through (a) the full-rewrite
-    SnapshotStore verb and (b) the ManifestStore CoW verb that carries
-    zone-map-provably-untouched blocks by reference. Three facts per
-    path: wall clock, files written, bytes written. At 100 TB the
-    bytes-written ratio IS the op cost ratio — the full rewrite moves
-    the table, CoW moves the change."""
+    """Full-rewrite vs block-granular (CoW) DML, measured: the same
+    selective DELETE (a ~5% shipdate window on a shipdate-sorted
+    64-block lineitem layout) as (a) a baseline that rewrites the
+    whole table without the predicate rows into a fresh dir and (b)
+    the ManifestStore CoW verb that carries zone-map-provably-
+    untouched blocks by reference. Three facts per path: wall clock,
+    files written, bytes written. At 100 TB the bytes-written ratio IS
+    the op cost ratio — the full rewrite moves the table, CoW moves
+    the change."""
     import glob as _glob
 
+    from pyspark.sql import functions as F
+
     from columnar_database_project_spark.catalog import load_table
-    from columnar_database_project_spark.engine import MicroBlockEngine
     from columnar_database_project_spark.sources.microblock import (
         MicroBlockWriter,
     )
@@ -749,7 +751,6 @@ def bench_cow_dml(spark, sf_dir: str) -> dict:
         init_manifest_table,
     )
     from columnar_database_project_spark.storage.manifests import ManifestStore
-    from columnar_database_project_spark.storage.snapshots import SnapshotStore
 
     base = os.path.join(REPO, ".bench_data", "cow_dml")
     if os.path.isdir(base):
@@ -776,17 +777,18 @@ def bench_cow_dml(spark, sf_dir: str) -> dict:
             if os.path.isfile(p)
         )
 
-    # (a) full rewrite through the directory-granular store
-    sstore = SnapshotStore(os.path.join(base, "snap"))
-    eng = MicroBlockEngine(spark)
-    v0, dst0 = sstore.stage_next()
-    MicroBlockWriter(block_rows=block_rows).write(sorted_li, dst0)
-    sstore.commit(v0)
-    eng.register("cow_li", spark.read.parquet(dst0))
+    # (a) full rewrite: the whole table minus the predicate rows,
+    # written into a fresh dir (SQL DELETE semantics: NULL keeps)
+    full_src = os.path.join(base, "full_src")
+    full_dir = os.path.join(base, "full_dst")
+    MicroBlockWriter(block_rows=block_rows).write(sorted_li, full_src)
+    src = spark.read.parquet(full_src)
     t0 = time.time()
-    rep_full = eng.delete_versioned("cow_li", pred, sstore)
+    kept = src.filter(~F.coalesce(F.expr(pred), F.lit(False)))
+    MicroBlockWriter(block_rows=block_rows).write(kept, full_dir)
+    n_full = spark.read.parquet(full_dir).count()
+    deleted_full = src.count() - n_full
     sec_full = time.time() - t0
-    full_dir = sstore.path_for(rep_full["version"])
     full_files = len(
         [f for f in os.listdir(full_dir) if not f.endswith((".crc",)) and f != "_SUCCESS"]
     )
@@ -801,10 +803,8 @@ def bench_cow_dml(spark, sf_dir: str) -> dict:
     cow_stage = os.path.join(mstore.root, "data", f"c{rep_cow['version']:06d}")
     cow_bytes = _tree_bytes(cow_stage) if os.path.isdir(cow_stage) else 0
 
-    assert rep_full["deleted"] == rep_cow["deleted"], "verbs disagree"
-    assert (
-        mstore.read(spark).count() == eng.table("cow_li").count()
-    ), "post-DML row counts diverged"
+    assert deleted_full == rep_cow["deleted"], "paths disagree"
+    assert mstore.read(spark).count() == n_full, "post-DML row counts diverged"
 
     # --- the third rung: merge-on-read for a TINY delete (one key).
     # Full rewrite moves the table, CoW moves one block, MoR moves
@@ -831,8 +831,6 @@ def bench_cow_dml(spark, sf_dir: str) -> dict:
     # the MoR read tax, measured: the DV anti-join rides every read
     # until compaction materializes the vectors away. Same aggregation
     # with DVs pending vs after compact_manifest purges them.
-    from pyspark.sql import functions as F
-
     from columnar_database_project_spark.storage.cow import compact_manifest
 
     agg = lambda: mstore.read(spark).agg(  # noqa: E731

@@ -265,209 +265,10 @@ class MicroBlockEngine:
         self.spark.catalog.refreshByPath(store_path)
         return self.spark.read.parquet(store_path)
 
-    def merge_into(
-        self,
-        name: str,
-        updates: DataFrame,
-        key: str,
-        dst: str,
-    ) -> dict:
-        """MERGE/upsert — the DML surface the lifecycle was missing:
-        rows of ``updates`` replace same-``key`` rows of registered
-        table ``name`` (WHEN MATCHED THEN UPDATE SET *), unmatched
-        update rows are appended (WHEN NOT MATCHED THEN INSERT *).
-
-        Plan shape: ONE key-equi ``left_anti`` shuffle against the
-        updates' keys plus a zero-shuffle union — the standard
-        copy-on-write merge (what Delta/Iceberg do per touched file,
-        here per table since microblock stores are snapshot-granular
-        like ``compact``/``snapshot_diff``). No broadcast hints:
-        ``updates`` is corpus-proportional in a backfill, so AQE
-        size-gates the join strategy (see DEPLOY.md broadcast policy).
-
-        Writes the merged snapshot as microblocks at ``dst`` (a NEW
-        directory — the source snapshot stays intact, same recovery
-        story as ``compact``'s staging), re-registers ``name`` at it,
-        and returns {"target_rows", "update_rows", "merged_rows",
-        "inserted"} (updated = update_rows - inserted).
-        """
-        from columnar_database_project_spark.sources.microblock import (
-            MicroBlockWriter,
-        )
-
-        target = self.table(name)
-        if set(updates.columns) != set(target.columns):
-            raise ValueError(
-                f"merge_into: updates columns {sorted(updates.columns)} "
-                f"!= target columns {sorted(target.columns)}"
-            )
-        self._check_not_current_snapshot(name, dst, "merge_into")
-        survivors = target.join(updates.select(key), on=key, how="left_anti")
-        merged = survivors.unionByName(updates)
-        MicroBlockWriter().write(merged, dst)
-        self.spark.catalog.refreshByPath(dst)
-        self.register(name, self.spark.read.parquet(dst))
-        n_target = target.count()
-        n_updates = updates.count()
-        n_merged = self.tables[name].count()
-        return {
-            "target_rows": n_target,
-            "update_rows": n_updates,
-            "merged_rows": n_merged,
-            "inserted": n_merged - n_target,
-        }
-
-    def merge_versioned(
-        self, name: str, updates: DataFrame, key: str, store
-    ) -> dict:
-        """``merge_into`` with the dst chosen by a ``SnapshotStore``
-        commit log: the rewrite stages in the next version dir and
-        only becomes visible on commit — crash mid-write leaves an
-        orphan no reader resolves. Returns the merge report plus
-        {"version": v}."""
-        v, dst = store.stage_next()
-        report = self.merge_into(name, updates, key, dst)
-        store.commit(v)
-        report["version"] = v
-        return report
-
-    def delete_versioned(self, name: str, predicate, store) -> dict:
-        """``delete_where`` under the same commit-log discipline."""
-        v, dst = store.stage_next()
-        report = self.delete_where(name, predicate, dst)
-        store.commit(v)
-        report["version"] = v
-        return report
-
-    def time_travel(self, name: str, store, version: int | None = None) -> DataFrame:
-        """Register (and return) table ``name`` as of ``version``
-        (default: latest committed). Reading an old version is just a
-        scan of its immutable snapshot dir — no log replay."""
-        v = store.latest() if version is None else version
-        if v is None or v not in store.versions():
-            raise ValueError(f"time_travel: version {version!r} not committed")
-        df = self.spark.read.parquet(store.path_for(v))
-        self.register(name, df)
-        return df
-
-    def _check_not_current_snapshot(self, name: str, dst: str, op: str) -> None:
-        """Refuse a DML rewrite whose output dir is the table's CURRENT
-        snapshot: Spark's overwrite would be deleting the very files
-        the rewrite plan is still scanning (self-overwrite corruption).
-        Chained DML must alternate snapshot dirs (a/b or versioned),
-        exactly like ``compact``'s staging-then-swap discipline."""
-        import os as _os
-
-        dst_real = _os.path.realpath(dst)
-        for f in self.tables[name].inputFiles():
-            p = _os.path.realpath(f.replace("file:", "", 1))
-            if _os.path.dirname(p) == dst_real:
-                raise ValueError(
-                    f"{op}: dst {dst!r} is table {name!r}'s current "
-                    "snapshot directory — write to a new dir "
-                    "(alternate/versioned snapshots), the source must "
-                    "outlive the rewrite"
-                )
-
-    def delete_where(self, name: str, predicate, dst: str) -> dict:
-        """DELETE — the third DML verb: rewrite registered table
-        ``name`` without the rows matching ``predicate`` (a Column or
-        a SQL boolean string), as a copy-on-write snapshot at ``dst``
-        (same recovery story as ``merge_into``). SQL DELETE semantics:
-        rows where the predicate is NULL are KEPT (only TRUE deletes).
-
-        Plan shape: one pushdown-eligible scan + filter + block-sized
-        write — no shuffle at all; at 100 TB this is the cheapest of
-        the DML verbs and partition pruning applies when the predicate
-        covers the partition column."""
-        from pyspark.sql import functions as F
-
-        from columnar_database_project_spark.sources.microblock import (
-            MicroBlockWriter,
-        )
-
-        self._check_not_current_snapshot(name, dst, "delete_where")
-        target = self.table(name)
-        cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-        kept = target.filter(~F.coalesce(cond, F.lit(False)))
-        MicroBlockWriter().write(kept, dst)
-        self.spark.catalog.refreshByPath(dst)
-        self.register(name, self.spark.read.parquet(dst))
-        n_target = target.count()
-        n_kept = self.tables[name].count()
-        return {
-            "target_rows": n_target,
-            "deleted": n_target - n_kept,
-            "remaining": n_kept,
-        }
-
-    def update_where(
-        self, name: str, predicate, assignments: dict, dst: str
-    ) -> dict:
-        """UPDATE ... SET — the fourth DML verb (INSERT via register/
-        ingest, MERGE, DELETE, now UPDATE): rewrite registered table
-        ``name`` with each column in ``assignments`` (col name →
-        Column expression or SQL string) replaced on rows matching
-        ``predicate``, as a copy-on-write snapshot at ``dst``. SQL
-        UPDATE semantics: rows where the predicate is NULL keep their
-        old values (only TRUE updates). Column order and names are
-        preserved; assigning an unknown column is an error.
-
-        Plan shape: one pushdown-ineligible scan (every row is
-        rewritten) + per-row CASE projection + block-sized write —
-        zero shuffles, same cost class as DELETE. At 100 TB a
-        partition-pruned variant would rewrite only matching
-        partitions; snapshot-granular stores rewrite the table, which
-        is why production UPDATE batches route through
-        ``merge_into`` when the touched fraction is small."""
-        from pyspark.sql import functions as F
-
-        from columnar_database_project_spark.sources.microblock import (
-            MicroBlockWriter,
-        )
-
-        self._check_not_current_snapshot(name, dst, "update_where")
-        target = self.table(name)
-        unknown = set(assignments) - set(target.columns)
-        if unknown:
-            raise ValueError(
-                f"update_where: unknown columns {sorted(unknown)}"
-            )
-        cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-        cond = F.coalesce(cond, F.lit(False))
-        cols = []
-        for c in target.columns:
-            if c in assignments:
-                a = assignments[c]
-                expr = F.expr(a) if isinstance(a, str) else a
-                cols.append(F.when(cond, expr).otherwise(F.col(c)).alias(c))
-            else:
-                cols.append(F.col(c))
-        n_updated = target.filter(cond).count()
-        MicroBlockWriter().write(target.select(*cols), dst)
-        self.spark.catalog.refreshByPath(dst)
-        self.register(name, self.spark.read.parquet(dst))
-        return {
-            "target_rows": self.tables[name].count(),
-            "updated": n_updated,
-        }
-
-    def update_versioned(
-        self, name: str, predicate, assignments: dict, store
-    ) -> dict:
-        """``update_where`` under the commit-log discipline (see
-        ``merge_versioned``)."""
-        v, dst = store.stage_next()
-        report = self.update_where(name, predicate, assignments, dst)
-        store.commit(v)
-        report["version"] = v
-        return report
-
-    # --------------------------------------------- block-granular CoW DML
-    # The versioned verbs above rewrite the WHOLE table per op
-    # (directory-granular snapshots). These rewrite only the blocks the
-    # zone-map/Bloom triage cannot prove untouched — change-
-    # proportional IO, the at-scale DML path (storage/cow.py).
+    # ----------------------------------------------------------------- DML
+    # Every verb commits a new version of a ManifestStore table
+    # (storage/cow.py): CoW rewrites only the blocks the zone-map/Bloom
+    # triage cannot prove untouched, MoR writes deletion vectors.
 
     def delete_where_cow(self, name: str, predicate, mstore, **kw) -> dict:
         from columnar_database_project_spark.storage.cow import (
@@ -571,8 +372,9 @@ class MicroBlockEngine:
         return report
 
     def time_travel_cow(self, name: str, mstore, version: int | None = None):
-        """Register (and return) ``name`` as of a manifest version —
-        resolving a manifest is metadata-only, like ``time_travel``."""
+        """Register (and return) ``name`` as of a manifest version
+        (default: latest committed) — resolving a manifest is
+        metadata-only, no log replay."""
         df = mstore.read(self.spark, version)
         self.register(name, df)
         return df

@@ -1691,30 +1691,50 @@ def q_engine_sql_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return eng.query(ENGINE_SQL)
 
 
-def q_engine_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE/upsert through the engine façade (copy-on-write DML,
-    ``MicroBlockEngine.merge_into``): a deterministic update batch
-    (every 10th order re-priced and re-statused) plus an insert batch
-    (every 97th order cloned to a new key) is merged into the orders
-    snapshot; the returned aggregate reads the WRITTEN microblock
-    snapshot back, so the oracle row checks the full
-    read→merge→write→read cycle, not just the plan.
-
-    Scale shape: one key-equi anti-join shuffle + zero-shuffle union +
-    block-sized parquet write — no broadcast hints (the update batch
-    is corpus-proportional in a backfill; AQE size-gates)."""
+def _demo_manifest_table(eng, name: str, df: DataFrame, tag: str):
+    """A fresh ManifestStore under the temp dir holding ``df`` as
+    version 1, registered on ``eng`` as ``name`` — the starting point
+    of every engine_* DML registry query."""
+    import shutil
     import tempfile
 
+    from columnar_database_project_spark.storage.cow import (
+        init_manifest_table,
+    )
+    from columnar_database_project_spark.storage.manifests import (
+        ManifestStore,
+    )
+
+    root = os.path.join(tempfile.gettempdir(), f"cdps_{tag}_{os.getpid()}")
+    shutil.rmtree(root, ignore_errors=True)
+    store = ManifestStore(root)
+    init_manifest_table(eng.spark, store, df)
+    eng.register_manifest(name, store, with_index=False)
+    return store
+
+
+def q_engine_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MERGE/upsert through the engine façade (``merge_cow`` on a
+    manifest table): a deterministic update batch (every 10th order
+    re-priced and re-statused) plus an insert batch (every 97th order
+    cloned to a new key) is merged into the orders table; the
+    returned aggregate reads the COMMITTED manifest version back, so
+    the oracle row checks the full read→merge→write→read cycle, not
+    just the plan.
+
+    Scale shape: key triage over the zone maps, one key-equi
+    anti-join on the touched blocks + union + block-sized parquet
+    write — no broadcast hints (the update batch is
+    corpus-proportional in a backfill; AQE size-gates)."""
     from columnar_database_project_spark.engine import MicroBlockEngine
 
     eng = MicroBlockEngine(spark)
     orders = load_table(spark, sf_dir, "orders")
-    eng.register("orders_merge_demo", orders)
-    dst = os.path.join(
-        tempfile.gettempdir(), f"cdps_merge_upsert_{os.getpid()}"
+    store = _demo_manifest_table(
+        eng, "orders_merge_demo", orders, "merge_upsert"
     )
-    eng.merge_into(
-        "orders_merge_demo", _merge_demo_updates(orders), "o_orderkey", dst
+    eng.merge_cow(
+        "orders_merge_demo", _merge_demo_updates(orders), "o_orderkey", store
     )
     return _status_rollup(eng.table("orders_merge_demo"))
 
@@ -1758,57 +1778,50 @@ def _status_rollup(df: DataFrame) -> DataFrame:
 
 def q_engine_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Versioned DML chain + time travel earning a hard-signal oracle
-    row: MERGE commits v1 in a ``SnapshotStore``, a DELETE commits v2
-    on top, then the query reads AS OF v1 — the returned aggregate
-    must equal the merge-only state even though the LATEST snapshot
-    has rows deleted. The oracle is therefore the same SQL as
-    ``engine_merge_upsert``: time travel returning the pre-delete
-    state IS the correctness claim. Old versions are immutable dirs;
-    reading one is a plain scan, no log replay."""
-    import shutil
-    import tempfile
-
+    row: a MERGE commits one manifest version, a DELETE commits the
+    next on top, then the query reads AS OF the merge's version — the
+    returned aggregate must equal the merge-only state even though the
+    LATEST version has rows deleted. The oracle is therefore the same
+    SQL as ``engine_merge_upsert``: time travel returning the
+    pre-delete state IS the correctness claim. Old versions are
+    immutable file lists; reading one resolves its manifest, no log
+    replay."""
     from columnar_database_project_spark.engine import MicroBlockEngine
-    from columnar_database_project_spark.storage.snapshots import (
-        SnapshotStore,
-    )
 
     eng = MicroBlockEngine(spark)
     orders = load_table(spark, sf_dir, "orders")
-    eng.register("orders_tt_demo", orders)
-    root = os.path.join(
-        tempfile.gettempdir(), f"cdps_time_travel_{os.getpid()}"
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    store = SnapshotStore(root)
-    eng.merge_versioned(
+    store = _demo_manifest_table(eng, "orders_tt_demo", orders, "time_travel")
+    merged = eng.merge_cow(
         "orders_tt_demo", _merge_demo_updates(orders), "o_orderkey", store
-    )  # v1
-    eng.delete_versioned(
-        "orders_tt_demo", F.col("o_orderstatus") == "M", store
-    )  # v2: drop everything the merge updated
-    return _status_rollup(eng.time_travel("orders_tt_demo", store, 1))
+    )
+    eng.delete_where_cow(
+        "orders_tt_demo", "o_orderstatus = 'M'", store
+    )  # drop everything the merge updated
+    return _status_rollup(
+        eng.time_travel_cow("orders_tt_demo", store, merged["version"])
+    )
 
 
 def q_engine_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DELETE through the engine façade (``delete_where``): drop every
-    low-value finished order, write the surviving snapshot, read it
-    back and aggregate — the oracle checks SQL DELETE semantics (only
-    predicate-TRUE rows go) over the written result. Scan + filter +
-    write, zero shuffles before the final 5-group aggregate."""
-    import tempfile
-
+    """DELETE through the engine façade (``delete_where_cow``): drop
+    every low-value finished order, commit the rewritten blocks, read
+    the new version back and aggregate — the oracle checks SQL DELETE
+    semantics (only predicate-TRUE rows go) over the written result.
+    Scan + filter + write of the touched blocks, zero shuffles before
+    the final 5-group aggregate."""
     from columnar_database_project_spark.engine import MicroBlockEngine
 
     eng = MicroBlockEngine(spark)
-    eng.register("orders_delete_demo", load_table(spark, sf_dir, "orders"))
-    dst = os.path.join(
-        tempfile.gettempdir(), f"cdps_delete_where_{os.getpid()}"
-    )
-    eng.delete_where(
+    store = _demo_manifest_table(
+        eng,
         "orders_delete_demo",
-        (F.col("o_orderstatus") == "F") & (F.col("o_totalprice") < 50000.0),
-        dst,
+        load_table(spark, sf_dir, "orders"),
+        "delete_where",
+    )
+    eng.delete_where_cow(
+        "orders_delete_demo",
+        "o_orderstatus = 'F' AND o_totalprice < 50000.0",
+        store,
     )
     return (
         eng.table("orders_delete_demo")
@@ -1822,33 +1835,35 @@ def q_engine_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_engine_update_set(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UPDATE ... SET through the engine façade (``update_where``) —
-    the fourth DML verb: every open low-value order is re-prioritized
-    and surcharged (+250.0, exactly representable so Spark and DuckDB
-    agree bit-for-bit), the rewritten snapshot is written and read
-    back, and the oracle row checks SQL UPDATE semantics (only
-    predicate-TRUE rows change; untouched columns survive byte-
-    identical) over the full read→update→write→read cycle.
+    """UPDATE ... SET through the engine façade (``update_where_cow``)
+    — the fourth DML verb: every open low-value order is
+    re-prioritized and surcharged (+250.0, exactly representable so
+    Spark and DuckDB agree bit-for-bit), the rewritten blocks are
+    committed and the new version read back, and the oracle row checks
+    SQL UPDATE semantics (only predicate-TRUE rows change; untouched
+    columns survive byte-identical) over the full
+    read→update→write→read cycle.
 
-    Scale shape: one scan + per-row CASE projection + block write —
-    zero shuffles before the final rollup; no broadcast anywhere."""
-    import tempfile
-
+    Scale shape: one scan of the touched blocks + per-row CASE
+    projection + block write — zero shuffles before the final rollup;
+    no broadcast anywhere."""
     from columnar_database_project_spark.engine import MicroBlockEngine
 
     eng = MicroBlockEngine(spark)
-    eng.register("orders_update_demo", load_table(spark, sf_dir, "orders"))
-    dst = os.path.join(
-        tempfile.gettempdir(), f"cdps_update_set_{os.getpid()}"
-    )
-    eng.update_where(
+    store = _demo_manifest_table(
+        eng,
         "orders_update_demo",
-        (F.col("o_orderstatus") == "O") & (F.col("o_totalprice") < 20000.0),
+        load_table(spark, sf_dir, "orders"),
+        "update_set",
+    )
+    eng.update_where_cow(
+        "orders_update_demo",
+        "o_orderstatus = 'O' AND o_totalprice < 20000.0",
         {
             "o_orderpriority": F.lit("5-SURCHARGED"),
             "o_totalprice": F.col("o_totalprice") + 250.0,
         },
-        dst,
+        store,
     )
     return (
         eng.table("orders_update_demo")

@@ -1,10 +1,9 @@
-"""Block-granular copy-on-write DML over a ManifestStore.
+"""Block-granular DML over a ManifestStore — the engine's one DML path.
 
-The engine's directory-granular DML verbs (engine.delete_where /
-update_where / merge_into) rewrite the WHOLE table per op — correct,
-but the cost scales with table size. These verbs scale with CHANGE
-size: the zone-map index (plus the Bloom sidecar when attached) triages
-every block of the current manifest into
+A DML op that rewrites the WHOLE table is correct, but its cost scales
+with table size. These verbs scale with CHANGE size: the zone-map index
+(plus the Bloom sidecar when attached) triages every block of the
+current manifest into
 
 - **carried** — the predicate PROVABLY matches no row (three-valued
   may_match == False): the block file enters the next manifest by
@@ -41,7 +40,10 @@ from columnar_database_project_spark.plans.sql_where import (
     parse_where,
 )
 from columnar_database_project_spark.sources.index import MicroBlockIndex
-from columnar_database_project_spark.sources.microblock import MicroBlockWriter
+from columnar_database_project_spark.sources.microblock import (
+    DEFAULT_BLOCK_ROWS,
+    MicroBlockWriter,
+)
 from columnar_database_project_spark.storage.manifests import (
     ManifestStore,
     list_block_files,
@@ -73,12 +75,15 @@ def _carried_dvs(store: ManifestStore, carried: list[str]) -> dict:
 
 
 def _pred_of(predicate) -> Pred:
-    """Boolean SQL string → Pred; outside the grammar → TruePred
-    (sound: every block becomes touched)."""
+    """Boolean SQL string → Pred; outside the grammar, or a Column
+    (opaque to the parser) → TruePred (sound: every block becomes
+    touched)."""
     if isinstance(predicate, Pred):
         return predicate
+    if not isinstance(predicate, str):
+        return TruePred()
     try:
-        return parse_where(str(predicate))
+        return parse_where(predicate)
     except WhereParseError:
         return TruePred()
 
@@ -127,12 +132,7 @@ def delete_where_cow(
         cond = F.coalesce(_cond(predicate), F.lit(False))
         kept = before.filter(~cond)
         deleted = before.count() - kept.count()
-        writer = (
-            MicroBlockWriter(block_rows=block_rows)
-            if block_rows
-            else MicroBlockWriter()
-        )
-        writer.write(kept, stage)
+        MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(kept, stage)
         new_files = list_block_files(stage)
     store.commit(
         v, new_files, carried, store.schema_json(),
@@ -312,17 +312,11 @@ def update_where_mor(
                 cols.append(expr.cast(types[c]).alias(c))
             else:
                 cols.append(F.col(c))
-        writer = (
-            MicroBlockWriter(block_rows=block_rows)
-            if block_rows
-            else MicroBlockWriter()
-        )
+        writer = MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS)
         # n_hit is DV-budget-bounded, so right-sizing the append to
         # ⌈n_hit/block⌉ tasks never concentrates more than the budget
-        br = block_rows or writer.block_rows
-        writer.write(
-            live.select(*cols).coalesce(max(1, n_hit // br or 1)), stage
-        )
+        n_tasks = max(1, n_hit // writer.block_rows or 1)
+        writer.write(live.select(*cols).coalesce(n_tasks), stage)
         new_files = list_block_files(stage)
     store.commit(v, new_files, files, store.schema_json(), dvs=merged)
     return {
@@ -420,12 +414,7 @@ def merge_mor(
         return rep
     merged, n_matched = got
     v, stage = store.stage_next()
-    writer = (
-        MicroBlockWriter(block_rows=block_rows)
-        if block_rows
-        else MicroBlockWriter()
-    )
-    writer.write(updates, stage)
+    MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(updates, stage)
     new_files = list_block_files(stage)
     store.commit(v, new_files, files, store.schema_json(), dvs=merged)
     return {
@@ -456,6 +445,12 @@ def update_where_cow(
     not fork the manifest's schema across files."""
     from pyspark.sql import functions as F
 
+    target_cols = [
+        f["name"] for f in json.loads(store.schema_json())["fields"]
+    ]
+    unknown = set(assignments) - set(target_cols)
+    if unknown:
+        raise ValueError(f"update_where_cow: unknown columns {sorted(unknown)}")
     pred = _pred_of(predicate)
     files = store.files_for()
     touched, carried, n_blocks = _triage(files, pred, "cow_update", blooms)
@@ -464,9 +459,6 @@ def update_where_cow(
     updated = 0
     if touched:
         target = store.read_subset(spark, touched)
-        unknown = set(assignments) - set(target.columns)
-        if unknown:
-            raise ValueError(f"update_where_cow: unknown columns {sorted(unknown)}")
         cond = F.coalesce(_cond(predicate), F.lit(False))
         types = dict(target.dtypes)
         cols = []
@@ -482,12 +474,9 @@ def update_where_cow(
             else:
                 cols.append(F.col(c))
         updated = target.filter(cond).count()
-        writer = (
-            MicroBlockWriter(block_rows=block_rows)
-            if block_rows
-            else MicroBlockWriter()
+        MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(
+            target.select(*cols), stage
         )
-        writer.write(target.select(*cols), stage)
         new_files = list_block_files(stage)
     store.commit(
         v, new_files, carried, store.schema_json(),
@@ -575,12 +564,7 @@ def merge_cow(
         out = survivors.unionByName(updates)
     else:
         out = updates
-    writer = (
-        MicroBlockWriter(block_rows=block_rows)
-        if block_rows
-        else MicroBlockWriter()
-    )
-    writer.write(out, stage)
+    MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(out, stage)
     new_files = list_block_files(stage)
     store.commit(
         v, new_files, carried, store.schema_json(),
@@ -615,12 +599,7 @@ def append_cow(
     if extra:
         raise ValueError(f"append_cow: unknown columns {sorted(extra)}")
     v, stage = store.stage_next()
-    writer = (
-        MicroBlockWriter(block_rows=block_rows)
-        if block_rows
-        else MicroBlockWriter()
-    )
-    writer.write(df, stage)
+    MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(df, stage)
     new_files = list_block_files(stage)
     carried = store.files_for()
     store.commit(
@@ -667,10 +646,6 @@ def compact_manifest(
     import pyarrow.parquet as pq
 
     from pyspark.sql import functions as F
-
-    from columnar_database_project_spark.sources.microblock import (
-        DEFAULT_BLOCK_ROWS,
-    )
 
     block_rows = block_rows or DEFAULT_BLOCK_ROWS
     files = store.files_for()
@@ -835,11 +810,6 @@ def init_manifest_table(
     ``meta`` is carried in the commit (the streaming sink's first
     batch needs its ``txn.batch_id`` witness here too)."""
     v, stage = store.stage_next()
-    writer = (
-        MicroBlockWriter(block_rows=block_rows)
-        if block_rows
-        else MicroBlockWriter()
-    )
-    writer.write(df, stage)
+    MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(df, stage)
     store.commit(v, list_block_files(stage), [], df.schema.json(), meta=meta)
     return {"version": v, "files": len(store.files_for(v))}

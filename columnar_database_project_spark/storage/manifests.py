@@ -1,9 +1,9 @@
 """ManifestStore — file-granular snapshots: a version IS a file list.
 
-``SnapshotStore`` (storage/snapshots.py) versions whole DIRECTORIES:
-every DML op rewrites the entire table, even a DELETE that touches one
-block. That is correct but scales with TABLE size, not CHANGE size —
-at 100 TB a selective delete must not move 100 TB. This store records
+Versioning whole DIRECTORIES would make every DML op rewrite the
+entire table, even a DELETE that touches one block: correct, but it
+scales with TABLE size, not CHANGE size — at 100 TB a selective delete
+must not move 100 TB. This store records
 each version as a MANIFEST (an explicit list of immutable block
 files), so a copy-on-write op writes only the blocks it changes and
 carries every untouched block BY REFERENCE into the next manifest —
@@ -21,10 +21,12 @@ Layout:
     <root>/_manifest.json                   {"versions": [...]} head
                                             log, atomic os.replace swap
 
-Crash story (same discipline as SnapshotStore): a crash mid-write
-leaves data files and possibly an m*.json that the head log never
-names — invisible to readers, reclaimed by ``vacuum``. Readers resolve
-head log → manifest → files; never directory listings.
+Crash story: a crash mid-write leaves data files and possibly an
+m*.json that the head log never names — invisible to readers,
+reclaimed by ``vacuum``. Readers resolve head log → manifest → files;
+never directory listings. Concurrent WRITERS are out of scope
+(single-writer per table); a second commit of the same version fails
+loudly instead of clobbering.
 
 ``vacuum`` is reference-counted: a block file created by commit 3 may
 be referenced by manifests 3..9, so files are deleted only when NO
@@ -138,8 +140,9 @@ class ManifestStore:
     def stage_next(self) -> tuple[int, str]:
         """(version, data dir) for the files a new commit will CREATE.
         Carried-over files are named in the manifest, not copied.
-        Numbering continues past rollbacks (same rationale as
-        SnapshotStore.stage_next)."""
+        The dir is NOT yet committed — invisible to readers until
+        ``commit``. Numbering continues past rollbacks, so a new write
+        never lands in a dir a rolled-back version still names."""
         staged = [
             int(d[1:])
             for d in os.listdir(os.path.join(self.root, "data"))

@@ -1,6 +1,6 @@
 """Structured Streaming twin of the engine's DML surface.
 
-``MicroBlockEngine.merge_into`` is the batch MERGE; a CDC feed (order
+``MicroBlockEngine.merge_cow`` is the batch MERGE; a CDC feed (order
 updates, profile changes, label corrections) is the same operation
 arriving continuously. ``upsert_stream`` keeps a persistent snapshot
 table merged with every micro-batch of change rows, with
@@ -57,7 +57,7 @@ def upsert_stream(
 
     Per batch: union the current snapshot with the batch, keep the
     max-version row per key (ONE key shuffle — same cost class as the
-    anti-join form of ``merge_into``, but correct under out-of-order
+    anti-join form of ``merge_cow``, but correct under out-of-order
     delivery without a conditional-update branch), write to a staging
     dir, two-rename swap so readers never see a half-merged table (a
     crash between the renames leaves the previous snapshot at

@@ -1,11 +1,10 @@
 """Block-granular copy-on-write DML (storage/cow.py + ManifestStore):
-equivalence with the full-rewrite verbs under a random op sequence,
-change-proportional IO, manifest time travel, and reference-counted
-vacuum."""
+equivalence with the DuckDB reference model (tests/dml_model.py) under
+random op sequences, change-proportional IO, manifest time travel, and
+reference-counted vacuum."""
 
 from __future__ import annotations
 
-import math
 import os
 import random
 
@@ -14,7 +13,6 @@ import pytest
 
 from columnar_database_project_spark.catalog import load_table
 from columnar_database_project_spark.engine import MicroBlockEngine
-from columnar_database_project_spark.sources.microblock import MicroBlockWriter
 from columnar_database_project_spark.storage.cow import (
     delete_where_cow,
     init_manifest_table,
@@ -22,10 +20,8 @@ from columnar_database_project_spark.storage.cow import (
     update_where_cow,
 )
 from columnar_database_project_spark.storage.manifests import ManifestStore
-from columnar_database_project_spark.storage.snapshots import SnapshotStore
+from dml_model import COLS, KEY, DuckModel, sorted_state, states_equal
 
-KEY = "o_orderkey"
-COLS = [KEY, "o_custkey", "o_orderstatus", "o_totalprice"]
 SEED = 0xC01D
 
 _CUSTKEYS = [0, 10, 75, 149, 5000]
@@ -45,65 +41,37 @@ def _pred(rng: random.Random) -> str:
     return f"o_custkey BETWEEN {lo} AND {hi}"
 
 
-def _sorted_state(pdf: pd.DataFrame) -> list[tuple]:
-    return [
-        tuple(r)
-        for r in pdf.sort_values([KEY])[COLS].itertuples(index=False, name=None)
-    ]
-
-
-def _states_equal(got, want) -> bool:
-    if len(got) != len(want):
-        return False
-    for rg, rw in zip(got, want):
-        for a, b in zip(rg, rw):
-            if isinstance(a, float) or isinstance(b, float):
-                if not math.isclose(a, b, rel_tol=1e-9, abs_tol=1e-8):
-                    return False
-            elif a != b:
-                return False
-    return True
-
-
 @pytest.fixture(scope="module")
 def orders_df(spark, sf_dir):
     return load_table(spark, sf_dir, "orders").select(*COLS)
 
 
-class TestEquivalenceWithFullRewrite:
-    def test_random_sequence_matches_directory_granular_verbs(
+class TestEquivalenceWithDuckdbModel:
+    def test_random_sequence_matches_duckdb_model(
         self, spark, orders_df, tmp_path_factory
     ):
-        """The CoW verbs must be a pure IO optimization: the same
-        seeded op sequence through the full-rewrite SnapshotStore
-        engine and the manifest CoW engine yields identical states at
-        every step."""
+        """The CoW verbs must be a pure IO optimization: the seeded op
+        sequence through the manifest CoW engine yields the DuckDB
+        model's state (whole-table SQL DML) at every step."""
         rng = random.Random(SEED)
         root = tmp_path_factory.mktemp("cow_equiv")
+        model = DuckModel(orders_df.toPandas())
 
-        # engine A: directory-granular full rewrite
-        sstore = SnapshotStore(str(root / "snap"))
-        eng_a = MicroBlockEngine(spark)
-        v0, dst0 = sstore.stage_next()
-        MicroBlockWriter().write(orders_df, dst0)
-        sstore.commit(v0)
-        eng_a.register("ta", spark.read.parquet(dst0))
-
-        # engine B: manifest CoW — small blocks so triage matters
+        # manifest CoW — small blocks so triage matters
         mstore = ManifestStore(str(root / "mani"))
-        eng_b = MicroBlockEngine(spark)
+        eng = MicroBlockEngine(spark)
         init_manifest_table(
             spark, mstore, orders_df.repartition(8, KEY), block_rows=256
         )
-        eng_b.register("tb", mstore.read(spark))
+        eng.register("tb", mstore.read(spark))
 
-        schema = eng_a.table("ta").schema
+        schema = eng.table("tb").schema
         for step in range(8):
             op = rng.randrange(3)
             if op == 0:
                 pred = _pred(rng)
-                eng_a.delete_versioned("ta", pred, sstore)
-                eng_b.delete_where_cow("tb", pred, mstore, block_rows=256)
+                model.delete(pred)
+                eng.delete_where_cow("tb", pred, mstore, block_rows=256)
             elif op == 1:
                 pred = _pred(rng)
                 col, expr = rng.choice(
@@ -113,12 +81,12 @@ class TestEquivalenceWithFullRewrite:
                         ("o_custkey", "o_custkey + 7"),
                     ]
                 )
-                eng_a.update_versioned("ta", pred, {col: expr}, sstore)
-                eng_b.update_where_cow(
+                model.update(pred, col, expr)
+                eng.update_where_cow(
                     "tb", pred, {col: expr}, mstore, block_rows=256
                 )
             else:
-                cur = eng_a.table("ta").toPandas()
+                cur = model.pdf()
                 n_upd = min(len(cur), rng.randrange(0, 10))
                 upd = cur.sample(n=n_upd, random_state=rng.randrange(2**31))
                 upd = upd.assign(o_orderstatus="M")
@@ -133,12 +101,11 @@ class TestEquivalenceWithFullRewrite:
                 )
                 upd_pdf = pd.concat([upd, new], ignore_index=True)[COLS]
                 updates = spark.createDataFrame(upd_pdf, schema=schema)
-                eng_a.merge_versioned("ta", updates, KEY, sstore)
-                eng_b.merge_cow("tb", updates, KEY, mstore, block_rows=256)
+                model.merge(upd_pdf)
+                eng.merge_cow("tb", updates, KEY, mstore, block_rows=256)
 
-            got = _sorted_state(eng_b.table("tb").toPandas())
-            want = _sorted_state(eng_a.table("ta").toPandas())
-            assert _states_equal(got, want), f"diverged at step {step}"
+            got = sorted_state(eng.table("tb").toPandas())
+            assert states_equal(got, model.state()), f"diverged at step {step}"
 
 
 @pytest.fixture(scope="module")
@@ -240,7 +207,7 @@ class TestTimeTravelAndVacuum:
         )
         head_files = set(store.files_for())
         head_count = store.read(spark).count()
-        head_state = _sorted_state(store.read(spark).toPandas())
+        head_state = sorted_state(store.read(spark).toPandas())
 
         rep = store.vacuum(keep_last=1)
         assert rep["versions_removed"]  # something was dropped
@@ -252,8 +219,8 @@ class TestTimeTravelAndVacuum:
             assert not os.path.exists(os.path.join(store.root, rel))
         # and the head still reads identically
         assert store.read(spark).count() == head_count
-        assert _states_equal(
-            _sorted_state(store.read(spark).toPandas()), head_state
+        assert states_equal(
+            sorted_state(store.read(spark).toPandas()), head_state
         )
         # dropped versions now raise
         with pytest.raises(ValueError):
@@ -794,21 +761,21 @@ class TestMergeOnReadUpdateAndMerge:
             block_rows=max(1, n // 8),
         )
         merge_cow(spark, store2, upd, KEY)
-        assert _states_equal(
-            _sorted_state(store.read(spark).toPandas()),
-            _sorted_state(store2.read(spark).toPandas()),
+        assert states_equal(
+            sorted_state(store.read(spark).toPandas()),
+            sorted_state(store2.read(spark).toPandas()),
         )
 
 
 class TestLadderEquivalenceFuzz:
     @pytest.mark.parametrize("fuzz_seed", [0x1ADDE2, 0x5EED2])
-    def test_random_mixed_cow_mor_sequence_matches_full_rewrite(
+    def test_random_mixed_cow_mor_sequence_matches_duckdb_model(
         self, spark, orders_df, tmp_path_factory, fuzz_seed
     ):
-        """The whole ladder is one semantics: a random sequence where
-        engine B picks CoW or MoR per op must match the full-rewrite
-        engine state-for-state — any DV leak, resurrection, or
-        fallback bug diverges here."""
+        """The whole ladder is one semantics: a random sequence that
+        picks CoW or MoR per op must match the DuckDB model
+        state-for-state — any DV leak, resurrection, or fallback bug
+        diverges here."""
         from columnar_database_project_spark.storage.cow import (
             delete_where_mor,
             maybe_compact_mor,
@@ -818,26 +785,20 @@ class TestLadderEquivalenceFuzz:
 
         rng = random.Random(fuzz_seed)
         root = tmp_path_factory.mktemp("ladder")
-
-        sstore = SnapshotStore(str(root / "snap"))
-        eng_a = MicroBlockEngine(spark)
-        v0, dst0 = sstore.stage_next()
-        MicroBlockWriter().write(orders_df, dst0)
-        sstore.commit(v0)
-        eng_a.register("la", spark.read.parquet(dst0))
+        model = DuckModel(orders_df.toPandas())
 
         mstore = ManifestStore(str(root / "mani"))
         init_manifest_table(
             spark, mstore, orders_df.repartition(8, KEY), block_rows=256
         )
 
-        schema = eng_a.table("la").schema
+        schema = mstore.read(spark).schema
         for step in range(8):
             op = rng.randrange(3)
             mor = rng.random() < 0.5
             if op == 0:
                 pred = _pred(rng)
-                eng_a.delete_versioned("la", pred, sstore)
+                model.delete(pred)
                 if mor:
                     delete_where_mor(spark, mstore, pred)
                 else:
@@ -850,7 +811,7 @@ class TestLadderEquivalenceFuzz:
                         ("o_orderstatus", "'Z'"),
                     ]
                 )
-                eng_a.update_versioned("la", pred, {col: expr}, sstore)
+                model.update(pred, col, expr)
                 if mor:
                     update_where_mor(
                         spark, mstore, pred, {col: expr}, block_rows=256
@@ -860,7 +821,7 @@ class TestLadderEquivalenceFuzz:
                         spark, mstore, pred, {col: expr}, block_rows=256
                     )
             else:
-                cur = eng_a.table("la").toPandas()
+                cur = model.pdf()
                 n_upd = min(len(cur), rng.randrange(0, 8))
                 upd = cur.sample(n=n_upd, random_state=rng.randrange(2**31))
                 upd = upd.assign(o_orderstatus="M")
@@ -875,7 +836,7 @@ class TestLadderEquivalenceFuzz:
                 )
                 upd_pdf = pd.concat([upd, new], ignore_index=True)[COLS]
                 updates = spark.createDataFrame(upd_pdf, schema=schema)
-                eng_a.merge_versioned("la", updates, KEY, sstore)
+                model.merge(upd_pdf)
                 if mor:
                     merge_mor(spark, mstore, updates, KEY, block_rows=256)
                 else:
@@ -890,9 +851,10 @@ class TestLadderEquivalenceFuzz:
                     taint_ratio=0.0, dv_rows_ratio=0.0,
                 )
 
-            got = _sorted_state(mstore.read(spark).toPandas())
-            want = _sorted_state(eng_a.table("la").toPandas())
-            assert _states_equal(got, want), f"diverged at step {step} (mor={mor})"
+            got = sorted_state(mstore.read(spark).toPandas())
+            assert states_equal(got, model.state()), (
+                f"diverged at step {step} (mor={mor})"
+            )
 
 
 class TestHistory:
@@ -973,41 +935,30 @@ class TestVacuumDryRunAndRollbackParity:
         assert real["versions_removed"] == plan["versions_removed"]
         assert sorted(real["files_removed"]) == sorted(plan["files_removed"])
 
-    def test_rollback_parity_between_stores(
+    def test_rollback_restores_model_state(
         self, spark, orders_df, tmp_path_factory
     ):
-        """Rollback is a head-log truncation in BOTH stores: after the
-        same op sequence and a rollback to the same logical point, both
-        engines read the same state."""
-        root = tmp_path_factory.mktemp("rb")
-        sstore = SnapshotStore(str(root / "snap"))
-        eng_a = MicroBlockEngine(spark)
-        v0, dst0 = sstore.stage_next()
-        MicroBlockWriter().write(orders_df, dst0)
-        sstore.commit(v0)
-        eng_a.register("ra", spark.read.parquet(dst0))
-
-        mstore = ManifestStore(str(root / "mani"))
+        """Rollback is a head-log truncation: after a DELETE, an UPDATE
+        and a rollback to the DELETE's version, the table reads the
+        DuckDB model's state as of that DELETE."""
+        model = DuckModel(orders_df.toPandas())
+        mstore = ManifestStore(str(tmp_path_factory.mktemp("rb")))
         init_manifest_table(
             spark, mstore, orders_df.orderBy(KEY).coalesce(1), block_rows=256
         )
 
-        eng_a.delete_versioned("ra", f"{KEY} < 100", sstore)
         delete_where_cow(spark, mstore, f"{KEY} < 100", block_rows=256)
-        eng_a.update_versioned(
-            "ra", f"{KEY} > 1200", {"o_orderstatus": "'R'"}, sstore
-        )
+        model.delete(f"{KEY} < 100")
+        after_delete = model.state()
         update_where_cow(
             spark, mstore, f"{KEY} > 1200", {"o_orderstatus": "'R'"},
             block_rows=256,
         )
 
-        # roll both back to the state after the DELETE (2nd commit)
-        sstore.rollback(sstore.versions()[-2])
+        # roll back to the state after the DELETE (2nd commit)
         mstore.rollback(mstore.versions()[-2])
-        a = eng_a.time_travel("ra", sstore).toPandas()
         b = mstore.read(spark).toPandas()
-        assert _states_equal(_sorted_state(a), _sorted_state(b))
+        assert states_equal(sorted_state(b), after_delete)
         assert (b["o_orderstatus"] == "R").sum() == 0  # update rolled back
         assert b[KEY].min() >= 100                      # delete retained
 

@@ -1,46 +1,47 @@
 """Differential fuzzing of the DML verbs: random MERGE / UPDATE /
-DELETE sequences through the engine's versioned snapshot store vs a
-DuckDB-maintained model table running the equivalent SQL DML.
+DELETE sequences through the engine's manifest CoW verbs
+(``delete_where_cow`` / ``update_where_cow`` / ``merge_cow`` on a
+``ManifestStore``) vs a DuckDB-maintained model table running the
+equivalent SQL DML (tests/dml_model.py).
 
 The registry's four engine_* DML queries each check ONE fixed op; this
 suite checks SEQUENCES — the regime where copy-on-write bugs live
-(a stale registration, a snapshot dir reused, anti-join losing rows, a
-predicate NULL-semantics divergence) — and then audits TIME TRAVEL
-against the recorded model state of every committed version, which no
-single-op test can do.
+(a stale registration, a carried block that should have been touched,
+anti-join losing rows, a predicate NULL-semantics divergence) — and
+then audits TIME TRAVEL against the recorded model state of every
+committed version, which no single-op test can do.
 
 Semantics pinned (both engines):
 - DELETE removes rows where pred is TRUE only (NULL/false keep).
 - UPDATE assigns where pred is TRUE only; other rows byte-identical.
-- MERGE = anti-join on key + union (engine merge_into's documented
-  shape; the model runs the same relational form in DuckDB).
+- MERGE = anti-join on key + union (merge_cow's documented shape; the
+  model runs the same relational form in DuckDB).
 - Every committed version remains readable and equal to the model's
-  state at that version (time_travel).
+  state at that version (time_travel_cow).
 
 Deterministic: seeded RNG, one Spark session, ~10 ops in seconds.
 Reference anchor: the reference has no DML at all (SURVEY §2.5 gap
 list) — these verbs are this repo's lifecycle extension, so the fuzzer
-is their primary at-depth evidence alongside tests/test_round6.py.
+is their primary at-depth evidence alongside tests/test_cow_dml.py.
 """
 
 from __future__ import annotations
 
-import math
 import random
 
-import duckdb
 import pandas as pd
 import pytest
 
 from columnar_database_project_spark.catalog import load_table
 from columnar_database_project_spark.engine import MicroBlockEngine
-from columnar_database_project_spark.storage.snapshots import SnapshotStore
+from columnar_database_project_spark.storage.cow import init_manifest_table
+from columnar_database_project_spark.storage.manifests import ManifestStore
+from dml_model import COLS, KEY, DuckModel, sorted_state, states_equal
 
 N_OPS = 10
 SEED = 0xD31E7E
-
-KEY = "o_orderkey"
-COLS = [KEY, "o_custkey", "o_orderstatus", "o_totalprice"]
+# small blocks so triage carries some blocks by reference
+BLOCK_ROWS = 256
 
 # Literal pools straddle the data range so predicates land empty,
 # full and partial — same policy as test_differential_fuzz.py.
@@ -77,62 +78,25 @@ _ASSIGNMENTS = [
 ]
 
 
-def _sorted_model(pdf: pd.DataFrame) -> list[tuple]:
-    return [
-        tuple(r)
-        for r in pdf.sort_values([KEY])[COLS].itertuples(index=False, name=None)
-    ]
-
-
-def _states_equal(got: list[tuple], want: list[tuple]) -> bool:
-    if len(got) != len(want):
-        return False
-    for rg, rw in zip(got, want):
-        for a, b in zip(rg, rw):
-            if isinstance(a, float) or isinstance(b, float):
-                if not math.isclose(a, b, rel_tol=1e-9, abs_tol=1e-8):
-                    return False
-            elif a != b:
-                return False
-    return True
-
-
 @pytest.fixture(scope="module")
 def dml_setup(spark, sf_dir, tmp_path_factory):
-    root = str(tmp_path_factory.mktemp("dml_fuzz"))
     orders = load_table(spark, sf_dir, "orders").select(*COLS)
-    store = SnapshotStore(root)
+    store = ManifestStore(str(tmp_path_factory.mktemp("dml_fuzz")))
     eng = MicroBlockEngine(spark)
-
-    # version 0: the initial snapshot, through the same commit path
-    # every later op uses
-    from columnar_database_project_spark.sources.microblock import (
-        MicroBlockWriter,
-    )
-
-    v0, dst0 = store.stage_next()
-    MicroBlockWriter().write(orders, dst0)
-    store.commit(v0)
-    eng.register("t", spark.read.parquet(dst0))
-
-    con = duckdb.connect()
-    init = orders.toPandas()
-    con.register("init_df", init)
-    con.execute("CREATE TABLE model AS SELECT * FROM init_df")
-    return eng, store, con, spark
-
-
-def _model_pdf(con) -> pd.DataFrame:
-    return con.execute(f"SELECT * FROM model ORDER BY {KEY}").df()
+    # version 1: the initial table, through the same commit log every
+    # later op uses
+    init_manifest_table(spark, store, orders, block_rows=BLOCK_ROWS)
+    eng.register_manifest("t", store, with_index=False)
+    return eng, store, DuckModel(orders.toPandas()), spark
 
 
 class TestDmlSequenceMatchesDuckdb:
     def test_random_dml_sequence_and_time_travel(self, dml_setup):
-        eng, store, con, spark = dml_setup
+        eng, store, model, spark = dml_setup
         rng = random.Random(SEED)
         target_schema = eng.table("t").schema
         version_states: dict[int, list[tuple]] = {
-            store.latest(): _sorted_model(_model_pdf(con))
+            store.latest(): model.state()
         }
         mismatches = []
 
@@ -140,17 +104,21 @@ class TestDmlSequenceMatchesDuckdb:
             op = rng.randrange(3)
             if op == 0:  # DELETE
                 pred = _pred(rng)
-                rep = eng.delete_versioned("t", pred, store)
-                con.execute(f"DELETE FROM model WHERE {pred}")
+                rep = eng.delete_where_cow(
+                    "t", pred, store, block_rows=BLOCK_ROWS
+                )
+                model.delete(pred)
                 tag = f"DELETE WHERE {pred}"
             elif op == 1:  # UPDATE
                 pred = _pred(rng)
                 col, expr = rng.choice(_ASSIGNMENTS)
-                rep = eng.update_versioned("t", pred, {col: expr}, store)
-                con.execute(f"UPDATE model SET {col} = {expr} WHERE {pred}")
+                rep = eng.update_where_cow(
+                    "t", pred, {col: expr}, store, block_rows=BLOCK_ROWS
+                )
+                model.update(pred, col, expr)
                 tag = f"UPDATE SET {col}={expr} WHERE {pred}"
             else:  # MERGE: update some existing keys + insert new ones
-                cur = _model_pdf(con)
+                cur = model.pdf()
                 n_upd = min(len(cur), rng.randrange(0, 20))
                 upd = cur.sample(n=n_upd, random_state=rng.randrange(2**31))
                 upd = upd.assign(
@@ -171,20 +139,15 @@ class TestDmlSequenceMatchesDuckdb:
                 )
                 upd_pdf = pd.concat([upd, new], ignore_index=True)[COLS]
                 updates = spark.createDataFrame(upd_pdf, schema=target_schema)
-                rep = eng.merge_versioned("t", updates, KEY, store)
-                con.register("upd_df", upd_pdf)
-                con.execute(
-                    "CREATE OR REPLACE TABLE model AS "
-                    f"SELECT * FROM model WHERE {KEY} NOT IN (SELECT {KEY} FROM upd_df) "
-                    "UNION ALL SELECT * FROM upd_df"
+                rep = eng.merge_cow(
+                    "t", updates, KEY, store, block_rows=BLOCK_ROWS
                 )
+                model.merge(upd_pdf)
                 tag = f"MERGE {len(upd_pdf)} rows ({n_new} new)"
 
-            want = _sorted_model(_model_pdf(con))
-            got = _sorted_model(
-                eng.table("t").toPandas()[COLS]
-            )
-            if not _states_equal(got, want):
+            want = model.state()
+            got = sorted_state(eng.table("t").toPandas())
+            if not states_equal(got, want):
                 mismatches.append(
                     (step, tag, len(got), len(want), got[:2], want[:2])
                 )
@@ -195,26 +158,26 @@ class TestDmlSequenceMatchesDuckdb:
         # ---- time travel: every committed version == recorded model state
         committed = store.versions()
         assert set(version_states) == set(committed)
-        for v in [committed[0], committed[len(committed) // 2], committed[-1]]:
-            got = _sorted_model(
-                eng.time_travel("t", store, version=v).toPandas()[COLS]
+        for v in committed:
+            got = sorted_state(
+                eng.time_travel_cow("t", store, version=v).toPandas()
             )
-            assert _states_equal(got, version_states[v]), f"version {v}"
+            assert states_equal(got, version_states[v]), f"version {v}"
         # restore HEAD registration for any later test in the session
-        eng.time_travel("t", store)
+        eng.time_travel_cow("t", store)
 
     def test_vacuum_keeps_time_travel_for_survivors(self, dml_setup):
         """After vacuum(keep_last=2), the surviving versions still
         read; the dropped ones raise — retention is explicit, never
         silent data loss of a committed HEAD."""
-        eng, store, con, spark = dml_setup
+        eng, store, model, spark = dml_setup
         before = store.versions()
         if len(before) < 3:
             pytest.skip("sequence too short to vacuum meaningfully")
         dropped = store.vacuum(keep_last=2)
         assert store.versions() == before[-2:]
-        assert dropped == before[:-2]
-        head = eng.time_travel("t", store).count()
+        assert dropped["versions_removed"] == before[:-2]
+        head = eng.time_travel_cow("t", store).count()
         assert head >= 0
         with pytest.raises(ValueError):
-            eng.time_travel("t", store, version=before[0])
+            eng.time_travel_cow("t", store, version=before[0])

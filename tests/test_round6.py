@@ -654,10 +654,27 @@ def test_join_skew_salted_matches_plain_join_and_plan(spark, sf_dir):
     ]
 
 
+def _manifest_table(eng, name: str, df, root):
+    """``df`` as version 1 of a fresh ManifestStore at ``root``,
+    registered on ``eng`` as ``name``."""
+    from columnar_database_project_spark.storage.cow import (
+        init_manifest_table,
+    )
+    from columnar_database_project_spark.storage.manifests import (
+        ManifestStore,
+    )
+
+    store = ManifestStore(str(root))
+    init_manifest_table(eng.spark, store, df)
+    eng.register_manifest(name, store, with_index=False)
+    return store
+
+
 def test_engine_merge_upsert_semantics(spark, sf_dir, tmp_path):
     """MERGE through the facade: matched keys take the update row,
     unmatched update keys are inserted, untouched rows survive
-    unchanged, and the write is a NEW snapshot (source rows intact)."""
+    unchanged, a column mismatch is rejected, and the write is a NEW
+    version (source rows intact)."""
     from pyspark.sql import functions as F
 
     from columnar_database_project_spark.catalog import load_table
@@ -666,7 +683,7 @@ def test_engine_merge_upsert_semantics(spark, sf_dir, tmp_path):
     eng = MicroBlockEngine(spark)
     orders = load_table(spark, sf_dir, "orders")
     n_orders = orders.count()
-    eng.register("orders_merge_t", orders)
+    store = _manifest_table(eng, "orders_merge_t", orders, tmp_path / "t")
     updates = orders.filter(F.col("o_orderkey") % 10 == 0).select(
         "o_orderkey",
         "o_custkey",
@@ -684,15 +701,12 @@ def test_engine_merge_upsert_semantics(spark, sf_dir, tmp_path):
         F.lit("9-INSERTED").alias("o_orderpriority"),
     )
     n_upd, n_ins = updates.count(), inserts.count()
-    rep = eng.merge_into(
-        "orders_merge_t",
-        updates.unionByName(inserts),
-        "o_orderkey",
-        str(tmp_path / "merged"),
+    rep = eng.merge_cow(
+        "orders_merge_t", updates.unionByName(inserts), "o_orderkey", store
     )
-    assert rep["merged_rows"] == n_orders + n_ins
-    assert rep["inserted"] == n_ins
+    assert rep["version"] == 2 and rep["update_rows"] == n_upd + n_ins
     merged = eng.table("orders_merge_t")
+    assert merged.count() == n_orders + n_ins
     # every matched key carries the update row now
     assert merged.filter(F.col("o_orderpriority") == "0-MERGED").count() == n_upd
     assert (
@@ -705,21 +719,24 @@ def test_engine_merge_upsert_semantics(spark, sf_dir, tmp_path):
     )
     # inserts present at offset keys
     assert merged.filter(F.col("o_orderkey") >= 10_000_000).count() == n_ins
-    # schema mismatch rejected
+    # schema mismatch rejected, nothing committed
     with pytest.raises(ValueError):
-        eng.merge_into(
+        eng.merge_cow(
             "orders_merge_t",
             updates.drop("o_orderdate"),
             "o_orderkey",
-            str(tmp_path / "bad"),
+            store,
         )
-    # source snapshot untouched
+    assert store.versions() == [1, 2]
+    # source table and the pre-merge version untouched
     assert load_table(spark, sf_dir, "orders").count() == n_orders
+    assert store.read(spark, 1).count() == n_orders
 
 
 def test_engine_delete_where_semantics(spark, sf_dir, tmp_path):
-    """DELETE keeps NULL-predicate rows (SQL semantics), deletes only
-    TRUE rows, and rewrites as a new snapshot."""
+    """DELETE keeps NULL-predicate rows (SQL semantics) for Column and
+    SQL-string predicates alike, deletes only TRUE rows, and commits a
+    new version."""
     from pyspark.sql import functions as F
 
     from columnar_database_project_spark.engine import MicroBlockEngine
@@ -728,21 +745,23 @@ def test_engine_delete_where_semantics(spark, sf_dir, tmp_path):
     base = spark.createDataFrame(
         [(1, 10.0), (2, None), (3, 99.0), (4, 5.0)], "id int, v double"
     )
-    eng.register("del_t", base)
-    rep = eng.delete_where("del_t", F.col("v") < 50.0, str(tmp_path / "d1"))
+    store = _manifest_table(eng, "del_t", base, tmp_path / "t")
+    rep = eng.delete_where_cow("del_t", F.col("v") < 50.0, store)
     # v<50 TRUE for ids 1,4; NULL for id 2 (kept); FALSE for id 3
-    assert rep == {"target_rows": 4, "deleted": 2, "remaining": 2}
+    assert rep["deleted"] == 2 and rep["version"] == 2
     assert sorted(r["id"] for r in eng.table("del_t").collect()) == [2, 3]
-    # string predicate form
-    rep2 = eng.delete_where("del_t", "v IS NULL", str(tmp_path / "d2"))
-    assert rep2["deleted"] == 1 and rep2["remaining"] == 1
+    # string predicate form, NULL row kept by the same rule
+    rep2 = eng.delete_where_cow("del_t", "v < 50.0", store)
+    assert rep2["deleted"] == 0
+    rep3 = eng.delete_where_cow("del_t", "v IS NULL", store)
+    assert rep3["deleted"] == 1 and eng.table("del_t").count() == 1
 
 
 def test_engine_update_where_semantics(spark, sf_dir, tmp_path):
     """UPDATE ... SET: only predicate-TRUE rows change (NULL keeps old
     values, SQL semantics), untouched columns/rows survive byte-
     identical, column order is preserved, unknown SET columns are
-    rejected, and the write is a NEW snapshot."""
+    rejected, and the write is a NEW version."""
     from pyspark.sql import functions as F
 
     from columnar_database_project_spark.engine import MicroBlockEngine
@@ -752,15 +771,15 @@ def test_engine_update_where_semantics(spark, sf_dir, tmp_path):
         [(1, 10.0, "a"), (2, None, "b"), (3, 99.0, "c"), (4, 5.0, "d")],
         "id int, v double, tag string",
     )
-    eng.register("upd_t", base)
-    rep = eng.update_where(
+    store = _manifest_table(eng, "upd_t", base, tmp_path / "t")
+    rep = eng.update_where_cow(
         "upd_t",
         F.col("v") < 50.0,
         {"tag": F.lit("LOW"), "v": F.col("v") + 1.0},
-        str(tmp_path / "u1"),
+        store,
     )
     # v<50 TRUE for ids 1,4; NULL for id 2 (kept as-is); FALSE for id 3
-    assert rep == {"target_rows": 4, "updated": 2}
+    assert rep["updated"] == 2 and rep["version"] == 2
     got = {r["id"]: (r["v"], r["tag"]) for r in eng.table("upd_t").collect()}
     assert got == {
         1: (11.0, "LOW"),
@@ -770,78 +789,47 @@ def test_engine_update_where_semantics(spark, sf_dir, tmp_path):
     }
     assert eng.table("upd_t").columns == ["id", "v", "tag"]
     # string forms for predicate and assignment
-    rep2 = eng.update_where(
-        "upd_t", "v IS NULL", {"v": "0.0"}, str(tmp_path / "u2")
-    )
+    rep2 = eng.update_where_cow("upd_t", "v IS NULL", {"v": "0.0"}, store)
     assert rep2["updated"] == 1
     assert (
         eng.table("upd_t").filter(F.col("id") == 2).first()["v"] == 0.0
     )
-    # unknown SET column rejected
-    with pytest.raises(ValueError, match="unknown"):
-        eng.update_where(
-            "upd_t", "v = 0.0", {"nope": F.lit(1)}, str(tmp_path / "u3")
-        )
+    # unknown SET column rejected — also when the predicate prunes
+    # every block — and nothing is committed
+    for pred in ("v = 0.0", "v > 1e9"):
+        with pytest.raises(ValueError, match="unknown"):
+            eng.update_where_cow("upd_t", pred, {"nope": F.lit(1)}, store)
+    assert store.versions() == [1, 2, 3]
 
 
 def test_engine_update_versioned_chain(spark, tmp_path):
-    """UPDATE participates in the commit-log chain: merge v1 →
-    update v2 → time travel to v1 shows pre-update values while the
-    latest snapshot shows post-update values."""
+    """UPDATE participates in the commit-log chain: merge → update →
+    time travel to the merge's version shows pre-update values while
+    the latest version shows post-update values."""
     from pyspark.sql import functions as F
 
     from columnar_database_project_spark.engine import MicroBlockEngine
-    from columnar_database_project_spark.storage.snapshots import SnapshotStore
 
     eng = MicroBlockEngine(spark)
     base = spark.createDataFrame([(1, 10.0), (2, 20.0)], "id int, v double")
-    eng.register("uv_t", base)
-    store = SnapshotStore(str(tmp_path / "versions"))
-    eng.merge_versioned(
+    store = _manifest_table(eng, "uv_t", base, tmp_path / "t")
+    merged = eng.merge_cow(
         "uv_t",
         spark.createDataFrame([(3, 30.0)], "id int, v double"),
         "id",
         store,
-    )  # v1: ids 1,2,3
-    rep = eng.update_versioned(
+    )  # ids 1,2,3
+    rep = eng.update_where_cow(
         "uv_t", F.col("id") == 1, {"v": F.lit(-1.0)}, store
-    )  # v2
-    assert rep["version"] == 2 and rep["updated"] == 1
+    )
+    assert rep["version"] == merged["version"] + 1 and rep["updated"] == 1
     latest = {r["id"]: r["v"] for r in eng.table("uv_t").collect()}
     assert latest == {1: -1.0, 2: 20.0, 3: 30.0}
-    v1 = {r["id"]: r["v"] for r in eng.time_travel("uv_t", store, 1).collect()}
-    assert v1 == {1: 10.0, 2: 20.0, 3: 30.0}
-
-
-def test_dml_refuses_self_overwrite(spark, sf_dir, tmp_path):
-    """A DML rewrite whose dst is the table's CURRENT snapshot dir
-    would delete the files its own plan is scanning — refused."""
-    from pyspark.sql import functions as F
-
-    from columnar_database_project_spark.engine import MicroBlockEngine
-
-    eng = MicroBlockEngine(spark)
-    base = spark.createDataFrame([(1, 1.0), (2, 2.0)], "id int, v double")
-    eng.register("dml_t", base)
-    d1 = str(tmp_path / "s1")
-    eng.delete_where("dml_t", F.col("v") < 0, d1)  # snapshot now at d1
-    with pytest.raises(ValueError, match="current"):
-        eng.delete_where("dml_t", F.col("v") < 0, d1)
-    with pytest.raises(ValueError, match="current"):
-        eng.merge_into(
-            "dml_t",
-            spark.createDataFrame([(3, 3.0)], "id int, v double"),
-            "id",
-            d1,
-        )
-    # alternating snapshot dirs chain fine
-    rep = eng.merge_into(
-        "dml_t",
-        spark.createDataFrame([(3, 3.0)], "id int, v double"),
-        "id",
-        str(tmp_path / "s2"),
-    )
-    assert rep["merged_rows"] == 3
+    v_merge = {
+        r["id"]: r["v"]
+        for r in eng.time_travel_cow("uv_t", store, merged["version"]).collect()
+    }
+    assert v_merge == {1: 10.0, 2: 20.0, 3: 30.0}
 
 
 def test_streaming_upsert_lww(spark, tmp_path):
@@ -882,57 +870,60 @@ def test_streaming_upsert_lww(spark, tmp_path):
 
 
 def test_snapshot_store_dml_chain_time_travel_rollback(spark, tmp_path):
-    """Commit-log lifecycle over chained DML: versions accrue, time
-    travel reads any committed version, rollback is manifest-only,
-    orphan staging dirs are invisible, vacuum reclaims."""
-    from pyspark.sql import functions as F
-
+    """ManifestStore lifecycle over chained DML: versions accrue, time
+    travel reads any committed version, an orphan staged data dir is
+    invisible, reading an uncommitted version raises, rollback is
+    head-log-only (data files stay), numbering continues past a
+    rollback, and vacuum reclaims."""
     from columnar_database_project_spark.engine import MicroBlockEngine
-    from columnar_database_project_spark.storage.snapshots import (
-        SnapshotStore,
-    )
 
     eng = MicroBlockEngine(spark)
-    store = SnapshotStore(str(tmp_path / "tbl"))
     base = spark.createDataFrame(
         [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)], "id int, s string, v double"
     )
-    eng.register("vt", base)
-    r1 = eng.merge_versioned(
+    store = _manifest_table(eng, "vt", base, tmp_path / "tbl")
+    r1 = eng.merge_cow(
         "vt",
         spark.createDataFrame([(2, "B", 20.0), (4, "d", 4.0)],
                               "id int, s string, v double"),
         "id",
         store,
     )
-    assert r1["version"] == 1 and r1["merged_rows"] == 4
-    r2 = eng.delete_versioned("vt", F.col("id") == 1, store)
-    assert r2["version"] == 2 and r2["remaining"] == 3
-    assert store.versions() == [1, 2]
-    # time travel to v1: id 1 still present, id 2 updated
-    v1 = {r["id"]: r["s"] for r in eng.time_travel("vt", store, 1).collect()}
-    assert v1 == {1: "a", 2: "B", 3: "c", 4: "d"}
-    # orphan staging dir (crash mid-write) is never resolved
-    _, orphan = store.stage_next()
+    assert r1["version"] == 2 and eng.table("vt").count() == 4
+    r2 = eng.delete_where_cow("vt", "id = 1", store)
+    assert r2["version"] == 3 and r2["deleted"] == 1
+    assert store.versions() == [1, 2, 3]
+    # time travel to the merge: id 1 still present, id 2 updated
+    v2 = {r["id"]: r["s"] for r in eng.time_travel_cow("vt", store, 2).collect()}
+    assert v2 == {1: "a", 2: "B", 3: "c", 4: "d"}
+    # orphan staged data dir (crash mid-write) is never resolved
+    v_orphan, orphan = store.stage_next()
+    assert orphan == os.path.join(store.root, "data", f"c{v_orphan:06d}")
     os.makedirs(orphan)
-    assert store.latest() == 2
+    assert store.latest() == 3
     with pytest.raises(ValueError):
-        eng.time_travel("vt", store, 3)
-    # rollback: manifest truncation, v2's data dir retained
-    store.rollback(1)
-    assert store.versions() == [1]
-    assert {r["id"] for r in eng.time_travel("vt", store).collect()} == {1, 2, 3, 4}
-    assert os.path.isdir(store.path_for(2))
-    # numbering never reuses a rolled-back dir
+        store.read(spark, v_orphan)
+    # rollback: head-log truncation, v3's data files retained
+    v3_files = store.files_for(3)
+    store.rollback(2)
+    assert store.versions() == [1, 2]
+    assert {r["id"] for r in eng.time_travel_cow("vt", store).collect()} == {
+        1, 2, 3, 4,
+    }
+    assert v3_files and all(os.path.exists(f) for f in v3_files)
+    with pytest.raises(ValueError):
+        store.read(spark, 3)
+    # numbering never reuses a rolled-back or orphaned dir
     v_next, _ = store.stage_next()
-    assert v_next == 4
-    # vacuum keeps only the last committed version's dir
-    removed = store.vacuum(keep_last=1)
-    assert 2 in removed and 3 in removed
-    assert os.path.isdir(store.path_for(1))
-    # keep_last=0 empties the store AND the manifest together — a
-    # manifest entry must never name a deleted dir
-    assert store.vacuum(keep_last=0) == [1]
+    assert v_next == v_orphan + 1
+    # vacuum keeps only the last committed version's files
+    rep = store.vacuum(keep_last=1)
+    assert rep["versions_removed"] == [1, 3]
+    assert not os.path.exists(orphan)
+    assert store.read(spark).count() == 4
+    # keep_last=0 empties the head log and the files together — a head
+    # entry must never name a deleted file
+    store.vacuum(keep_last=0)
     assert store.versions() == [] and store.latest() is None
 
 
