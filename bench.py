@@ -1273,18 +1273,19 @@ def bench_prefetch_ab(
     class _SlowStorePrefetcher(Prefetcher):
         """Prefetcher against simulated remote object storage: every
         block GET pays ``delay`` seconds of latency on top of the real
-        read. Concurrent issue (service concurrent_issue > 1) overlaps
-        the sleeps exactly as concurrent GETs overlap in production."""
+        read. A batch pays one delay per loaded block in series;
+        concurrent issue (service concurrent_issue > 1) loads one block
+        per thread, so the sleeps overlap exactly as concurrent GETs
+        overlap in production."""
 
         def __init__(self, spark_, index_, cache_, delay: float) -> None:
             super().__init__(spark_, index_, cache_)
             self.delay = delay
 
-        def prefetch_block(self, block_id: int) -> bool:
-            ok = Prefetcher.prefetch_block(self, block_id)
-            if ok:
-                time.sleep(self.delay)
-            return ok
+        def prefetch_many(self, block_ids: list[int]) -> list[int]:
+            loaded = Prefetcher.prefetch_many(self, block_ids)
+            time.sleep(self.delay * len(loaded))
+            return loaded
 
     def replay(
         with_lstm: bool,

@@ -2,19 +2,25 @@
 
 Re-expresses reference prefetch.py:19-43 and prefetch_service.py:35-96
 in Spark terms: "prefetch block" = load the block's DataFrame (block =
-file), persist it, and insert into the BlockCache — a background no-op
-action materializes it into the BlockManager. Prefetch jobs run in a
-dedicated FAIR-scheduler pool so they never starve foreground queries
-(the reference's daemon thread shares everything unsynchronized —
-SURVEY §2.5.6).
+file) with ``read_block`` and put it into the BlockCache, which persists
+it without a job. A cycle's loads are then materialized into the
+BlockManager together, by ONE no-op write over the union of the blocks
+still cached. Prefetch jobs run in a dedicated FAIR-scheduler pool so
+they never starve foreground queries (the reference's daemon thread
+shares everything unsynchronized — SURVEY §2.5.6).
 """
 
 from __future__ import annotations
 
 import threading
 import time
+from functools import reduce
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from columnar_database_project_spark.ml.scheduler import PrefetchScheduler
+from columnar_database_project_spark.sources import microblock
 from columnar_database_project_spark.sources.index import MicroBlockIndex
 from columnar_database_project_spark.storage.access_logger import GlobalHistory
 from columnar_database_project_spark.storage.block_cache import BlockCache
@@ -124,29 +130,40 @@ class Prefetcher:
 
     def prefetch_block(self, block_id: int) -> bool:
         """False when already cached or unknown; True when loaded."""
-        if self.cache.contains(block_id):
-            return False
-        try:
-            path = self.index.block_file(block_id)
-        except KeyError:
-            return False
+        return bool(self.prefetch_many([block_id]))
+
+    def prefetch_many(self, block_ids: list[int]) -> list[int]:
+        """Load the blocks that are neither cached nor unknown; return
+        their ids in the given order.
+
+        Every block is read, then put in that order (so LRU order and
+        evictions match one-at-a-time loads), then a single job
+        materializes the loaded blocks that are still cached: a no-op
+        write of their union. It projects a constant, so blocks of
+        different schemas union too; the persisted plans still build
+        every column."""
+        loaded: dict[int, DataFrame] = {}
         sc = self.spark.sparkContext
         sc.setLocalProperty("spark.scheduler.pool", PREFETCH_POOL)
         try:
-            # block = file in either backend; the index tells us which
-            # (ORC blocks come from MicroBlockIndex.build_from_scan)
-            df = (
-                self.spark.read.orc(path)
-                if path.endswith(".orc")
-                else self.spark.read.parquet(path)
-            )
-            self.cache.put(block_id, df)   # persists + materializes
+            for b in block_ids:
+                if b in loaded or self.cache.contains(b):
+                    continue
+                try:
+                    loaded[b] = microblock.read_block(self.spark, self.index, b)
+                except KeyError:   # not a block of this index
+                    continue
+            for b, df in loaded.items():
+                self.cache.put(b, df)
+            live = [
+                df.select(F.lit(1)) for b, df in loaded.items() if self.cache.contains(b)
+            ]
+            if live:
+                union = reduce(DataFrame.union, live)
+                union.write.format("noop").mode("overwrite").save()
         finally:
             sc.setLocalProperty("spark.scheduler.pool", None)
-        return True
-
-    def prefetch_many(self, block_ids: list[int]) -> int:
-        return sum(1 for b in block_ids if self.prefetch_block(b))
+        return list(loaded)
 
 
 class PrefetchService:
@@ -190,15 +207,15 @@ class PrefetchService:
         self.economics = economics if economics is not None else PrefetchEconomics()
         self.economics_gate = economics_gate
         # Issue width for one cycle's speculative loads. 1 (default)
-        # issues serially — on local disk the read is scheduling-
-        # dominated and serial timing measures the true per-read cost.
-        # >1 issues the cycle's batch from a thread pool: against a
-        # remote object store the GET latency dominates and concurrent
-        # background GETs overlap, so the cost the economics model
-        # should see is the amortized batch wall per block, not the
-        # sum of serial latencies (the gate criterion is foreground
-        # seconds saved vs background seconds SPENT, and a pool of N
-        # in-flight GETs spends wall/N per block).
+        # loads the cycle's batch with ``prefetch_many``: one
+        # materializing job for the whole batch. >1 issues one
+        # ``prefetch_block`` per suggestion from a thread pool: against
+        # a remote object store the GET latency dominates and
+        # concurrent background GETs overlap. Either way the cost the
+        # economics model sees is the amortized batch wall per block
+        # (the gate criterion is foreground seconds saved vs background
+        # seconds SPENT, and a batch of N loads spends wall/N per
+        # block).
         self.concurrent_issue = max(1, int(concurrent_issue))
         self.gate_skips = 0
         self.prefetch_read_sec = 0.0   # actual block-read time issued
@@ -230,11 +247,10 @@ class PrefetchService:
                 self.gate_skips += 1
                 self.cycles += 1
                 return 0
-        loaded = []
+        t0 = time.time()
         if self.concurrent_issue > 1 and len(suggestions) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
-            t0 = time.time()
             with ThreadPoolExecutor(
                 max_workers=min(self.concurrent_issue, len(suggestions))
             ) as pool:
@@ -244,20 +260,14 @@ class PrefetchService:
                         suggestions,
                     )
                 )
-            wall = time.time() - t0
             loaded = [b for (b, _p), ok in zip(suggestions, oks) if ok]
-            self.prefetch_read_sec += wall
-            per = wall / max(1, len(loaded))
-            for b in loaded:
-                self.economics.note_prefetch(b, per)
         else:
-            for b, _p in suggestions:
-                t0 = time.time()
-                if self.prefetcher.prefetch_block(b):
-                    dt = time.time() - t0
-                    self.economics.note_prefetch(b, dt)
-                    self.prefetch_read_sec += dt
-                    loaded.append(b)
+            loaded = self.prefetcher.prefetch_many([b for b, _p in suggestions])
+        wall = time.time() - t0
+        self.prefetch_read_sec += wall
+        per = wall / max(1, len(loaded))
+        for b in loaded:
+            self.economics.note_prefetch(b, per)
         self.issued_log.extend(loaded)
         self.prefetched += len(loaded)
         self.cycles += 1

@@ -12,7 +12,17 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS")
+    or (len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count())
+)
+ALLOCATION_FILE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fairscheduler.xml")
+
+
+def _default_driver_mem() -> str:
+    """A quarter of physical memory, clamped to 1..8 GiB."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(8, phys // (4 << 30)))}g"
 
 
 def get_spark(
@@ -66,12 +76,16 @@ def get_spark(
         # nanos timestamp — read as long and convert in the catalog.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         # Separate fair-scheduler pool so background prefetch jobs never
         # starve foreground queries (reference prefetch_service.py:35-80
         # runs prefetch on a daemon thread with no isolation).
         .config("spark.scheduler.mode", "FAIR")
+        .config("spark.scheduler.allocation.file", ALLOCATION_FILE)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -102,6 +102,8 @@ class MicroBlockIndex:
         # optional per-block Bloom sidecar (sources/bloom.py): refines
         # candidate_blocks for = / IN where min/max is wide-open
         self.blooms = None
+        # footer-schema key → Spark StructType (sources/microblock.read_block)
+        self.read_schemas: dict[str, Any] = {}
 
     # ------------------------------------------------------------- build
     @classmethod

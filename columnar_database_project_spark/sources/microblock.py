@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -77,17 +78,42 @@ class MicroBlockWriter:
         self.write(spark.read.parquet(src), dst)
 
 
-def build_index(path: str, table_id: str = "t1") -> MicroBlockIndex:
-    """Footer-scan a microblock directory (or any parquet file) into a
-    MicroBlockIndex."""
-    return MicroBlockIndex.build(path, table_id=table_id)
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema_key(path: str, fmt: str) -> str:
+    """A value key of a block file's footer schema. ``str(ParquetSchema)``
+    opens with the object's address, so the header line is dropped; the
+    rest lists physical and logical types, which tell INT96 from
+    TIMESTAMP(NANOS) where the Arrow schema does not. Spark's own schema
+    entry is part of the key because Spark infers from it when present."""
+    if fmt == "orc":
+        import pyarrow.orc as po
+
+        return str(po.ORCFile(path).schema)
+    meta = pq.read_metadata(path)
+    spark_schema = (meta.metadata or {}).get(_SPARK_ROW_METADATA, b"")
+    return str(meta.schema).split("\n", 1)[1] + spark_schema.decode()
 
 
 def read_block(spark: SparkSession, index: MicroBlockIndex, block_id: int) -> DataFrame:
     """Load exactly one block as a DataFrame (the block = file mapping
     makes this a single-file scan — the Spark analog of
-    ``pf.read_row_group`` in reference query_enginev5.py:278-282)."""
-    return spark.read.parquet(index.block_file(block_id))
+    ``pf.read_row_group`` in reference query_enginev5.py:278-282).
+
+    Parquet schema inference runs a Spark job, so it happens once per
+    distinct footer schema: the inferred ``StructType`` is kept in
+    ``index.read_schemas`` and later reads pass it explicitly, which
+    runs no job. Block files ending in ``.orc`` are read as ORC."""
+    path = index.block_file(block_id)
+    fmt = "orc" if path.endswith(".orc") else "parquet"
+    key = _footer_schema_key(path, fmt)
+    schema = index.read_schemas.get(key)
+    if schema is None:
+        df = spark.read.format(fmt).load(path)
+        index.read_schemas[key] = df.schema
+        return df
+    return spark.read.schema(schema).format(fmt).load(path)
 
 
 def write_with_row_ids(
@@ -174,15 +200,6 @@ def scan_range(
     )
 
 
-def block_count(path: str) -> int:
-    files = [
-        f
-        for f in os.listdir(path)
-        if f.endswith(".parquet") or (f.startswith("part-") and "crc" not in f)
-    ]
-    return len(files)
-
-
 def compact_blocks(
     spark: SparkSession,
     path: str,
@@ -229,7 +246,6 @@ def compact_blocks(
     files = [f for f in os.listdir(path) if f.endswith(".parquet")]
     if not files:
         return {"compacted": False, "blocks_before": 0, "blocks_after": 0}
-    import pyarrow.parquet as pq
 
     n_before = len(files)
     undersized = sum(

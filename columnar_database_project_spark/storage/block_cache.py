@@ -6,6 +6,11 @@ the cached value is a *persisted DataFrame* for one block (block =
 file, see sources/microblock.py), so a cache hit reuses Spark's
 BlockManager-resident columnar data instead of re-scanning parquet.
 
+``put`` is lazy: it marks the DataFrame persisted and runs no job. The
+first action on the block builds its cached columns — the consumer's own
+read on a foreground miss, or the prefetcher's one materializing job per
+cycle (ml/prefetch.py).
+
 Deliberate fix over the reference: all mutation happens under a lock —
 the reference shares its cache between the query path and the prefetch
 daemon thread with no synchronization (reference
@@ -27,14 +32,13 @@ DEFAULT_CAPACITY = 64  # reference block_cache.py:13
 class BlockCache:
     """LRU: block_id → persisted DataFrame (or any value).
 
-    ``put`` persists (MEMORY_AND_DISK) and materializes; eviction
+    ``put`` persists (MEMORY_AND_DISK) without running a job; eviction
     unpersists. ``stats()`` matches the reference's surface
     (block_cache.py:58-63) plus hit/miss/eviction counters.
     """
 
-    def __init__(self, capacity: int = DEFAULT_CAPACITY, materialize: bool = True):
+    def __init__(self, capacity: int = DEFAULT_CAPACITY):
         self.capacity = capacity
-        self.materialize = materialize
         self._entries: OrderedDict[int, Any] = OrderedDict()
         self._lock = threading.RLock()
         self.hits = 0
@@ -71,8 +75,6 @@ class BlockCache:
                 self._entries[block_id] = value
         if isinstance(value, DataFrame) and value is not displaced:
             value.persist(StorageLevel.MEMORY_AND_DISK)
-            if self.materialize:
-                value.count()  # force materialization into the block manager
         if isinstance(displaced, DataFrame) and displaced is not value:
             displaced.unpersist()
 

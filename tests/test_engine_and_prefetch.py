@@ -5,6 +5,7 @@ interactive path (SURVEY §3.1) and prefetch loop (§3.3)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from columnar_database_project_spark.catalog import load_table
 from columnar_database_project_spark.engine import MicroBlockEngine
@@ -14,7 +15,7 @@ from columnar_database_project_spark.ml.scheduler import PrefetchScheduler
 from columnar_database_project_spark.ml.synthetic import generate_mixed_logs
 from columnar_database_project_spark.ml.training_set import build_from_sequence
 from columnar_database_project_spark.sources.index import MicroBlockIndex
-from columnar_database_project_spark.sources.microblock import MicroBlockWriter
+from columnar_database_project_spark.sources.microblock import MicroBlockWriter, read_block
 from columnar_database_project_spark.storage.access_logger import (
     AccessLogger,
     GlobalHistory,
@@ -228,3 +229,136 @@ class TestPrefetchStack:
         time.sleep(0.2)
         svc.stop()
         assert not svc._thread.is_alive()
+
+
+def _jobs_run(spark, fn) -> list[int]:
+    """Ids of the Spark jobs that ``fn()`` ran on this thread."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()   # status store is async
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _block_sums(path: str) -> tuple[int, int]:
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(path, columns=["v"])
+    return t.num_rows, int(t.column(0).to_numpy().sum())
+
+
+class TestBlockLoadJobs:
+    """A block load costs at most one Spark job: read_block infers a
+    schema once per distinct footer schema, BlockCache.put runs no job
+    and a prefetch cycle materializes its loads in one job."""
+
+    @pytest.fixture(scope="class")
+    def blocks(self, spark, tmp_path_factory):
+        out = str(tmp_path_factory.mktemp("jobs") / "t")
+        df = spark.range(0, 1400).withColumn("v", F.col("id") * 3)
+        MicroBlockWriter(block_rows=10).write(df.repartition(1), out)
+        return out
+
+    def test_read_block_infers_schema_once(self, spark, blocks):
+        idx = MicroBlockIndex.build(blocks, table_id="t")
+        assert idx.num_blocks == 140
+        dfs = []
+        ids = range(0, 80, 10)
+        jobs = _jobs_run(spark, lambda: dfs.extend(read_block(spark, idx, b) for b in ids))
+        assert len(jobs) <= 1
+        assert len(idx.read_schemas) == 1
+        for b, df in zip(ids, dfs):
+            row = df.agg(F.count(F.lit(1)), F.sum("v")).first()
+            assert (row[0], row[1]) == _block_sums(idx.block_file(b))
+
+    def test_read_block_keys_on_each_footer_schema(self, spark, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        tables = [
+            pa.table({"k": [1, 2, 3], "s": ["a", "b", None]}),
+            pa.table({"k": [4, 5], "x": [0.5, None], "s": ["c", "d"]}),
+            pa.table({"k": [6], "s": ["e"]}),   # same schema as the first
+        ]
+        files = []
+        for i, t in enumerate(tables):
+            files.append(str(tmp_path / f"b{i}.parquet"))
+            pq.write_table(t, files[-1])
+        idx = MicroBlockIndex.build_from_files(files, table_id="mixed")
+        for b in range(3):
+            got = read_block(spark, idx, b).toPandas()
+            want = pq.read_table(idx.block_file(b)).to_pandas()
+            assert list(got.columns) == list(want.columns)
+            assert got.astype(object).where(got.notna(), None).values.tolist() == \
+                want.astype(object).where(want.notna(), None).values.tolist()
+        assert len(idx.read_schemas) == 2
+        assert _jobs_run(spark, lambda: [read_block(spark, idx, b) for b in range(3)]) == []
+
+    def test_put_runs_no_job(self, spark, blocks):
+        idx = MicroBlockIndex.build(blocks, table_id="t")
+        read_block(spark, idx, 0)   # schema inferred once
+        cache = BlockCache(capacity=4)
+        df = read_block(spark, idx, 1)
+        assert _jobs_run(spark, lambda: cache.put(1, df)) == []
+        assert df.storageLevel.useMemory
+        cache.clear()
+
+    def test_prefetch_many_materializes_in_one_job(self, spark, tmp_path):
+        import shutil
+
+        out = str(tmp_path / "t")
+        df = spark.range(0, 2000).withColumn("v", F.col("id") * 7)
+        MicroBlockWriter(block_rows=250).write(df.repartition(1), out)
+        idx = MicroBlockIndex.build(out, table_id="t")
+        want = {b: _block_sums(idx.block_file(b)) for b in range(idx.num_blocks)}
+        cache = BlockCache(capacity=idx.num_blocks)
+        pf = Prefetcher(spark, idx, cache)
+        pf.prefetch_block(0)   # infers the schema
+        loaded = []
+        ids = [3, 1, 10**6, 2, 0, 4]
+        jobs = _jobs_run(spark, lambda: loaded.extend(pf.prefetch_many(ids)))
+        assert loaded == [3, 1, 2, 4]           # suggestion order, unknown and cached skipped
+        assert len(jobs) == 1
+        shutil.rmtree(out)   # consuming must not touch the files
+        for b in [0, *loaded]:
+            row = cache.get(b).agg(F.count(F.lit(1)), F.sum("v")).first()
+            assert (row[0], row[1]) == want[b]
+        cache.clear()
+
+    def test_cycle_larger_than_cache(self, spark, blocks):
+        class _Scheduler:
+            def suggest_topk_prefetch(self, sequence, k, exclude_blocks):
+                return [(b, 0.9) for b in range(10) if b not in exclude_blocks][:k]
+
+        class _Recording(Prefetcher):
+            def prefetch_many(self, block_ids):
+                self.returned = super().prefetch_many(block_ids)
+                return self.returned
+
+        idx = MicroBlockIndex.build(blocks, table_id="t")
+        cache = BlockCache(3)
+        history = GlobalHistory()
+        history.record_many([0, 1, 2])
+        pf = _Recording(spark, idx, cache)
+        svc = PrefetchService(_Scheduler(), pf, history, cache, interval=3600, k=10)
+        assert svc.run_once() == 10
+        assert svc.issued_log == pf.returned == list(range(10))
+        assert cache.cached_ids() == [7, 8, 9]
+        assert cache.evictions == 7
+        assert svc.economics.issued == 10
+        cache.clear()
+
+    def test_prefetch_pool_is_configured(self, spark):
+        from columnar_database_project_spark.ml.prefetch import PREFETCH_POOL
+
+        pool = spark.sparkContext._jsc.sc().getPoolForName(PREFETCH_POOL)
+        assert pool.isDefined()
+        # a pool Spark creates on first use would be FIFO
+        assert pool.get().schedulingMode().toString() == "FAIR"

@@ -27,6 +27,9 @@ class _StubPrefetcher:
         self.loaded.append(block_id)
         return True
 
+    def prefetch_many(self, block_ids):
+        return [b for b in block_ids if self.prefetch_block(b)]
+
 
 class _StubHistory:
     def get_sequence(self, n):

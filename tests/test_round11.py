@@ -135,6 +135,9 @@ class TestGateFlipThreshold:
                 time.sleep(0.1)
                 return True
 
+            def prefetch_many(self, block_ids):
+                return [b for b in block_ids if self.prefetch_block(b)]
+
         suggestions = [(i, 0.9) for i in range(10, 14)]
         econ_serial = PrefetchEconomics(warmup_issues=1)
         serial = PrefetchService(

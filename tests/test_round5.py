@@ -325,14 +325,21 @@ class TestScaleAwareTuning:
         is reserved for inputs that actually fill the cluster."""
         from columnar_database_project_spark import session as sess
 
+        # the floor engages only when b < 3 * cores * 16 MB, which no
+        # large-branch input reaches below 6 cores: pin the 32-core box
+        monkeypatch.setattr(sess, "DEFAULT_CPUS", 32)
         monkeypatch.setattr(sess, "input_bytes", lambda d: 400 * 1024**2)
         conf = sess.tune_for_scale(spark, str(tmp_path))
         assert conf["spark.sql.files.maxPartitionBytes"] == str(16 * 1024**2)
-        # mid-large input: split = b / (3*cores), between the bounds
-        monkeypatch.setattr(sess, "input_bytes", lambda d: 6 * 1024**3)
+        monkeypatch.undo()
+        # mid-large input: split = b / (3*cores), between the bounds.
+        # The input is sized from the core count (64 MiB per task, and
+        # at least the large boundary) so it lands there on any host.
+        mid_large = max(sess.SMALL_INPUT_BYTES, 3 * sess.DEFAULT_CPUS * 64 * 1024**2)
+        monkeypatch.setattr(sess, "input_bytes", lambda d: mid_large)
         conf = sess.tune_for_scale(spark, str(tmp_path))
         split = int(conf["spark.sql.files.maxPartitionBytes"])
-        assert split == (6 * 1024**3) // (3 * sess.DEFAULT_CPUS)
+        assert split == mid_large // (3 * sess.DEFAULT_CPUS)
         assert 16 * 1024**2 < split < 128 * 1024**2
         monkeypatch.undo()
         sess.tune_for_scale(spark, "/root/testdata/sf0.001")

@@ -727,3 +727,20 @@ class TestOrcPrefetch:
         assert cache.get(0).count() == 100
         assert pf.prefetch_block(0) is False  # already cached
         cache.clear()
+        # read_block reads ORC block files as ORC: every block matches
+        # its file, and the blocks together are the source
+        import pyarrow.orc as po
+
+        from columnar_database_project_spark.sources.microblock import (
+            read_block,
+        )
+
+        parts = []
+        for b in range(idx.num_blocks):
+            got = read_block(spark, idx, b).toPandas()
+            want = po.ORCFile(idx.block_file(b)).read().to_pandas()
+            assert got.sort_values("k").values.tolist() == (
+                want.sort_values("k").values.tolist()
+            )
+            parts.append(got)
+        assert sorted(pd.concat(parts)["k"]) == list(range(300))

@@ -35,7 +35,7 @@ class TestBlockCache:
     def test_reput_swaps_persistence(self, spark, sf_dir):
         # Replace path (reference C2 semantics, block_cache.py:27-44):
         # the displaced DataFrame must be unpersisted and the
-        # replacement persisted+materialized, so re-put neither leaks
+        # replacement persisted, so re-put neither leaks
         # BlockManager storage nor leaves an unpersisted "hit".
         c = BlockCache(capacity=2)
         old = spark.read.parquet(f"{sf_dir}/region.parquet")
