@@ -176,7 +176,6 @@ class MicroBlockEngine:
         src: str,
         name: str,
         out_path: str,
-        store_path: str,
         checkpoint: str,
     ) -> dict:
         """Continuous-corpus ingestion through the façade: drain the
@@ -184,27 +183,28 @@ class MicroBlockEngine:
         streaming dedup (``streaming.text.dedup_stream_against_store``
         — availableNow trigger, so each call processes exactly the
         files present), then register the deduplicated table as
-        ``name``. Repeated calls are the incremental-drop cadence: the
-        fingerprint store carries survivors across calls, so a doc
+        ``name`` (the ManifestStore at ``out_path`` without its ``fp``
+        column). Repeated calls are the incremental-drop cadence: the
+        stored fingerprints carry survivors across calls, so a doc
         seen in ANY earlier drop never re-enters the table. Returns
         {"rows": n, "store_fingerprints": m}."""
+        from columnar_database_project_spark.storage.manifests import (
+            ManifestStore,
+        )
         from columnar_database_project_spark.streaming.text import (
             dedup_stream_against_store,
             read_document_stream,
         )
 
         q = dedup_stream_against_store(
-            read_document_stream(self.spark, src),
-            out_path,
-            store_path,
-            checkpoint,
+            read_document_stream(self.spark, src), out_path, checkpoint
         )
         q.awaitTermination()
-        self.spark.catalog.refreshByPath(out_path)
-        self.register(name, self.spark.read.parquet(out_path))
+        stored = ManifestStore(out_path).read(self.spark)
+        self.register(name, stored.drop("fp"))
         return {
             "rows": self.tables[name].count(),
-            "store_fingerprints": self.spark.read.parquet(store_path).count(),
+            "store_fingerprints": stored.select("fp").count(),
         }
 
     def ingest_stream_upsert(
@@ -219,11 +219,14 @@ class MicroBlockEngine:
     ) -> dict:
         """Continuous CDC MERGE through the façade: drain the change
         drops in ``src`` (parquet files matching ``schema``) through
-        ``streaming.dml.upsert_stream`` into the snapshot at
+        ``streaming.dml.upsert_stream`` into the ManifestStore at
         ``table_path`` (per-key last-writer-wins on ``order_col``),
         then register the merged table as ``name``. Repeated calls are
         the incremental-feed cadence; replayed or out-of-order drops
         are idempotent under LWW. Returns {"rows": n}."""
+        from columnar_database_project_spark.storage.manifests import (
+            ManifestStore,
+        )
         from columnar_database_project_spark.streaming.dml import (
             upsert_stream,
         )
@@ -235,8 +238,7 @@ class MicroBlockEngine:
         )
         q = upsert_stream(changes, table_path, key, order_col, checkpoint)
         q.awaitTermination()
-        self.spark.catalog.refreshByPath(table_path)
-        self.register(name, self.spark.read.parquet(table_path))
+        self.register(name, ManifestStore(table_path).read(self.spark))
         return {"rows": self.tables[name].count()}
 
     def stream_heavy_hitters(
@@ -250,6 +252,9 @@ class MicroBlockEngine:
         summary (``streaming.text.heavy_hitters_stream``) and return
         the bounded (<= ``capacity``-entry) term-frequency summary as a
         DataFrame — the façade's continuous-statistics surface."""
+        from columnar_database_project_spark.storage.manifests import (
+            ManifestStore,
+        )
         from columnar_database_project_spark.streaming.text import (
             heavy_hitters_stream,
             read_document_stream,
@@ -262,8 +267,7 @@ class MicroBlockEngine:
             capacity=capacity,
         )
         q.awaitTermination()
-        self.spark.catalog.refreshByPath(store_path)
-        return self.spark.read.parquet(store_path)
+        return ManifestStore(store_path).read(self.spark)
 
     # ----------------------------------------------------------------- DML
     # Every verb commits a new version of a ManifestStore table
@@ -382,7 +386,7 @@ class MicroBlockEngine:
     def compact_manifest(self, name: str, mstore, **kw) -> dict:
         """Compact a manifest table (storage/cow.compact_manifest) and
         refresh registration + index — block identity changes with the
-        manifest, same rebuild rule as ``compact``."""
+        manifest, so the index is rebuilt from the new file list."""
         from columnar_database_project_spark.storage.cow import (
             compact_manifest,
         )
@@ -399,9 +403,8 @@ class MicroBlockEngine:
         from its current file list, so the observability stack
         (explain / access log / prefetch) keys on the live snapshot's
         blocks. Call again after any CoW verb or compaction — block
-        identity changes with the manifest, the same rebuild rule as
-        ``compact``. ``blooms``: optional Bloom sidecar to attach for
-        point-lookup prediction."""
+        identity changes with the manifest. ``blooms``: optional Bloom
+        sidecar to attach for point-lookup prediction."""
         from columnar_database_project_spark.sources.index import (
             MicroBlockIndex,
         )
@@ -414,27 +417,6 @@ class MicroBlockEngine:
             if blooms is not None:
                 idx.attach_blooms(blooms)
             self.index = idx
-
-    def compact(self, name: str, path: str, **kw) -> dict:
-        """Compact a registered table's microblock directory (see
-        ``sources.microblock.compact_blocks``) and refresh the
-        registration — block identity changes, so an attached index
-        for this table must be rebuilt by the caller."""
-        from columnar_database_project_spark.sources.microblock import (
-            compact_blocks,
-            recover_compaction,
-        )
-
-        # heal any crash leftovers of a PREVIOUS compaction first —
-        # restores the backup if the last swap died between renames,
-        # clears stale staging dirs otherwise (no-op on healthy state)
-        recovery = recover_compaction(path)
-        report = compact_blocks(self.spark, path, **kw)
-        report["recovery"] = recovery["state"]
-        if report["compacted"]:
-            self.spark.catalog.refreshByPath(path)
-            self.register(name, self.spark.read.parquet(path))
-        return report
 
     # ------------------------------------------------------------- queries
     def query(self, sql: str) -> DataFrame:

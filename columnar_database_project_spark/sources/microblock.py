@@ -18,7 +18,7 @@ scan-oriented tables, with 16_384 available for cache-oriented parity.
 
 from __future__ import annotations
 
-import os
+from contextlib import contextmanager
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +29,7 @@ from columnar_database_project_spark.sources.index import MicroBlockIndex
 REFERENCE_BLOCK_ROWS = 16_384    # reference microblock_writer.py:5
 DEFAULT_BLOCK_ROWS = 131_072     # reference benchmark2.py:242-243 guidance
 ROW_ID_COL = "_rid"
+_RANGE_SAMPLE_CONF = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
 
 
 class MicroBlockWriter:
@@ -200,148 +201,6 @@ def scan_range(
     )
 
 
-def compact_blocks(
-    spark: SparkSession,
-    path: str,
-    block_rows: int = DEFAULT_BLOCK_ROWS,
-    min_fill: float = 0.5,
-    sort_by: list[str] | None = None,
-) -> dict:
-    """Compact a microblock directory whose blocks have fragmented
-    below ``min_fill * block_rows`` rows — the small-file problem every
-    incrementally-ingested table develops (each drop writes its own
-    tail block; at 100 TB a table ingested in 10k drops carries 10k
-    undersized files whose per-file open/footer/task overhead dominates
-    scans).
-
-    Idempotent and conservative: if no block is under the fill
-    threshold, nothing is rewritten. Otherwise the WHOLE table is
-    rewritten through ``MicroBlockWriter`` into a staging directory,
-    row-count-verified against the source, and swapped in via two
-    renames. The swap is NOT a single atomic operation (POSIX has no
-    two-directory exchange): a crash between the renames leaves no
-    table at ``path`` — but the pre-swap copy is retained at
-    ``<path>.compact_old`` until the swapped-in table is verified, so
-    no data is ever lost. Recovery after a crash: if ``path`` is
-    missing and ``<path>.compact_old`` exists, restore it with
-    ``recover_compaction(path)`` (also clears stale ``.compact_tmp``
-    / ``.compact_old`` leftovers on healthy state; crash-simulation
-    test in tests/test_round6.py). Block identity changes on
-    compaction by design — callers holding a ``MicroBlockIndex``
-    rebuild it from the new footers (cheap driver-side metadata scan).
-
-    ``sort_by``: optionally re-cluster while compacting.
-    Interleaved/out-of-order ingests spread every key range across
-    every block, so zone maps (and parquet row-group stats) stop
-    excluding anything; a plain coalesce-compaction PRESERVES that
-    damage forever. With ``sort_by`` the rewrite range-partitions on
-    the keys and sorts within partitions — one opt-in shuffle that
-    restores tight per-block min/max, i.e. the layout
-    ``bench_layout_pruning`` measures at 3/47 blocks for a 5% window.
-
-    Returns {"compacted": bool, "blocks_before": n, "blocks_after": m}.
-    """
-    import shutil
-
-    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    if not files:
-        return {"compacted": False, "blocks_before": 0, "blocks_after": 0}
-
-    n_before = len(files)
-    undersized = sum(
-        1
-        for f in files
-        if pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-        < block_rows * min_fill
-    )
-    if undersized <= 1:  # a single tail block is the expected remainder
-        return {
-            "compacted": False,
-            "blocks_before": n_before,
-            "blocks_after": n_before,
-        }
-    staging = path.rstrip("/") + ".compact_tmp"
-    shutil.rmtree(staging, ignore_errors=True)
-    df = spark.read.parquet(path)
-    # coalesce (no shuffle) down to ~one task per target block:
-    # maxRecordsPerFile enforces the block size, the task count only
-    # sets write parallelism — at cluster scale this is a pure
-    # scan+rewrite with no exchange.
-    n_rows = df.count()
-    n_tasks = max(1, n_rows // block_rows + 1)
-    if sort_by:
-        df = df.repartitionByRange(n_tasks, *sort_by).sortWithinPartitions(
-            *sort_by
-        )
-    else:
-        df = df.coalesce(n_tasks)
-    MicroBlockWriter(block_rows=block_rows).write(df, staging)
-    # verify the staging copy BEFORE touching the live table (footer
-    # metadata only — no data read)
-    staged_rows = sum(
-        pq.ParquetFile(os.path.join(staging, f)).metadata.num_rows
-        for f in os.listdir(staging)
-        if f.endswith(".parquet")
-    )
-    if staged_rows != n_rows:
-        shutil.rmtree(staging)
-        raise RuntimeError(
-            f"compaction aborted: staging has {staged_rows} rows, "
-            f"source has {n_rows}; original table untouched"
-        )
-    old = path.rstrip("/") + ".compact_old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(staging, path)
-    # the .compact_old backup outlives the swap until the new table is
-    # verified in place — the recovery point the docstring documents
-    n_after = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-    if n_after > 0:
-        shutil.rmtree(old)
-    return {
-        "compacted": True,
-        "blocks_before": n_before,
-        "blocks_after": n_after,
-    }
-
-
-def recover_compaction(path: str) -> dict:
-    """The crash-recovery procedure ``compact_blocks``'s docstring
-    documents, as a callable (run it before opening any table — it is
-    a cheap no-op on healthy state):
-
-    - live table present → stale ``.compact_tmp`` / ``.compact_old``
-      are leftovers of an interrupted run AFTER the point of no data
-      loss; delete them.
-    - live table MISSING and ``.compact_old`` present → the crash hit
-      between the two swap renames; restore the backup with one
-      rename. A ``.compact_tmp`` still present alongside was verified
-      row-count-equal before the swap began, but the backup is the
-      conservative choice (it is the exact pre-compaction bytes).
-
-    Returns {"state": "healthy" | "restored" | "missing",
-    "cleaned": [...]} — "missing" means neither live nor backup
-    exists, which recovery cannot invent."""
-    import shutil
-
-    tmp = path.rstrip("/") + ".compact_tmp"
-    old = path.rstrip("/") + ".compact_old"
-    cleaned: list[str] = []
-    if os.path.isdir(path):
-        for stale in (tmp, old):
-            if os.path.isdir(stale):
-                shutil.rmtree(stale)
-                cleaned.append(os.path.basename(stale))
-        return {"state": "healthy", "cleaned": cleaned}
-    if os.path.isdir(old):
-        os.rename(old, path)
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-            cleaned.append(os.path.basename(tmp))
-        return {"state": "restored", "cleaned": cleaned}
-    return {"state": "missing", "cleaned": cleaned}
-
-
 Z_BITS = 16   # bucket resolution per dimension (2 dims → 32-bit z key)
 
 
@@ -376,6 +235,46 @@ def zorder_key(col_a, col_b, bounds: tuple) -> "F.Column":
     return z
 
 
+@contextmanager
+def exact_range_bounds(spark: SparkSession, points_per_partition: int):
+    """Inside the ``with`` body, range shuffles sample
+    ``points_per_partition`` keys per output partition (Spark's default
+    is 100; its own cap is 1e6 points in all).
+
+    Spark cuts range partitions at bounds drawn from a reservoir sample
+    seeded with the RDD id, so with a small sample the same write over
+    the same data cuts different blocks depending on how many RDDs the
+    session made before it. Once the sample covers the input the bounds
+    are exact quantiles, and the layout depends on the data alone. The
+    conf is session-wide: a range shuffle another thread runs in the
+    same session meanwhile samples as much."""
+    prev = spark.conf.get(_RANGE_SAMPLE_CONF)
+    spark.conf.set(_RANGE_SAMPLE_CONF, str(points_per_partition))
+    try:
+        yield
+    finally:
+        spark.conf.set(_RANGE_SAMPLE_CONF, prev)
+
+
+def zorder_sorted(df: DataFrame, cols, n_parts: int) -> DataFrame:
+    """``df`` range-partitioned into ``n_parts`` on the Morton key of
+    two numeric ``cols`` and sorted within each partition; the key
+    column is dropped (a narrow projection keeps the order). Bounds
+    for the key come from one 1-row agg (control plane)."""
+    a, b = cols
+    r = df.agg(
+        F.min(a).alias("la"), F.max(a).alias("ha"),
+        F.min(b).alias("lb"), F.max(b).alias("hb"),
+    ).first()
+    z = zorder_key(F.col(a), F.col(b), (r["la"], r["ha"], r["lb"], r["hb"]))
+    return (
+        df.withColumn("_z", z)
+        .repartitionByRange(n_parts, F.col("_z"))
+        .sortWithinPartitions("_z")
+        .drop("_z")
+    )
+
+
 def write_zordered(
     df: DataFrame,
     path: str,
@@ -391,25 +290,16 @@ def write_zordered(
     and min/max stats become tight on both columns simultaneously —
     the same technique Delta/Iceberg expose as OPTIMIZE ZORDER.
 
-    Scale shape: one 1-row bounds agg, one range shuffle on the z key,
-    per-partition sort, parallel block write — identical cost to any
-    globally-sorted write.
+    Scale shape: one 1-row bounds agg, one range shuffle on the z key
+    (bounds sampled from one block's worth of keys per partition, see
+    ``exact_range_bounds``), per-partition sort, parallel block write —
+    identical cost to any globally-sorted write.
     """
-    a, b = cols
     spark = df.sparkSession
-    r = df.agg(
-        F.min(a).alias("la"), F.max(a).alias("ha"),
-        F.min(b).alias("lb"), F.max(b).alias("hb"),
-    ).first()
-    z = zorder_key(F.col(a), F.col(b), (r["la"], r["ha"], r["lb"], r["hb"]))
     n_parts = num_partitions or spark.sparkContext.defaultParallelism
-    zdf = (
-        df.withColumn("_z", z)
-        .repartitionByRange(n_parts, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")   # narrow projection — preserves the sort order
-    )
-    MicroBlockWriter(block_rows=block_rows).write(zdf, path)
+    zdf = zorder_sorted(df, cols, n_parts)
+    with exact_range_bounds(spark, block_rows):
+        MicroBlockWriter(block_rows=block_rows).write(zdf, path)
 
 
 def write_hive_partitioned(

@@ -43,6 +43,8 @@ from columnar_database_project_spark.sources.index import MicroBlockIndex
 from columnar_database_project_spark.sources.microblock import (
     DEFAULT_BLOCK_ROWS,
     MicroBlockWriter,
+    exact_range_bounds,
+    zorder_sorted,
 )
 from columnar_database_project_spark.storage.manifests import (
     ManifestStore,
@@ -589,9 +591,21 @@ def append_cow(
 ) -> dict:
     """INSERT/append: the new rows land as new blocks, every existing
     block is carried by reference — the cheapest verb (zero reads of
-    existing data, IO = the appended rows). Missing manifest-schema
-    columns in ``df`` (e.g. after a metadata-only add_column) are
-    allowed — they read as NULL; extra columns are an error."""
+    existing data, IO = the appended rows). An empty store is
+    initialized from ``df``'s schema (``init_manifest_table``).
+    Missing manifest-schema columns in ``df`` (e.g. after a
+    metadata-only add_column) are allowed — they read as NULL; extra
+    columns are an error."""
+    if store.latest() is None:
+        rep = init_manifest_table(
+            spark, store, df, block_rows=block_rows, meta=meta
+        )
+        return {
+            "version": rep["version"],
+            "appended_rows": df.count(),
+            "files_new": rep["files"],
+            "files_carried": 0,
+        }
     target_cols = {
         f["name"] for f in json.loads(store.schema_json())["fields"]
     }
@@ -622,24 +636,31 @@ def compact_manifest(
     sort_by: list[str] | None = None,
     zorder: bool = False,
 ) -> dict:
-    """Compaction as a manifest commit — the CoW twin of
-    ``sources.microblock.compact_blocks``, with two structural
-    advantages the directory form can't have: (1) WITHOUT ``sort_by``
-    it is itself copy-on-write — only the undersized blocks (every
-    incrementally-ingested table's tail-block debris, e.g. from
-    ``append_stream_manifest``) are coalesced and rewritten, full
-    blocks are carried by reference; (2) the swap is the head-log
-    commit, genuinely atomic, so there is no crash window needing a
-    ``recover_compaction`` procedure at all — a crash mid-compaction
-    leaves the previous version current and orphan files for vacuum.
+    """Compaction as a manifest commit — the engine's one compaction
+    verb. Every incrementally-ingested table develops small-file debt
+    (each drop writes its own tail block, e.g. from
+    ``append_stream_manifest``; at 100 TB, 10k drops leave 10k
+    undersized files whose per-file open/footer/task overhead
+    dominates scans). WITHOUT ``sort_by`` the compaction is itself
+    copy-on-write: only the undersized blocks are coalesced and
+    rewritten, full blocks are carried by reference. The swap is the
+    head-log commit, so a crash mid-compaction leaves the previous
+    version current and orphan files for ``vacuum``; re-running
+    compacts. Block identity changes with the manifest, so an index
+    over the table must be rebuilt from the new file list
+    (``MicroBlockEngine.compact_manifest`` does).
 
-    ``sort_by`` re-clusters to restore zone-map locality (see
-    compact_blocks' rationale): that is a GLOBAL property, so every
+    ``sort_by`` re-clusters to restore zone-map locality: interleaved
+    or out-of-order ingests spread every key range across every
+    block, so zone maps stop excluding anything, and a coalesce
+    preserves that damage. Locality is a GLOBAL property, so every
     block is rewritten through one range shuffle — the opt-in
     full-rewrite case. With ``zorder=True`` and exactly two numeric
     ``sort_by`` columns, the re-cluster orders on the Morton key
     (``sources.microblock.zorder_key``) instead — OPTIMIZE ZORDER as a
-    manifest commit, for tables box-filtered on both dimensions.
+    manifest commit, for tables box-filtered on both dimensions. Both
+    re-cluster paths cut blocks at bounds sampled from one block's
+    worth of keys per partition (``exact_range_bounds``).
 
     Idempotent: ≤1 undersized block and no ``sort_by`` → no new
     version. Row-count-verified before commit."""
@@ -683,33 +704,18 @@ def compact_manifest(
     if touched:
         df = store.read_subset(spark, touched)
         n_expect = sum(rows_of[f] - dv_rows[f] for f in touched)
+        n_parts = max(1, sum(rows_of.values()) // block_rows)
         if sort_by and zorder:
             if len(sort_by) != 2:
                 raise ValueError("zorder=True requires exactly 2 sort_by columns")
-            from columnar_database_project_spark.sources.microblock import (
-                zorder_key,
-            )
-
-            a, b = sort_by
-            r = df.agg(
-                F.min(a).alias("la"), F.max(a).alias("ha"),
-                F.min(b).alias("lb"), F.max(b).alias("hb"),
-            ).first()
-            z = zorder_key(F.col(a), F.col(b), (r["la"], r["ha"], r["lb"], r["hb"]))
-            n_parts = max(1, sum(rows_of.values()) // block_rows)
-            df = (
-                df.withColumn("_z", z)
-                .repartitionByRange(n_parts, F.col("_z"))
-                .sortWithinPartitions("_z")
-                .drop("_z")
-            )
+            df = zorder_sorted(df, sort_by, n_parts)
         elif sort_by:
-            n_parts = max(1, sum(rows_of.values()) // block_rows)
             df = df.repartitionByRange(n_parts, *[F.col(c) for c in sort_by])
             df = df.sortWithinPartitions(*sort_by)
         else:
             df = df.coalesce(max(1, n_expect // block_rows or 1))
-        MicroBlockWriter(block_rows=block_rows).write(df, stage)
+        with exact_range_bounds(spark, block_rows):
+            MicroBlockWriter(block_rows=block_rows).write(df, stage)
         new_files = list_block_files(stage)
         n_got = sum(pq.ParquetFile(f).metadata.num_rows for f in new_files)
         if n_got != n_expect:
@@ -806,9 +812,14 @@ def init_manifest_table(
     block_rows: int | None = None,
     meta: dict | None = None,
 ) -> dict:
-    """Version 1: materialize ``df`` as the store's initial manifest.
-    ``meta`` is carried in the commit (the streaming sink's first
-    batch needs its ``txn.batch_id`` witness here too)."""
+    """Commit ``df`` as a full-replacement version: its blocks are
+    the version's only files, nothing is carried from an earlier
+    version, and the manifest schema is ``df``'s. On an empty store
+    this is version 1; on a live one it replaces the snapshot
+    atomically (``upsert_stream`` and ``heavy_hitters_stream`` commit
+    every batch this way). ``meta`` is carried in the commit (the
+    streaming sink's first batch needs its ``txn.batch_id`` witness
+    here too)."""
     v, stage = store.stage_next()
     MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(df, stage)
     store.commit(v, list_block_files(stage), [], df.schema.json(), meta=meta)

@@ -9,19 +9,17 @@ column — so out-of-order arrivals (a late batch carrying an OLDER
 version of a key) never clobber newer data, across batches as well as
 within one.
 
+Both writers here commit through ``ManifestStore.commit``: a batch's
+files and manifest land first, and one ``os.replace`` of the head log
+publishes them. A crash before that swap leaves the previous version
+current; the restarted query replays the batch against it.
+
 Local tests drive this with a file source; at scale the source becomes
 Kafka/CDC-log notifications and the snapshot a lakehouse table — the
-transformation is identical. Exactly-once caveat mirrors
-``dedup_stream_against_store``: the parquet snapshot swap is atomic
-per batch (two-rename), but a replayed batch re-merges its rows; LWW
-on the version column makes that replay idempotent, which is the CDC
-property that matters.
+transformation is identical.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -52,46 +50,44 @@ def upsert_stream(
     checkpoint: str,
 ):
     """Continuous MERGE: each micro-batch of change rows is compacted
-    into the snapshot at ``table_path`` under per-key last-writer-wins
-    on ``order_col``.
+    into the snapshot of the ManifestStore at ``table_path`` under
+    per-key last-writer-wins on ``order_col``.
 
     Per batch: union the current snapshot with the batch, keep the
     max-version row per key (ONE key shuffle — same cost class as the
     anti-join form of ``merge_cow``, but correct under out-of-order
-    delivery without a conditional-update branch), write to a staging
-    dir, two-rename swap so readers never see a half-merged table (a
-    crash between the renames leaves the previous snapshot at
-    ``.old``; restore by renaming back). At 100 TB the per-batch
-    rewrite cost is why lakehouse MERGE partitions the snapshot and
-    rewrites only touched partitions — with a partitioned snapshot the
-    same plan applies per partition; the LWW semantics do not change.
+    delivery without a conditional-update branch), commit the result
+    as a full-replacement version (``init_manifest_table``), then
+    vacuum down to that one version. A replayed batch re-merges rows
+    the snapshot already holds, and LWW on the version column makes
+    that idempotent, so no batch-id witness is needed. At 100 TB the
+    per-batch rewrite cost is why lakehouse MERGE partitions the
+    snapshot and rewrites only touched partitions — with a partitioned
+    snapshot the same plan applies per partition; the LWW semantics do
+    not change.
 
     Returns the StreamingQuery (availableNow trigger — drains the
     drops present, the incremental-feed cadence).
     """
-    from columnar_database_project_spark.sources.microblock import (
-        MicroBlockWriter,
+    from columnar_database_project_spark.storage.cow import (
+        init_manifest_table,
     )
+    from columnar_database_project_spark.storage.manifests import (
+        ManifestStore,
+    )
+
+    store = ManifestStore(table_path)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         latest = _lww_latest(batch_df, key, order_col)
-        if os.path.isdir(table_path):
-            current = spark.read.parquet(table_path).select(
-                *batch_df.columns
-            )
+        if store.latest() is not None:
+            current = store.read(spark).select(*batch_df.columns)
             latest = _lww_latest(
                 current.unionByName(latest), key, order_col
             )
-        tmp = table_path + ".tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        MicroBlockWriter().write(latest, tmp)
-        old = table_path + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(table_path):
-            os.rename(table_path, old)
-        os.rename(tmp, table_path)
-        shutil.rmtree(old, ignore_errors=True)
+        init_manifest_table(spark, store, latest)
+        store.vacuum(keep_last=1)
 
     return (
         changes.writeStream.foreachBatch(process)
@@ -126,28 +122,12 @@ def append_stream_manifest(
     ``dedup_stream_against_store``). Retention note: vacuum must keep
     at least the source's replay horizon of versions or a replay loses
     its dedup witness (see ManifestStore.txn_batch_ids)."""
-    from columnar_database_project_spark.storage.cow import (
-        append_cow,
-        init_manifest_table,
-    )
+    from columnar_database_project_spark.storage.cow import append_cow
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if int(batch_id) in store.txn_batch_ids():
             return  # replayed batch: already committed, exactly-once skip
         if batch_df.isEmpty():
-            return
-        if store.latest() is None:
-            # Fresh store: the first non-empty batch initializes it
-            # from its own schema (no init_manifest_table precondition
-            # to trip over); the txn witness rides the init commit so
-            # a replay of batch 0 still dedups.
-            init_manifest_table(
-                batch_df.sparkSession,
-                store,
-                batch_df,
-                block_rows=block_rows,
-                meta={"txn": {"batch_id": int(batch_id)}},
-            )
             return
         append_cow(
             batch_df.sparkSession,

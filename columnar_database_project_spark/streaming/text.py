@@ -80,29 +80,34 @@ def source_quality_stats_stream(docs: DataFrame) -> DataFrame:
 def dedup_stream_against_store(
     docs: DataFrame,
     out_path: str,
-    store_path: str,
     checkpoint: str,
 ):
-    """Streaming exact dedup against a PERSISTENT fingerprint store —
-    the continuous form of ``dedup.q_dedup_incremental``'s exact
-    verdict: each micro-batch keeps one doc per content fingerprint
-    (min doc_id within the batch), drops docs whose fingerprint is
-    already in the store (anti-join), appends survivors to ``out_path``
-    and their fingerprints to the store.
+    """Streaming exact dedup against a PERSISTENT store — the
+    continuous form of ``dedup.q_dedup_incremental``'s exact verdict.
+    The output is a ManifestStore at ``out_path`` whose rows carry
+    their content fingerprint ``fp``: each micro-batch keeps one doc
+    per fingerprint (min doc_id within the batch), drops docs whose
+    fingerprint the store already holds (anti-join), and appends the
+    survivors in ONE ``append_cow`` commit.
 
     ``foreachBatch`` is the right tool, not ``dropDuplicates``:
     dropDuplicates state lives in the state store, unbounded without an
     event-time watermark (content fingerprints never expire), and is
-    lost on checkpoint reset. A parquet/lakehouse fingerprint table is
-    durable, shared across pipelines (the batch path joins against the
-    SAME store), and equi-join-pruned at scale. Exactly-once caveat:
-    parquet append is not transactional across the two writes — on a
-    lakehouse table format the two appends become one transaction;
-    replayed batches would need idempotent MERGE semantics there.
+    lost on checkpoint reset. The stored ``fp`` column is durable,
+    shared across pipelines (the batch path joins against the SAME
+    store), and equi-join-pruned at scale. Exactly-once holds by
+    content, whatever the checkpoint: a crash before the commit leaves
+    nothing to undo, and a replay of a committed batch finds all its
+    fingerprints stored and commits nothing.
 
     Returns the StreamingQuery (availableNow trigger — drains what is
     present, the incremental-drop cadence)."""
-    import os
+    from columnar_database_project_spark.storage.cow import append_cow
+    from columnar_database_project_spark.storage.manifests import (
+        ManifestStore,
+    )
+
+    store = ManifestStore(out_path)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -112,16 +117,19 @@ def dedup_stream_against_store(
             .agg(F.min("doc_id").alias("doc_id"))
             .join(batch, ["fp", "doc_id"])
         )
-        if os.path.isdir(store_path):
-            seen = spark.read.parquet(store_path).select("fp")
+        if store.latest() is not None:
+            seen = store.read(spark).select("fp")
             firsts = firsts.join(seen, "fp", "left_anti")
-        # localCheckpoint: both writes must see the SAME survivor set
-        # even though the anti-join's store snapshot changes below
+        # localCheckpoint: the emptiness check and the append see one
+        # survivor set, computed once
         firsts = firsts.localCheckpoint()
-        firsts.select(
-            "doc_id", "text", "lang", "source", "n_chars"
-        ).write.mode("append").parquet(out_path)
-        firsts.select("fp").write.mode("append").parquet(store_path)
+        if firsts.isEmpty():
+            return
+        append_cow(
+            spark,
+            store,
+            firsts.select("doc_id", "text", "lang", "source", "n_chars", "fp"),
+        )
 
     return (
         docs.writeStream.foreachBatch(process)
@@ -138,22 +146,34 @@ def heavy_hitters_stream(
     capacity: int = 30,
 ):
     """Streaming Misra-Gries: maintain a BOUNDED (<= ``capacity``
-    entries) term-frequency summary across micro-batches in a
-    persistent store. Each batch's exact term counts (one small
-    aggregate — vocabulary-sized, not corpus-sized) are merged into
-    the stored summary and MG-reduced back under capacity; the
-    mergeable-summaries guarantee carries over, so any term with
+    entries) term-frequency summary across micro-batches in the
+    ManifestStore at ``store_path``. Each batch's exact term counts
+    (one small aggregate — vocabulary-sized, not corpus-sized) are
+    merged into the stored summary and MG-reduced back under capacity;
+    the mergeable-summaries guarantee carries over, so any term with
     overall frequency > n/(capacity+1) is always present in the store
     no matter how the stream was batched. The batch operator
     (``operators.sketch``) runs its exact verify pass against the same
-    candidates when a precise count is needed."""
-    import os
+    candidates when a precise count is needed.
 
+    Each batch commits the new summary as a full-replacement version
+    (``init_manifest_table``), then vacuums down to it. A crash before
+    the commit leaves the previous summary current, and the replayed
+    batch merges into it once. A batch replayed AFTER its commit (a
+    crash before the checkpoint advanced) is counted twice."""
     from columnar_database_project_spark.operators.sketch import (
         _mg_summaries,
         mg_reduce,
     )
     from columnar_database_project_spark.operators.text import tokens_col
+    from columnar_database_project_spark.storage.cow import (
+        init_manifest_table,
+    )
+    from columnar_database_project_spark.storage.manifests import (
+        ManifestStore,
+    )
+
+    store = ManifestStore(store_path)
 
     def _store_reduce(batches):
         # single-partition merge kernel: sum (term, cnt) entries from
@@ -181,28 +201,19 @@ def heavy_hitters_stream(
         merged = batch_df.select(
             F.explode(tokens_col()).alias("term")
         ).mapInPandas(_mg_summaries, schema="term string, cnt long")
-        if os.path.isdir(store_path):
+        if store.latest() is not None:
             merged = merged.unionByName(
-                spark.read.parquet(store_path).select("term", "cnt")
+                store.read(spark).select("term", "cnt")
             )
         # union-then-re-reduce stays in Spark (r9, VERDICT r8 #8): one
         # single-partition mapInPandas replaces the former driver-dict
         # merge — nothing vocabulary- or summary-sized reaches the
         # driver at any capacity.
-        merged.coalesce(1).mapInPandas(
+        summary = merged.coalesce(1).mapInPandas(
             _store_reduce, schema="term string, cnt long"
-        ).write.mode("overwrite").parquet(store_path + ".tmp")
-        # two-rename swap: readers never see a half-written summary. A
-        # crash between the renames leaves the previous summary at
-        # .old (restore by renaming back); never both missing.
-        import shutil
-
-        old = store_path + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(store_path):
-            os.rename(store_path, old)
-        os.rename(store_path + ".tmp", store_path)
-        shutil.rmtree(old, ignore_errors=True)
+        )
+        init_manifest_table(spark, store, summary)
+        store.vacuum(keep_last=1)
 
     return (
         docs.writeStream.foreachBatch(process)

@@ -3,8 +3,8 @@
 The batch suite builds its IVF-PQ structures inside each query's scan
 (`operators/similarity.py`); a production corpus is FED continuously,
 and retraining + reassigning the whole index per drop is the one cost
-you cannot pay at 100 TB. This module is the incremental form, the
-same store-backed ``foreachBatch`` shape as
+you cannot pay at 100 TB. This module is the incremental form, a
+store-backed ``foreachBatch`` like
 ``streaming/text.dedup_stream_against_store``:
 
 - centroids + codebooks are FROZEN artifacts (trained once on a
@@ -91,10 +91,11 @@ def index_vectors_stream(
     ``partitionBy("cell")`` is the point — the store's directory tree
     is the inverted file, so the search side prunes to the probed
     cells at FILE LISTING time, before a byte is read. Appends into an
-    existing cell directory are new files, no rewrite; compaction of
-    small per-batch files rides the engine's existing
-    ``compact_blocks`` lifecycle. Returns the StreamingQuery
-    (availableNow — drains present drops, the incremental cadence)."""
+    existing cell directory are new files, no rewrite. Unlike the
+    manifest-backed writers, these appends land outside any commit,
+    and nothing compacts the small per-batch files they leave in each
+    cell. Returns the StreamingQuery (availableNow — drains present
+    drops, the incremental cadence)."""
     cents = ivf_centroids(codebook_sf_dir)
     books = pq_codebooks(codebook_sf_dir)
     kernel = _index_kernel(cents, books)

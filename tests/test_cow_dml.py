@@ -9,6 +9,7 @@ import os
 import random
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 
 from columnar_database_project_spark.catalog import load_table
@@ -411,13 +412,60 @@ class TestManifestCompaction:
         assert store.read(spark).count() == n_total
         # the carried block is literally the same file
         assert set(files_before) & set(store.files_for())
+        # every rewritten file is one row group of at most block_rows
+        rewritten = set(store.files_for()) - set(files_before)
+        assert len(rewritten) == 1
+        for f in rewritten:
+            pf = pq.ParquetFile(f)
+            assert pf.num_row_groups == 1
+            assert pf.metadata.num_rows <= 1000
 
-        # idempotent: a second compaction is a no-op
+        # idempotent: a healthy store gets no new version and keeps
+        # its file list
+        v_compacted, files_compacted = store.latest(), store.files_for()
         rep2 = compact_manifest(spark, store, block_rows=1000)
         assert not rep2["compacted"]
+        assert store.latest() == v_compacted
+        assert store.files_for() == files_compacted
         # and the pre-compaction version still time-travels
         vs = store.versions()
         assert store.read(spark, vs[-2]).count() == n_total
+
+    def test_short_rewrite_aborts_before_commit(
+        self, spark, orders_df, tmp_path_factory, monkeypatch
+    ):
+        """The row-count guard: a rewrite that lands fewer rows than
+        it read raises, and the previous version stays current."""
+        from columnar_database_project_spark.sources.microblock import (
+            MicroBlockWriter,
+        )
+        from columnar_database_project_spark.storage.cow import (
+            append_cow,
+            compact_manifest,
+        )
+
+        store = ManifestStore(str(tmp_path_factory.mktemp("cow_short")))
+        pdf = orders_df.limit(200).toPandas()
+        full = spark.createDataFrame(pdf)
+        init_manifest_table(spark, store, full.limit(50).coalesce(1),
+                            block_rows=1000)
+        for lo in (50, 100, 150):
+            chunk = spark.createDataFrame(pdf.iloc[lo:lo + 50], schema=full.schema)
+            append_cow(spark, store, chunk.coalesce(1), block_rows=1000)
+        v_before, files_before = store.latest(), store.files_for()
+
+        real_write = MicroBlockWriter.write
+
+        def short_write(self, df, path, mode="overwrite"):
+            real_write(self, df.limit(1), path, mode=mode)
+
+        monkeypatch.setattr(MicroBlockWriter, "write", short_write)
+        with pytest.raises(RuntimeError, match="lost rows"):
+            compact_manifest(spark, store, block_rows=1000)
+        monkeypatch.undo()
+        assert store.latest() == v_before
+        assert store.files_for() == files_before
+        assert store.read(spark).count() == 200
 
     def test_sort_by_recluster_tightens_zone_maps(
         self, spark, orders_df, tmp_path_factory

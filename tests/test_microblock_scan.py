@@ -165,99 +165,6 @@ class TestStatefulStreaming:
             q.stop()
 
 
-class TestCompaction:
-    def test_fragmented_table_compacts_and_preserves_rows(
-        self, spark, sf_dir, tmp_path_factory
-    ):
-        import pyarrow.parquet as pq
-        import os
-
-        from columnar_database_project_spark.catalog import load_table
-        from columnar_database_project_spark.sources.microblock import (
-            MicroBlockWriter,
-            compact_blocks,
-        )
-
-        path = str(tmp_path_factory.mktemp("frag") / "nation")
-        nation = load_table(spark, sf_dir, "nation")
-        # fragment: 1-row blocks (25 files)
-        MicroBlockWriter(block_rows=1).write(nation.repartition(5), path)
-        n_rows = nation.count()
-        report = compact_blocks(spark, path, block_rows=16)
-        assert report["compacted"] is True
-        assert report["blocks_after"] < report["blocks_before"]
-        out = spark.read.parquet(path)
-        assert out.count() == n_rows
-        assert sorted(r["n_nationkey"] for r in out.collect()) == sorted(
-            r["n_nationkey"] for r in nation.collect()
-        )
-        # every file is a single row group no larger than the block size
-        for f in os.listdir(path):
-            if f.endswith(".parquet"):
-                pf = pq.ParquetFile(os.path.join(path, f))
-                assert pf.num_row_groups == 1
-                assert pf.metadata.num_rows <= 16
-
-    def test_compact_sort_by_restores_zone_map_locality(
-        self, spark, sf_dir, tmp_path_factory
-    ):
-        """Out-of-order ingests spread every date across every block;
-        compaction with sort_by must restore tight per-block min/max
-        so a narrow window predicts a small candidate set again."""
-        from columnar_database_project_spark.catalog import load_table
-        from columnar_database_project_spark.sources.index import (
-            MicroBlockIndex,
-        )
-        from columnar_database_project_spark.sources.microblock import (
-            MicroBlockWriter,
-            compact_blocks,
-        )
-
-        path = str(tmp_path_factory.mktemp("resort") / "lineitem")
-        li = load_table(spark, sf_dir, "lineitem")
-        # interleaved fragmented ingest: hash-spread tiny blocks
-        MicroBlockWriter(block_rows=200).write(
-            li.repartition(16, "l_orderkey"), path
-        )
-        lo, hi = (
-            li.selectExpr(
-                "CAST(percentile_approx(l_shipdate, 0.45) AS STRING)",
-                "CAST(percentile_approx(l_shipdate, 0.55) AS STRING)",
-            ).first()
-        )
-        sql = f"SELECT * FROM t WHERE l_shipdate BETWEEN '{lo}' AND '{hi}'"
-        frag_idx = MicroBlockIndex.build(path, table_id="t")
-        frag_hit = len(frag_idx.predict_blocks_for_sql(sql))
-        assert frag_hit == frag_idx.num_blocks  # damage: nothing prunes
-
-        n_rows = li.count()
-        report = compact_blocks(
-            spark, path, block_rows=1000, sort_by=["l_shipdate"]
-        )
-        assert report["compacted"] is True
-        idx = MicroBlockIndex.build(path, table_id="t")
-        hit = len(idx.predict_blocks_for_sql(sql))
-        # a ~10% window over a sorted layout touches a small fraction
-        assert hit < idx.num_blocks / 2, (hit, idx.num_blocks)
-        assert spark.read.parquet(path).count() == n_rows
-
-    def test_healthy_table_is_left_alone(self, spark, sf_dir, tmp_path_factory):
-        from columnar_database_project_spark.catalog import load_table
-        from columnar_database_project_spark.sources.microblock import (
-            MicroBlockWriter,
-            compact_blocks,
-        )
-
-        path = str(tmp_path_factory.mktemp("healthy") / "nation")
-        MicroBlockWriter(block_rows=16).write(
-            load_table(spark, sf_dir, "nation").coalesce(1), path
-        )
-        before = sorted(__import__("os").listdir(path))
-        report = compact_blocks(spark, path, block_rows=16)
-        assert report["compacted"] is False
-        assert sorted(__import__("os").listdir(path)) == before  # untouched
-
-
 class TestZOrder:
     def test_zorder_prunes_box_predicates_on_both_dims(
         self, spark, sf_dir, tmp_path_factory
@@ -318,6 +225,56 @@ class TestZOrder:
             .count()
         )
         assert got == truth
+
+    def test_zorder_layout_independent_of_session_history(
+        self, spark, sf_dir, tmp_path_factory
+    ):
+        """Spark seeds its range-bound sample with the RDD id; the
+        z-ordered blocks must not change with how many RDDs the session
+        made before the write, and the sampling conf is restored."""
+        import pyarrow.parquet as pq
+
+        from columnar_database_project_spark.catalog import load_table
+        from columnar_database_project_spark.sources.microblock import (
+            write_zordered,
+        )
+        from columnar_database_project_spark.storage.manifests import (
+            list_block_files,
+        )
+
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_quantity", "l_extendedprice"
+        )
+        base = tmp_path_factory.mktemp("zorder_history")
+        conf = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+        conf_before = spark.conf.get(conf)
+
+        def layout(shift):
+            for _ in range(shift):
+                spark.sparkContext.parallelize([1])
+            path = str(base / f"z{shift}")
+            write_zordered(
+                li, path, cols=("l_quantity", "l_extendedprice"), block_rows=2000
+            )
+            out = []
+            for f in list_block_files(path):
+                t = pq.read_table(f, columns=["l_quantity", "l_extendedprice"])
+                out.append(
+                    (
+                        t.num_rows,
+                        min(t["l_quantity"].to_pylist()),
+                        max(t["l_quantity"].to_pylist()),
+                        min(t["l_extendedprice"].to_pylist()),
+                        max(t["l_extendedprice"].to_pylist()),
+                    )
+                )
+            return sorted(out)
+
+        first = layout(0)
+        assert len(first) > 1
+        for shift in (1, 2, 5, 7):
+            assert layout(shift) == first, shift
+        assert spark.conf.get(conf) == conf_before
 
 
 class TestHivePartitioning:

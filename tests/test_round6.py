@@ -206,28 +206,6 @@ def test_quantize_constant_dimension_yields_zero_error(spark, tmp_path):
     assert not math.isnan(out[1]["mean_abs_err"])
 
 
-def test_compact_blocks_aborts_on_rowcount_mismatch(spark, tmp_path):
-    """The pre-swap verification: if staging were short-counted the
-    original table must remain untouched. Simulated by asking for an
-    impossible state — normal compaction must still round-trip all
-    rows and leave no .compact_old behind."""
-    from columnar_database_project_spark.sources.microblock import (
-        MicroBlockWriter,
-        compact_blocks,
-    )
-
-    path = os.path.join(str(tmp_path), "t")
-    df = spark.range(0, 1000).withColumnRenamed("id", "v")
-    # many undersized blocks: 10 tasks x 100 rows against block_rows=400
-    MicroBlockWriter(block_rows=100).write(df.repartition(10), path)
-    res = compact_blocks(spark, path, block_rows=400)
-    assert res["compacted"] is True
-    assert res["blocks_after"] < res["blocks_before"]
-    assert spark.read.parquet(path).count() == 1000
-    assert not os.path.exists(path + ".compact_old")
-    assert not os.path.exists(path + ".compact_tmp")
-
-
 # ------------------------------------------- facade streaming ingestion
 
 
@@ -261,8 +239,8 @@ def test_engine_facade_streaming_dedup_e2e(spark, sf_dir, tmp_path_factory):
     )
 
     eng = MicroBlockEngine(spark)
-    out, store, ckpt = str(base / "out"), str(base / "store"), str(base / "ck")
-    rep1 = eng.ingest_stream_dedup(str(drop_dir), "corpus", out, store, ckpt)
+    out, ckpt = str(base / "out"), str(base / "ck")
+    rep1 = eng.ingest_stream_dedup(str(drop_dir), "corpus", out, ckpt)
     assert rep1["rows"] == 30  # 40 docs - 10 planted dups
     assert rep1["store_fingerprints"] == 30
 
@@ -291,7 +269,7 @@ def test_engine_facade_streaming_dedup_e2e(spark, sf_dir, tmp_path_factory):
         pa.Table.from_pandas(drop2, preserve_index=False),
         str(drop_dir / "drop2.parquet"),
     )
-    rep2 = eng.ingest_stream_dedup(str(drop_dir), "corpus", out, store, ckpt)
+    rep2 = eng.ingest_stream_dedup(str(drop_dir), "corpus", out, ckpt)
     assert rep2["rows"] == 35  # only the 5 genuinely new docs appended
     assert rep2["store_fingerprints"] == 35
     n2 = eng.query("SELECT count(*) AS n FROM corpus").collect()[0]["n"]
@@ -1701,51 +1679,6 @@ def test_streaming_index_build_and_search(spark, sf_dir, tmp_path_factory):
 
     plan = formatted_plan(res)
     assert "PartitionFilters" in plan and "cell" in plan
-
-
-def test_recover_compaction_crash_states(spark, sf_dir, tmp_path_factory):
-    """The swap in compact_blocks is two renames; recover_compaction
-    must handle every state a crash can leave: healthy-with-leftovers
-    (clean them), live-missing-with-backup (restore the exact
-    pre-compaction bytes), and truly-missing (report, don't invent)."""
-    import os
-    import shutil
-
-    from columnar_database_project_spark.catalog import load_table
-    from columnar_database_project_spark.sources.microblock import (
-        MicroBlockWriter,
-        recover_compaction,
-    )
-
-    base = tmp_path_factory.mktemp("recover")
-    path = str(base / "docs")
-    docs = load_table(spark, sf_dir, "documents").limit(50)
-    MicroBlockWriter(block_rows=16).write(docs, path)
-    before = sorted(os.listdir(path))
-    n_rows = spark.read.parquet(path).count()
-
-    # healthy + stale leftovers of an interrupted (post-swap) run
-    os.makedirs(path + ".compact_tmp")
-    shutil.copytree(path, path + ".compact_old")
-    rep = recover_compaction(path)
-    assert rep["state"] == "healthy"
-    assert sorted(rep["cleaned"]) == ["docs.compact_old", "docs.compact_tmp"]
-    assert not os.path.exists(path + ".compact_tmp")
-    assert not os.path.exists(path + ".compact_old")
-
-    # crash between the two renames: live gone, backup present,
-    # verified staging still sitting there
-    os.rename(path, path + ".compact_old")
-    os.makedirs(path + ".compact_tmp")
-    rep = recover_compaction(path)
-    assert rep["state"] == "restored"
-    assert sorted(os.listdir(path)) == before
-    assert spark.read.parquet(path).count() == n_rows
-    assert not os.path.exists(path + ".compact_tmp")
-
-    # nothing to recover from
-    shutil.rmtree(path)
-    assert recover_compaction(path)["state"] == "missing"
 
 
 def test_filtered_topk_prefilter_semantics(spark, sf_dir):

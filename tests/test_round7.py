@@ -249,12 +249,10 @@ class TestOrcMicroblocks:
 
 
 class TestIvfPqStoreLifecycle:
-    """The streaming store's two 100 TB claims, proven rather than
-    stated: (1) probed cells become PARTITION filters (directory
-    pruning at listing time); (2) the small files that per-drop
-    appends accumulate inside a cell directory compact through the
-    engine's normal ``compact_blocks`` lifecycle without changing
-    search results."""
+    """The streaming store's 100 TB claim, proven rather than stated:
+    probed cells become PARTITION filters (directory pruning at
+    listing time), also on a store that per-drop appends have
+    fragmented."""
 
     @staticmethod
     def _build_fragmented_store(spark, sf_dir, base):
@@ -295,43 +293,6 @@ class TestIvfPqStoreLifecycle:
         # time pruning), NOT as a PushedFilter/post-scan filter
         pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
         assert pf and "cell" in pf[0] and "IN" in pf[0].upper()
-
-    def test_cell_compaction_preserves_search(self, spark, sf_dir, tmp_path_factory):
-        from columnar_database_project_spark.sources.microblock import (
-            compact_blocks,
-        )
-        from columnar_database_project_spark.streaming.vectors import (
-            search_index_store,
-        )
-
-        base = str(tmp_path_factory.mktemp("ivfpq_life2"))
-        index_path = self._build_fragmented_store(spark, sf_dir, base)
-        before = {
-            (r["q_id"], r["rank"]): (r["neighbor_id"], r["adist"])
-            for r in search_index_store(spark, index_path, sf_dir).collect()
-        }
-        cell_dirs = [
-            os.path.join(index_path, d)
-            for d in os.listdir(index_path)
-            if d.startswith("cell=")
-        ]
-        assert cell_dirs
-        # every cell dir holds >= 2 per-drop appends before compaction
-        frag = [
-            d for d in cell_dirs
-            if len([f for f in os.listdir(d) if f.endswith(".parquet")]) >= 2
-        ]
-        assert frag, "fixture must actually fragment the store"
-        compacted = 0
-        for d in cell_dirs:
-            report = compact_blocks(spark, d, block_rows=131_072, min_fill=0.9)
-            compacted += int(report["compacted"])
-        assert compacted > 0
-        after = {
-            (r["q_id"], r["rank"]): (r["neighbor_id"], r["adist"])
-            for r in search_index_store(spark, index_path, sf_dir).collect()
-        }
-        assert before == after
 
 
 # ---------------------------- transition semantics, property-tested

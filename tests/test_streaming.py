@@ -449,6 +449,9 @@ class TestStreamingDedupAgainstStore:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        from columnar_database_project_spark.storage.manifests import (
+            ManifestStore,
+        )
         from columnar_database_project_spark.streaming.text import (
             dedup_stream_against_store,
             read_document_stream,
@@ -475,16 +478,14 @@ class TestStreamingDedupAgainstStore:
             os.utime(p, (1_700_000_000 + i * 60,) * 2)
 
         out = str(base / "out")
-        store = str(base / "store")
         q = dedup_stream_against_store(
             read_document_stream(spark, str(drop_dir)),
-            out, store, str(base / "ckpt"),
+            out, str(base / "ckpt"),
         )
         q.awaitTermination(120)
 
-        got_ids = sorted(
-            r["doc_id"] for r in spark.read.parquet(out).collect()
-        )
+        stored = ManifestStore(out).read(spark)
+        got_ids = sorted(r["doc_id"] for r in stored.collect())
         # batch ground truth: keep-first by fingerprint over all drops
         bdf = spark.createDataFrame(docs)
         want_ids = sorted(
@@ -494,7 +495,7 @@ class TestStreamingDedupAgainstStore:
             .collect()
         )
         assert got_ids == want_ids
-        fps = [r["fp"] for r in spark.read.parquet(store).collect()]
+        fps = [r["fp"] for r in stored.collect()]
         assert len(fps) == len(set(fps)) == len(want_ids)
 
 
@@ -507,6 +508,9 @@ class TestStreamingHeavyHitters:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        from columnar_database_project_spark.storage.manifests import (
+            ManifestStore,
+        )
         from columnar_database_project_spark.streaming.text import (
             heavy_hitters_stream,
             read_document_stream,
@@ -537,7 +541,7 @@ class TestStreamingHeavyHitters:
         )
         q.awaitTermination(120)
 
-        kept = {r["term"] for r in spark.read.parquet(store).collect()}
+        kept = {r["term"] for r in ManifestStore(store).read(spark).collect()}
         assert 0 < len(kept) <= cap
         # ground truth over the WHOLE stream
         toks = [t for s in docs["text"] for t in s.strip().split()]
