@@ -1146,15 +1146,10 @@ def bench_orc_scan(spark, sf_dir: str) -> dict:
             spark, d_sorted, table_id="lineitem_orc", format="orc"
         )
         build_sec = time.time() - t0
-        oidx.save(d_sorted)
-        t0 = time.time()
-        MicroBlockIndex.load(d_sorted)
-        load_sec = time.time() - t0
         hi_key = li.agg(F.max("l_orderkey")).first()[0]
         pred = parse_where(f"l_orderkey BETWEEN 1 AND {int(hi_key) // 20}")
         out["orc_index"] = {
             "build_sec": round(build_sec, 3),
-            "sidecar_load_sec": round(load_sec, 3),
             "blocks_total": oidx.num_blocks,
             "blocks_predicted_5pct_range": len(oidx.candidate_blocks(pred)),
         }

@@ -385,8 +385,9 @@ class MicroBlockEngine:
 
     def compact_manifest(self, name: str, mstore, **kw) -> dict:
         """Compact a manifest table (storage/cow.compact_manifest) and
-        refresh registration + index — block identity changes with the
-        manifest, so the index is rebuilt from the new file list."""
+        refresh registration + index — block ids change with the
+        manifest, so the index is re-taken from the new version
+        (``register_manifest``)."""
         from columnar_database_project_spark.storage.cow import (
             compact_manifest,
         )
@@ -399,23 +400,32 @@ class MicroBlockEngine:
     def register_manifest(
         self, name: str, mstore, with_index: bool = True, blooms=None
     ) -> None:
-        """Register a manifest table AND rebuild the zone-map index
-        from its current file list, so the observability stack
+        """Register a manifest table AND take the zone-map index of its
+        latest version (``MicroBlockIndex.for_version``: the records the
+        manifest stores, no footer read), so the observability stack
         (explain / access log / prefetch) keys on the live snapshot's
-        blocks. Call again after any CoW verb or compaction — block
-        identity changes with the manifest. ``blooms``: optional Bloom
-        sidecar to attach for point-lookup prediction."""
+        blocks. Call again after any CoW verb or compaction — block ids
+        are positions in sorted file order, so a commit renumbers them.
+        An attached cache therefore drops each cached id that names a
+        different (file, row group) in the new index than in the old
+        one; ids that still name the same block stay cached.
+        ``blooms``: optional Bloom sidecar to attach for point-lookup
+        prediction."""
         from columnar_database_project_spark.sources.index import (
             MicroBlockIndex,
         )
 
         self.register(name, mstore.read(self.spark))
         if with_index:
-            idx = MicroBlockIndex.build_from_files(
-                mstore.files_for(), table_id=name
-            )
+            idx = MicroBlockIndex.for_version(mstore, table_id=name)
             if blooms is not None:
                 idx.attach_blooms(blooms)
+            if self.cache is not None:
+                old = self.index
+                for b in self.cache.cached_ids():
+                    before = old.block_key(b) if old is not None else None
+                    if before != idx.block_key(b):
+                        self.cache.remove(b)
             self.index = idx
 
     # ------------------------------------------------------------- queries

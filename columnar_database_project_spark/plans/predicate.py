@@ -94,7 +94,9 @@ def _align(stat: Any, lit: Any):
     num = (int, float)
     if isinstance(stat, num) and isinstance(lit, num):
         return (stat, lit)
-    if type(stat) is type(lit):
+    # datetimes go through the naive-UTC view: an aware footer bound
+    # and a naive literal do not compare directly
+    if type(stat) is type(lit) and not isinstance(stat, _dt.datetime):
         return (stat, lit)
     s, v = _as_naive_datetime(stat), _as_naive_datetime(lit)
     if s is not None and v is not None:

@@ -20,6 +20,12 @@ reference's block_id == row_group ordinal (reference
 block_id_mapper.py:8-28); for multi-file tables ids are assigned by
 sorted file order, then row group — deterministic and stable.
 
+One record format (``footer_records``) carries the statistics, and one
+constructor (``MicroBlockIndex.from_records``) turns records into an
+index: from Parquet footers (``build`` / ``build_from_files``), from
+the records a manifest version stores (``for_version``, no footer
+read), or from an ORC stats scan (``build_from_scan``).
+
 BlockMetadata field parity with reference microblock_index.py:63-104:
 table_id, column_name, column_id, file_path, row_group_id, row_start,
 row_end, byte_offset, byte_length, min/max/null_count statistics,
@@ -29,12 +35,16 @@ ewma_usage with α=0.2).
 
 from __future__ import annotations
 
+import base64
+import datetime as _dt
 import glob
+import json
 import os
 import threading
 import time
-from dataclasses import dataclass, field
-from typing import Any
+from dataclasses import dataclass
+from decimal import Decimal
+from typing import Any, Iterable
 
 import pyarrow.parquet as pq
 
@@ -88,9 +98,112 @@ def _normalize_stat(v: Any) -> Any:
     return v
 
 
+def _enc_stat(v: Any):
+    """Type-tagged JSON encoding of a zone-map bound. The types parquet
+    and ORC stats produce (int/float/str/bool/bytes/date/time/datetime/
+    Decimal, and pandas Timestamps for nanosecond columns) must
+    round-trip EXACTLY, or an index built from stored records would
+    prune differently than one built from the footers."""
+    if v is None or isinstance(v, (int, float, str, bool)):
+        return v
+    if isinstance(v, _dt.datetime):
+        # a pandas Timestamp carries nanoseconds datetime would drop
+        tag = "ts" if type(v).__module__.startswith("pandas") else "dt"
+        return {"$t": tag, "v": v.isoformat()}
+    if isinstance(v, _dt.date):
+        return {"$t": "d", "v": v.isoformat()}
+    if isinstance(v, _dt.time):
+        return {"$t": "t", "v": v.isoformat()}
+    if isinstance(v, Decimal):
+        return {"$t": "dec", "v": str(v)}
+    if isinstance(v, (bytes, bytearray)):
+        return {"$t": "b", "v": base64.b64encode(bytes(v)).decode()}
+    return {"$t": "s", "v": str(v)}
+
+
+def _dec_stat(v):
+    if not isinstance(v, dict) or "$t" not in v:
+        return v
+    t, raw = v["$t"], v["v"]
+    if t == "dt":
+        return _dt.datetime.fromisoformat(raw)
+    if t == "ts":
+        import pandas as pd
+
+        return pd.Timestamp(raw)
+    if t == "d":
+        return _dt.date.fromisoformat(raw)
+    if t == "t":
+        return _dt.time.fromisoformat(raw)
+    if t == "dec":
+        return Decimal(raw)
+    if t == "b":
+        return base64.b64decode(raw)
+    return raw
+
+
+def _footer_bounds(stats) -> tuple[Any, Any]:
+    """(min, max) of a column chunk's footer statistics, None when
+    absent. pyarrow cannot convert decimals stored as INT32/INT64 (how
+    Spark writes precision <= 18), so those are scaled from the raw
+    integers."""
+    if stats is None or not stats.has_min_max:
+        return None, None
+    try:
+        return _normalize_stat(stats.min), _normalize_stat(stats.max)
+    except NotImplementedError:
+        logical = json.loads(stats.logical_type.to_json())
+        if logical.get("Type") != "Decimal":
+            return None, None
+        scale = -int(logical["scale"])
+        return (
+            Decimal(stats.min_raw).scaleb(scale),
+            Decimal(stats.max_raw).scaleb(scale),
+        )
+
+
+def footer_records(path: str) -> list[dict]:
+    """Zone-map records of one Parquet block file, one per row group:
+    ``{"rows": n, "columns": [{"name", "min", "max", "null_count",
+    "num_values", "byte_offset", "byte_length", "compression"}, ...]}``,
+    bounds in the ``_enc_stat`` encoding, so a record is plain JSON.
+    This is the package's one zone-map record format:
+    ``ManifestStore.commit`` stores it for every file a version names,
+    and every ``MicroBlockIndex`` is built from it."""
+    meta = pq.ParquetFile(path).metadata
+    out = []
+    for rg in range(meta.num_row_groups):
+        rg_meta = meta.row_group(rg)
+        cols = []
+        for ci in range(rg_meta.num_columns):
+            col = rg_meta.column(ci)
+            stats = col.statistics
+            lo, hi = _footer_bounds(stats)
+            cols.append(
+                {
+                    "name": col.path_in_schema,
+                    "min": _enc_stat(lo),
+                    "max": _enc_stat(hi),
+                    "null_count": (
+                        stats.null_count
+                        if stats is not None and stats.has_null_count
+                        else None
+                    ),
+                    "num_values": col.num_values,
+                    "byte_offset": col.file_offset,
+                    "byte_length": col.total_compressed_size,
+                    "compression": col.compression,
+                }
+            )
+        out.append({"rows": rg_meta.num_rows, "columns": cols})
+    return out
+
+
 class MicroBlockIndex:
-    """Zone-map index built from parquet footers (driver-side pyarrow,
-    the same API surface the reference uses)."""
+    """Zone-map index over block files, built from zone-map records
+    (``footer_records``): Parquet footers read driver-side with pyarrow
+    (the same API surface the reference uses), the records a manifest
+    version stores, or an ORC stats scan."""
 
     def __init__(self, table_id: str = "t1") -> None:
         self.table_id = table_id
@@ -106,6 +219,45 @@ class MicroBlockIndex:
         self.read_schemas: dict[str, Any] = {}
 
     # ------------------------------------------------------------- build
+    @classmethod
+    def from_records(
+        cls, files: Iterable[tuple[str, list[dict]]], table_id: str = "t1"
+    ) -> "MicroBlockIndex":
+        """The one record → index constructor. ``files``: (file path,
+        zone-map records) pairs in block-id order. Block ids count row
+        groups across the files in that order, and row ranges run on
+        contiguously from 0."""
+        idx = cls(table_id=table_id)
+        block_id = row_cursor = 0
+        for f, records in files:
+            for rg, rec in enumerate(records):
+                row_end = row_cursor + rec["rows"] - 1
+                for ci, c in enumerate(rec["columns"]):
+                    bm = BlockMetadata(
+                        table_id=table_id,
+                        column_name=c["name"],
+                        column_id=ci,
+                        file_path=f,
+                        block_id=block_id,
+                        row_group_id=rg,
+                        row_start=row_cursor,
+                        row_end=row_end,
+                        byte_offset=c["byte_offset"],
+                        byte_length=c["byte_length"],
+                        stat_min=_dec_stat(c["min"]),
+                        stat_max=_dec_stat(c["max"]),
+                        null_count=c["null_count"],
+                        num_values=c["num_values"],
+                        compression=c["compression"],
+                    )
+                    idx.blocks.append(bm)
+                    idx.by_column.setdefault(bm.column_name, []).append(bm)
+                    idx.by_block.setdefault(block_id, {})[bm.column_name] = bm
+                idx._block_rows[block_id] = (f, rg, row_cursor, row_end)
+                row_cursor = row_end + 1
+                block_id += 1
+        return idx
+
     @classmethod
     def build(cls, path: str, table_id: str = "t1") -> "MicroBlockIndex":
         """Scan footer metadata of a parquet file / directory of parts.
@@ -138,46 +290,24 @@ class MicroBlockIndex:
     def build_from_files(
         cls, files: list[str], table_id: str = "t1"
     ) -> "MicroBlockIndex":
-        """Index an explicit block-file list — the manifest-store path
-        (storage/manifests.py), where a snapshot IS a file list, not a
-        directory. Sorted for the same deterministic block-id
-        assignment as ``build``."""
-        idx = cls(table_id=table_id)
-        files = sorted(files)
-        block_id = 0
-        row_cursor = 0
-        for f in files:
-            meta = pq.ParquetFile(f).metadata
-            for rg in range(meta.num_row_groups):
-                rg_meta = meta.row_group(rg)
-                n_rows = rg_meta.num_rows
-                for ci in range(rg_meta.num_columns):
-                    col = rg_meta.column(ci)
-                    stats = col.statistics
-                    bm = BlockMetadata(
-                        table_id=table_id,
-                        column_name=col.path_in_schema,
-                        column_id=ci,
-                        file_path=f,
-                        block_id=block_id,
-                        row_group_id=rg,
-                        row_start=row_cursor,
-                        row_end=row_cursor + n_rows - 1,
-                        byte_offset=col.file_offset,
-                        byte_length=col.total_compressed_size,
-                        stat_min=_normalize_stat(stats.min) if stats and stats.has_min_max else None,
-                        stat_max=_normalize_stat(stats.max) if stats and stats.has_min_max else None,
-                        null_count=stats.null_count if stats and stats.has_null_count else None,
-                        num_values=col.num_values,
-                        compression=col.compression,
-                    )
-                    idx.blocks.append(bm)
-                    idx.by_column.setdefault(bm.column_name, []).append(bm)
-                    idx.by_block.setdefault(block_id, {})[bm.column_name] = bm
-                idx._block_rows[block_id] = (f, rg, row_cursor, row_cursor + n_rows - 1)
-                row_cursor += n_rows
-                block_id += 1
-        return idx
+        """Index an explicit block-file list from its footers. Sorted
+        for the same deterministic block-id assignment as ``build``. A
+        manifest table's version already holds these records:
+        ``for_version`` indexes it without opening a footer."""
+        return cls.from_records(
+            ((f, footer_records(f)) for f in sorted(files)), table_id=table_id
+        )
+
+    @classmethod
+    def for_version(
+        cls, store, version: int | None = None, table_id: str = "t1"
+    ) -> "MicroBlockIndex":
+        """The index of a committed version of a ``ManifestStore``
+        (default latest), built from the zone-map records its manifest
+        holds — no footer is opened. Block ids are those of
+        ``build_from_files(store.files_for(version))``: sorted file
+        order, then row group."""
+        return cls.from_records(store.blocks_for(version), table_id=table_id)
 
     @classmethod
     def build_from_scan(
@@ -197,9 +327,7 @@ class MicroBlockIndex:
         (and ``engine.explain`` pruning report) as parquet.
 
         Cost model, stated honestly: this is a DATA scan, not a footer
-        pass — at 100 TB you run it once per commit over only the
-        commit's NEW files (same incremental discipline as
-        ``bloom.extend_bloom_index``), never per query. File-level
+        pass — run it once per layout, never per query. File-level
         row counts and compression still come from the cheap ORC tail
         (pyarrow.orc.ORCFile); per-column byte extents aren't exposed,
         so byte_offset/byte_length are recorded as 0."""
@@ -253,263 +381,24 @@ class MicroBlockIndex:
                     compression[f] = str(_po.ORCFile(f).compression)
         except Exception:
             pass
-        idx = cls(table_id=table_id)
-        row_cursor = 0
-        for block_id, r in enumerate(
-            sorted(rows, key=lambda r: r["_file"])
-        ):
+        files = []
+        for r in sorted(rows, key=lambda r: r["_file"]):
             f = _local_path(r["_file"])
-            n_rows = r["__n"]
-            for ci, c in enumerate(cols):
-                bm = BlockMetadata(
-                    table_id=table_id,
-                    column_name=c,
-                    column_id=ci,
-                    file_path=f,
-                    block_id=block_id,
-                    row_group_id=0,
-                    row_start=row_cursor,
-                    row_end=row_cursor + n_rows - 1,
-                    byte_offset=0,
-                    byte_length=0,
-                    stat_min=r[f"min__{c}"],
-                    stat_max=r[f"max__{c}"],
-                    null_count=int(r[f"nulls__{c}"]),
-                    num_values=int(n_rows),
-                    compression=compression.get(f, "unknown"),
-                )
-                idx.blocks.append(bm)
-                idx.by_column.setdefault(c, []).append(bm)
-                idx.by_block.setdefault(block_id, {})[c] = bm
-            idx._block_rows[block_id] = (
-                f, 0, row_cursor, row_cursor + n_rows - 1
-            )
-            row_cursor += n_rows
-        return idx
-
-    def extend_from_scan(
-        self,
-        spark,
-        new_files: list[str],
-        format: str = "orc",
-    ) -> int:
-        """Incremental maintenance for the scan-built index: stat-scan
-        ONLY the given files (a commit's new blocks) and append them —
-        the per-commit discipline that makes ``build_from_scan``'s
-        one-data-scan cost amortize at 100 TB (same lifecycle as
-        ``bloom.extend_bloom_index``). New blocks get ids after the
-        existing ones (append-only, ids stay stable across extends —
-        commit order, not re-sorted path order). Returns the number of
-        blocks added; files already indexed are skipped."""
-        known = {f for (f, _rg, _lo, _hi) in self._block_rows.values()}
-        todo = sorted(f for f in new_files if f not in known)
-        if not todo:
-            return 0
-        cols = sorted(self.by_column) or None
-        sub = MicroBlockIndex.build_from_scan(
-            spark,
-            todo[0] if len(todo) == 1 else todo,  # reader takes a list too
-            table_id=self.table_id,
-            format=format,
-            columns=cols,
-        )
-        base_id = (max(self.by_block) + 1) if self.by_block else 0
-        row_cursor = (
-            max(hi for (_f, _rg, _lo, hi) in self._block_rows.values()) + 1
-            if self._block_rows
-            else 0
-        )
-        with self._lock:
-            for old_id in sorted(sub.by_block):
-                new_id = base_id + old_id
-                f, rg, lo, hi = sub._block_rows[old_id]
-                n = hi - lo + 1
-                for bm in sub.by_block[old_id].values():
-                    bm.block_id = new_id
-                    bm.row_start = row_cursor
-                    bm.row_end = row_cursor + n - 1
-                    self.blocks.append(bm)
-                    self.by_column.setdefault(bm.column_name, []).append(bm)
-                    self.by_block.setdefault(new_id, {})[bm.column_name] = bm
-                self._block_rows[new_id] = (
-                    f, rg, row_cursor, row_cursor + n - 1
-                )
-                row_cursor += n
-        return len(sub.by_block)
-
-    # ------------------------------------------------------ persistence
-    _SIDECAR = "_zonemaps.json"
-
-    @staticmethod
-    def _enc_stat(v: Any):
-        """Type-tagged JSON encoding of a zone-map bound — the types
-        parquet/ORC stats produce (int/float/str/bool/datetime/date/
-        Decimal/bytes) must round-trip EXACTLY or a reloaded index
-        would prune differently than the one that was saved."""
-        import base64
-        import datetime as _dt
-        from decimal import Decimal
-
-        if v is None or isinstance(v, (int, float, str, bool)):
-            return v
-        if isinstance(v, _dt.datetime):
-            return {"$t": "dt", "v": v.isoformat()}
-        if isinstance(v, _dt.date):
-            return {"$t": "d", "v": v.isoformat()}
-        if isinstance(v, Decimal):
-            return {"$t": "dec", "v": str(v)}
-        if isinstance(v, (bytes, bytearray)):
-            return {"$t": "b", "v": base64.b64encode(bytes(v)).decode()}
-        return {"$t": "s", "v": str(v)}
-
-    @staticmethod
-    def _dec_stat(v):
-        import base64
-        import datetime as _dt
-        from decimal import Decimal
-
-        if not isinstance(v, dict) or "$t" not in v:
-            return v
-        t, raw = v["$t"], v["v"]
-        if t == "dt":
-            return _dt.datetime.fromisoformat(raw)
-        if t == "d":
-            return _dt.date.fromisoformat(raw)
-        if t == "dec":
-            return Decimal(raw)
-        if t == "b":
-            return base64.b64decode(raw)
-        return raw
-
-    def save(self, table_path: str) -> str:
-        """Persist the index as an underscore-prefixed sidecar in the
-        table directory (invisible to Spark's listing, same convention
-        as the Bloom ``_blooms.npz``). For footer-backed parquet this
-        is a convenience; for scan-built ORC it is the POINT — the
-        one-data-scan build cost is paid once per commit, not per
-        session."""
-        import json as _json
-
-        recs = []
-        for b in self.blocks:
-            recs.append(
+            n_rows = int(r["__n"])
+            files.append((f, [{"rows": n_rows, "columns": [
                 {
-                    "column_name": b.column_name,
-                    "column_id": b.column_id,
-                    "file_path": os.path.relpath(b.file_path, table_path),
-                    "block_id": b.block_id,
-                    "row_group_id": b.row_group_id,
-                    "row_start": b.row_start,
-                    "row_end": b.row_end,
-                    "byte_offset": b.byte_offset,
-                    "byte_length": b.byte_length,
-                    "stat_min": self._enc_stat(b.stat_min),
-                    "stat_max": self._enc_stat(b.stat_max),
-                    "null_count": b.null_count,
-                    "num_values": b.num_values,
-                    "compression": b.compression,
+                    "name": c,
+                    "min": _enc_stat(r[f"min__{c}"]),
+                    "max": _enc_stat(r[f"max__{c}"]),
+                    "null_count": int(r[f"nulls__{c}"]),
+                    "num_values": n_rows,
+                    "byte_offset": 0,
+                    "byte_length": 0,
+                    "compression": compression.get(f, "unknown"),
                 }
-            )
-        out = os.path.join(table_path, self._SIDECAR)
-        tmp = out + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump({"table_id": self.table_id, "blocks": recs}, fh)
-        os.replace(tmp, out)
-        return out
-
-    @classmethod
-    def load(cls, table_path: str) -> "MicroBlockIndex":
-        """Reload a saved sidecar; file paths are re-anchored to the
-        (possibly relocated) table directory."""
-        import json as _json
-
-        with open(os.path.join(table_path, cls._SIDECAR)) as fh:
-            doc = _json.load(fh)
-        idx = cls(table_id=doc["table_id"])
-        for r in doc["blocks"]:
-            bm = BlockMetadata(
-                table_id=doc["table_id"],
-                column_name=r["column_name"],
-                column_id=r["column_id"],
-                file_path=os.path.join(table_path, r["file_path"]),
-                block_id=r["block_id"],
-                row_group_id=r["row_group_id"],
-                row_start=r["row_start"],
-                row_end=r["row_end"],
-                byte_offset=r["byte_offset"],
-                byte_length=r["byte_length"],
-                stat_min=cls._dec_stat(r["stat_min"]),
-                stat_max=cls._dec_stat(r["stat_max"]),
-                null_count=r["null_count"],
-                num_values=r["num_values"],
-                compression=r["compression"],
-            )
-            idx.blocks.append(bm)
-            idx.by_column.setdefault(bm.column_name, []).append(bm)
-            idx.by_block.setdefault(bm.block_id, {})[bm.column_name] = bm
-        for bid, cols in idx.by_block.items():
-            any_bm = next(iter(cols.values()))
-            idx._block_rows[bid] = (
-                any_bm.file_path,
-                any_bm.row_group_id,
-                any_bm.row_start,
-                any_bm.row_end,
-            )
-        return idx
-
-    @classmethod
-    def for_table(
-        cls,
-        path: str,
-        table_id: str = "t1",
-        format: str = "parquet",
-        spark=None,
-    ) -> "MicroBlockIndex":
-        """Index acquisition with the sidecar as a freshness-checked
-        cache: load ``_zonemaps.json`` when no data file is newer than
-        it, else (re)build — parquet from footers, ORC from the stats
-        scan (``spark`` required only on that rebuild path) — and save
-        the sidecar for the next caller. This is the one entry point a
-        user needs: for ORC it makes the scan cost once-per-commit in
-        practice, and for parquet it skips even the footer pass on a
-        warm table."""
-        side = os.path.join(path, cls._SIDECAR)
-        data_files = [
-            p
-            for p in glob.glob(os.path.join(path, "*"))
-            if os.path.isfile(p)
-            and not os.path.basename(p).startswith(("_", "."))
-            and not p.endswith(".crc")
-        ]
-        if os.path.exists(side) and data_files:
-            side_m = os.path.getmtime(side)
-            # Strict <: an equal-mtime file (coarse-timestamp fs, or a
-            # rewrite landing in the save's timestamp granule) counts
-            # STALE — a rebuild is cheap, serving wrong zone maps isn't.
-            if all(os.path.getmtime(f) < side_m for f in data_files):
-                idx = cls.load(path)
-                # mtime can't see deletion-only changes (nothing new
-                # was written), so also require the sidecar's recorded
-                # file set to equal the directory's current listing —
-                # otherwise candidate blocks reference missing files
-                # and prefetch/point-lookups chase ghosts.
-                recorded = {os.path.basename(b.file_path) for b in idx.blocks}
-                current = {os.path.basename(f) for f in data_files}
-                if recorded == current:
-                    return idx
-        if format == "parquet":
-            idx = cls.build(path, table_id=table_id)
-        else:
-            if spark is None:
-                raise ValueError(
-                    f"for_table: stale/missing sidecar for {format!r} "
-                    "table needs `spark` for the stats-scan rebuild"
-                )
-            idx = cls.build_from_scan(
-                spark, path, table_id=table_id, format=format
-            )
-        idx.save(path)
-        return idx
+                for c in cols
+            ]}]))
+        return cls.from_records(files, table_id=table_id)
 
     # ------------------------------------------------------------ access
     @property
@@ -531,6 +420,12 @@ class MicroBlockIndex:
 
     def block_file(self, block_id: int) -> str:
         return self._block_rows[block_id][0]
+
+    def block_key(self, block_id: int) -> tuple[str, int] | None:
+        """What a block id names: (file, row group), or None when the
+        index has no such block."""
+        got = self._block_rows.get(block_id)
+        return None if got is None else got[:2]
 
     def block_row_range(self, block_id: int) -> tuple[int, int]:
         _, _, lo, hi = self._block_rows[block_id]

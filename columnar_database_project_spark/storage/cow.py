@@ -91,12 +91,15 @@ def _pred_of(predicate) -> Pred:
 
 
 def _triage(
-    files: list[str], pred: Pred, table_id: str, blooms=None
+    store: ManifestStore, files: list[str], pred: Pred, table_id: str,
+    blooms=None,
 ) -> tuple[list[str], list[str], int]:
-    """(touched_files, carried_files, blocks_total): a FILE is touched
-    if any of its blocks may match (multi-row-group files are
-    file-granular here — the rewrite unit is the file)."""
-    idx = MicroBlockIndex.build_from_files(files, table_id=table_id)
+    """(touched_files, carried_files, blocks_total) of the latest
+    version, whose ``files`` the caller holds: a FILE is touched if any
+    of its blocks may match (multi-row-group files are file-granular
+    here — the rewrite unit is the file). The zone maps are the
+    version's stored records; no footer is read."""
+    idx = MicroBlockIndex.for_version(store, table_id=table_id)
     if blooms is not None:
         idx.attach_blooms(blooms)
     touched = {idx.block_file(b) for b in idx.candidate_blocks(pred)}
@@ -125,7 +128,7 @@ def delete_where_cow(
 
     pred = _pred_of(predicate)
     files = store.files_for()
-    touched, carried, n_blocks = _triage(files, pred, "cow_delete", blooms)
+    touched, carried, n_blocks = _triage(store, files, pred, "cow_delete", blooms)
     v, stage = store.stage_next()
     new_files: list[str] = []
     deleted = 0
@@ -211,6 +214,7 @@ def delete_where_mor(
     spark: "SparkSession",
     store: ManifestStore,
     predicate: str,
+    block_rows: int | None = None,
     blooms=None,
     max_dv_rows: int = MOR_DV_MAX_ROWS,
 ) -> dict:
@@ -228,18 +232,21 @@ def delete_where_mor(
 
     Guard: if the version's total DV size would exceed
     ``max_dv_rows``, the op falls back to ``delete_where_cow``
-    (report["mode"] says which ran) — big deletes belong to CoW, and
-    the bound is what keeps the read path's anti-join frame
-    broadcastable. Compaction materializes DVs away
-    (``compact_manifest`` treats any DV'd file as debt)."""
+    (report["mode"] says which ran; ``block_rows`` sizes its rewritten
+    blocks) — big deletes belong to CoW, and the bound is what keeps
+    the read path's anti-join frame broadcastable. Compaction
+    materializes DVs away (``compact_manifest`` treats any DV'd file
+    as debt)."""
     pred = _pred_of(predicate)
     files = store.files_for()
-    touched, carried, n_blocks = _triage(files, pred, "mor_delete", blooms)
+    touched, carried, n_blocks = _triage(store, files, pred, "mor_delete", blooms)
     got = _mor_merge_positions(
         spark, store, files, touched, _cond(predicate), max_dv_rows
     )
     if got is None:
-        rep = delete_where_cow(spark, store, predicate, blooms=blooms)
+        rep = delete_where_cow(
+            spark, store, predicate, block_rows=block_rows, blooms=blooms
+        )
         rep["mode"] = "cow_fallback"
         return rep
     merged, deleted = got
@@ -281,7 +288,7 @@ def update_where_mor(
 
     pred = _pred_of(predicate)
     files = store.files_for()
-    touched, carried, n_blocks = _triage(files, pred, "mor_update", blooms)
+    touched, carried, n_blocks = _triage(store, files, pred, "mor_update", blooms)
     target_cols = [
         f["name"] for f in json.loads(store.schema_json())["fields"]
     ]
@@ -403,7 +410,7 @@ def merge_mor(
             "files_carried": rep["files_carried"],
         }
     pred: Pred = InList(key, tuple(keys))
-    touched, carried, n_blocks = _triage(files, pred, "mor_merge", blooms)
+    touched, carried, n_blocks = _triage(store, files, pred, "mor_merge", blooms)
     got = _mor_merge_positions(
         spark, store, files, touched, pred.to_column(), max_dv_rows
     )
@@ -455,7 +462,7 @@ def update_where_cow(
         raise ValueError(f"update_where_cow: unknown columns {sorted(unknown)}")
     pred = _pred_of(predicate)
     files = store.files_for()
-    touched, carried, n_blocks = _triage(files, pred, "cow_update", blooms)
+    touched, carried, n_blocks = _triage(store, files, pred, "cow_update", blooms)
     v, stage = store.stage_next()
     new_files: list[str] = []
     updated = 0
@@ -554,7 +561,7 @@ def merge_cow(
             }
         pred = InList(key, tuple(keys))
     files = store.files_for()
-    touched, carried, n_blocks = _triage(files, pred, "cow_merge", blooms)
+    touched, carried, n_blocks = _triage(store, files, pred, "cow_merge", blooms)
     v, stage = store.stage_next()
     if touched:
         # reconciled read: touched blocks may predate a metadata-only
@@ -646,9 +653,10 @@ def compact_manifest(
     rewritten, full blocks are carried by reference. The swap is the
     head-log commit, so a crash mid-compaction leaves the previous
     version current and orphan files for ``vacuum``; re-running
-    compacts. Block identity changes with the manifest, so an index
-    over the table must be rebuilt from the new file list
-    (``MicroBlockEngine.compact_manifest`` does).
+    compacts. Row counts come from the version's zone-map records, so
+    deciding what to compact reads no footer. Block ids change with the
+    manifest, so an index over the table must be re-taken from the new
+    version (``MicroBlockEngine.compact_manifest`` does).
 
     ``sort_by`` re-clusters to restore zone-map locality: interleaved
     or out-of-order ingests spread every key range across every
@@ -663,14 +671,17 @@ def compact_manifest(
     worth of keys per partition (``exact_range_bounds``).
 
     Idempotent: ≤1 undersized block and no ``sort_by`` → no new
-    version. Row-count-verified before commit."""
+    version. Row-count-verified before commit: the footers of the
+    files just written must hold exactly the live rows read."""
     import pyarrow.parquet as pq
 
     from pyspark.sql import functions as F
 
     block_rows = block_rows or DEFAULT_BLOCK_ROWS
-    files = store.files_for()
-    rows_of = {f: pq.ParquetFile(f).metadata.num_rows for f in files}
+    rows_of = {
+        f: sum(g["rows"] for g in recs) for f, recs in store.blocks_for()
+    }
+    files = list(rows_of)
     dvs = store.dvs_for()
     dv_rows = {
         f: len(dvs.get(os.path.relpath(f, store.root), [])) for f in files
@@ -754,15 +765,13 @@ MOR_COMPACT_DV_ROWS_RATIO = 0.02
 def mor_compaction_debt(store: ManifestStore) -> dict:
     """Control-plane measurement of the live version's MoR read-tax
     drivers: rows in DV-carrying files (the per-row scan-path taint)
-    and logically-deleted rows. O(files) driver-side footer reads —
-    the same bounded metadata pass ``compact_manifest`` makes."""
-    import pyarrow.parquet as pq
-
-    files = store.files_for()
+    and logically-deleted rows. Row counts come from the manifest's
+    zone-map records: one manifest read, no footer opened."""
+    blocks = store.blocks_for()
     dvs = store.dvs_for()
     rows_total = rows_tainted = dv_rows = dv_files = 0
-    for f in files:
-        n = pq.ParquetFile(f).metadata.num_rows
+    for f, recs in blocks:
+        n = sum(g["rows"] for g in recs)
         rows_total += n
         d = dvs.get(os.path.relpath(f, store.root))
         if d:
@@ -770,7 +779,7 @@ def mor_compaction_debt(store: ManifestStore) -> dict:
             rows_tainted += n
             dv_rows += len(d)
     return {
-        "files": len(files),
+        "files": len(blocks),
         "dv_files": dv_files,
         "rows_total": rows_total,
         "rows_tainted": rows_tainted,

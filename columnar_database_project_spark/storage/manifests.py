@@ -17,9 +17,20 @@ Layout:
                                             grouped by the commit that
                                             created them
     <root>/_manifests/m<version>.json       {"version", "files"
-                                            (root-relative), "schema"}
+                                            (root-relative), "schema",
+                                            "blocks"}
     <root>/_manifest.json                   {"versions": [...]} head
                                             log, atomic os.replace swap
+
+``blocks`` maps each named file to its zone-map records (one per row
+group: row count and per-column min / max / null count, the
+``sources.index.footer_records`` format), as Iceberg's data-file
+``lower_bounds`` / ``upper_bounds`` / ``record_count`` and Delta's
+``add.stats`` do. A commit reads the footer of a file only when the
+head manifest does not already record it, so each footer is read once,
+when a commit first names its file. The zone-map index of a version
+(``MicroBlockIndex.for_version``), the DML triage and the compaction
+debt read these records, not the files.
 
 Crash story: a crash mid-write leaves data files and possibly an
 m*.json that the head log never names — invisible to readers,
@@ -40,6 +51,8 @@ import glob
 import json
 import os
 from typing import TYPE_CHECKING
+
+from columnar_database_project_spark.sources.index import footer_records
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -132,6 +145,17 @@ class ManifestStore:
         m = self._read_manifest(v)
         return [os.path.join(self.root, f) for f in m["files"]]
 
+    def blocks_for(
+        self, version: int | None = None
+    ) -> list[tuple[str, list[dict]]]:
+        """(absolute path, zone-map records) of each block file of a
+        committed version (default latest), in file order."""
+        v = self.latest() if version is None else version
+        if v is None:
+            raise ValueError("empty store")
+        m = self._read_manifest(v)
+        return [(os.path.join(self.root, f), m["blocks"][f]) for f in m["files"]]
+
     def schema_json(self, version: int | None = None) -> str:
         v = self.latest() if version is None else version
         return self._read_manifest(v)["schema"]
@@ -172,7 +196,10 @@ class ManifestStore:
         manifest (e.g. ``{"txn": {"batch_id": N}}`` for the streaming
         sink's exactly-once dedup). ``dvs``: deletion vectors — file →
         row positions logically deleted from that (still-referenced)
-        file; a DV for a file the manifest doesn't name is an error."""
+        file; a DV for a file the manifest doesn't name is an error.
+        Every named file's zone-map records are copied from the head
+        manifest, or read from its footer if the head does not name
+        it."""
         vs = self.versions()
         if version in vs:
             raise ValueError(f"commit: v{version} already committed")
@@ -220,6 +247,11 @@ class ManifestStore:
                     dv_doc[f] = sorted(int(p) for p in set(positions))
             if dv_doc:
                 doc["dvs"] = dv_doc
+        head = self._read_manifest(vs[-1])["blocks"] if vs else {}
+        doc["blocks"] = {
+            f: head[f] if f in head else footer_records(os.path.join(self.root, f))
+            for f in doc["files"]
+        }
         with open(self._manifest_path(version), "w") as fh:
             json.dump(doc, fh)
         self._write_head(vs + [version])

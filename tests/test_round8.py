@@ -501,82 +501,6 @@ class TestOrcScanBuiltIndex:
         assert rep["zone_map"]["blocks_predicted"] == len(cands)
 
 
-class TestOrcIndexLifecycle:
-    def test_save_load_roundtrip_and_incremental_extend(
-        self, spark, tmp_path_factory
-    ):
-        """r8: the scan-built index pays its one data scan per COMMIT,
-        not per session — sidecar save/load roundtrips exactly
-        (identical pruning), extend_from_scan stat-scans only a
-        commit's new files, and the sidecar is invisible to Spark."""
-        import datetime as dt
-        import os as _os
-
-        from columnar_database_project_spark.plans.sql_where import parse_where
-        from columnar_database_project_spark.sources.index import (
-            MicroBlockIndex,
-        )
-        from columnar_database_project_spark.sources.microblock import (
-            MicroBlockWriter,
-        )
-
-        path = str(tmp_path_factory.mktemp("orc_life") / "t")
-        pdf = pd.DataFrame(
-            {
-                "k": list(range(800)),
-                "ts": pd.date_range("2020-01-01", periods=800, freq="h"),
-                "name": [f"u{i:04d}" for i in range(800)],
-            }
-        )
-        df = spark.createDataFrame(pdf).orderBy("k").coalesce(1)
-        MicroBlockWriter(block_rows=200, format="orc").write(df, path)
-        idx = MicroBlockIndex.build_from_scan(
-            spark, path, table_id="t", format="orc"
-        )
-        idx.save(path)
-        # sidecar invisible to Spark's listing
-        assert spark.read.orc(path).count() == 800
-        loaded = MicroBlockIndex.load(path)
-        assert loaded.num_blocks == idx.num_blocks
-        for where in (
-            "k BETWEEN 100 AND 150",
-            "name = 'u0450'",
-            "ts < '2020-01-05'",
-            "k > 99999",
-        ):
-            p = parse_where(where)
-            assert loaded.candidate_blocks(p) == idx.candidate_blocks(p), where
-        # append a new block file, extend over ONLY the new file
-        extra = pd.DataFrame(
-            {
-                "k": list(range(800, 1000)),
-                "ts": pd.date_range("2021-01-01", periods=200, freq="h"),
-                "name": [f"u{i:04d}" for i in range(800, 1000)],
-            }
-        )
-        spark.createDataFrame(extra).coalesce(1).write.mode("append").orc(path)
-        all_files = sorted(
-            _os.path.join(path, f)
-            for f in _os.listdir(path)
-            if f.startswith("part-") and not f.endswith(".crc")
-        )
-        added = idx.extend_from_scan(spark, all_files, format="orc")
-        assert added == 1                      # only the new file scanned
-        assert idx.num_blocks == loaded.num_blocks + 1
-        # the new block is prunable by its own stats
-        c2021 = idx.candidate_blocks(parse_where("ts >= '2021-01-01'"))
-        assert len(c2021) == 1
-        assert idx.candidate_blocks(parse_where("k = 950"))
-        # idempotent: extending again adds nothing
-        assert idx.extend_from_scan(spark, all_files, format="orc") == 0
-        # row ranges stay contiguous after extend
-        total = sum(
-            idx.block_row_range(b)[1] - idx.block_row_range(b)[0] + 1
-            for b in range(idx.num_blocks)
-        )
-        assert total == 1000
-
-
 class TestCrossBackendIndexParity:
     def test_orc_scan_index_agrees_with_parquet_footer_index(
         self, spark, sf_dir, tmp_path_factory
@@ -639,61 +563,6 @@ class TestCrossBackendIndexParity:
             got_pq = pq_idx.candidate_blocks(p)
             got_orc = orc_idx.candidate_blocks(p)
             assert got_pq == got_orc, (w, got_pq, got_orc)
-
-
-class TestForTableSidecarCache:
-    def test_fresh_sidecar_serves_without_spark_and_staleness_rebuilds(
-        self, spark, tmp_path_factory
-    ):
-        """for_table: a fresh sidecar is authoritative (an ORC reload
-        needs NO spark — proof it did not rescan); a data file newer
-        than the sidecar forces a rebuild that covers the new block."""
-        import time as _time
-
-        from columnar_database_project_spark.plans.sql_where import parse_where
-        from columnar_database_project_spark.sources.index import (
-            MicroBlockIndex,
-        )
-        from columnar_database_project_spark.sources.microblock import (
-            MicroBlockWriter,
-        )
-
-        path = str(tmp_path_factory.mktemp("fortable") / "t")
-        pdf = pd.DataFrame({"k": list(range(400)), "v": [1.0] * 400})
-        MicroBlockWriter(block_rows=100, format="orc").write(
-            spark.createDataFrame(pdf).orderBy("k").coalesce(1), path
-        )
-        idx = MicroBlockIndex.for_table(
-            path, table_id="t", format="orc", spark=spark
-        )
-        n0 = idx.num_blocks
-        assert n0 >= 3
-        # warm path: sidecar fresh → loads with spark=None (no scan)
-        idx2 = MicroBlockIndex.for_table(path, table_id="t", format="orc")
-        assert idx2.num_blocks == n0
-        p = parse_where("k BETWEEN 50 AND 60")
-        assert idx2.candidate_blocks(p) == idx.candidate_blocks(p)
-        # stale path: append a newer data file → spark=None must raise,
-        # and the spark rebuild covers the new block
-        _time.sleep(1.1)  # mtime granularity
-        spark.createDataFrame(
-            pd.DataFrame({"k": [10_000], "v": [2.0]})
-        ).coalesce(1).write.mode("append").orc(path)
-        with pytest.raises(ValueError, match="stale/missing sidecar"):
-            MicroBlockIndex.for_table(path, table_id="t", format="orc")
-        idx3 = MicroBlockIndex.for_table(
-            path, table_id="t", format="orc", spark=spark
-        )
-        assert idx3.num_blocks == n0 + 1
-        assert idx3.candidate_blocks(parse_where("k = 10000"))
-        # parquet path: build+save then warm-load parity
-        ppath = str(tmp_path_factory.mktemp("fortable") / "p")
-        MicroBlockWriter(block_rows=100).write(
-            spark.createDataFrame(pdf).orderBy("k").coalesce(1), ppath
-        )
-        pidx = MicroBlockIndex.for_table(ppath, table_id="p")
-        pidx2 = MicroBlockIndex.for_table(ppath, table_id="p")
-        assert pidx2.candidate_blocks(p) == pidx.candidate_blocks(p)
 
 
 class TestOrcPrefetch:

@@ -178,35 +178,6 @@ class TestAdviceR8:
         legacy = BlockBloomIndex.load(str(tmp_path))
         assert legacy.encoding_version == 1 and legacy.stale_encoding
 
-    def test_for_table_rebuilds_on_deletion_only_change(
-        self, spark, tmp_path
-    ):
-        # ADVICE r8: removing a data file writes nothing new, so the
-        # mtime freshness check alone would serve a sidecar whose
-        # blocks reference the deleted file.
-        import os
-
-        from columnar_database_project_spark.sources.index import (
-            MicroBlockIndex,
-        )
-
-        d = str(tmp_path / "tbl")
-        spark.range(100).selectExpr("id", "id * 2 AS v").repartition(
-            2
-        ).write.parquet(d)
-        idx = MicroBlockIndex.for_table(d, "tbl")
-        files = sorted(
-            f for f in os.listdir(d) if f.endswith(".parquet")
-        )
-        assert len(files) >= 2
-        os.remove(os.path.join(d, files[0]))
-        fresh = MicroBlockIndex.for_table(d, "tbl")
-        listed = {
-            os.path.basename(b.file_path) for b in fresh.blocks
-        }
-        assert files[0] not in listed
-        assert idx.num_blocks > fresh.num_blocks
-
     def test_scan_index_decodes_percent_encoded_paths(self, spark, tmp_path):
         # ADVICE r8: input_file_name() percent-encodes paths; a dir
         # with a space must still yield openable block files.
