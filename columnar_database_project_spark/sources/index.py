@@ -167,6 +167,8 @@ def footer_records(path: str) -> list[dict]:
     ``{"rows": n, "columns": [{"name", "min", "max", "null_count",
     "num_values", "byte_offset", "byte_length", "compression"}, ...]}``,
     bounds in the ``_enc_stat`` encoding, so a record is plain JSON.
+    ``byte_offset`` is where the column chunk starts: its dictionary
+    page if it has one, else its first data page.
     This is the package's one zone-map record format:
     ``ManifestStore.commit`` stores it for every file a version names,
     and every ``MicroBlockIndex`` is built from it."""
@@ -190,7 +192,11 @@ def footer_records(path: str) -> list[dict]:
                         else None
                     ),
                     "num_values": col.num_values,
-                    "byte_offset": col.file_offset,
+                    "byte_offset": (
+                        col.dictionary_page_offset
+                        if col.has_dictionary_page
+                        else col.data_page_offset
+                    ),
                     "byte_length": col.total_compressed_size,
                     "compression": col.compression,
                 }

@@ -49,6 +49,8 @@ from columnar_database_project_spark.sources.microblock import (
 from columnar_database_project_spark.storage.manifests import (
     ManifestStore,
     list_block_files,
+    read_with_schema,
+    spark_file_name,
 )
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -108,9 +110,37 @@ def _triage(
 
 
 def _cond(predicate):
+    """The predicate as a Column that is TRUE on its TRUE rows and
+    FALSE elsewhere (a NULL row never matches, SQL semantics)."""
     from pyspark.sql import functions as F
 
-    return F.expr(predicate) if isinstance(predicate, str) else predicate
+    c = F.expr(predicate) if isinstance(predicate, str) else predicate
+    return F.coalesce(c, F.lit(False))
+
+
+def _cast_to_manifest(
+    store: ManifestStore, df: "DataFrame", verb: str, all_columns: bool
+) -> "DataFrame":
+    """``df`` with each column cast to its manifest type, so a written
+    block never forks the schema the version is read with. With
+    ``all_columns`` the column sets must be equal; otherwise ``df`` may
+    lack manifest columns (they read as NULL) but not add any. The
+    casts are Spark's ANSI casts: a value that does not fit fails the
+    write, before anything is committed."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    schema = T.StructType.fromJson(json.loads(store.schema_json()))
+    types = {f.name: f.dataType for f in schema.fields}
+    if all_columns and set(df.columns) != set(types):
+        raise ValueError(
+            f"{verb}: updates columns {sorted(df.columns)} "
+            f"!= target columns {sorted(types)}"
+        )
+    extra = set(df.columns) - set(types)
+    if extra:
+        raise ValueError(f"{verb}: unknown columns {sorted(extra)}")
+    return df.select(*[F.col(c).cast(types[c]).alias(c) for c in df.columns])
 
 
 def delete_where_cow(
@@ -124,8 +154,6 @@ def delete_where_cow(
     predicate-TRUE rows are removed (NULL keeps). Returns the op
     report incl. the IO-proportionality facts (files_rewritten /
     files_carried) the at-scale claim rests on."""
-    from pyspark.sql import functions as F
-
     pred = _pred_of(predicate)
     files = store.files_for()
     touched, carried, n_blocks = _triage(store, files, pred, "cow_delete", blooms)
@@ -134,7 +162,7 @@ def delete_where_cow(
     deleted = 0
     if touched:
         before = store.read_subset(spark, touched)
-        cond = F.coalesce(_cond(predicate), F.lit(False))
+        cond = _cond(predicate)
         kept = before.filter(~cond)
         deleted = before.count() - kept.count()
         MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(kept, stage)
@@ -157,53 +185,35 @@ def _mor_merge_positions(
     store: ManifestStore,
     files: list[str],
     touched: list[str],
-    cond_col,
+    match,
     max_dv_rows: int,
 ):
-    """Collect the ``(file, row_index)`` positions matching ``cond_col``
-    in the touched files and merge them into the current version's
-    deletion vectors. Returns ``(merged_dvs, n_new)`` or ``None`` when
-    the result would exceed ``max_dv_rows`` (caller falls back to
-    CoW). Already-deleted positions merge idempotently."""
+    """Collect the ``(file, row_index)`` positions of the touched files'
+    rows that ``match`` (DataFrame → DataFrame) keeps, in one scan, and
+    merge them into the current version's deletion vectors. Returns
+    ``(merged_dvs, n_new)`` or ``None`` when the result would exceed
+    ``max_dv_rows`` (caller falls back to CoW). Already-deleted
+    positions merge idempotently."""
     from pyspark.sql import functions as F
-
-    import json as _json
-
-    from pyspark.sql import types as T
 
     existing = store.dvs_for()
     existing_total = sum(len(p) for p in existing.values())
-    base_of = {os.path.basename(f): os.path.relpath(f, store.root) for f in files}
+    rel_of = {spark_file_name(f): os.path.relpath(f, store.root) for f in files}
     merged: dict[str, set] = {f: set(p) for f, p in existing.items()}
     n_new = 0
     if touched:
         raw = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*touched)
-            .withColumn(
-                "_file",
-                F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
-            )
+            read_with_schema(spark, touched, store.schema_json())
+            .withColumn("_file", F.col("_metadata.file_name"))
             .withColumn("_pos", F.col("_metadata.row_index"))
         )
-        # NULL-fill manifest-schema columns pre-evolution blocks lack,
-        # or a predicate on a metadata-added column fails analysis
-        schema = T.StructType.fromJson(_json.loads(store.schema_json()))
-        for field in schema.fields:
-            if field.name not in raw.columns:
-                raw = raw.withColumn(
-                    field.name, F.lit(None).cast(field.dataType)
-                )
-        raw = raw.filter(F.coalesce(cond_col, F.lit(False))).select(
-            "_file", "_pos"
-        )
-        if raw.limit(max_dv_rows + 1).count() > max_dv_rows:
+        hits = match(raw).select("_file", "_pos").limit(max_dv_rows + 1).collect()
+        if len(hits) > max_dv_rows:
             return None
-        for r in raw.collect():
-            rel = base_of[r["_file"]]
-            s = merged.setdefault(rel, set())
-            if int(r["_pos"]) not in s:
-                s.add(int(r["_pos"]))
+        for name, pos in hits:
+            s = merged.setdefault(rel_of[name], set())
+            if pos not in s:
+                s.add(pos)
                 n_new += 1
         if existing_total + n_new > max_dv_rows:
             return None
@@ -241,7 +251,8 @@ def delete_where_mor(
     files = store.files_for()
     touched, carried, n_blocks = _triage(store, files, pred, "mor_delete", blooms)
     got = _mor_merge_positions(
-        spark, store, files, touched, _cond(predicate), max_dv_rows
+        spark, store, files, touched,
+        lambda df: df.filter(_cond(predicate)), max_dv_rows,
     )
     if got is None:
         rep = delete_where_cow(
@@ -296,7 +307,8 @@ def update_where_mor(
     if unknown:
         raise ValueError(f"update_where_mor: unknown columns {sorted(unknown)}")
     got = _mor_merge_positions(
-        spark, store, files, touched, _cond(predicate), max_dv_rows
+        spark, store, files, touched,
+        lambda df: df.filter(_cond(predicate)), max_dv_rows,
     )
     if got is None:
         rep = update_where_cow(
@@ -309,9 +321,7 @@ def update_where_mor(
     v, stage = store.stage_next()
     new_files: list[str] = []
     if touched and n_hit:
-        live = store.read_subset(spark, touched).filter(
-            F.coalesce(_cond(predicate), F.lit(False))
-        )
+        live = store.read_subset(spark, touched).filter(_cond(predicate))
         types = dict(live.dtypes)
         cols = []
         for c in live.columns:
@@ -354,27 +364,23 @@ def merge_mor(
     and append ALL update rows as new blocks, one commit — upsert cost
     = the update batch, never the blocks it lands in. Falls back to
     ``merge_cow`` when the key batch is backfill-sized or the DV
-    budget would overflow."""
-    target_cols = {
-        f["name"] for f in json.loads(store.schema_json())["fields"]
-    }
-    if set(updates.columns) != target_cols:
-        raise ValueError(
-            f"merge_mor: updates columns {sorted(updates.columns)} "
-            f"!= target columns {sorted(target_cols)}"
-        )
-    n_keys = updates.select(key).distinct().count()
-    if n_keys > max_point_keys:
+    budget would overflow.
+
+    The batch is cast to the manifest types (``_cast_to_manifest``).
+    One job over it collects its distinct keys; one scan of the
+    touched files finds the matched positions."""
+    updates = _cast_to_manifest(store, updates, "merge_mor", all_columns=True)
+    # (key, rows) of the distinct keys, NULL included, in one job
+    counts = updates.groupBy(key).count().limit(max_point_keys + 1).collect()
+    if len(counts) > max_point_keys:
         rep = merge_cow(
             spark, store, updates, key,
             block_rows=block_rows, blooms=blooms,
         )
         rep["mode"] = "cow_fallback"
         return rep
-    keys = [
-        r[0] for r in updates.select(key).distinct().collect()
-        if r[0] is not None
-    ]
+    keys = [k for k, _n in counts if k is not None]
+    n_rows = sum(n for _k, n in counts)
     files = store.files_for()
     if not keys:
         # SQL equality with NULL matches no target row, so a batch
@@ -383,7 +389,7 @@ def merge_mor(
         # would DV every live row and a no-op MERGE would wipe the
         # table. Empty batch → full no-op (no commit); NULL-keyed
         # rows → append-only commit.
-        if updates.isEmpty():
+        if not n_rows:
             return {
                 "version": store.latest(),
                 "mode": "mor_noop",
@@ -409,10 +415,15 @@ def merge_mor(
             "files_rewritten": 0,
             "files_carried": rep["files_carried"],
         }
-    pred: Pred = InList(key, tuple(keys))
-    touched, carried, n_blocks = _triage(store, files, pred, "mor_merge", blooms)
+    touched, carried, n_blocks = _triage(
+        store, files, InList(key, tuple(keys)), "mor_merge", blooms
+    )
+    # the matched rows are a left-semi join against the batch's keys,
+    # shipped to the JVM as one local relation
+    key_df = spark.createDataFrame([(k,) for k in keys], updates.select(key).schema)
     got = _mor_merge_positions(
-        spark, store, files, touched, pred.to_column(), max_dv_rows
+        spark, store, files, touched,
+        lambda df: df.join(key_df, on=key, how="left_semi"), max_dv_rows,
     )
     if got is None:
         rep = merge_cow(
@@ -429,8 +440,8 @@ def merge_mor(
     return {
         "version": v,
         "mode": "mor",
-        "update_rows": updates.count(),
-        "update_keys": n_keys,
+        "update_rows": n_rows,
+        "update_keys": len(counts),
         "matched_rows": n_matched,
         "dv_rows_total": sum(len(p) for p in merged.values()),
         "blocks_total": n_blocks,
@@ -468,7 +479,7 @@ def update_where_cow(
     updated = 0
     if touched:
         target = store.read_subset(spark, touched)
-        cond = F.coalesce(_cond(predicate), F.lit(False))
+        cond = _cond(predicate)
         types = dict(target.dtypes)
         cols = []
         for c in target.columns:
@@ -517,29 +528,23 @@ def merge_cow(
     Key triage is an IN-list over the updates' distinct keys —
     control-plane sized up to ``max_point_keys``; above that the op is
     a backfill and every block is touched (TruePred), which is also
-    the sound fallback for a key batch too large to enumerate."""
-    target_cols = {
-        f["name"] for f in json.loads(store.schema_json())["fields"]
-    }
-    if set(updates.columns) != target_cols:
-        raise ValueError(
-            f"merge_cow: updates columns {sorted(updates.columns)} "
-            f"!= target columns {sorted(target_cols)}"
-        )
-    n_keys = updates.select(key).distinct().count()
-    if n_keys > max_point_keys:
+    the sound fallback for a key batch too large to enumerate. The
+    batch is cast to the manifest types (``_cast_to_manifest``)."""
+    updates = _cast_to_manifest(store, updates, "merge_cow", all_columns=True)
+    # (key, rows) of the distinct keys, NULL included, in one job
+    counts = updates.groupBy(key).count().limit(max_point_keys + 1).collect()
+    if len(counts) > max_point_keys:
         pred: Pred = TruePred()
+        n_keys, n_rows = updates.select(key).distinct().count(), updates.count()
     else:
-        keys = [
-            r[0] for r in updates.select(key).distinct().collect()
-            if r[0] is not None
-        ]
+        keys = [k for k, _n in counts if k is not None]
+        n_keys, n_rows = len(counts), sum(n for _k, n in counts)
         if not keys:
             # No non-NULL merge keys → no target row can match (SQL
             # equality with NULL is never true). Empty batch: full
             # no-op, no commit. NULL-keyed rows: append-only commit.
             # TruePred here would rewrite the whole table for nothing.
-            if updates.isEmpty():
+            if not n_rows:
                 return {
                     "version": store.latest(),
                     "mode": "cow_noop",
@@ -581,7 +586,7 @@ def merge_cow(
     )
     return {
         "version": v,
-        "update_rows": updates.count(),
+        "update_rows": n_rows,
         "update_keys": n_keys,
         "blocks_total": n_blocks,
         "files_rewritten": len(touched),
@@ -600,9 +605,10 @@ def append_cow(
     block is carried by reference — the cheapest verb (zero reads of
     existing data, IO = the appended rows). An empty store is
     initialized from ``df``'s schema (``init_manifest_table``).
-    Missing manifest-schema columns in ``df`` (e.g. after a
-    metadata-only add_column) are allowed — they read as NULL; extra
-    columns are an error."""
+    Otherwise ``df`` is cast to the manifest types
+    (``_cast_to_manifest``): missing manifest-schema columns (e.g.
+    after a metadata-only add_column) are allowed — they read as NULL;
+    extra columns are an error."""
     if store.latest() is None:
         rep = init_manifest_table(
             spark, store, df, block_rows=block_rows, meta=meta
@@ -613,12 +619,7 @@ def append_cow(
             "files_new": rep["files"],
             "files_carried": 0,
         }
-    target_cols = {
-        f["name"] for f in json.loads(store.schema_json())["fields"]
-    }
-    extra = set(df.columns) - target_cols
-    if extra:
-        raise ValueError(f"append_cow: unknown columns {sorted(extra)}")
+    df = _cast_to_manifest(store, df, "append_cow", all_columns=False)
     v, stage = store.stage_next()
     MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(df, stage)
     new_files = list_block_files(stage)

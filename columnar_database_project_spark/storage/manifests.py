@@ -61,25 +61,36 @@ if TYPE_CHECKING:  # pragma: no cover
 def read_with_schema(
     spark: "SparkSession", files: list[str], schema_json: str
 ) -> "DataFrame":
-    """Read block files RECONCILED to a manifest schema: mergeSchema
-    unifies files that disagree, columns no file has yet (metadata-only
-    add_column) are filled with typed NULL, and column order follows
-    the manifest. This is the one read path every consumer of a
-    manifest's files must use — a raw ``spark.read.parquet`` on
-    pre-evolution blocks would miss added columns."""
-    import json as _json
-
-    from pyspark.sql import functions as F
+    """Read block files as the manifest schema says: the schema is
+    passed to the reader, so no inference job runs, a column no file
+    has yet (metadata-only ``add_column``) reads as typed NULL, and
+    column order follows the manifest. This is the one read path every
+    consumer of a manifest's files must use: a raw
+    ``spark.read.parquet`` on pre-evolution blocks would miss added
+    columns."""
     from pyspark.sql import types as T
 
-    schema = T.StructType.fromJson(_json.loads(schema_json))
+    schema = T.StructType.fromJson(json.loads(schema_json))
     if not files:
         return spark.createDataFrame([], schema)
-    df = spark.read.option("mergeSchema", "true").parquet(*files)
-    for field in schema.fields:
-        if field.name not in df.columns:
-            df = df.withColumn(field.name, F.lit(None).cast(field.dataType))
-    return df.select(*[f.name for f in schema.fields])
+    return spark.read.schema(schema).parquet(*files)
+
+
+def spark_file_name(path: str) -> str:
+    """``_metadata.file_name`` of a block file as Spark reports it: the
+    base name, percent-encoded as a ``java.net.URI`` path (ASCII
+    characters outside the URI path set; non-ASCII is kept)."""
+    from urllib.parse import quote
+
+    return "".join(
+        c if ord(c) > 127 else quote(c, safe="!$&'()*+,;=:@")
+        for c in os.path.basename(path)
+    )
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def list_block_files(path: str) -> list[str]:
@@ -288,8 +299,8 @@ class ManifestStore:
         an empty file list — served as an empty frame of the recorded
         schema, not an error.
 
-        Schema reconciliation (the metadata-only ADD COLUMN read
-        path) via ``read_with_schema``: existing rows of an added
+        The files are read with the manifest schema
+        (``read_with_schema``), so existing rows of an added
         column read NULL — the lakehouse-standard metadata-only
         evolution semantics (Delta/Iceberg ADD COLUMN). Deletion
         vectors (merge-on-read DELETE, ``cow.delete_where_mor``) are
@@ -306,95 +317,71 @@ class ManifestStore:
         files: list[str],
         version: int | None = None,
     ) -> "DataFrame":
-        """Reconciled read of a SUBSET of a version's files with that
-        version's deletion vectors applied (only the vectors covering
-        these files). This is the one read path the CoW verbs use for
-        touched blocks — a rewrite that ignored pending DVs would
-        resurrect logically-deleted rows.
+        """Read a SUBSET of a version's files with that version's schema
+        (``read_with_schema``) and its deletion vectors applied (only
+        the vectors covering these files). This is the one read path the
+        CoW verbs use for touched blocks: a rewrite that ignored pending
+        DVs would resurrect logically-deleted rows.
 
-        DV application is an anti-join on (file name, row position)
-        against the bounded DV frame (bounded by construction:
-        ``delete_where_mor`` refuses to grow a version's DVs past
-        ``cow.MOR_DV_MAX_ROWS``, falling back to CoW), with
-        ``_metadata.row_index`` supplying positions at scan time —
-        zero cost when the version has no DVs."""
+        Only the DV'd files pay for the per-row ``_metadata`` columns;
+        clean files scan untouched and union back, so a version without
+        DVs costs nothing extra. Up to 4,096 positions in all, the DV is
+        one SQL predicate on (``_metadata.file_name``,
+        ``_metadata.row_index``), built in one JVM call whatever its size
+        (Spark turns each IN list into a hash set). Above that it is a
+        broadcast anti-join against the DV frame, which is bounded by
+        construction: ``delete_where_mor`` refuses to grow a version's
+        DVs past ``cow.MOR_DV_MAX_ROWS`` and falls back to CoW."""
         from columnar_database_project_spark.functions.broadcast_policy import (
             bounded_broadcast,
         )
 
         from pyspark.sql import functions as F
 
-        v = self.latest() if version is None else version
-        schema_json = self.schema_json(v)
-        if not files:
-            return read_with_schema(spark, files, schema_json)
-        dvs = self.dvs_for(v)
+        m = self._read_manifest(self.latest() if version is None else version)
+        schema_json, dvs = m["schema"], m.get("dvs", {})
         rel = {f: os.path.relpath(f, self.root) for f in files}
         dv_files = [f for f in files if dvs.get(rel[f])]
-        clean_files = [f for f in files if not dvs.get(rel[f])]
         if not dv_files:
             return read_with_schema(spark, files, schema_json)
-        # ONLY the DV'd files pay the position-extraction + anti-join
-        # path (per-row _metadata cost); clean files — the vast
-        # majority in the MoR regime — scan untouched and union back.
-        import json as _json
-
-        from pyspark.sql import types as T
-
-        pairs = [
-            (os.path.basename(f), int(p))
-            for f in dv_files
-            for p in dvs[rel[f]]
-        ]
-        schema = T.StructType.fromJson(_json.loads(schema_json))
-        raw = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*dv_files)
-            .withColumn(
-                "_file",
-                F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
+        raw = read_with_schema(spark, dv_files, schema_json)
+        if sum(len(dvs[rel[f]]) for f in dv_files) <= 4096:
+            hit = " OR ".join(
+                f"(_metadata.file_name = {_sql_str(spark_file_name(f))} AND "
+                f"_metadata.row_index IN ({','.join(map(str, dvs[rel[f]]))}))"
+                for f in dv_files
             )
-            .withColumn("_pos", F.col("_metadata.row_index"))
-        )
-        if len(pairs) <= 4096:
-            # the point-delete regime: a codegen'd per-file NOT-IN
-            # expression — no broadcast build job, no join stage
-            keep = F.lit(True)
-            for f in dv_files:
-                keep = keep & ~(
-                    (F.col("_file") == os.path.basename(f))
-                    & F.col("_pos").isin(
-                        *[int(p) for p in dvs[rel[f]]]
-                    )
-                )
-            tainted = raw.filter(keep).drop("_file", "_pos")
+            tainted = raw.filter(F.expr(f"NOT ({hit})"))
         else:
-            dv_df = spark.createDataFrame(pairs, "_file string, _pos long")
-            tainted = raw.join(
-                bounded_broadcast(
-                    dv_df,
-                    1_048_576,
-                    "DV frame ≤ MOR_DV_MAX_ROWS by delete_where_mor's "
-                    "fallback-to-CoW guard",
-                ),
-                on=["_file", "_pos"],
-                how="left_anti",
-            ).drop("_file", "_pos")
-        for field in schema.fields:
-            if field.name not in tainted.columns:
-                tainted = tainted.withColumn(
-                    field.name, F.lit(None).cast(field.dataType)
+            dv_df = spark.createDataFrame(
+                [(spark_file_name(f), int(p)) for f in dv_files for p in dvs[rel[f]]],
+                "_file string, _pos long",
+            )
+            tainted = (
+                raw.withColumn("_file", F.col("_metadata.file_name"))
+                .withColumn("_pos", F.col("_metadata.row_index"))
+                .join(
+                    bounded_broadcast(
+                        dv_df,
+                        1_048_576,
+                        "DV frame ≤ MOR_DV_MAX_ROWS by delete_where_mor's "
+                        "fallback-to-CoW guard",
+                    ),
+                    on=["_file", "_pos"],
+                    how="left_anti",
                 )
-        tainted = tainted.select(*[f.name for f in schema.fields])
+                .drop("_file", "_pos")
+            )
+        clean_files = [f for f in files if not dvs.get(rel[f])]
         if not clean_files:
             return tainted
-        clean = read_with_schema(spark, clean_files, schema_json)
-        return clean.unionByName(tainted)
+        return read_with_schema(spark, clean_files, schema_json).unionByName(tainted)
 
     # ------------------------------------------------------ schema evolution
     def add_column(self, name: str, ddl_type: str) -> dict:
         """Metadata-only ADD COLUMN: a new version with the SAME file
-        list and an extended schema — zero data IO, any table size.
+        list and deletion vectors and an extended schema — zero data
+        IO, any table size.
         Existing rows read as NULL (see ``read``); later rewrites
         materialize the column in the blocks they touch. Adding an
         existing column is an error; the added column is nullable by
@@ -411,7 +398,10 @@ class ManifestStore:
         new_field = T.StructField(name, parsed.fields[0].dataType, True)
         new_schema = T.StructType(schema.fields + [new_field])
         v, _stage = self.stage_next()
-        self.commit(v, [], self.files_for(v_cur), new_schema.json())
+        self.commit(
+            v, [], self.files_for(v_cur), new_schema.json(),
+            dvs=self.dvs_for(v_cur),
+        )
         return {"version": v, "column": name, "type": ddl_type}
 
     # --------------------------------------------------------- observability

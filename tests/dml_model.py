@@ -20,11 +20,13 @@ KEY = "o_orderkey"
 COLS = [KEY, "o_custkey", "o_orderstatus", "o_totalprice"]
 
 
-def sorted_state(pdf: pd.DataFrame) -> list[tuple]:
-    """Rows of ``pdf`` over ``COLS`` as tuples, ordered by key."""
+def sorted_state(pdf: pd.DataFrame, cols: list[str] = COLS) -> list[tuple]:
+    """Rows of ``pdf`` over ``cols`` as tuples, ordered by key; a
+    missing value (NaN or None) reads as None."""
+    out = pdf.sort_values([KEY])[cols].astype(object)
     return [
         tuple(r)
-        for r in pdf.sort_values([KEY])[COLS].itertuples(index=False, name=None)
+        for r in out.where(out.notna(), None).itertuples(index=False, name=None)
     ]
 
 
@@ -34,7 +36,10 @@ def states_equal(got: list[tuple], want: list[tuple]) -> bool:
         return False
     for rg, rw in zip(got, want):
         for a, b in zip(rg, rw):
-            if isinstance(a, float) or isinstance(b, float):
+            if a is None or b is None:
+                if a is not b:
+                    return False
+            elif isinstance(a, float) or isinstance(b, float):
                 if not math.isclose(a, b, rel_tol=1e-9, abs_tol=1e-8):
                     return False
             elif a != b:
@@ -56,6 +61,9 @@ class DuckModel:
     def update(self, pred: str, col: str, expr: str) -> None:
         self.con.execute(f"UPDATE model SET {col} = {expr} WHERE {pred}")
 
+    def add_column(self, name: str, ddl_type: str) -> None:
+        self.con.execute(f"ALTER TABLE model ADD COLUMN {name} {ddl_type}")
+
     def merge(self, updates: pd.DataFrame) -> None:
         """MERGE on ``KEY``: update rows replace same-key rows, the
         rest are inserted."""
@@ -69,5 +77,5 @@ class DuckModel:
     def pdf(self) -> pd.DataFrame:
         return self.con.execute(f"SELECT * FROM model ORDER BY {KEY}").df()
 
-    def state(self) -> list[tuple]:
-        return sorted_state(self.pdf())
+    def state(self, cols: list[str] = COLS) -> list[tuple]:
+        return sorted_state(self.pdf(), cols)

@@ -21,6 +21,7 @@ from columnar_database_project_spark.storage.access_logger import (
     GlobalHistory,
 )
 from columnar_database_project_spark.storage.block_cache import BlockCache
+from spark_counters import jobs_run as _jobs_run
 
 
 @pytest.fixture(scope="module")
@@ -229,22 +230,6 @@ class TestPrefetchStack:
         time.sleep(0.2)
         svc.stop()
         assert not svc._thread.is_alive()
-
-
-def _jobs_run(spark, fn) -> list[int]:
-    """Ids of the Spark jobs that ``fn()`` ran on this thread."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()   # status store is async
-    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _block_sums(path: str) -> tuple[int, int]:

@@ -12,7 +12,8 @@ them. These tests check that
   exactly the footers of the files it adds;
 - ``register_manifest`` leaves no cached block id naming another block;
 - a merge-on-read DELETE honours ``block_rows`` in the compaction it
-  fires and in its copy-on-write fallback.
+  fires and in its copy-on-write fallback;
+- each record's ``byte_offset`` is where its column chunk starts.
 """
 
 from __future__ import annotations
@@ -46,8 +47,12 @@ from columnar_database_project_spark.sources.index import (
     _dec_stat,
     _enc_stat,
     _normalize_stat,
+    footer_records,
 )
-from columnar_database_project_spark.sources.microblock import read_block
+from columnar_database_project_spark.sources.microblock import (
+    MicroBlockWriter,
+    read_block,
+)
 from columnar_database_project_spark.storage.block_cache import BlockCache
 from columnar_database_project_spark.storage.cow import (
     append_cow,
@@ -168,8 +173,10 @@ def _assert_bounds_are_footer_stats(idx: MicroBlockIndex) -> None:
         assert bm.null_count == (
             st_.null_count if st_ is not None and st_.has_null_count else None
         )
+        start = (col.dictionary_page_offset if col.has_dictionary_page
+                 else col.data_page_offset)
         assert (bm.num_values, bm.byte_offset, bm.byte_length,
-                bm.compression) == (col.num_values, col.file_offset,
+                bm.compression) == (col.num_values, start,
                                     col.total_compressed_size,
                                     col.compression)
 
@@ -416,3 +423,38 @@ class TestMorDeleteBlockRows:
         assert len(new) >= 3
         assert all(pq.read_metadata(f).num_rows <= small for f in new)
         assert eng.table("zr2").count() == n - 3
+
+
+class TestFooterRecordByteRanges:
+    def test_one_column_pyarrow_chunk_starts_after_the_magic(self, tmp_path):
+        import pyarrow as pa
+
+        path = str(tmp_path / "one.parquet")
+        pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+        (col,) = footer_records(path)[0]["columns"]
+        assert col["byte_offset"] == 4      # right after "PAR1"
+
+    def test_chunks_lie_inside_the_file_without_overlap(self, spark, tmp_path):
+        import pyarrow as pa
+
+        plain = str(tmp_path / "plain.parquet")
+        pq.write_table(
+            pa.table({"a": list(range(500)), "s": [f"v{i}" for i in range(500)]}),
+            plain, use_dictionary=False, row_group_size=200,
+        )
+        MicroBlockWriter(block_rows=300).write(
+            spark.range(0, 900).selectExpr("id", "CAST(id % 7 AS STRING) AS s",
+                                           "id * 0.5 AS x").coalesce(1),
+            str(tmp_path / "spark"),
+        )
+        files = [plain] + sorted(str(p) for p in (tmp_path / "spark").glob("*.parquet"))
+        assert len(files) == 4
+        for f in files:
+            spans = sorted(
+                (c["byte_offset"], c["byte_offset"] + c["byte_length"])
+                for rg in footer_records(f)
+                for c in rg["columns"]
+            )
+            assert spans[0][0] >= 4, f
+            assert spans[-1][1] <= os.path.getsize(f), f
+            assert all(a[1] <= b[0] for a, b in zip(spans, spans[1:])), f
