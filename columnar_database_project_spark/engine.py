@@ -274,45 +274,38 @@ class MicroBlockEngine:
     # (storage/cow.py): CoW rewrites only the blocks the zone-map/Bloom
     # triage cannot prove untouched, MoR writes deletion vectors.
 
-    def delete_where_cow(self, name: str, predicate, mstore, **kw) -> dict:
-        from columnar_database_project_spark.storage.cow import (
-            delete_where_cow,
-        )
+    def _dml(
+        self, verb: str, name: str, mstore, *args, auto_compact=False, **kw
+    ) -> dict:
+        """Run the storage/cow ``verb`` on ``mstore`` and register
+        ``name`` from the version it committed. ``auto_compact`` (on by
+        default for the MoR verbs) then runs the threshold-triggered DV
+        materialization (storage/cow.maybe_compact_mor) — the read tax
+        is bounded by the engine, not by an operator remembering
+        DEPLOY.md."""
+        from columnar_database_project_spark.storage import cow
 
-        report = delete_where_cow(self.spark, mstore, predicate, **kw)
+        report = getattr(cow, verb)(self.spark, mstore, *args, **kw)
+        if auto_compact:
+            report["auto_compact"] = cow.maybe_compact_mor(
+                self.spark, mstore, block_rows=kw.get("block_rows")
+            )
         self.register(name, mstore.read(self.spark))
         return report
 
-    def _auto_compact_mor(self, mstore, report: dict, kw: dict) -> dict:
-        """Threshold-triggered DV materialization after a MoR commit
-        (storage/cow.maybe_compact_mor) — the read tax is bounded by
-        the engine, not by an operator remembering DEPLOY.md."""
-        from columnar_database_project_spark.storage.cow import (
-            maybe_compact_mor,
-        )
-
-        report["auto_compact"] = maybe_compact_mor(
-            self.spark, mstore, block_rows=kw.get("block_rows")
-        )
-        return report
+    def delete_where_cow(self, name: str, predicate, mstore, **kw) -> dict:
+        return self._dml("delete_where_cow", name, mstore, predicate, **kw)
 
     def delete_where_mor(
         self, name: str, predicate, mstore, auto_compact: bool = True, **kw
     ) -> dict:
         """Merge-on-read DELETE: commits a deletion vector, zero data
         files written (storage/cow.delete_where_mor); falls back to
-        CoW above the DV budget. ``auto_compact`` (default on) runs
-        the threshold policy afterwards so accumulated DV read tax is
-        bounded without manual compaction."""
-        from columnar_database_project_spark.storage.cow import (
-            delete_where_mor,
+        CoW above the DV budget."""
+        return self._dml(
+            "delete_where_mor", name, mstore, predicate,
+            auto_compact=auto_compact, **kw,
         )
-
-        report = delete_where_mor(self.spark, mstore, predicate, **kw)
-        if auto_compact:
-            self._auto_compact_mor(mstore, report, kw)
-        self.register(name, mstore.read(self.spark))
-        return report
 
     def update_where_mor(
         self,
@@ -325,17 +318,10 @@ class MicroBlockEngine:
     ) -> dict:
         """Merge-on-read UPDATE: DV the matching rows, append their
         updated versions (storage/cow.update_where_mor)."""
-        from columnar_database_project_spark.storage.cow import (
-            update_where_mor,
+        return self._dml(
+            "update_where_mor", name, mstore, predicate, assignments,
+            auto_compact=auto_compact, **kw,
         )
-
-        report = update_where_mor(
-            self.spark, mstore, predicate, assignments, **kw
-        )
-        if auto_compact:
-            self._auto_compact_mor(mstore, report, kw)
-        self.register(name, mstore.read(self.spark))
-        return report
 
     def merge_mor(
         self,
@@ -347,33 +333,20 @@ class MicroBlockEngine:
         **kw,
     ) -> dict:
         """Merge-on-read MERGE/upsert (storage/cow.merge_mor)."""
-        from columnar_database_project_spark.storage.cow import merge_mor
-
-        report = merge_mor(self.spark, mstore, updates, key, **kw)
-        if auto_compact:
-            self._auto_compact_mor(mstore, report, kw)
-        self.register(name, mstore.read(self.spark))
-        return report
+        return self._dml(
+            "merge_mor", name, mstore, updates, key,
+            auto_compact=auto_compact, **kw,
+        )
 
     def update_where_cow(
         self, name: str, predicate, assignments: dict, mstore, **kw
     ) -> dict:
-        from columnar_database_project_spark.storage.cow import (
-            update_where_cow,
+        return self._dml(
+            "update_where_cow", name, mstore, predicate, assignments, **kw
         )
-
-        report = update_where_cow(
-            self.spark, mstore, predicate, assignments, **kw
-        )
-        self.register(name, mstore.read(self.spark))
-        return report
 
     def merge_cow(self, name: str, updates, key: str, mstore, **kw) -> dict:
-        from columnar_database_project_spark.storage.cow import merge_cow
-
-        report = merge_cow(self.spark, mstore, updates, key, **kw)
-        self.register(name, mstore.read(self.spark))
-        return report
+        return self._dml("merge_cow", name, mstore, updates, key, **kw)
 
     def time_travel_cow(self, name: str, mstore, version: int | None = None):
         """Register (and return) ``name`` as of a manifest version
@@ -401,10 +374,11 @@ class MicroBlockEngine:
         self, name: str, mstore, with_index: bool = True, blooms=None
     ) -> None:
         """Register a manifest table AND take the zone-map index of its
-        latest version (``MicroBlockIndex.for_version``: the records the
-        manifest stores, no footer read), so the observability stack
-        (explain / access log / prefetch) keys on the live snapshot's
-        blocks. Call again after any CoW verb or compaction — block ids
+        latest version, both from one snapshot
+        (``MicroBlockIndex.for_version``: the records the manifest
+        stores, no footer read), so the observability stack (explain /
+        access log / prefetch) keys on the live snapshot's blocks.
+        Call again after any CoW verb or compaction — block ids
         are positions in sorted file order, so a commit renumbers them.
         An attached cache therefore drops each cached id that names a
         different (file, row group) in the new index than in the old
@@ -415,9 +389,12 @@ class MicroBlockEngine:
             MicroBlockIndex,
         )
 
-        self.register(name, mstore.read(self.spark))
+        snap = mstore.snapshot()
+        if snap is None:
+            raise ValueError("empty store")
+        self.register(name, snap.read(self.spark))
         if with_index:
-            idx = MicroBlockIndex.for_version(mstore, table_id=name)
+            idx = MicroBlockIndex.for_version(snap, table_id=name)
             if blooms is not None:
                 idx.attach_blooms(blooms)
             if self.cache is not None:

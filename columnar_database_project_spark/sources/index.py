@@ -305,15 +305,14 @@ class MicroBlockIndex:
         )
 
     @classmethod
-    def for_version(
-        cls, store, version: int | None = None, table_id: str = "t1"
-    ) -> "MicroBlockIndex":
-        """The index of a committed version of a ``ManifestStore``
-        (default latest), built from the zone-map records its manifest
-        holds — no footer is opened. Block ids are those of
-        ``build_from_files(store.files_for(version))``: sorted file
-        order, then row group."""
-        return cls.from_records(store.blocks_for(version), table_id=table_id)
+    def for_version(cls, snapshot, table_id: str = "t1") -> "MicroBlockIndex":
+        """The index of a ``ManifestStore`` snapshot, built from the
+        zone-map records its manifest holds — no footer is opened.
+        Block ids are those of ``build_from_files(snapshot.files)``:
+        sorted file order, then row group."""
+        return cls.from_records(
+            ((f, snapshot.blocks[f]) for f in snapshot.files), table_id=table_id
+        )
 
     @classmethod
     def build_from_scan(

@@ -27,9 +27,11 @@ Iceberg/Delta exist. Measured in bench.py::bench_cow_dml.
 from __future__ import annotations
 
 import json
-import os
 from typing import TYPE_CHECKING
 
+from columnar_database_project_spark.functions.broadcast_policy import (
+    bounded_broadcast,
+)
 from columnar_database_project_spark.plans.predicate import (
     InList,
     Pred,
@@ -48,6 +50,7 @@ from columnar_database_project_spark.sources.microblock import (
 )
 from columnar_database_project_spark.storage.manifests import (
     ManifestStore,
+    Snapshot,
     list_block_files,
     read_with_schema,
     spark_file_name,
@@ -68,16 +71,6 @@ MERGE_POINT_KEYS_MAX = 100_000
 MOR_DV_MAX_ROWS = 1_048_576
 
 
-def _carried_dvs(store: ManifestStore, carried: list[str]) -> dict:
-    """The current version's deletion vectors restricted to the files a
-    new commit carries forward — rewritten files physically drop their
-    deleted rows, so their vectors are consumed, but a carried file's
-    vector must survive or its deleted rows would resurrect."""
-    dvs = store.dvs_for()
-    rel = {os.path.relpath(f, store.root) for f in carried}
-    return {f: p for f, p in dvs.items() if f in rel}
-
-
 def _pred_of(predicate) -> Pred:
     """Boolean SQL string → Pred; outside the grammar, or a Column
     (opaque to the parser) → TruePred (sound: every block becomes
@@ -92,20 +85,26 @@ def _pred_of(predicate) -> Pred:
         return TruePred()
 
 
+def _live(store: ManifestStore) -> Snapshot:
+    """The head snapshot of a store that must hold a table."""
+    snap = store.snapshot()
+    if snap is None:
+        raise ValueError("empty store")
+    return snap
+
+
 def _triage(
-    store: ManifestStore, files: list[str], pred: Pred, table_id: str,
-    blooms=None,
+    snap: Snapshot, pred: Pred, table_id: str, blooms=None
 ) -> tuple[list[str], list[str], int]:
-    """(touched_files, carried_files, blocks_total) of the latest
-    version, whose ``files`` the caller holds: a FILE is touched if any
-    of its blocks may match (multi-row-group files are file-granular
-    here — the rewrite unit is the file). The zone maps are the
-    version's stored records; no footer is read."""
-    idx = MicroBlockIndex.for_version(store, table_id=table_id)
+    """(touched_files, carried_files, blocks_total) of ``snap``: a FILE
+    is touched if any of its blocks may match (multi-row-group files
+    are file-granular here — the rewrite unit is the file). The zone
+    maps are the snapshot's stored records; no footer is read."""
+    idx = MicroBlockIndex.for_version(snap, table_id=table_id)
     if blooms is not None:
         idx.attach_blooms(blooms)
     touched = {idx.block_file(b) for b in idx.candidate_blocks(pred)}
-    carried = [f for f in files if f not in touched]
+    carried = [f for f in snap.files if f not in touched]
     return sorted(touched), carried, idx.num_blocks
 
 
@@ -119,7 +118,7 @@ def _cond(predicate):
 
 
 def _cast_to_manifest(
-    store: ManifestStore, df: "DataFrame", verb: str, all_columns: bool
+    snap: Snapshot, df: "DataFrame", verb: str, all_columns: bool
 ) -> "DataFrame":
     """``df`` with each column cast to its manifest type, so a written
     block never forks the schema the version is read with. With
@@ -130,7 +129,7 @@ def _cast_to_manifest(
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    schema = T.StructType.fromJson(json.loads(store.schema_json()))
+    schema = T.StructType.fromJson(json.loads(snap.schema_json))
     types = {f.name: f.dataType for f in schema.fields}
     if all_columns and set(df.columns) != set(types):
         raise ValueError(
@@ -153,27 +152,25 @@ def delete_where_cow(
     """DELETE with block-granular rewrite. SQL semantics: only
     predicate-TRUE rows are removed (NULL keeps). Returns the op
     report incl. the IO-proportionality facts (files_rewritten /
-    files_carried) the at-scale claim rests on."""
+    files_carried) the at-scale claim rests on. The deleted count is
+    the touched files' live rows minus the rows written, both from
+    zone-map records: no counting scan runs."""
+    return _delete_cow(spark, store, _live(store), predicate, block_rows, blooms)
+
+
+def _delete_cow(spark, store, snap, predicate, block_rows, blooms) -> dict:
     pred = _pred_of(predicate)
-    files = store.files_for()
-    touched, carried, n_blocks = _triage(store, files, pred, "cow_delete", blooms)
+    touched, carried, n_blocks = _triage(snap, pred, "cow_delete", blooms)
     v, stage = store.stage_next()
     new_files: list[str] = []
-    deleted = 0
     if touched:
-        before = store.read_subset(spark, touched)
-        cond = _cond(predicate)
-        kept = before.filter(~cond)
-        deleted = before.count() - kept.count()
+        kept = snap.read(spark, touched).filter(~_cond(predicate))
         MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(kept, stage)
         new_files = list_block_files(stage)
-    store.commit(
-        v, new_files, carried, store.schema_json(),
-        dvs=_carried_dvs(store, carried),
-    )
+    done = store.commit(snap, v, new_files, carried)
     return {
         "version": v,
-        "deleted": deleted,
+        "deleted": snap.live_rows(touched) - done.live_rows(new_files),
         "blocks_total": n_blocks,
         "files_rewritten": len(touched),
         "files_carried": len(carried),
@@ -182,28 +179,26 @@ def delete_where_cow(
 
 def _mor_merge_positions(
     spark: "SparkSession",
-    store: ManifestStore,
-    files: list[str],
+    snap: Snapshot,
     touched: list[str],
     match,
     max_dv_rows: int,
 ):
     """Collect the ``(file, row_index)`` positions of the touched files'
     rows that ``match`` (DataFrame → DataFrame) keeps, in one scan, and
-    merge them into the current version's deletion vectors. Returns
+    merge them into ``snap``'s deletion vectors. Returns
     ``(merged_dvs, n_new)`` or ``None`` when the result would exceed
     ``max_dv_rows`` (caller falls back to CoW). Already-deleted
     positions merge idempotently."""
     from pyspark.sql import functions as F
 
-    existing = store.dvs_for()
-    existing_total = sum(len(p) for p in existing.values())
-    rel_of = {spark_file_name(f): os.path.relpath(f, store.root) for f in files}
-    merged: dict[str, set] = {f: set(p) for f, p in existing.items()}
+    existing_total = sum(len(p) for p in snap.dvs.values())
+    file_of = {spark_file_name(f): f for f in snap.files}
+    merged: dict[str, set] = {f: set(p) for f, p in snap.dvs.items()}
     n_new = 0
     if touched:
         raw = (
-            read_with_schema(spark, touched, store.schema_json())
+            read_with_schema(spark, touched, snap.schema_json)
             .withColumn("_file", F.col("_metadata.file_name"))
             .withColumn("_pos", F.col("_metadata.row_index"))
         )
@@ -211,7 +206,7 @@ def _mor_merge_positions(
         if len(hits) > max_dv_rows:
             return None
         for name, pos in hits:
-            s = merged.setdefault(rel_of[name], set())
+            s = merged.setdefault(file_of[name], set())
             if pos not in s:
                 s.add(pos)
                 n_new += 1
@@ -247,22 +242,19 @@ def delete_where_mor(
     the read path's anti-join frame broadcastable. Compaction
     materializes DVs away (``compact_manifest`` treats any DV'd file
     as debt)."""
+    snap = _live(store)
     pred = _pred_of(predicate)
-    files = store.files_for()
-    touched, carried, n_blocks = _triage(store, files, pred, "mor_delete", blooms)
+    touched, _carried, n_blocks = _triage(snap, pred, "mor_delete", blooms)
     got = _mor_merge_positions(
-        spark, store, files, touched,
-        lambda df: df.filter(_cond(predicate)), max_dv_rows,
+        spark, snap, touched, lambda df: df.filter(_cond(predicate)), max_dv_rows
     )
     if got is None:
-        rep = delete_where_cow(
-            spark, store, predicate, block_rows=block_rows, blooms=blooms
-        )
+        rep = _delete_cow(spark, store, snap, predicate, block_rows, blooms)
         rep["mode"] = "cow_fallback"
         return rep
     merged, deleted = got
     v, _stage = store.stage_next()
-    store.commit(v, [], files, store.schema_json(), dvs=merged)
+    store.commit(snap, v, [], snap.files, dvs=merged)
     return {
         "version": v,
         "mode": "mor",
@@ -271,7 +263,7 @@ def delete_where_mor(
         "blocks_total": n_blocks,
         "files_scanned": len(touched),
         "files_rewritten": 0,
-        "files_carried": len(files),
+        "files_carried": len(snap.files),
     }
 
 
@@ -297,23 +289,16 @@ def update_where_mor(
     ``update_where_cow`` above the DV budget."""
     from pyspark.sql import functions as F
 
+    snap = _live(store)
     pred = _pred_of(predicate)
-    files = store.files_for()
-    touched, carried, n_blocks = _triage(store, files, pred, "mor_update", blooms)
-    target_cols = [
-        f["name"] for f in json.loads(store.schema_json())["fields"]
-    ]
-    unknown = set(assignments) - set(target_cols)
-    if unknown:
-        raise ValueError(f"update_where_mor: unknown columns {sorted(unknown)}")
+    touched, _carried, n_blocks = _triage(snap, pred, "mor_update", blooms)
+    _check_assignments(snap, assignments, "update_where_mor")
     got = _mor_merge_positions(
-        spark, store, files, touched,
-        lambda df: df.filter(_cond(predicate)), max_dv_rows,
+        spark, snap, touched, lambda df: df.filter(_cond(predicate)), max_dv_rows
     )
     if got is None:
-        rep = update_where_cow(
-            spark, store, predicate, assignments,
-            block_rows=block_rows, blooms=blooms,
+        rep = _update_cow(
+            spark, store, snap, predicate, assignments, block_rows, blooms
         )
         rep["mode"] = "cow_fallback"
         return rep
@@ -321,7 +306,7 @@ def update_where_mor(
     v, stage = store.stage_next()
     new_files: list[str] = []
     if touched and n_hit:
-        live = store.read_subset(spark, touched).filter(_cond(predicate))
+        live = snap.read(spark, touched).filter(_cond(predicate))
         types = dict(live.dtypes)
         cols = []
         for c in live.columns:
@@ -337,7 +322,7 @@ def update_where_mor(
         n_tasks = max(1, n_hit // writer.block_rows or 1)
         writer.write(live.select(*cols).coalesce(n_tasks), stage)
         new_files = list_block_files(stage)
-    store.commit(v, new_files, files, store.schema_json(), dvs=merged)
+    store.commit(snap, v, new_files, snap.files, dvs=merged)
     return {
         "version": v,
         "mode": "mor",
@@ -346,7 +331,7 @@ def update_where_mor(
         "blocks_total": n_blocks,
         "files_new": len(new_files),
         "files_rewritten": 0,
-        "files_carried": len(files),
+        "files_carried": len(snap.files),
     }
 
 
@@ -368,20 +353,22 @@ def merge_mor(
 
     The batch is cast to the manifest types (``_cast_to_manifest``).
     One job over it collects its distinct keys; one scan of the
-    touched files finds the matched positions."""
-    updates = _cast_to_manifest(store, updates, "merge_mor", all_columns=True)
+    touched files finds the matched positions. Both fallbacks hand
+    the cast batch, its key counts and the snapshot to ``merge_cow``'s
+    body, so none of that work runs twice."""
+    snap = _live(store)
+    updates = _cast_to_manifest(snap, updates, "merge_mor", all_columns=True)
     # (key, rows) of the distinct keys, NULL included, in one job
     counts = updates.groupBy(key).count().limit(max_point_keys + 1).collect()
     if len(counts) > max_point_keys:
-        rep = merge_cow(
-            spark, store, updates, key,
-            block_rows=block_rows, blooms=blooms,
+        rep = _merge_cow(
+            spark, store, snap, updates, key, counts, block_rows, blooms,
+            max_point_keys,
         )
         rep["mode"] = "cow_fallback"
         return rep
     keys = [k for k, _n in counts if k is not None]
     n_rows = sum(n for _k, n in counts)
-    files = store.files_for()
     if not keys:
         # SQL equality with NULL matches no target row, so a batch
         # with no non-NULL merge keys has NOTHING to deletion-vector.
@@ -391,7 +378,7 @@ def merge_mor(
         # rows → append-only commit.
         if not n_rows:
             return {
-                "version": store.latest(),
+                "version": snap.version,
                 "mode": "mor_noop",
                 "update_rows": 0,
                 "update_keys": 0,
@@ -400,9 +387,9 @@ def merge_mor(
                 "blocks_total": 0,
                 "files_new": 0,
                 "files_rewritten": 0,
-                "files_carried": len(files),
+                "files_carried": len(snap.files),
             }
-        rep = append_cow(spark, store, updates, block_rows=block_rows)
+        rep = _append(spark, store, snap, updates, block_rows)
         return {
             "version": rep["version"],
             "mode": "mor_append_only",
@@ -415,20 +402,25 @@ def merge_mor(
             "files_rewritten": 0,
             "files_carried": rep["files_carried"],
         }
-    touched, carried, n_blocks = _triage(
-        store, files, InList(key, tuple(keys)), "mor_merge", blooms
+    touched, _carried, n_blocks = _triage(
+        snap, InList(key, tuple(keys)), "mor_merge", blooms
     )
     # the matched rows are a left-semi join against the batch's keys,
-    # shipped to the JVM as one local relation
-    key_df = spark.createDataFrame([(k,) for k in keys], updates.select(key).schema)
+    # shipped to the JVM in one call and broadcast, so the scan needs
+    # no shuffle
+    key_df = bounded_broadcast(
+        spark.createDataFrame([(k,) for k in keys], updates.select(key).schema),
+        max_point_keys,
+        "distinct merge keys ≤ max_point_keys, else merge_cow",
+    )
     got = _mor_merge_positions(
-        spark, store, files, touched,
+        spark, snap, touched,
         lambda df: df.join(key_df, on=key, how="left_semi"), max_dv_rows,
     )
     if got is None:
-        rep = merge_cow(
-            spark, store, updates, key,
-            block_rows=block_rows, blooms=blooms,
+        rep = _merge_cow(
+            spark, store, snap, updates, key, counts, block_rows, blooms,
+            max_point_keys,
         )
         rep["mode"] = "cow_fallback"
         return rep
@@ -436,7 +428,7 @@ def merge_mor(
     v, stage = store.stage_next()
     MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(updates, stage)
     new_files = list_block_files(stage)
-    store.commit(v, new_files, files, store.schema_json(), dvs=merged)
+    store.commit(snap, v, new_files, snap.files, dvs=merged)
     return {
         "version": v,
         "mode": "mor",
@@ -447,7 +439,7 @@ def merge_mor(
         "blocks_total": n_blocks,
         "files_new": len(new_files),
         "files_rewritten": 0,
-        "files_carried": len(files),
+        "files_carried": len(snap.files),
     }
 
 
@@ -463,22 +455,32 @@ def update_where_cow(
     are CAST back to the column's current type: carried blocks keep
     the old schema by construction, so a type-widening assignment must
     not fork the manifest's schema across files."""
+    return _update_cow(
+        spark, store, _live(store), predicate, assignments, block_rows, blooms
+    )
+
+
+def _check_assignments(snap: Snapshot, assignments: dict, verb: str) -> None:
+    unknown = set(assignments) - {
+        f["name"] for f in json.loads(snap.schema_json)["fields"]
+    }
+    if unknown:
+        raise ValueError(f"{verb}: unknown columns {sorted(unknown)}")
+
+
+def _update_cow(
+    spark, store, snap, predicate, assignments, block_rows, blooms
+) -> dict:
     from pyspark.sql import functions as F
 
-    target_cols = [
-        f["name"] for f in json.loads(store.schema_json())["fields"]
-    ]
-    unknown = set(assignments) - set(target_cols)
-    if unknown:
-        raise ValueError(f"update_where_cow: unknown columns {sorted(unknown)}")
+    _check_assignments(snap, assignments, "update_where_cow")
     pred = _pred_of(predicate)
-    files = store.files_for()
-    touched, carried, n_blocks = _triage(store, files, pred, "cow_update", blooms)
+    touched, carried, n_blocks = _triage(snap, pred, "cow_update", blooms)
     v, stage = store.stage_next()
     new_files: list[str] = []
     updated = 0
     if touched:
-        target = store.read_subset(spark, touched)
+        target = snap.read(spark, touched)
         cond = _cond(predicate)
         types = dict(target.dtypes)
         cols = []
@@ -498,10 +500,7 @@ def update_where_cow(
             target.select(*cols), stage
         )
         new_files = list_block_files(stage)
-    store.commit(
-        v, new_files, carried, store.schema_json(),
-        dvs=_carried_dvs(store, carried),
-    )
+    store.commit(snap, v, new_files, carried)
     return {
         "version": v,
         "updated": updated,
@@ -530,9 +529,19 @@ def merge_cow(
     a backfill and every block is touched (TruePred), which is also
     the sound fallback for a key batch too large to enumerate. The
     batch is cast to the manifest types (``_cast_to_manifest``)."""
-    updates = _cast_to_manifest(store, updates, "merge_cow", all_columns=True)
+    snap = _live(store)
+    updates = _cast_to_manifest(snap, updates, "merge_cow", all_columns=True)
     # (key, rows) of the distinct keys, NULL included, in one job
     counts = updates.groupBy(key).count().limit(max_point_keys + 1).collect()
+    return _merge_cow(
+        spark, store, snap, updates, key, counts, block_rows, blooms,
+        max_point_keys,
+    )
+
+
+def _merge_cow(
+    spark, store, snap, updates, key, counts, block_rows, blooms, max_point_keys
+) -> dict:
     if len(counts) > max_point_keys:
         pred: Pred = TruePred()
         n_keys, n_rows = updates.select(key).distinct().count(), updates.count()
@@ -546,15 +555,15 @@ def merge_cow(
             # TruePred here would rewrite the whole table for nothing.
             if not n_rows:
                 return {
-                    "version": store.latest(),
+                    "version": snap.version,
                     "mode": "cow_noop",
                     "update_rows": 0,
                     "update_keys": 0,
                     "blocks_total": 0,
                     "files_rewritten": 0,
-                    "files_carried": len(store.files_for()),
+                    "files_carried": len(snap.files),
                 }
-            rep = append_cow(spark, store, updates, block_rows=block_rows)
+            rep = _append(spark, store, snap, updates, block_rows)
             return {
                 "version": rep["version"],
                 "mode": "cow_append_only",
@@ -565,14 +574,13 @@ def merge_cow(
                 "files_carried": rep["files_carried"],
             }
         pred = InList(key, tuple(keys))
-    files = store.files_for()
-    touched, carried, n_blocks = _triage(store, files, pred, "cow_merge", blooms)
+    touched, carried, n_blocks = _triage(snap, pred, "cow_merge", blooms)
     v, stage = store.stage_next()
     if touched:
         # reconciled read: touched blocks may predate a metadata-only
         # add_column — missing columns surface as typed NULL, exactly
         # what store.read serves for them
-        survivors = store.read_subset(spark, touched).join(
+        survivors = snap.read(spark, touched).join(
             updates.select(key), on=key, how="left_anti"
         )
         out = survivors.unionByName(updates)
@@ -580,10 +588,7 @@ def merge_cow(
         out = updates
     MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(out, stage)
     new_files = list_block_files(stage)
-    store.commit(
-        v, new_files, carried, store.schema_json(),
-        dvs=_carried_dvs(store, carried),
-    )
+    store.commit(snap, v, new_files, carried)
     return {
         "version": v,
         "update_rows": n_rows,
@@ -608,29 +613,24 @@ def append_cow(
     Otherwise ``df`` is cast to the manifest types
     (``_cast_to_manifest``): missing manifest-schema columns (e.g.
     after a metadata-only add_column) are allowed — they read as NULL;
-    extra columns are an error."""
-    if store.latest() is None:
-        rep = init_manifest_table(
-            spark, store, df, block_rows=block_rows, meta=meta
-        )
-        return {
-            "version": rep["version"],
-            "appended_rows": df.count(),
-            "files_new": rep["files"],
-            "files_carried": 0,
-        }
-    df = _cast_to_manifest(store, df, "append_cow", all_columns=False)
-    v, stage = store.stage_next()
-    MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(df, stage)
-    new_files = list_block_files(stage)
-    carried = store.files_for()
-    store.commit(
-        v, new_files, carried, store.schema_json(), meta=meta,
-        dvs=_carried_dvs(store, carried),
-    )
+    extra columns are an error. The appended row count is read from
+    the new files' zone-map records."""
+    return _append(spark, store, store.snapshot(), df, block_rows, meta)
+
+
+def _append(spark, store, snap, df, block_rows, meta=None) -> dict:
+    if snap is None:
+        done = _replace(spark, store, None, df, block_rows, meta)
+        new_files, carried = done.files, ()
+    else:
+        df = _cast_to_manifest(snap, df, "append_cow", all_columns=False)
+        v, stage = store.stage_next()
+        MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(df, stage)
+        new_files, carried = list_block_files(stage), snap.files
+        done = store.commit(snap, v, new_files, carried, meta=meta)
     return {
-        "version": v,
-        "appended_rows": df.count(),
+        "version": done.version,
+        "appended_rows": done.live_rows(new_files),
         "files_new": len(new_files),
         "files_carried": len(carried),
     }
@@ -679,14 +679,10 @@ def compact_manifest(
     from pyspark.sql import functions as F
 
     block_rows = block_rows or DEFAULT_BLOCK_ROWS
-    rows_of = {
-        f: sum(g["rows"] for g in recs) for f, recs in store.blocks_for()
-    }
-    files = list(rows_of)
-    dvs = store.dvs_for()
-    dv_rows = {
-        f: len(dvs.get(os.path.relpath(f, store.root), [])) for f in files
-    }
+    snap = _live(store)
+    files = list(snap.files)
+    rows_of = {f: sum(g["rows"] for g in snap.blocks[f]) for f in files}
+    dv_rows = {f: len(snap.dvs.get(f, ())) for f in files}
     # live rows drive the fill test, and ANY file with a deletion
     # vector is compactable debt — compaction is the DV-materialization
     # point (rewritten files physically drop their deleted rows)
@@ -698,13 +694,9 @@ def compact_manifest(
     if sort_by:
         touched, carried = files, []
     else:
+        # a single tail block is the expected remainder (a DV'd file
+        # is always in ``small``, so this also covers "nothing small")
         if len(small) <= 1 and not any(dv_rows.values()):
-            return {  # a single tail block is the expected remainder
-                "compacted": False,
-                "blocks_before": len(files),
-                "blocks_after": len(files),
-            }
-        if not small:
             return {
                 "compacted": False,
                 "blocks_before": len(files),
@@ -714,7 +706,7 @@ def compact_manifest(
     v, stage = store.stage_next()
     new_files: list[str] = []
     if touched:
-        df = store.read_subset(spark, touched)
+        df = snap.read(spark, touched)
         n_expect = sum(rows_of[f] - dv_rows[f] for f in touched)
         n_parts = max(1, sum(rows_of.values()) // block_rows)
         if sort_by and zorder:
@@ -735,10 +727,7 @@ def compact_manifest(
                 f"compact_manifest: rewrite lost rows ({n_got} != {n_expect});"
                 " nothing committed — previous version remains current"
             )
-    store.commit(
-        v, new_files, carried, store.schema_json(),
-        dvs=_carried_dvs(store, carried),
-    )
+    store.commit(snap, v, new_files, carried)
     return {
         "compacted": True,
         "version": v,
@@ -768,19 +757,18 @@ def mor_compaction_debt(store: ManifestStore) -> dict:
     drivers: rows in DV-carrying files (the per-row scan-path taint)
     and logically-deleted rows. Row counts come from the manifest's
     zone-map records: one manifest read, no footer opened."""
-    blocks = store.blocks_for()
-    dvs = store.dvs_for()
+    snap = _live(store)
     rows_total = rows_tainted = dv_rows = dv_files = 0
-    for f, recs in blocks:
-        n = sum(g["rows"] for g in recs)
+    for f in snap.files:
+        n = sum(g["rows"] for g in snap.blocks[f])
         rows_total += n
-        d = dvs.get(os.path.relpath(f, store.root))
+        d = snap.dvs.get(f)
         if d:
             dv_files += 1
             rows_tainted += n
             dv_rows += len(d)
     return {
-        "files": len(blocks),
+        "files": len(snap.files),
         "dv_files": dv_files,
         "rows_total": rows_total,
         "rows_tainted": rows_tainted,
@@ -830,7 +818,14 @@ def init_manifest_table(
     every batch this way). ``meta`` is carried in the commit (the
     streaming sink's first batch needs its ``txn.batch_id`` witness
     here too)."""
+    done = _replace(spark, store, store.snapshot(), df, block_rows, meta)
+    return {"version": done.version, "files": len(done.files)}
+
+
+def _replace(spark, store, base, df, block_rows, meta) -> Snapshot:
     v, stage = store.stage_next()
     MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(df, stage)
-    store.commit(v, list_block_files(stage), [], df.schema.json(), meta=meta)
-    return {"version": v, "files": len(store.files_for(v))}
+    return store.commit(
+        base, v, list_block_files(stage), [], schema_json=df.schema.json(),
+        meta=meta,
+    )

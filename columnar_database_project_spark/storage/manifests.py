@@ -26,18 +26,22 @@ Layout:
 group: row count and per-column min / max / null count, the
 ``sources.index.footer_records`` format), as Iceberg's data-file
 ``lower_bounds`` / ``upper_bounds`` / ``record_count`` and Delta's
-``add.stats`` do. A commit reads the footer of a file only when the
-head manifest does not already record it, so each footer is read once,
+``add.stats`` do. A commit reads the footer of a file only when its
+base snapshot does not already record it, so each footer is read once,
 when a commit first names its file. The zone-map index of a version
 (``MicroBlockIndex.for_version``), the DML triage and the compaction
 debt read these records, not the files.
 
+An operation reads one immutable ``Snapshot`` (``snapshot()``: the
+head log and one manifest, parsed once) and commits against it.
+Concurrency story: a commit whose base is no longer the head fails
+(``CommitConflict``) instead of publishing over a version it never
+read, and a second commit of one version number fails loudly.
+
 Crash story: a crash mid-write leaves data files and possibly an
 m*.json that the head log never names — invisible to readers,
 reclaimed by ``vacuum``. Readers resolve head log → manifest → files;
-never directory listings. Concurrent WRITERS are out of scope
-(single-writer per table); a second commit of the same version fails
-loudly instead of clobbering.
+never directory listings.
 
 ``vacuum`` is reference-counted: a block file created by commit 3 may
 be referenced by manifests 3..9, so files are deleted only when NO
@@ -50,7 +54,10 @@ from __future__ import annotations
 import glob
 import json
 import os
-from typing import TYPE_CHECKING
+import shutil
+from dataclasses import dataclass
+from types import MappingProxyType
+from typing import TYPE_CHECKING, Iterable, Mapping
 
 from columnar_database_project_spark.sources.index import footer_records
 
@@ -106,6 +113,111 @@ def list_block_files(path: str) -> list[str]:
     return out
 
 
+class CommitConflict(RuntimeError):
+    """A commit's base snapshot is no longer the head: another writer
+    committed in between, and publishing would discard its version."""
+
+
+@dataclass(frozen=True)
+class Snapshot:
+    """One committed version, parsed once. Every file key is an
+    absolute path, as ``files`` lists it.
+
+    ``files``: block files in manifest order. ``dvs``: file → deleted
+    row positions (``_metadata.row_index`` space), only for files that
+    have any. ``blocks``: file → zone-map records. ``meta``: the
+    commit's meta (e.g. ``{"txn": {"batch_id": N}}``)."""
+
+    version: int
+    files: tuple[str, ...]
+    schema_json: str
+    dvs: Mapping[str, tuple[int, ...]]
+    blocks: Mapping[str, list[dict]]
+    meta: Mapping
+
+    @classmethod
+    def _parse(cls, root: str, doc: dict) -> "Snapshot":
+        at = lambda f: os.path.join(root, f)  # noqa: E731
+        dvs = {at(f): tuple(p) for f, p in doc.get("dvs", {}).items()}
+        blocks = {at(f): recs for f, recs in doc["blocks"].items()}
+        return cls(
+            doc["version"], tuple(map(at, doc["files"])), doc["schema"],
+            MappingProxyType(dvs), MappingProxyType(blocks),
+            MappingProxyType(doc.get("meta", {})),
+        )
+
+    def live_rows(self, files: Iterable[str]) -> int:
+        """Rows of ``files`` that this snapshot serves: their recorded
+        row counts minus their deletion vectors."""
+        return sum(
+            sum(g["rows"] for g in self.blocks[f]) - len(self.dvs.get(f, ()))
+            for f in files
+        )
+
+    def read(
+        self, spark: "SparkSession", files: list[str] | None = None
+    ) -> "DataFrame":
+        """Read ``files`` (default: all) with this snapshot's schema
+        (``read_with_schema``) and its deletion vectors applied. This is
+        the one read path for a version's rows: a rewrite that ignored
+        pending DVs would resurrect logically-deleted rows.
+
+        Only the DV'd files pay for the per-row ``_metadata`` columns;
+        clean files scan untouched and union back, so a version without
+        DVs costs nothing extra. Up to 4,096 positions in all, the DV is
+        one SQL predicate on (``_metadata.file_name``,
+        ``_metadata.row_index``), built in one JVM call whatever its size
+        (Spark turns each IN list into a hash set). Above that it is a
+        broadcast anti-join against the DV frame, which is bounded by
+        construction: ``delete_where_mor`` refuses to grow a version's
+        DVs past ``cow.MOR_DV_MAX_ROWS`` and falls back to CoW."""
+        from columnar_database_project_spark.functions.broadcast_policy import (
+            bounded_broadcast,
+        )
+
+        from pyspark.sql import functions as F
+
+        files = list(self.files) if files is None else files
+        dvs = self.dvs
+        dv_files = [f for f in files if f in dvs]
+        if not dv_files:
+            return read_with_schema(spark, files, self.schema_json)
+        raw = read_with_schema(spark, dv_files, self.schema_json)
+        if sum(len(dvs[f]) for f in dv_files) <= 4096:
+            hit = " OR ".join(
+                f"(_metadata.file_name = {_sql_str(spark_file_name(f))} AND "
+                f"_metadata.row_index IN ({','.join(map(str, dvs[f]))}))"
+                for f in dv_files
+            )
+            tainted = raw.filter(F.expr(f"NOT ({hit})"))
+        else:
+            dv_df = spark.createDataFrame(
+                [(spark_file_name(f), int(p)) for f in dv_files for p in dvs[f]],
+                "_file string, _pos long",
+            )
+            tainted = (
+                raw.withColumn("_file", F.col("_metadata.file_name"))
+                .withColumn("_pos", F.col("_metadata.row_index"))
+                .join(
+                    bounded_broadcast(
+                        dv_df,
+                        1_048_576,
+                        "DV frame ≤ MOR_DV_MAX_ROWS by delete_where_mor's "
+                        "fallback-to-CoW guard",
+                    ),
+                    on=["_file", "_pos"],
+                    how="left_anti",
+                )
+                .drop("_file", "_pos")
+            )
+        clean_files = [f for f in files if f not in dvs]
+        if not clean_files:
+            return tainted
+        return read_with_schema(spark, clean_files, self.schema_json).unionByName(
+            tainted
+        )
+
+
 class ManifestStore:
     """Commit log over file-list manifests."""
 
@@ -141,35 +253,30 @@ class ManifestStore:
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self.root, "_manifests", f"m{version:06d}.json")
 
-    def _read_manifest(self, version: int) -> dict:
-        if version not in self.versions():
-            raise ValueError(f"version {version!r} not committed")
+    def _load(self, version: int) -> Snapshot:
         with open(self._manifest_path(version)) as fh:
-            return json.load(fh)
+            return Snapshot._parse(self.root, json.load(fh))
+
+    def snapshot(self, version: int | None = None) -> Snapshot | None:
+        """The committed ``version`` (default: the head) as a
+        ``Snapshot``: one head-log read and one manifest read. ``None``
+        when the head is asked of an empty store."""
+        vs = self.versions()
+        if version is None:
+            if not vs:
+                return None
+            version = vs[-1]
+        elif version not in vs:
+            raise ValueError(f"version {version!r} not committed")
+        return self._load(version)
 
     def files_for(self, version: int | None = None) -> list[str]:
         """Absolute block-file paths of a committed version (default
         latest)."""
-        v = self.latest() if version is None else version
-        if v is None:
+        snap = self.snapshot(version)
+        if snap is None:
             raise ValueError("empty store")
-        m = self._read_manifest(v)
-        return [os.path.join(self.root, f) for f in m["files"]]
-
-    def blocks_for(
-        self, version: int | None = None
-    ) -> list[tuple[str, list[dict]]]:
-        """(absolute path, zone-map records) of each block file of a
-        committed version (default latest), in file order."""
-        v = self.latest() if version is None else version
-        if v is None:
-            raise ValueError("empty store")
-        m = self._read_manifest(v)
-        return [(os.path.join(self.root, f), m["blocks"][f]) for f in m["files"]]
-
-    def schema_json(self, version: int | None = None) -> str:
-        v = self.latest() if version is None else version
-        return self._read_manifest(v)["schema"]
+        return list(snap.files)
 
     # -------------------------------------------------------------- writes
     def stage_next(self) -> tuple[int, str]:
@@ -193,27 +300,44 @@ class ManifestStore:
 
     def commit(
         self,
+        base: Snapshot | None,
         version: int,
         new_files: list[str],
-        carried_files: list[str],
-        schema_json: str,
+        carried_files: Iterable[str],
+        *,
+        schema_json: str | None = None,
         meta: dict | None = None,
         dvs: dict | None = None,
-    ) -> None:
+    ) -> Snapshot:
         """Publish ``version`` = carried (root-relative or absolute
-        under root) + new files. Manifest first, head-log swap second —
-        a crash between the two leaves an unreferenced manifest, never
-        a dangling head entry. ``meta`` is carried verbatim in the
-        manifest (e.g. ``{"txn": {"batch_id": N}}`` for the streaming
-        sink's exactly-once dedup). ``dvs``: deletion vectors — file →
-        row positions logically deleted from that (still-referenced)
-        file; a DV for a file the manifest doesn't name is an error.
-        Every named file's zone-map records are copied from the head
-        manifest, or read from its footer if the head does not name
-        it."""
+        under root) + new files on top of ``base``, the snapshot the
+        operation read (``None`` for an empty store); return the
+        committed snapshot. ``CommitConflict`` if the head is no longer
+        ``base``. Manifest first, head-log swap second — a crash
+        between the two leaves an unreferenced manifest, never a
+        dangling head entry.
+
+        ``base`` supplies the schema (unless ``schema_json`` is given),
+        the named files' zone-map records (a new file's footer is read)
+        and, unless ``dvs`` is given, the deletion vectors of the files
+        still named: a rewritten file drops its deleted rows, a carried
+        one keeps its vector. ``dvs`` (the merge-on-read verbs): the
+        version's full file → row positions; a DV for an unnamed file
+        is an error. ``meta`` is stored verbatim (e.g. ``{"txn":
+        {"batch_id": N}}``, the streaming sink's exactly-once dedup)."""
         vs = self.versions()
         if version in vs:
             raise ValueError(f"commit: v{version} already committed")
+        head = vs[-1] if vs else None
+        if head != (base.version if base else None):
+            raise CommitConflict(
+                f"commit: v{version} read v{base.version if base else None} "
+                f"but the head is v{head}; nothing committed"
+            )
+        if schema_json is None:
+            if base is None:
+                raise ValueError("commit: an empty store needs a schema")
+            schema_json = base.schema_json
         rel = []
         for f in list(carried_files) + list(new_files):
             if os.path.isabs(f):
@@ -244,38 +368,32 @@ class ManifestStore:
         }
         if meta:
             doc["meta"] = meta
-        if dvs:
-            rel_set = set(rel)
-            dv_doc = {}
-            for f, positions in dvs.items():
-                if os.path.isabs(f):
-                    f = os.path.relpath(f, self.root)
-                if f not in rel_set:
-                    raise ValueError(
-                        f"commit: deletion vector for unreferenced file {f!r}"
-                    )
-                if positions:
-                    dv_doc[f] = sorted(int(p) for p in set(positions))
-            if dv_doc:
-                doc["dvs"] = dv_doc
-        head = self._read_manifest(vs[-1])["blocks"] if vs else {}
-        doc["blocks"] = {
-            f: head[f] if f in head else footer_records(os.path.join(self.root, f))
-            for f in doc["files"]
-        }
+        rel_set = set(rel)
+        if dvs is None:
+            dvs = {
+                f: p
+                for f, p in (base.dvs.items() if base else ())
+                if os.path.relpath(f, self.root) in rel_set
+            }
+        dv_doc = {}
+        for f, positions in dvs.items():
+            if os.path.isabs(f):
+                f = os.path.relpath(f, self.root)
+            if f not in rel_set:
+                raise ValueError(f"commit: deletion vector for unreferenced file {f!r}")
+            if positions:
+                dv_doc[f] = sorted(int(p) for p in set(positions))
+        if dv_doc:
+            doc["dvs"] = dv_doc
+        known = base.blocks if base else {}
+        doc["blocks"] = {}
+        for f in doc["files"]:
+            path = os.path.join(self.root, f)
+            doc["blocks"][f] = known[path] if path in known else footer_records(path)
         with open(self._manifest_path(version), "w") as fh:
             json.dump(doc, fh)
         self._write_head(vs + [version])
-
-    def dvs_for(self, version: int | None = None) -> dict[str, list[int]]:
-        """Deletion vectors of a version: file (root-relative) → sorted
-        deleted row positions (``_metadata.row_index`` space). Empty
-        dict when the version has none."""
-        v = self.latest() if version is None else version
-        return dict(self._read_manifest(v).get("dvs", {}))
-
-    def meta_for(self, version: int) -> dict:
-        return self._read_manifest(version).get("meta", {})
+        return Snapshot._parse(self.root, doc)
 
     def txn_batch_ids(self) -> set[int]:
         """Batch ids of every COMMITTED streaming-sink transaction —
@@ -288,16 +406,16 @@ class ManifestStore:
         sink contract)."""
         out: set[int] = set()
         for v in self.versions():
-            bid = self.meta_for(v).get("txn", {}).get("batch_id")
+            bid = self._load(v).meta.get("txn", {}).get("batch_id")
             if bid is not None:
                 out.add(int(bid))
         return out
 
     # --------------------------------------------------------------- reads
     def read(self, spark: "SparkSession", version: int | None = None) -> "DataFrame":
-        """The snapshot as a DataFrame. An all-rows-deleted version has
-        an empty file list — served as an empty frame of the recorded
-        schema, not an error.
+        """The snapshot as a DataFrame (``Snapshot.read``). An
+        all-rows-deleted version has an empty file list — served as an
+        empty frame of the recorded schema, not an error.
 
         The files are read with the manifest schema
         (``read_with_schema``), so existing rows of an added
@@ -306,76 +424,10 @@ class ManifestStore:
         vectors (merge-on-read DELETE, ``cow.delete_where_mor``) are
         applied transparently — a logically-deleted row never
         surfaces."""
-        v = self.latest() if version is None else version
-        if v is None:
+        snap = self.snapshot(version)
+        if snap is None:
             raise ValueError("empty store")
-        return self.read_subset(spark, self.files_for(v), version=v)
-
-    def read_subset(
-        self,
-        spark: "SparkSession",
-        files: list[str],
-        version: int | None = None,
-    ) -> "DataFrame":
-        """Read a SUBSET of a version's files with that version's schema
-        (``read_with_schema``) and its deletion vectors applied (only
-        the vectors covering these files). This is the one read path the
-        CoW verbs use for touched blocks: a rewrite that ignored pending
-        DVs would resurrect logically-deleted rows.
-
-        Only the DV'd files pay for the per-row ``_metadata`` columns;
-        clean files scan untouched and union back, so a version without
-        DVs costs nothing extra. Up to 4,096 positions in all, the DV is
-        one SQL predicate on (``_metadata.file_name``,
-        ``_metadata.row_index``), built in one JVM call whatever its size
-        (Spark turns each IN list into a hash set). Above that it is a
-        broadcast anti-join against the DV frame, which is bounded by
-        construction: ``delete_where_mor`` refuses to grow a version's
-        DVs past ``cow.MOR_DV_MAX_ROWS`` and falls back to CoW."""
-        from columnar_database_project_spark.functions.broadcast_policy import (
-            bounded_broadcast,
-        )
-
-        from pyspark.sql import functions as F
-
-        m = self._read_manifest(self.latest() if version is None else version)
-        schema_json, dvs = m["schema"], m.get("dvs", {})
-        rel = {f: os.path.relpath(f, self.root) for f in files}
-        dv_files = [f for f in files if dvs.get(rel[f])]
-        if not dv_files:
-            return read_with_schema(spark, files, schema_json)
-        raw = read_with_schema(spark, dv_files, schema_json)
-        if sum(len(dvs[rel[f]]) for f in dv_files) <= 4096:
-            hit = " OR ".join(
-                f"(_metadata.file_name = {_sql_str(spark_file_name(f))} AND "
-                f"_metadata.row_index IN ({','.join(map(str, dvs[rel[f]]))}))"
-                for f in dv_files
-            )
-            tainted = raw.filter(F.expr(f"NOT ({hit})"))
-        else:
-            dv_df = spark.createDataFrame(
-                [(spark_file_name(f), int(p)) for f in dv_files for p in dvs[rel[f]]],
-                "_file string, _pos long",
-            )
-            tainted = (
-                raw.withColumn("_file", F.col("_metadata.file_name"))
-                .withColumn("_pos", F.col("_metadata.row_index"))
-                .join(
-                    bounded_broadcast(
-                        dv_df,
-                        1_048_576,
-                        "DV frame ≤ MOR_DV_MAX_ROWS by delete_where_mor's "
-                        "fallback-to-CoW guard",
-                    ),
-                    on=["_file", "_pos"],
-                    how="left_anti",
-                )
-                .drop("_file", "_pos")
-            )
-        clean_files = [f for f in files if not dvs.get(rel[f])]
-        if not clean_files:
-            return tainted
-        return read_with_schema(spark, clean_files, schema_json).unionByName(tainted)
+        return snap.read(spark)
 
     # ------------------------------------------------------ schema evolution
     def add_column(self, name: str, ddl_type: str) -> dict:
@@ -388,20 +440,17 @@ class ManifestStore:
         construction."""
         from pyspark.sql import types as T
 
-        v_cur = self.latest()
-        if v_cur is None:
+        snap = self.snapshot()
+        if snap is None:
             raise ValueError("add_column: empty store")
-        schema = T.StructType.fromJson(json.loads(self.schema_json(v_cur)))
+        schema = T.StructType.fromJson(json.loads(snap.schema_json))
         if name in [f.name for f in schema.fields]:
             raise ValueError(f"add_column: column {name!r} already exists")
         parsed = T.StructType.fromDDL(f"`{name}` {ddl_type}")
         new_field = T.StructField(name, parsed.fields[0].dataType, True)
         new_schema = T.StructType(schema.fields + [new_field])
         v, _stage = self.stage_next()
-        self.commit(
-            v, [], self.files_for(v_cur), new_schema.json(),
-            dvs=self.dvs_for(v_cur),
-        )
+        self.commit(snap, v, [], snap.files, schema_json=new_schema.json())
         return {"version": v, "column": name, "type": ddl_type}
 
     # --------------------------------------------------------- observability
@@ -409,26 +458,21 @@ class ManifestStore:
         """DESCRIBE HISTORY: one record per committed version —
         file/DV/schema facts plus txn meta, all from manifests (no
         data IO). Newest last."""
-        import json as _json
-
         out = []
         prev_files: set[str] = set()
         for v in self.versions():
-            m = self._read_manifest(v)
-            files = set(m["files"])
-            dvs = m.get("dvs", {})
+            snap = self._load(v)
+            files = set(snap.files)
             out.append(
                 {
                     "version": v,
                     "files": len(files),
                     "files_added": len(files - prev_files),
                     "files_removed": len(prev_files - files),
-                    "dv_files": len(dvs),
-                    "dv_rows": sum(len(p) for p in dvs.values()),
-                    "columns": len(_json.loads(m["schema"])["fields"]),
-                    "txn_batch_id": m.get("meta", {})
-                    .get("txn", {})
-                    .get("batch_id"),
+                    "dv_files": len(snap.dvs),
+                    "dv_rows": sum(len(p) for p in snap.dvs.values()),
+                    "columns": len(json.loads(snap.schema_json)["fields"]),
+                    "txn_batch_id": snap.meta.get("txn", {}).get("batch_id"),
                 }
             )
             prev_files = files
@@ -445,72 +489,51 @@ class ManifestStore:
         """Reference-counted retention: keep the last ``keep_last``
         committed versions, then delete (a) manifests of dropped or
         never-committed versions and (b) data files NO surviving
-        manifest references. Returns {"versions_removed",
+        manifest references (a commit dir left with none goes whole,
+        sidecars included). Returns {"versions_removed",
         "files_removed"}.
 
-        ``dry_run=True`` reports what WOULD be removed without touching
-        head log, manifests or files — the pre-flight every retention
-        job at scale runs before an irreversible delete."""
+        ``dry_run=True`` reports the same plan without touching head
+        log, manifests or files — the pre-flight every retention job at
+        scale runs before an irreversible delete."""
         vs = self.versions()
         keep = vs[-keep_last:] if keep_last > 0 else []
         referenced: set[str] = set()
         for v in keep:
-            referenced.update(self._read_manifest(v)["files"])
-        if dry_run:
-            versions_removed = [v for v in vs if v not in keep]
-            mdir = os.path.join(self.root, "_manifests")
-            for f in sorted(os.listdir(mdir)):
-                if f.startswith("m") and f[1:7].isdigit():
-                    v = int(f[1:7])
-                    if v not in keep and v not in versions_removed:
-                        versions_removed.append(v)
-            files_removed = []
-            ddir = os.path.join(self.root, "data")
-            for cdir in sorted(os.listdir(ddir)):
-                cpath = os.path.join(ddir, cdir)
-                if not os.path.isdir(cpath):
-                    continue
-                for f in sorted(os.listdir(cpath)):
-                    if f.endswith(".crc") or f == "_SUCCESS":
-                        continue
-                    rel = os.path.join("data", cdir, f)
-                    if rel not in referenced:
-                        files_removed.append(rel)
-            return {
-                "versions_removed": sorted(versions_removed),
-                "files_removed": files_removed,
-                "dry_run": True,
-            }
-        self._write_head(keep)
-        versions_removed = []
+            referenced.update(
+                os.path.relpath(f, self.root) for f in self._load(v).files
+            )
         mdir = os.path.join(self.root, "_manifests")
-        for f in sorted(os.listdir(mdir)):
-            if f.startswith("m") and f[1:7].isdigit():
-                v = int(f[1:7])
-                if v not in keep:
-                    os.unlink(os.path.join(mdir, f))
-                    versions_removed.append(v)
-        files_removed = []
+        stale = [
+            f
+            for f in sorted(os.listdir(mdir))
+            if f.startswith("m") and f[1:7].isdigit() and int(f[1:7]) not in keep
+        ]
+        files_removed: list[str] = []
+        dirs_emptied: list[str] = []
         ddir = os.path.join(self.root, "data")
         for cdir in sorted(os.listdir(ddir)):
-            cpath = os.path.join(ddir, cdir)
-            if not os.path.isdir(cpath):
+            if not os.path.isdir(os.path.join(ddir, cdir)):
                 continue
-            kept_data = 0
-            for f in sorted(os.listdir(cpath)):
-                if f.endswith(".crc") or f == "_SUCCESS":
-                    continue  # sidecars live and die with their dir
-                rel = os.path.join("data", cdir, f)
-                if rel in referenced:
-                    kept_data += 1
-                else:
-                    os.unlink(os.path.join(cpath, f))
-                    files_removed.append(rel)
-            if kept_data == 0:
-                import shutil
-
-                shutil.rmtree(cpath)
-        return {
-            "versions_removed": versions_removed,
+            data = [
+                os.path.join("data", cdir, f)
+                for f in sorted(os.listdir(os.path.join(ddir, cdir)))
+                if not (f.endswith(".crc") or f == "_SUCCESS")
+            ]
+            files_removed += [f for f in data if f not in referenced]
+            if not referenced.intersection(data):
+                dirs_emptied.append(cdir)
+        report = {
+            "versions_removed": [int(f[1:7]) for f in stale],
             "files_removed": files_removed,
         }
+        if dry_run:
+            return {**report, "dry_run": True}
+        self._write_head(keep)
+        for f in stale:
+            os.unlink(os.path.join(mdir, f))
+        for f in files_removed:
+            os.unlink(os.path.join(self.root, f))
+        for cdir in dirs_emptied:
+            shutil.rmtree(os.path.join(ddir, cdir))
+        return report

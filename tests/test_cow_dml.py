@@ -588,12 +588,12 @@ class TestZorderCompaction:
         contract; this is the guard that makes violating it safe)."""
         store = ManifestStore(str(tmp_path_factory.mktemp("cow_occ")))
         init_manifest_table(spark, store, orders_df.limit(10), block_rows=512)
-        schema = store.schema_json()
+        base = store.snapshot()
         files = store.files_for()
         v, _ = store.stage_next()
-        store.commit(v, [], files, schema)  # writer A wins
+        store.commit(base, v, [], files)  # writer A wins
         with pytest.raises(ValueError, match="already committed"):
-            store.commit(v, [], files, schema)  # writer B must fail
+            store.commit(base, v, [], files)  # writer B must fail
 
 
 class TestRegisterManifest:
@@ -693,7 +693,7 @@ class TestMergeOnReadDeletes:
         # rewrite applied the pending DV instead of resurrecting row 5
         assert df.filter("o_orderstatus = 'U'").count() == 99
         # the carried file's DV survived into the new manifest
-        assert any(store.dvs_for().values())
+        assert any(store.snapshot().dvs.values())
 
     def test_compaction_materializes_dvs(
         self, spark, orders_df, tmp_path_factory
@@ -712,7 +712,7 @@ class TestMergeOnReadDeletes:
         delete_where_mor(spark, store, f"{KEY} IN (3, 700)")
         rep = compact_manifest(spark, store, block_rows=max(1, n // 8))
         assert rep["compacted"]
-        assert not store.dvs_for()  # vectors consumed
+        assert not store.snapshot().dvs  # vectors consumed
         df = store.read(spark)
         assert df.count() == n - 2
         assert df.filter(f"{KEY} IN (3, 700)").count() == 0
@@ -735,7 +735,7 @@ class TestMergeOnReadDeletes:
         )
         assert rep["mode"] == "cow_fallback"
         assert rep["deleted"] == 500
-        assert not store.dvs_for()  # CoW path, no vectors
+        assert not store.snapshot().dvs  # CoW path, no vectors
         assert store.read(spark).count() == n - 500
 
 

@@ -239,7 +239,7 @@ def test_manifest_view_equals_footer_index_at_every_version(
     compact_manifest(spark, store, block_rows=5)
 
     for v in store.versions():
-        view = MicroBlockIndex.for_version(store, v, table_id="t")
+        view = MicroBlockIndex.for_version(store.snapshot(v), table_id="t")
         footers = MicroBlockIndex.build_from_files(
             store.files_for(v), table_id="t"
         )

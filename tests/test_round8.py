@@ -58,7 +58,7 @@ class TestEmptyMergeIsNoop:
         assert rep["matched_rows"] == 0 and rep["dv_rows_total"] == 0
         assert store.latest() == v_before          # no commit at all
         assert store.read(spark).count() == n      # nothing deleted
-        assert store.dvs_for() == {}
+        assert store.snapshot().dvs == {}
 
     def test_mor_all_null_keys_appends_only(
         self, spark, orders_df, tmp_path_factory
@@ -182,9 +182,7 @@ class TestCommitBasenameGuard:
         dupe = os.path.join(dupe_dir, os.path.basename(files[0]))
         shutil.copyfile(files[0], dupe)
         with pytest.raises(ValueError, match="basename collision"):
-            store.commit(
-                store.latest() + 1, [dupe], files, store.schema_json()
-            )
+            store.commit(store.snapshot(), store.latest() + 1, [dupe], files)
 
     def test_same_file_carried_once_is_fine(self, spark, tmp_path_factory):
         # the guard must not fire on a legitimately re-listed path
@@ -193,7 +191,7 @@ class TestCommitBasenameGuard:
         pdf = pd.DataFrame({"k": [1, 2, 3]})
         init_manifest_table(spark, store, spark.createDataFrame(pdf))
         files = store.files_for()
-        store.commit(store.latest() + 1, [], files + files, store.schema_json())
+        store.commit(store.snapshot(), store.latest() + 1, [], files + files)
         assert store.read(spark).count() == 3
 
 
@@ -261,7 +259,7 @@ class TestMorAutoCompaction:
         rep = delete_where_mor(
             spark, store, f"{KEY} IN ({', '.join(map(str, keys))})"
         )
-        assert rep["mode"] == "mor" and store.dvs_for()
+        assert rep["mode"] == "mor" and store.snapshot().dvs
         return store, n - rep["deleted"]
 
     def test_fires_exactly_at_threshold(
@@ -283,7 +281,7 @@ class TestMorAutoCompaction:
             taint_ratio=debt["taint_ratio"] + 1e-9,
             dv_rows_ratio=1.0,
         )
-        assert off["fired"] is False and store.dvs_for()
+        assert off["fired"] is False and store.snapshot().dvs
         # epsilon below → must fire, materializing every DV
         on = maybe_compact_mor(
             spark, store,
@@ -291,7 +289,7 @@ class TestMorAutoCompaction:
             dv_rows_ratio=1.0,
         )
         assert on["fired"] is True
-        assert store.dvs_for() == {}            # DVs materialized away
+        assert store.snapshot().dvs == {}            # DVs materialized away
         assert store.read(spark).count() == n_live
         # post-compaction debt is zero → policy is idempotent
         again = maybe_compact_mor(
@@ -318,7 +316,7 @@ class TestMorAutoCompaction:
         ac = rep["auto_compact"]
         assert ac["fired"] is True
         assert ac["debt"]["taint_ratio"] > 0.05
-        assert store.dvs_for() == {}
+        assert store.snapshot().dvs == {}
         assert eng.table("t_mor").count() == n - rep["deleted"]
         # opt-out leaves the DV in place
         store2 = ManifestStore(str(tmp_path_factory.mktemp("acomp3")))
@@ -330,7 +328,7 @@ class TestMorAutoCompaction:
             "t_mor2", f"{KEY} = {key}", store2, auto_compact=False
         )
         assert "auto_compact" not in rep2
-        assert store2.dvs_for() != {}
+        assert store2.snapshot().dvs != {}
 
 
 class TestOrcExplainGuard:
