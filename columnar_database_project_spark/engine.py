@@ -32,6 +32,7 @@ from typing import TYPE_CHECKING, Any
 from pyspark.sql import DataFrame, SparkSession
 
 from columnar_database_project_spark.catalog import register_dir
+from columnar_database_project_spark.storage import cow
 
 if TYPE_CHECKING:  # pragma: no cover
     from columnar_database_project_spark.sources.index import MicroBlockIndex
@@ -275,17 +276,15 @@ class MicroBlockEngine:
     # triage cannot prove untouched, MoR writes deletion vectors.
 
     def _dml(
-        self, verb: str, name: str, mstore, *args, auto_compact=False, **kw
+        self, verb, name: str, mstore, *args, auto_compact: bool, **kw
     ) -> dict:
-        """Run the storage/cow ``verb`` on ``mstore`` and register
-        ``name`` from the version it committed. ``auto_compact`` (on by
-        default for the MoR verbs) then runs the threshold-triggered DV
-        materialization (storage/cow.maybe_compact_mor) — the read tax
-        is bounded by the engine, not by an operator remembering
-        DEPLOY.md."""
-        from columnar_database_project_spark.storage import cow
-
-        report = getattr(cow, verb)(self.spark, mstore, *args, **kw)
+        """Run the storage/cow function ``verb`` on ``mstore`` and
+        register ``name`` from the version it committed. ``auto_compact``
+        (on by default for the MoR verbs) then runs the
+        threshold-triggered DV materialization
+        (storage/cow.maybe_compact_mor) — the read tax is bounded by the
+        engine, not by an operator remembering DEPLOY.md."""
+        report = verb(self.spark, mstore, *args, **kw)
         if auto_compact:
             report["auto_compact"] = cow.maybe_compact_mor(
                 self.spark, mstore, block_rows=kw.get("block_rows")
@@ -294,7 +293,10 @@ class MicroBlockEngine:
         return report
 
     def delete_where_cow(self, name: str, predicate, mstore, **kw) -> dict:
-        return self._dml("delete_where_cow", name, mstore, predicate, **kw)
+        return self._dml(
+            cow.delete_where_cow, name, mstore, predicate,
+            auto_compact=False, **kw,
+        )
 
     def delete_where_mor(
         self, name: str, predicate, mstore, auto_compact: bool = True, **kw
@@ -303,7 +305,7 @@ class MicroBlockEngine:
         files written (storage/cow.delete_where_mor); falls back to
         CoW above the DV budget."""
         return self._dml(
-            "delete_where_mor", name, mstore, predicate,
+            cow.delete_where_mor, name, mstore, predicate,
             auto_compact=auto_compact, **kw,
         )
 
@@ -319,7 +321,7 @@ class MicroBlockEngine:
         """Merge-on-read UPDATE: DV the matching rows, append their
         updated versions (storage/cow.update_where_mor)."""
         return self._dml(
-            "update_where_mor", name, mstore, predicate, assignments,
+            cow.update_where_mor, name, mstore, predicate, assignments,
             auto_compact=auto_compact, **kw,
         )
 
@@ -334,7 +336,7 @@ class MicroBlockEngine:
     ) -> dict:
         """Merge-on-read MERGE/upsert (storage/cow.merge_mor)."""
         return self._dml(
-            "merge_mor", name, mstore, updates, key,
+            cow.merge_mor, name, mstore, updates, key,
             auto_compact=auto_compact, **kw,
         )
 
@@ -342,11 +344,15 @@ class MicroBlockEngine:
         self, name: str, predicate, assignments: dict, mstore, **kw
     ) -> dict:
         return self._dml(
-            "update_where_cow", name, mstore, predicate, assignments, **kw
+            cow.update_where_cow, name, mstore, predicate, assignments,
+            auto_compact=False, **kw,
         )
 
     def merge_cow(self, name: str, updates, key: str, mstore, **kw) -> dict:
-        return self._dml("merge_cow", name, mstore, updates, key, **kw)
+        return self._dml(
+            cow.merge_cow, name, mstore, updates, key,
+            auto_compact=False, **kw,
+        )
 
     def time_travel_cow(self, name: str, mstore, version: int | None = None):
         """Register (and return) ``name`` as of a manifest version
@@ -361,11 +367,7 @@ class MicroBlockEngine:
         refresh registration + index — block ids change with the
         manifest, so the index is re-taken from the new version
         (``register_manifest``)."""
-        from columnar_database_project_spark.storage.cow import (
-            compact_manifest,
-        )
-
-        report = compact_manifest(self.spark, mstore, **kw)
+        report = cow.compact_manifest(self.spark, mstore, **kw)
         if report["compacted"]:
             self.register_manifest(name, mstore, with_index=self.index is not None)
         return report

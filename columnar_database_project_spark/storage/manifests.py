@@ -32,11 +32,12 @@ when a commit first names its file. The zone-map index of a version
 (``MicroBlockIndex.for_version``), the DML triage and the compaction
 debt read these records, not the files.
 
-An operation reads one immutable ``Snapshot`` (``snapshot()``: the
-head log and one manifest, parsed once) and commits against it.
-Concurrency story: a commit whose base is no longer the head fails
-(``CommitConflict``) instead of publishing over a version it never
-read, and a second commit of one version number fails loudly.
+An operation reads one ``Snapshot`` (``snapshot()``: the head log and
+one manifest, parsed once) and commits against it. Concurrency story:
+a commit whose base is no longer the head fails (``CommitConflict``),
+as does a second commit of one version number. The check catches a
+commit that landed before it ran; it is not atomic with the head swap,
+so two commits whose check→swap windows overlap can still race.
 
 Crash story: a crash mid-write leaves data files and possibly an
 m*.json that the head log never names — invisible to readers,
@@ -56,8 +57,7 @@ import json
 import os
 import shutil
 from dataclasses import dataclass
-from types import MappingProxyType
-from typing import TYPE_CHECKING, Iterable, Mapping
+from typing import TYPE_CHECKING, Iterable
 
 from columnar_database_project_spark.sources.index import footer_records
 
@@ -121,7 +121,7 @@ class CommitConflict(RuntimeError):
 @dataclass(frozen=True)
 class Snapshot:
     """One committed version, parsed once. Every file key is an
-    absolute path, as ``files`` lists it.
+    absolute path, as ``files`` lists it; read-only by convention.
 
     ``files``: block files in manifest order. ``dvs``: file → deleted
     row positions (``_metadata.row_index`` space), only for files that
@@ -131,9 +131,9 @@ class Snapshot:
     version: int
     files: tuple[str, ...]
     schema_json: str
-    dvs: Mapping[str, tuple[int, ...]]
-    blocks: Mapping[str, list[dict]]
-    meta: Mapping
+    dvs: dict[str, tuple[int, ...]]
+    blocks: dict[str, list[dict]]
+    meta: dict
 
     @classmethod
     def _parse(cls, root: str, doc: dict) -> "Snapshot":
@@ -142,8 +142,7 @@ class Snapshot:
         blocks = {at(f): recs for f, recs in doc["blocks"].items()}
         return cls(
             doc["version"], tuple(map(at, doc["files"])), doc["schema"],
-            MappingProxyType(dvs), MappingProxyType(blocks),
-            MappingProxyType(doc.get("meta", {})),
+            dvs, blocks, doc.get("meta", {}),
         )
 
     def live_rows(self, files: Iterable[str]) -> int:
@@ -325,15 +324,6 @@ class ManifestStore:
         version's full file → row positions; a DV for an unnamed file
         is an error. ``meta`` is stored verbatim (e.g. ``{"txn":
         {"batch_id": N}}``, the streaming sink's exactly-once dedup)."""
-        vs = self.versions()
-        if version in vs:
-            raise ValueError(f"commit: v{version} already committed")
-        head = vs[-1] if vs else None
-        if head != (base.version if base else None):
-            raise CommitConflict(
-                f"commit: v{version} read v{base.version if base else None} "
-                f"but the head is v{head}; nothing committed"
-            )
         if schema_json is None:
             if base is None:
                 raise ValueError("commit: an empty store needs a schema")
@@ -390,6 +380,16 @@ class ManifestStore:
         for f in doc["files"]:
             path = os.path.join(self.root, f)
             doc["blocks"][f] = known[path] if path in known else footer_records(path)
+        # base check after the footer reads: next to the head swap
+        vs = self.versions()
+        if version in vs:
+            raise ValueError(f"commit: v{version} already committed")
+        head = vs[-1] if vs else None
+        if head != (base.version if base else None):
+            raise CommitConflict(
+                f"commit: v{version} read v{base.version if base else None} "
+                f"but the head is v{head}; nothing committed"
+            )
         with open(self._manifest_path(version), "w") as fh:
             json.dump(doc, fh)
         self._write_head(vs + [version])

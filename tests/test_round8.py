@@ -330,6 +330,24 @@ class TestMorAutoCompaction:
         assert "auto_compact" not in rep2
         assert store2.snapshot().dvs != {}
 
+    def test_engine_cow_verbs_take_no_auto_compact(self, spark, tmp_path):
+        """Only the MoR verbs accept ``auto_compact``; a CoW verb
+        rejects it before touching the store."""
+        from columnar_database_project_spark.engine import MicroBlockEngine
+
+        eng = MicroBlockEngine(spark)
+        store = ManifestStore(str(tmp_path))
+        for call in (
+            lambda: eng.delete_where_cow("t", "k = 1", store, auto_compact=True),
+            lambda: eng.update_where_cow(
+                "t", "k = 1", {"v": "0"}, store, auto_compact=True
+            ),
+            lambda: eng.merge_cow("t", None, "k", store, auto_compact=True),
+        ):
+            with pytest.raises(TypeError):
+                call()
+        assert store.latest() is None
+
 
 class TestOrcExplainGuard:
     def test_orc_table_explain_names_the_gap(self, spark, tmp_path_factory):

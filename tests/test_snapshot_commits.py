@@ -22,6 +22,7 @@ import pandas as pd
 import pytest
 
 from columnar_database_project_spark.sources.microblock import MicroBlockWriter
+from columnar_database_project_spark.storage import manifests
 from columnar_database_project_spark.storage.cow import (
     append_cow,
     compact_manifest,
@@ -192,23 +193,26 @@ class TestSpareJobs:
 
 
 class TestInterleavedCommits:
-    """An ``append_cow`` commits while a rewrite is inside its write: the
-    rewrite's base is no longer the head, so its commit must fail, and
-    the table must be the append's version."""
+    """An ``append_cow`` commits while a rewrite is inside its write (or
+    inside its commit's footer reads): the rewrite's base is no longer
+    the head, so its commit must fail, and the table must be the
+    append's version."""
 
-    def _race(self, spark, tmp_path, monkeypatch, late_verb) -> None:
+    def _race(self, spark, tmp_path, monkeypatch, late_verb, hook=None) -> None:
         pdf, extra = _orders(0, 800), _orders(800, 820)
         store = _store(spark, tmp_path / "t", pdf, 100)
-        real_write = MicroBlockWriter.write
+        owner, attr = hook or (MicroBlockWriter, "write")
+        real = getattr(owner, attr)
         raced: dict = {}
 
-        def write(self, df, path, *args, **kwargs):
-            real_write(self, df, path, *args, **kwargs)
+        def during(*args, **kwargs):
+            out = real(*args, **kwargs)
             if "append" not in raced:
                 raced["append"] = None
                 raced["append"] = append_cow(spark, store, spark.createDataFrame(extra))
+            return out
 
-        monkeypatch.setattr(MicroBlockWriter, "write", write)
+        monkeypatch.setattr(owner, attr, during)
         with pytest.raises(CommitConflict):
             late_verb(store)
         monkeypatch.undo()
@@ -227,6 +231,17 @@ class TestInterleavedCommits:
         self._race(
             spark, tmp_path, monkeypatch,
             lambda store: compact_manifest(spark, store, block_rows=1000),
+        )
+
+    def test_append_during_commit_footer_reads(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The base check runs after the commit reads its new files'
+        footers, so an append that lands during those reads is caught."""
+        self._race(
+            spark, tmp_path, monkeypatch,
+            lambda store: delete_where_cow(spark, store, f"{KEY} < 150"),
+            hook=(manifests, "footer_records"),
         )
 
 
