@@ -1175,7 +1175,7 @@ def bench_prefetch_ab(
 
     Reported per config: block-access hit rate and mean FOREGROUND
     access latency (prefetch work is excluded from foreground time —
-    it runs on the background FAIR pool in production — but its cost
+    it runs on the background service thread in production — but its cost
     is reported honestly as prefetch_reads/prefetch_sec). LRU alone
     cannot anticipate a sequential walk's NEXT block (every first
     visit is a miss); the LSTM turns predicted-next misses into hits —
@@ -1190,7 +1190,7 @@ def bench_prefetch_ab(
     from columnar_database_project_spark.ml.synthetic import generate_mixed_logs
     from columnar_database_project_spark.ml.training_set import build_from_sequence
     from columnar_database_project_spark.sources.index import MicroBlockIndex
-    from columnar_database_project_spark.sources.microblock import MicroBlockWriter
+    from columnar_database_project_spark.sources.microblock import MicroBlockWriter, read_block
     from columnar_database_project_spark.storage.access_logger import GlobalHistory
     from columnar_database_project_spark.storage.block_cache import BlockCache
 
@@ -1338,12 +1338,12 @@ def bench_prefetch_ab(
             df = cache.get(b)
             hit = df is not None
             if df is None:
-                df = spark.read.parquet(index.block_file(b))
-                cache.put(b, df)       # persists + materializes
+                df = read_block(spark, index, b)
+                cache.put(b, df)
                 if delay:
                     time.sleep(delay)  # demand read pays the GET too
             else:
-                df.count()             # serve from BlockManager
+                df.count()             # serve from the driver-resident block
                 if b in pending:       # hit attributable to prefetch
                     prefetch_hits += 1
                     pending.discard(b)
@@ -1356,7 +1356,7 @@ def bench_prefetch_ab(
             history.record(b)
             if service is not None and (i + 1) % PREFETCH_EVERY == 0:
                 t0 = time.time()
-                service.run_once()     # background-pool work in prod
+                service.run_once()     # background-thread work in prod
                 prefetch_sec += time.time() - t0
                 fresh = service.issued_log[issued_seen:]
                 pending.update(fresh)

@@ -34,17 +34,40 @@ TESTDATA_TABLES = (
 
 def _nanos_ts_columns(path: str) -> list[str]:
     """Column names stored as parquet TIMESTAMP(NANOS) (Spark reads
-    them as raw long nanos under ``nanosAsLong`` — we convert back)."""
+    them as raw long nanos under ``nanosAsLong`` — we convert back).
+    INT96 columns also read as nanoseconds in pyarrow, but Spark reads
+    them as timestamps itself, so the physical type tells them apart."""
     try:
-        schema = _pq.read_schema(path)
+        schema = _pq.read_metadata(path).schema
     except Exception:
         return []
-    out = []
-    for field in schema:
-        t = field.type
-        if str(t).startswith("timestamp[ns"):
-            out.append(field.name)
-    return out
+    int96 = {
+        schema.column(i).path
+        for i in range(len(schema))
+        if schema.column(i).physical_type == "INT96"
+    }
+    return [
+        f.name
+        for f in schema.to_arrow_schema()
+        if str(f.type).startswith("timestamp[ns") and f.name not in int96
+    ]
+
+
+def micros_timestamps(table):
+    """``table`` with every nanosecond timestamp column truncated (not
+    rounded) to microseconds, matching the native path's integer
+    ``DIV 1000``: Spark has no nanosecond timestamp."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    for i, field in enumerate(table.schema):
+        if pa.types.is_timestamp(field.type) and field.type.unit == "ns":
+            # int64 divide truncates; ts > 0 → floor
+            us = pc.divide(pc.cast(table.column(i), pa.int64()), 1000)
+            table = table.set_column(
+                i, field.name, pc.cast(us, pa.timestamp("us", field.type.tz))
+            )
+    return table
 
 
 # Per-session relation cache: a returned DataFrame is an immutable
@@ -303,24 +326,7 @@ def _load_via_pyarrow(spark: SparkSession, path: str) -> DataFrame:
     even with ``nanosAsLong`` set; materializes on the driver, so it is
     a small-table escape hatch, not a scale path.
     """
-    import pyarrow as pa
-
-    import pyarrow.compute as pc
-
-    table = _pq.read_table(path)
-    cols, fields = [], []
-    for i, field in enumerate(table.schema):
-        col = table.column(i)
-        if str(field.type).startswith("timestamp[ns"):
-            # truncate (not round) sub-µs precision, matching the
-            # native path's integer `DIV 1000`
-            ns = pc.cast(col, pa.int64())
-            us = pc.divide(ns, 1000)  # int64 divide truncates; ts > 0 → floor
-            col = pc.cast(us, pa.timestamp("us", field.type.tz))
-            field = pa.field(field.name, col.type)
-        cols.append(col)
-        fields.append(field)
-    table = pa.table(cols, schema=pa.schema(fields))
+    table = micros_timestamps(_pq.read_table(path))
     # Spark 4 accepts a pyarrow.Table directly — no pandas round-trip,
     # so nullable ints stay ints and types never drift vs the native
     # reader's schema.

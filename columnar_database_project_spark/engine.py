@@ -13,8 +13,8 @@ the observability + caching + prefetch layer:
   to drive the cache/prefetch subsystems.
 - ``AccessLogger`` + ``GlobalHistory``: which blocks each query touched
   (reference access_logger.py:29-58) — the training-data tap.
-- ``BlockCache``: LRU of persisted per-block DataFrames (reference
-  block_cache.py:5-44).
+- ``BlockCache``: LRU of per-block DataFrames whose rows ``read_block``
+  already loaded into the driver (reference block_cache.py:5-44).
 - ``PrefetchService``: background predictor loop (reference
   prefetch_service.py:35-96).
 
@@ -51,7 +51,7 @@ class MicroBlockEngine:
     spark : the session.
     table_dir : directory of ``<name>.parquet`` tables to register.
     index : optional MicroBlockIndex for pruning prediction / logging.
-    cache : optional BlockCache (LRU over persisted block DataFrames).
+    cache : optional BlockCache (LRU over driver-resident block DataFrames).
     logger : optional AccessLogger (JSONL access log).
     history : optional GlobalHistory (rolling deque of block ids).
     """
@@ -384,7 +384,9 @@ class MicroBlockEngine:
         are positions in sorted file order, so a commit renumbers them.
         An attached cache therefore drops each cached id that names a
         different (file, row group) in the new index than in the old
-        one; ids that still name the same block stay cached.
+        one, or whose file's deletion vector changed (a cached block
+        holds the rows its DV left); ids that still name the same block
+        under the same DV stay cached.
         ``blooms``: optional Bloom sidecar to attach for point-lookup
         prediction."""
         from columnar_database_project_spark.sources.index import (
@@ -400,10 +402,13 @@ class MicroBlockEngine:
             if blooms is not None:
                 idx.attach_blooms(blooms)
             if self.cache is not None:
-                old = self.index
+
+                def names(ix, b):
+                    key = ix.block_key(b) if ix is not None else None
+                    return key, key and ix.dvs.get(key[0])
+
                 for b in self.cache.cached_ids():
-                    before = old.block_key(b) if old is not None else None
-                    if before != idx.block_key(b):
+                    if names(self.index, b) != names(idx, b):
                         self.cache.remove(b)
             self.index = idx
 

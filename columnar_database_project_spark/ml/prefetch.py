@@ -1,31 +1,24 @@
 """Prefetcher + background PrefetchService.
 
 Re-expresses reference prefetch.py:19-43 and prefetch_service.py:35-96
-in Spark terms: "prefetch block" = load the block's DataFrame (block =
-file) with ``read_block`` and put it into the BlockCache, which persists
-it without a job. A cycle's loads are then materialized into the
-BlockManager together, by ONE no-op write over the union of the blocks
-still cached. Prefetch jobs run in a dedicated FAIR-scheduler pool so
-they never starve foreground queries (the reference's daemon thread
-shares everything unsynchronized — SURVEY §2.5.6).
+in Spark terms: "prefetch block" = read the block into the driver with
+``read_block`` (one row group through pyarrow) and put it into the
+BlockCache. A load is just that read: it runs no Spark job, so
+prefetching cannot starve foreground queries of executor slots (the
+reference's daemon thread shares everything unsynchronized — SURVEY
+§2.5.6; here the cache is locked).
 """
 
 from __future__ import annotations
 
 import threading
 import time
-from functools import reduce
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from columnar_database_project_spark.ml.scheduler import PrefetchScheduler
 from columnar_database_project_spark.sources import microblock
 from columnar_database_project_spark.sources.index import MicroBlockIndex
 from columnar_database_project_spark.storage.access_logger import GlobalHistory
 from columnar_database_project_spark.storage.block_cache import BlockCache
-
-PREFETCH_POOL = "prefetch"
 
 
 class _Ewma:
@@ -133,37 +126,19 @@ class Prefetcher:
         return bool(self.prefetch_many([block_id]))
 
     def prefetch_many(self, block_ids: list[int]) -> list[int]:
-        """Load the blocks that are neither cached nor unknown; return
-        their ids in the given order.
-
-        Every block is read, then put in that order (so LRU order and
-        evictions match one-at-a-time loads), then a single job
-        materializes the loaded blocks that are still cached: a no-op
-        write of their union. It projects a constant, so blocks of
-        different schemas union too; the persisted plans still build
-        every column."""
-        loaded: dict[int, DataFrame] = {}
-        sc = self.spark.sparkContext
-        sc.setLocalProperty("spark.scheduler.pool", PREFETCH_POOL)
-        try:
-            for b in block_ids:
-                if b in loaded or self.cache.contains(b):
-                    continue
-                try:
-                    loaded[b] = microblock.read_block(self.spark, self.index, b)
-                except KeyError:   # not a block of this index
-                    continue
-            for b, df in loaded.items():
-                self.cache.put(b, df)
-            live = [
-                df.select(F.lit(1)) for b, df in loaded.items() if self.cache.contains(b)
-            ]
-            if live:
-                union = reduce(DataFrame.union, live)
-                union.write.format("noop").mode("overwrite").save()
-        finally:
-            sc.setLocalProperty("spark.scheduler.pool", None)
-        return list(loaded)
+        """Read and put, in the given order, the blocks that are neither
+        cached nor unknown; return their ids in that order."""
+        loaded: list[int] = []
+        for b in block_ids:
+            if b in loaded or self.cache.contains(b):
+                continue
+            try:
+                df = microblock.read_block(self.spark, self.index, b)
+            except KeyError:   # not a block of this index
+                continue
+            self.cache.put(b, df)
+            loaded.append(b)
+        return loaded
 
 
 class PrefetchService:
@@ -207,8 +182,7 @@ class PrefetchService:
         self.economics = economics if economics is not None else PrefetchEconomics()
         self.economics_gate = economics_gate
         # Issue width for one cycle's speculative loads. 1 (default)
-        # loads the cycle's batch with ``prefetch_many``: one
-        # materializing job for the whole batch. >1 issues one
+        # loads the cycle's batch with ``prefetch_many``. >1 issues one
         # ``prefetch_block`` per suggestion from a thread pool: against
         # a remote object store the GET latency dominates and
         # concurrent background GETs overlap. Either way the cost the

@@ -16,7 +16,6 @@ DEFAULT_CPUS = int(
     os.environ.get("SPARK_GRAFT_CPUS")
     or (len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count())
 )
-ALLOCATION_FILE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fairscheduler.xml")
 
 
 def _default_driver_mem() -> str:
@@ -81,11 +80,6 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
         )
         .config("spark.ui.enabled", "false")
-        # Separate fair-scheduler pool so background prefetch jobs never
-        # starve foreground queries (reference prefetch_service.py:35-80
-        # runs prefetch on a daemon thread with no isolation).
-        .config("spark.scheduler.mode", "FAIR")
-        .config("spark.scheduler.allocation.file", ALLOCATION_FILE)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -221,8 +221,9 @@ class MicroBlockIndex:
         # optional per-block Bloom sidecar (sources/bloom.py): refines
         # candidate_blocks for = / IN where min/max is wide-open
         self.blooms = None
-        # footer-schema key → Spark StructType (sources/microblock.read_block)
-        self.read_schemas: dict[str, Any] = {}
+        # file → deleted row positions (a manifest version's deletion
+        # vectors, ``for_version``); read_block drops them
+        self.dvs: dict[str, tuple[int, ...]] = {}
 
     # ------------------------------------------------------------- build
     @classmethod
@@ -309,10 +310,14 @@ class MicroBlockIndex:
         """The index of a ``ManifestStore`` snapshot, built from the
         zone-map records its manifest holds — no footer is opened.
         Block ids are those of ``build_from_files(snapshot.files)``:
-        sorted file order, then row group."""
-        return cls.from_records(
+        sorted file order, then row group. The snapshot's deletion
+        vectors are kept (``dvs``), so ``read_block`` serves the rows the
+        version serves."""
+        idx = cls.from_records(
             ((f, snapshot.blocks[f]) for f in snapshot.files), table_id=table_id
         )
+        idx.dvs = snapshot.dvs
+        return idx
 
     @classmethod
     def build_from_scan(

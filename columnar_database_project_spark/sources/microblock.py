@@ -5,8 +5,8 @@ microblock_writer.py:4-17, parquet_to_microblocks.py:11) so its
 block-level cache/prefetch can address small units. On Spark, the
 architectural decision (SURVEY §7) is **block = file**: one
 row-group-sized parquet FILE per block via ``maxRecordsPerFile``,
-because Spark's observability (input splits, persisted datasets,
-listeners) is file-granular. This makes block identity first-class for
+because Spark's observability (input splits, listeners) is
+file-granular. This makes block identity first-class for
 the cache/prefetch/logging subsystems while remaining a plain parquet
 directory any engine can read.
 
@@ -18,12 +18,17 @@ scan-oriented tables, with 16_384 available for cache-oriented parity.
 
 from __future__ import annotations
 
+import json
 from contextlib import contextmanager
 
+import numpy as np
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
+from columnar_database_project_spark.catalog import micros_timestamps
 from columnar_database_project_spark.sources.index import MicroBlockIndex
 
 REFERENCE_BLOCK_ROWS = 16_384    # reference microblock_writer.py:5
@@ -82,39 +87,56 @@ class MicroBlockWriter:
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _footer_schema_key(path: str, fmt: str) -> str:
-    """A value key of a block file's footer schema. ``str(ParquetSchema)``
-    opens with the object's address, so the header line is dropped; the
-    rest lists physical and logical types, which tell INT96 from
-    TIMESTAMP(NANOS) where the Arrow schema does not. Spark's own schema
-    entry is part of the key because Spark infers from it when present."""
-    if fmt == "orc":
+def read_block(spark: SparkSession, index: MicroBlockIndex, block_id: int) -> DataFrame:
+    """Load exactly one block into the driver and return it as a
+    one-partition DataFrame (reference query_enginev5.py:278-282 reads
+    it with ``pf.read_row_group``).
+
+    A Parquet block is one row group, read with pyarrow; an ORC block is
+    its whole file (``pyarrow.orc``). The rows of the index's deletion
+    vector for the file are dropped: DV positions count rows of the
+    file, so they are offset by the row group's first row. Nanosecond
+    timestamps (INT96, TIMESTAMP(NANOS)) are truncated to microseconds
+    as ``catalog.load_table`` does. The Spark schema is the one Spark
+    wrote into the footer when there is one, else the Arrow schema's,
+    every column nullable as Spark's own reader makes it.
+
+    Below ``spark.sql.execution.arrow.localRelationThreshold`` Spark
+    keeps the block as a ``LocalRelation``: building it runs no job, and
+    the DataFrame no longer needs its file. ``coalesce(1)`` keeps a
+    consumer from splitting the small block into one task per core.
+    Raises ``KeyError`` for an id the index does not have."""
+    key = index.block_key(block_id)
+    if key is None:
+        raise KeyError(block_id)
+    path, rg = key
+    spark_schema = None
+    if path.endswith(".orc"):
         import pyarrow.orc as po
 
-        return str(po.ORCFile(path).schema)
-    meta = pq.read_metadata(path)
-    spark_schema = (meta.metadata or {}).get(_SPARK_ROW_METADATA, b"")
-    return str(meta.schema).split("\n", 1)[1] + spark_schema.decode()
-
-
-def read_block(spark: SparkSession, index: MicroBlockIndex, block_id: int) -> DataFrame:
-    """Load exactly one block as a DataFrame (the block = file mapping
-    makes this a single-file scan — the Spark analog of
-    ``pf.read_row_group`` in reference query_enginev5.py:278-282).
-
-    Parquet schema inference runs a Spark job, so it happens once per
-    distinct footer schema: the inferred ``StructType`` is kept in
-    ``index.read_schemas`` and later reads pass it explicitly, which
-    runs no job. Block files ending in ``.orc`` are read as ORC."""
-    path = index.block_file(block_id)
-    fmt = "orc" if path.endswith(".orc") else "parquet"
-    key = _footer_schema_key(path, fmt)
-    schema = index.read_schemas.get(key)
-    if schema is None:
-        df = spark.read.format(fmt).load(path)
-        index.read_schemas[key] = df.schema
-        return df
-    return spark.read.schema(schema).format(fmt).load(path)
+        table, first_row = po.ORCFile(path).read(), 0
+    else:
+        pf = pq.ParquetFile(path)
+        table = pf.read_row_group(rg)
+        meta = pf.metadata
+        first_row = sum(meta.row_group(i).num_rows for i in range(rg))
+        spark_schema = (meta.metadata or {}).get(_SPARK_ROW_METADATA)
+    deleted = index.dvs.get(path)
+    if deleted:
+        pos = np.asarray(deleted, dtype=np.int64) - first_row
+        keep = np.ones(table.num_rows, dtype=bool)
+        keep[pos[(pos >= 0) & (pos < table.num_rows)]] = False
+        table = table.filter(keep)
+    table = micros_timestamps(table)
+    schema = (
+        T.StructType.fromJson(json.loads(spark_schema))
+        if spark_schema
+        else from_arrow_schema(table.schema)
+    )
+    schema = T.StructType(
+        [T.StructField(f.name, f.dataType, True, f.metadata) for f in schema]
+    )
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def write_with_row_ids(
@@ -146,9 +168,7 @@ def write_with_row_ids(
     The persist pins the range partitioning so the count pass and the
     id-assignment pass see identical partitions.
     """
-    import numpy as np
     from pyspark import StorageLevel, TaskContext
-    from pyspark.sql import types as T
 
     spark = df.sparkSession
     n_parts = num_partitions or spark.sparkContext.defaultParallelism

@@ -1,15 +1,13 @@
-"""BlockCache — locked LRU over persisted per-block DataFrames.
+"""BlockCache — locked LRU over per-block values.
 
 Re-expresses the reference's ``BlockCache`` (OrderedDict LRU of
-block_id → Arrow table, reference block_cache.py:5-63) in Spark terms:
-the cached value is a *persisted DataFrame* for one block (block =
-file, see sources/microblock.py), so a cache hit reuses Spark's
-BlockManager-resident columnar data instead of re-scanning parquet.
-
-``put`` is lazy: it marks the DataFrame persisted and runs no job. The
-first action on the block builds its cached columns — the consumer's own
-read on a foreground miss, or the prefetcher's one materializing job per
-cycle (ml/prefetch.py).
+block_id → Arrow table, reference block_cache.py:5-63). The cached
+value is what ``sources/microblock.read_block`` returns: a small
+DataFrame whose rows pyarrow already read into the driver (a Spark
+``LocalRelation``), so a hit re-reads no file, and neither ``put`` nor
+eviction runs a Spark job: eviction just drops the reference. Cached
+blocks therefore live in driver memory (capacity × block bytes; see
+DEPLOY.md).
 
 Deliberate fix over the reference: all mutation happens under a lock —
 the reference shares its cache between the query path and the prefetch
@@ -23,18 +21,14 @@ import threading
 from collections import OrderedDict
 from typing import Any
 
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame
-
 DEFAULT_CAPACITY = 64  # reference block_cache.py:13
 
 
 class BlockCache:
-    """LRU: block_id → persisted DataFrame (or any value).
+    """LRU: block_id → block DataFrame (or any value).
 
-    ``put`` persists (MEMORY_AND_DISK) without running a job; eviction
-    unpersists. ``stats()`` matches the reference's surface
-    (block_cache.py:58-63) plus hit/miss/eviction counters.
+    ``stats()`` matches the reference's surface (block_cache.py:58-63)
+    plus hit/miss/eviction counters.
     """
 
     def __init__(self, capacity: int = DEFAULT_CAPACITY):
@@ -58,25 +52,14 @@ class BlockCache:
 
     def put(self, block_id: int, value: Any) -> None:
         """Insert or replace; evict LRU at capacity (reference
-        block_cache.py:27-44). Replacing an existing block unpersists
-        the displaced DataFrame and persists the replacement, so a
-        re-put never leaks BlockManager storage or leaves the cached
-        entry silently unpersisted."""
-        displaced: Any | None = None
+        block_cache.py:27-44)."""
         with self._lock:
             if block_id in self._entries:
-                displaced = self._entries[block_id]
                 self._entries.move_to_end(block_id)
-                self._entries[block_id] = value
-            else:
-                if len(self._entries) >= self.capacity:
-                    _, displaced = self._entries.popitem(last=False)
-                    self.evictions += 1
-                self._entries[block_id] = value
-        if isinstance(value, DataFrame) and value is not displaced:
-            value.persist(StorageLevel.MEMORY_AND_DISK)
-        if isinstance(displaced, DataFrame) and displaced is not value:
-            displaced.unpersist()
+            elif len(self._entries) >= self.capacity:
+                self._entries.popitem(last=False)
+                self.evictions += 1
+            self._entries[block_id] = value
 
     def touch(self, block_id: int) -> None:
         """Promote without insert (engine observation hook)."""
@@ -91,18 +74,11 @@ class BlockCache:
 
     def remove(self, block_id: int) -> bool:
         with self._lock:
-            value = self._entries.pop(block_id, None)
-        if isinstance(value, DataFrame):
-            value.unpersist()
-        return value is not None
+            return self._entries.pop(block_id, None) is not None
 
     def clear(self) -> None:
         with self._lock:
-            values = list(self._entries.values())
             self._entries.clear()
-        for v in values:
-            if isinstance(v, DataFrame):
-                v.unpersist()
 
     def cached_ids(self) -> list[int]:
         with self._lock:

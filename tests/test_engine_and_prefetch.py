@@ -240,9 +240,9 @@ def _block_sums(path: str) -> tuple[int, int]:
 
 
 class TestBlockLoadJobs:
-    """A block load costs at most one Spark job: read_block infers a
-    schema once per distinct footer schema, BlockCache.put runs no job
-    and a prefetch cycle materializes its loads in one job."""
+    """A block load runs no Spark job: read_block reads the row group
+    into the driver with pyarrow, BlockCache.put only keeps the
+    reference and a prefetch cycle is just reads and puts."""
 
     @pytest.fixture(scope="class")
     def blocks(self, spark, tmp_path_factory):
@@ -251,15 +251,15 @@ class TestBlockLoadJobs:
         MicroBlockWriter(block_rows=10).write(df.repartition(1), out)
         return out
 
-    def test_read_block_infers_schema_once(self, spark, blocks):
+    def test_read_block_runs_no_job(self, spark, blocks):
         idx = MicroBlockIndex.build(blocks, table_id="t")
         assert idx.num_blocks == 140
         dfs = []
         ids = range(0, 80, 10)
         jobs = _jobs_run(spark, lambda: dfs.extend(read_block(spark, idx, b) for b in ids))
-        assert len(jobs) <= 1
-        assert len(idx.read_schemas) == 1
+        assert jobs == []
         for b, df in zip(ids, dfs):
+            assert df.rdd.getNumPartitions() == 1
             row = df.agg(F.count(F.lit(1)), F.sum("v")).first()
             assert (row[0], row[1]) == _block_sums(idx.block_file(b))
 
@@ -277,25 +277,26 @@ class TestBlockLoadJobs:
             files.append(str(tmp_path / f"b{i}.parquet"))
             pq.write_table(t, files[-1])
         idx = MicroBlockIndex.build_from_files(files, table_id="mixed")
-        for b in range(3):
-            got = read_block(spark, idx, b).toPandas()
+        dfs = []
+        assert _jobs_run(spark, lambda: dfs.extend(read_block(spark, idx, b) for b in range(3))) == []
+        for b, df in enumerate(dfs):
+            got = df.toPandas()
             want = pq.read_table(idx.block_file(b)).to_pandas()
             assert list(got.columns) == list(want.columns)
             assert got.astype(object).where(got.notna(), None).values.tolist() == \
                 want.astype(object).where(want.notna(), None).values.tolist()
-        assert len(idx.read_schemas) == 2
-        assert _jobs_run(spark, lambda: [read_block(spark, idx, b) for b in range(3)]) == []
 
     def test_put_runs_no_job(self, spark, blocks):
         idx = MicroBlockIndex.build(blocks, table_id="t")
-        read_block(spark, idx, 0)   # schema inferred once
-        cache = BlockCache(capacity=4)
-        df = read_block(spark, idx, 1)
-        assert _jobs_run(spark, lambda: cache.put(1, df)) == []
-        assert df.storageLevel.useMemory
+        cache = BlockCache(capacity=1)
+        dfs = [read_block(spark, idx, b) for b in (1, 2)]
+        # the second put evicts the first block
+        assert _jobs_run(spark, lambda: [cache.put(b, df) for b, df in zip((1, 2), dfs)]) == []
+        assert cache.cached_ids() == [2] and cache.evictions == 1
+        assert not any(df.storageLevel.useMemory for df in dfs)
         cache.clear()
 
-    def test_prefetch_many_materializes_in_one_job(self, spark, tmp_path):
+    def test_prefetch_many_runs_no_job(self, spark, tmp_path):
         import shutil
 
         out = str(tmp_path / "t")
@@ -305,12 +306,12 @@ class TestBlockLoadJobs:
         want = {b: _block_sums(idx.block_file(b)) for b in range(idx.num_blocks)}
         cache = BlockCache(capacity=idx.num_blocks)
         pf = Prefetcher(spark, idx, cache)
-        pf.prefetch_block(0)   # infers the schema
+        pf.prefetch_block(0)
         loaded = []
         ids = [3, 1, 10**6, 2, 0, 4]
         jobs = _jobs_run(spark, lambda: loaded.extend(pf.prefetch_many(ids)))
         assert loaded == [3, 1, 2, 4]           # suggestion order, unknown and cached skipped
-        assert len(jobs) == 1
+        assert jobs == []
         shutil.rmtree(out)   # consuming must not touch the files
         for b in [0, *loaded]:
             row = cache.get(b).agg(F.count(F.lit(1)), F.sum("v")).first()
@@ -339,11 +340,3 @@ class TestBlockLoadJobs:
         assert cache.evictions == 7
         assert svc.economics.issued == 10
         cache.clear()
-
-    def test_prefetch_pool_is_configured(self, spark):
-        from columnar_database_project_spark.ml.prefetch import PREFETCH_POOL
-
-        pool = spark.sparkContext._jsc.sc().getPoolForName(PREFETCH_POOL)
-        assert pool.isDefined()
-        # a pool Spark creates on first use would be FIFO
-        assert pool.get().schedulingMode().toString() == "FAIR"

@@ -1,0 +1,151 @@
+"""The block contract of ``sources/microblock.read_block``: one block,
+read with pyarrow into the driver, equal to what Spark's own reader
+serves for that block, with the version's deletion vectors applied."""
+
+from __future__ import annotations
+
+import datetime as dt
+from decimal import Decimal
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from columnar_database_project_spark.catalog import load_table
+from columnar_database_project_spark.engine import MicroBlockEngine
+from columnar_database_project_spark.sources.index import MicroBlockIndex
+from columnar_database_project_spark.sources.microblock import MicroBlockWriter, read_block
+from columnar_database_project_spark.storage.block_cache import BlockCache
+from columnar_database_project_spark.storage.cow import delete_where_mor, init_manifest_table
+from columnar_database_project_spark.storage.manifests import ManifestStore
+
+TYPED_SQL = """
+SELECT id AS k,
+       CAST(id * 7 AS DECIMAL(10, 2)) AS dec,
+       date_add(DATE'2020-01-01', CAST(id AS INT)) AS d,
+       timestamp_micros(1600000000000000 + id * 1000003) AS ts,
+       IF(id % 3 = 0, NULL, CONCAT('s', id)) AS s,
+       CAST(NULL AS INT) AS n
+FROM range(40)
+"""
+
+
+def _rows(df) -> list:
+    return sorted(df.collect(), key=lambda r: r["k"])
+
+
+def _assert_blocks_match(spark, idx, reader) -> None:
+    """Every block equals ``reader(block)``: schema and rows."""
+    for b in range(idx.num_blocks):
+        got, want = read_block(spark, idx, b), reader(b)
+        assert got.schema == want.schema
+        assert _rows(got) == _rows(want)
+
+
+class TestMatchesSparkReader:
+    @pytest.mark.parametrize("fmt", ["parquet", "orc"])
+    def test_every_block_of_a_spark_layout(self, spark, tmp_path, fmt):
+        path = str(tmp_path / "t")
+        MicroBlockWriter(block_rows=10, format=fmt).write(
+            spark.sql(TYPED_SQL).coalesce(1), path
+        )
+        idx = (
+            MicroBlockIndex.build(path)
+            if fmt == "parquet"
+            else MicroBlockIndex.build_from_scan(spark, path, format="orc")
+        )
+        assert idx.num_blocks == 4
+        _assert_blocks_match(
+            spark, idx, lambda b: spark.read.format(fmt).load(idx.block_file(b))
+        )
+
+    def test_each_row_group_of_a_pyarrow_file(self, spark, tmp_path):
+        """A block is one row group, not the file it sits in."""
+        n = 1000
+        table = pa.table({
+            "k": pa.array(range(n), pa.int64()),
+            "dec": pa.array([Decimal(i) / 4 for i in range(n)], pa.decimal128(12, 2)),
+            "d": pa.array([dt.date(2021, 1, 1) + dt.timedelta(days=i) for i in range(n)]),
+            "ts": pa.array([1_600_000_000_000_000 + 7 * i for i in range(n)],
+                           pa.timestamp("us", "UTC")),
+            "s": pa.array([None if i % 5 == 0 else f"v{i}" for i in range(n)]),
+            "n": pa.array([None] * n, pa.int32()),
+        })
+        path = str(tmp_path / "rg.parquet")
+        pq.write_table(table, path, row_group_size=250)
+        idx = MicroBlockIndex.build_from_files([path])
+        assert idx.num_blocks == 4
+
+        def spark_rows(b):
+            lo, hi = idx.block_row_range(b)
+            return spark.read.parquet(path).where(
+                F.col("_metadata.row_index").between(lo, hi)
+            )
+
+        _assert_blocks_match(spark, idx, spark_rows)
+        assert [read_block(spark, idx, b).count() for b in range(4)] == [250] * 4
+
+    def test_nanosecond_timestamps_truncate_like_load_table(self, spark, tmp_path):
+        # -1,500 ns truncates to -1 µs, as Spark's `DIV` does; a floor
+        # (what createDataFrame alone does) would give -2 µs
+        ns = [1_600_000_000_123_456_789, -1_500, None]
+        table = pa.table({"k": [1, 2, 3], "ts": pa.array(ns, pa.timestamp("ns"))})
+        pq.write_table(table, str(tmp_path / "nanos.parquet"))
+        pq.write_table(table, str(tmp_path / "int96.parquet"),
+                       use_deprecated_int96_timestamps=True)
+        for name in ("nanos", "int96"):
+            idx = MicroBlockIndex.build_from_files([str(tmp_path / f"{name}.parquet")])
+            got, want = read_block(spark, idx, 0), load_table(spark, str(tmp_path), name)
+            assert got.schema["ts"].dataType.typeName() == "timestamp"
+            assert got.schema == want.schema
+            assert _rows(got) == _rows(want)
+            assert [r["ts"] for r in _rows(got)] == [
+                dt.datetime(2020, 9, 13, 12, 26, 40, 123456),
+                dt.datetime(1969, 12, 31, 23, 59, 59, 999999),
+                None,
+            ]
+
+
+def _masked_sums(path: str, rg: int, first_row: int, deleted: set) -> tuple[int, int]:
+    t = pq.ParquetFile(path).read_row_group(rg, columns=["k"])
+    keep = [v for i, v in enumerate(t.column(0).to_pylist()) if first_row + i not in deleted]
+    return len(keep), sum(keep)
+
+
+class TestDeletionVectors:
+    def test_dv_positions_offset_by_row_group(self, spark, tmp_path):
+        path = str(tmp_path / "rg.parquet")
+        pq.write_table(pa.table({"k": list(range(1000))}), path, row_group_size=250)
+        idx = MicroBlockIndex.build_from_files([path])
+        deleted = {0, 249, 250, 251, 600, 999}
+        idx.dvs = {path: tuple(sorted(deleted))}
+        for b in range(4):
+            got = read_block(spark, idx, b).agg(F.count(F.lit(1)), F.sum("k")).first()
+            assert tuple(got) == _masked_sums(path, b, 250 * b, deleted)
+
+    def test_blocks_serve_the_rows_of_the_version(self, spark, tmp_path):
+        store = ManifestStore(str(tmp_path / "m"))
+        init_manifest_table(spark, store, spark.range(1000).withColumnRenamed("id", "k")
+                            .coalesce(1), block_rows=250)
+        rep = delete_where_mor(spark, store, "k % 100 = 7")
+        assert rep["mode"] == "mor" and rep["deleted"] == 10
+        cache = BlockCache(capacity=8)
+        eng = MicroBlockEngine(spark, cache=cache)
+        eng.register_manifest("dv", store)
+        blocks = [read_block(spark, eng.index, b) for b in range(eng.index.num_blocks)]
+        assert eng.index.num_blocks == 4
+        assert sum(df.count() for df in blocks) == 990
+        served = sorted(r["k"] for r in eng.table("dv").collect())
+        assert sorted(r["k"] for df in blocks for r in df.collect()) == served
+
+        # a new DV on one file drops exactly that file's cached block
+        for b, df in enumerate(blocks):
+            cache.put(b, df)
+        file0 = eng.index.block_file(0)
+        k0 = min(r["k"] for r in blocks[0].collect())
+        delete_where_mor(spark, store, f"k = {k0}")
+        eng.register_manifest("dv", store)
+        assert eng.index.block_file(0) == file0
+        assert cache.cached_ids() == [1, 2, 3]
+        assert read_block(spark, eng.index, 0).count() == blocks[0].count() - 1

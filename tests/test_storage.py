@@ -32,25 +32,23 @@ class TestBlockCache:
         assert c.get(1) == "a2"
         assert c.evictions == 0
 
-    def test_reput_swaps_persistence(self, spark, sf_dir):
-        # Replace path (reference C2 semantics, block_cache.py:27-44):
-        # the displaced DataFrame must be unpersisted and the
-        # replacement persisted, so re-put neither leaks
-        # BlockManager storage nor leaves an unpersisted "hit".
-        c = BlockCache(capacity=2)
+    def test_put_and_evict_leave_storage_alone(self, spark, sf_dir):
+        # A cached block already lives in the driver (read_block), so
+        # the cache only holds references: put persists nothing, and
+        # replacing or evicting a value never unpersists it, even one
+        # its caller persisted.
+        c = BlockCache(capacity=1)
         old = spark.read.parquet(f"{sf_dir}/region.parquet")
-        new = spark.read.parquet(f"{sf_dir}/nation.parquet")
+        new = spark.read.parquet(f"{sf_dir}/nation.parquet").persist()
         c.put(1, old)
-        assert old.storageLevel.useMemory
-        c.put(1, new)
-        assert not old.storageLevel.useMemory      # displaced: unpersisted
-        assert new.storageLevel.useMemory          # replacement: persisted
-        assert c.get(1) is new
-        # re-putting the SAME DataFrame must not unpersist it
-        c.put(1, new)
+        assert not old.storageLevel.useMemory
+        c.put(1, new)                              # replace
+        assert c.get(1) is new and c.evictions == 0
+        c.put(2, old)                              # evicts block 1
+        assert c.cached_ids() == [2] and c.evictions == 1
         assert new.storageLevel.useMemory
-        c.remove(1)
-        assert not new.storageLevel.useMemory
+        assert not old.storageLevel.useMemory
+        new.unpersist()
 
     def test_stats_surface(self):
         c = BlockCache(capacity=4)
