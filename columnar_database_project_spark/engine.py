@@ -384,9 +384,10 @@ class MicroBlockEngine:
         are positions in sorted file order, so a commit renumbers them.
         An attached cache therefore drops each cached id that names a
         different (file, row group) in the new index than in the old
-        one, or whose file's deletion vector changed (a cached block
-        holds the rows its DV left); ids that still name the same block
-        under the same DV stay cached.
+        one, or whose file's deletion vector or the version's schema
+        changed (a cached block holds the rows its DV left, in the
+        columns its schema named); ids that still name the same block
+        under the same DV and schema stay cached.
         ``blooms``: optional Bloom sidecar to attach for point-lookup
         prediction."""
         from columnar_database_project_spark.sources.index import (
@@ -405,7 +406,7 @@ class MicroBlockEngine:
 
                 def names(ix, b):
                     key = ix.block_key(b) if ix is not None else None
-                    return key, key and ix.dvs.get(key[0])
+                    return key and (key, ix.dvs.get(key[0]), ix.schema_json)
 
                 for b in self.cache.cached_ids():
                     if names(self.index, b) != names(idx, b):

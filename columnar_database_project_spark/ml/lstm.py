@@ -9,8 +9,24 @@ multi-hot labels + BCE-with-logits, Adam lr 1e-3, batch 32, 10 epochs.
 
 PyTorch is not available in this container, so forward + BPTT + Adam
 are implemented directly in numpy. The model is tiny (vocab ≈ number
-of distinct blocks, ~10³) and lives on the Spark DRIVER — inference is
-a few matmuls per prediction; nothing here touches the data plane.
+of distinct blocks, ~10³) and lives on the Spark DRIVER; nothing here
+touches the data plane.
+
+Two forward kernels, one per shape of work:
+
+- ``forward`` is the batched training/evaluation path. Its products are
+  BLAS matmuls over a padded batch, which is what ``fit`` and
+  ``evaluate`` want.
+- ``predict`` is the one-sequence foreground path the prefetch
+  scheduler calls once per cycle. Its products are vector–matrix
+  products of at most 64×256 (and 64×vocab), computed with
+  ``np.einsum`` in numpy's own loops, so it makes no BLAS call. A
+  threaded BLAS hands even a (1, 64) @ (64, 256) product to its worker
+  pool, and the workers then busy-wait (~130 ms on OpenBLAS) after the
+  call returns: on 4 cores one 64-step ``forward([seq])`` cost about
+  390 ms of CPU across a 200 ms sleep, ``predict`` about 2 ms. The two
+  kernels give bit-identical logits for one sequence
+  (``tests/test_lstm_inference.py``).
 """
 
 from __future__ import annotations
@@ -107,6 +123,28 @@ class LSTMPrefetcher:
         if cache:
             return logits, dict(steps=steps, h_last=h, x=x, lengths=lengths)
         return logits
+
+    def predict(self, seq: list[int]) -> np.ndarray:
+        """Logits (V,) for one sequence, with no BLAS call: the same
+        arithmetic as ``forward([seq])[0]`` (every step is valid, so no
+        mask), with each product done by ``np.einsum``."""
+        p = self.params
+        H = self.hidden_dim
+        h = np.zeros(H)
+        c = np.zeros(H)
+        for emb in p["E"][np.asarray(seq, dtype=np.int64)]:
+            z = (
+                np.einsum("d,dg->g", emb, p["Wx"])
+                + np.einsum("h,hg->g", h, p["Wh"])
+                + p["b"]
+            )
+            i_g = _sigmoid(z[:H])
+            f_g = _sigmoid(z[H : 2 * H])
+            g_g = np.tanh(z[2 * H : 3 * H])
+            o_g = _sigmoid(z[3 * H :])
+            c = f_g * c + i_g * g_g
+            h = o_g * np.tanh(c)
+        return np.einsum("h,hv->v", h, p["Wy"]) + p["by"]
 
     # ----------------------------------------------------------- training
     def train_step(

@@ -3,8 +3,10 @@
 Re-expresses reference prefetch_scheduler.py:36-182: load model +
 mappings, keep a per-query ring buffer of recent accesses, and suggest
 top-K blocks to prefetch — encode the last ≤64 ids (dropping unknowns;
-need ≥3 left, reference :110), forward pass, mask the pad logit,
-sigmoid, top-k, drop cached/unknown ids.
+need ≥3 left, reference :110), score them with the model's
+one-sequence ``predict`` (no BLAS call, so a cycle leaves no BLAS
+workers spinning), mask the pad logit, sigmoid, top-k, drop
+cached/unknown ids.
 """
 
 from __future__ import annotations
@@ -61,7 +63,7 @@ class PrefetchScheduler:
         enc = [self.id2idx[b] for b in seq[-MAX_SEQ:] if b in self.id2idx]
         if len(enc) < MIN_HISTORY:
             return None
-        logits = self.model.forward([enc])[0]
+        logits = self.model.predict(enc)
         logits[PAD] = -1e9
         probs = 1.0 / (1.0 + np.exp(-np.clip(logits, -60, 60)))
         exclude = exclude_blocks or set()

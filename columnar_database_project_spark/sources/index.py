@@ -224,6 +224,9 @@ class MicroBlockIndex:
         # file → deleted row positions (a manifest version's deletion
         # vectors, ``for_version``); read_block drops them
         self.dvs: dict[str, tuple[int, ...]] = {}
+        # the version's Spark schema JSON (``for_version``); read_block
+        # serves its columns, in its order, instead of the footer's
+        self.schema_json: str | None = None
 
     # ------------------------------------------------------------- build
     @classmethod
@@ -311,12 +314,14 @@ class MicroBlockIndex:
         zone-map records its manifest holds — no footer is opened.
         Block ids are those of ``build_from_files(snapshot.files)``:
         sorted file order, then row group. The snapshot's deletion
-        vectors are kept (``dvs``), so ``read_block`` serves the rows the
-        version serves."""
+        vectors are kept (``dvs``), and so is its schema
+        (``schema_json``), so ``read_block`` serves the rows and the
+        columns the version serves."""
         idx = cls.from_records(
             ((f, snapshot.blocks[f]) for f in snapshot.files), table_id=table_id
         )
         idx.dvs = snapshot.dvs
+        idx.schema_json = snapshot.schema_json
         return idx
 
     @classmethod

@@ -22,11 +22,12 @@ import json
 from contextlib import contextmanager
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
 
 from columnar_database_project_spark.catalog import micros_timestamps
 from columnar_database_project_spark.sources.index import MicroBlockIndex
@@ -97,9 +98,12 @@ def read_block(spark: SparkSession, index: MicroBlockIndex, block_id: int) -> Da
     vector for the file are dropped: DV positions count rows of the
     file, so they are offset by the row group's first row. Nanosecond
     timestamps (INT96, TIMESTAMP(NANOS)) are truncated to microseconds
-    as ``catalog.load_table`` does. The Spark schema is the one Spark
-    wrote into the footer when there is one, else the Arrow schema's,
-    every column nullable as Spark's own reader makes it.
+    as ``catalog.load_table`` does. The Spark schema is the index's
+    version schema when it has one (``MicroBlockIndex.for_version``):
+    its columns in its order, and a column the file lacks (a
+    metadata-only ``add_column``) as typed nulls. Otherwise it is the
+    one Spark wrote into the footer when there is one, else the Arrow
+    schema's. Every column is nullable, as Spark's own reader makes it.
 
     Below ``spark.sql.execution.arrow.localRelationThreshold`` Spark
     keeps the block as a ``LocalRelation``: building it runs no job, and
@@ -128,11 +132,21 @@ def read_block(spark: SparkSession, index: MicroBlockIndex, block_id: int) -> Da
         keep[pos[(pos >= 0) & (pos < table.num_rows)]] = False
         table = table.filter(keep)
     table = micros_timestamps(table)
-    schema = (
-        T.StructType.fromJson(json.loads(spark_schema))
-        if spark_schema
-        else from_arrow_schema(table.schema)
-    )
+    if index.schema_json:
+        schema = T.StructType.fromJson(json.loads(index.schema_json))
+        table = pa.table(
+            [
+                table.column(f.name)
+                if f.name in table.column_names
+                else pa.nulls(table.num_rows, to_arrow_type(f.dataType))
+                for f in schema
+            ],
+            names=schema.names,
+        )
+    elif spark_schema:
+        schema = T.StructType.fromJson(json.loads(spark_schema))
+    else:
+        schema = from_arrow_schema(table.schema)
     schema = T.StructType(
         [T.StructField(f.name, f.dataType, True, f.metadata) for f in schema]
     )

@@ -480,8 +480,14 @@ def _update_cow(
     new_files: list[str] = []
     updated = 0
     if touched:
-        target = snap.read(spark, touched)
+        from pyspark.sql import Observation
+
+        # the rewrite counts the updated rows: no separate count job
+        observed = Observation()
         cond = _cond(predicate)
+        target = snap.read(spark, touched).observe(
+            observed, F.count_if(cond).alias("updated")
+        )
         types = dict(target.dtypes)
         cols = []
         for c in target.columns:
@@ -495,10 +501,10 @@ def _update_cow(
                 )
             else:
                 cols.append(F.col(c))
-        updated = target.filter(cond).count()
         MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(
             target.select(*cols), stage
         )
+        updated = observed.get["updated"]
         new_files = list_block_files(stage)
     store.commit(snap, v, new_files, carried)
     return {

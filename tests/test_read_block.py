@@ -1,6 +1,7 @@
 """The block contract of ``sources/microblock.read_block``: one block,
 read with pyarrow into the driver, equal to what Spark's own reader
-serves for that block, with the version's deletion vectors applied."""
+serves for that block, with the version's deletion vectors applied and
+the version's columns served."""
 
 from __future__ import annotations
 
@@ -17,8 +18,12 @@ from columnar_database_project_spark.engine import MicroBlockEngine
 from columnar_database_project_spark.sources.index import MicroBlockIndex
 from columnar_database_project_spark.sources.microblock import MicroBlockWriter, read_block
 from columnar_database_project_spark.storage.block_cache import BlockCache
-from columnar_database_project_spark.storage.cow import delete_where_mor, init_manifest_table
-from columnar_database_project_spark.storage.manifests import ManifestStore
+from columnar_database_project_spark.storage.cow import (
+    delete_where_mor,
+    init_manifest_table,
+    update_where_cow,
+)
+from columnar_database_project_spark.storage.manifests import ManifestStore, spark_file_name
 
 TYPED_SQL = """
 SELECT id AS k,
@@ -149,3 +154,40 @@ class TestDeletionVectors:
         assert eng.index.block_file(0) == file0
         assert cache.cached_ids() == [1, 2, 3]
         assert read_block(spark, eng.index, 0).count() == blocks[0].count() - 1
+
+
+class TestVersionSchema:
+    def test_blocks_serve_the_columns_of_the_version(self, spark, tmp_path):
+        """After a metadata-only ``add_column`` a block has the version's
+        columns, the added one as typed nulls until a rewrite writes it,
+        and the cache drops the blocks it held under the old schema."""
+        store = ManifestStore(str(tmp_path / "m"))
+        init_manifest_table(spark, store, spark.range(100).withColumnRenamed("id", "k")
+                            .coalesce(1), block_rows=25)
+        cache = BlockCache(capacity=8)
+        eng = MicroBlockEngine(spark, cache=cache)
+        eng.register_manifest("evolved", store)
+        for b in range(eng.index.num_blocks):
+            cache.put(b, read_block(spark, eng.index, b))
+        store.add_column("note", "string")
+        eng.register_manifest("evolved", store)
+        assert cache.cached_ids() == []
+
+        def check(n_blocks):
+            snap = store.snapshot()
+            table = snap.read(spark)
+            assert eng.index.num_blocks == n_blocks
+            for b in range(n_blocks):
+                got = read_block(spark, eng.index, b)
+                assert got.columns == table.columns == ["k", "note"]
+                assert got.schema == table.schema
+                name = spark_file_name(eng.index.block_file(b))
+                assert _rows(got) == _rows(table.where(F.col("_metadata.file_name") == name))
+
+        check(4)
+        assert all(r["note"] is None for r in read_block(spark, eng.index, 0).collect())
+        update_where_cow(spark, store, "k < 10", {"note": "'hi'"})
+        eng.register_manifest("evolved", store)
+        check(4)
+        notes = [r["note"] for b in range(4) for r in read_block(spark, eng.index, b).collect()]
+        assert sorted(n for n in notes if n) == ["hi"] * 10

@@ -6,7 +6,8 @@ the manifests pin that, a commit whose base is no longer the head
 raises instead of publishing over it (interleavings staged with a
 monkeypatched ``MicroBlockWriter.write``, as tests/test_crash_injection.py
 stages crashes), the CoW delete counts its rows from zone-map records
-instead of scanning, and ``merge_mor``'s fallback to CoW repeats no
+instead of scanning, the CoW update counts its rows inside its rewrite,
+and ``merge_mor``'s fallback to CoW repeats no
 work. ``vacuum``'s dry run reports exactly what the real run removes.
 """
 
@@ -173,6 +174,24 @@ class TestSpareJobs:
         assert rep["deleted"] == 8 and rep["files_rewritten"] == 1
         assert len(jobs) <= 3, jobs
         assert store.read(spark).count() == 3990
+
+    def test_update_where_cow_counts_inside_its_write(self, spark, tmp_path):
+        """A 10-row update on a 4-file table is one job, the rewrite:
+        the updated rows are counted by the write, DV'd rows of the
+        touched file excluded."""
+        store = _store(spark, tmp_path / "t", _orders(0, 4000), 1000)
+        delete_where_mor(spark, store, f"{KEY} IN (3, 7)")
+        rep = {}
+        jobs = jobs_run(
+            spark,
+            lambda: rep.update(
+                update_where_cow(spark, store, f"{KEY} < 10", {"o_orderstatus": "'X'"})
+            ),
+        )
+        assert rep["updated"] == 8 and rep["files_rewritten"] == 1
+        assert len(jobs) == 1, jobs
+        got = store.read(spark).where("o_orderstatus = 'X'").collect()
+        assert sorted(r[KEY] for r in got) == [0, 1, 2, 4, 5, 6, 8, 9]
 
     def test_merge_mor_fallback_repeats_no_work(self, spark, tmp_path):
         """The fallback runs the jobs of a direct ``merge_cow`` plus at
