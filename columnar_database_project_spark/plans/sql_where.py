@@ -16,15 +16,17 @@ descent parser covering exactly the pruning language (SURVEY §2.2):
              | col [NOT] IN '(' literal (',' literal)* ')'
              | col IS [NOT] NULL
 
-Anything outside this grammar raises ``WhereParseError`` and callers
-fall back to scan-all (the reference's parse-failure behavior,
-query_enginev5.py:77-85). Literals follow the reference's int / float /
-string lattice (query_enginev5.py:222-230).
+Anything outside this grammar raises ``WhereParseError``.
+``parse_conjuncts`` then keeps the top-level ``AND`` conjuncts that do
+parse, and falls back to scan-all only when none does (the reference's
+parse-failure behavior, query_enginev5.py:77-85). Literals follow the
+reference's int / float / string lattice (query_enginev5.py:222-230).
 """
 
 from __future__ import annotations
 
 import re
+from functools import reduce
 
 from columnar_database_project_spark.plans.predicate import (
     And,
@@ -210,6 +212,78 @@ def parse_where(clause: str) -> Pred:
     return _Parser(toks).parse()
 
 
+# A quoted literal or identifier, a word, a parenthesis, or any other
+# character (a lone quote is an unterminated literal).
+_SPLIT_TOKEN_RE = re.compile(
+    r"""'(?:[^']|'')*'|"(?:[^"]|"")*"|`[^`]*`|[A-Za-z_][A-Za-z_0-9]*|.""",
+    re.DOTALL,
+)
+# Words that end a boolean expression: outside parentheses they mean the
+# text runs on into more of a query (a set operation, another clause).
+_CLAUSE_WORDS = {
+    "SELECT", "FROM", "WHERE", "JOIN", "UNION", "INTERSECT", "EXCEPT",
+    "MINUS", "GROUP", "ORDER", "HAVING", "LIMIT", "WINDOW",
+}
+
+
+def _top_level_conjuncts(clause: str) -> list[str] | None:
+    """The texts of ``clause``'s top-level ``AND`` conjuncts, or None
+    when it cannot be split soundly: a top-level ``OR`` (``a AND b OR
+    c`` is ``(a AND b) OR c``), a query word outside parentheses, or an
+    unbalanced parenthesis, ``CASE`` or quote. Text inside literals,
+    parentheses and ``CASE … END`` is not split, and the ``AND`` of a
+    ``BETWEEN`` stays in its conjunct."""
+    parts: list[str] = []
+    start = depth = 0
+    between = False
+    for m in _SPLIT_TOKEN_RE.finditer(clause):
+        tok = m.group()
+        word = tok.upper()
+        if tok in ("'", '"', "`"):
+            return None
+        if tok == "(" or word == "CASE":
+            depth += 1
+        elif tok == ")" or word == "END":
+            depth -= 1
+            if depth < 0:
+                return None
+        elif depth == 0:
+            if word == "OR" or word in _CLAUSE_WORDS:
+                return None
+            if word == "BETWEEN":
+                between = True
+            elif word == "AND":
+                if between:
+                    between = False
+                else:
+                    parts.append(clause[start:m.start()])
+                    start = m.end()
+    if depth:
+        return None
+    parts.append(clause[start:])
+    return parts
+
+
+def parse_conjuncts(clause: str) -> Pred:
+    """``clause`` → predicate AST for pruning, never raising.
+
+    A clause outside the grammar keeps its top-level ``AND`` conjuncts
+    that parse, ``And``-ed together; dropping a conjunct only widens the
+    predicate, so pruning with the rest stays sound. ``TruePred`` (scan
+    all) when none parses or the clause cannot be split."""
+    try:
+        return parse_where(clause)
+    except WhereParseError:
+        pass
+    preds = []
+    for part in _top_level_conjuncts(clause) or ():
+        try:
+            preds.append(parse_where(part))
+        except WhereParseError:
+            continue
+    return reduce(And, preds) if preds else TruePred()
+
+
 _WHERE_SPLIT_RE = re.compile(
     r"\bWHERE\b(.*?)(?:\bGROUP\s+BY\b|\bORDER\s+BY\b|\bHAVING\b|\bLIMIT\b|\bWINDOW\b|$)",
     re.IGNORECASE | re.DOTALL,
@@ -219,14 +293,11 @@ _WHERE_SPLIT_RE = re.compile(
 def extract_where(sql: str) -> Pred:
     """Extract and parse the (first) WHERE clause of a SQL string.
 
-    No WHERE, or a clause outside the supported grammar → TruePred
-    (scan all), matching the reference's fallback
-    (query_enginev5.py:77-85).
+    No WHERE, or no top-level conjunct inside the supported grammar →
+    TruePred (scan all), matching the reference's fallback
+    (query_enginev5.py:77-85); see ``parse_conjuncts``.
     """
     m = _WHERE_SPLIT_RE.search(sql)
     if not m:
         return TruePred()
-    try:
-        return parse_where(m.group(1).strip())
-    except WhereParseError:
-        return TruePred()
+    return parse_conjuncts(m.group(1).strip())

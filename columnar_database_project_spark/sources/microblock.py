@@ -19,6 +19,7 @@ scan-oriented tables, with 16_384 available for cache-oriented parity.
 from __future__ import annotations
 
 import json
+import threading
 from contextlib import contextmanager
 
 import numpy as np
@@ -36,6 +37,8 @@ REFERENCE_BLOCK_ROWS = 16_384    # reference microblock_writer.py:5
 DEFAULT_BLOCK_ROWS = 131_072     # reference benchmark2.py:242-243 guidance
 ROW_ID_COL = "_rid"
 _RANGE_SAMPLE_CONF = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+_LOCAL_RELATION_CONF = "spark.sql.execution.arrow.localRelationThreshold"
+_LOCAL_RELATION_LOCK = threading.Lock()
 
 
 class MicroBlockWriter:
@@ -105,11 +108,13 @@ def read_block(spark: SparkSession, index: MicroBlockIndex, block_id: int) -> Da
     one Spark wrote into the footer when there is one, else the Arrow
     schema's. Every column is nullable, as Spark's own reader makes it.
 
-    Below ``spark.sql.execution.arrow.localRelationThreshold`` Spark
-    keeps the block as a ``LocalRelation``: building it runs no job, and
-    the DataFrame no longer needs its file. ``coalesce(1)`` keeps a
-    consumer from splitting the small block into one task per core.
-    Raises ``KeyError`` for an id the index does not have."""
+    The DataFrame is planned over the block's Arrow IPC batches, held
+    in the driver (``_arrow_batch_relation``): building it runs no job,
+    the DataFrame no longer needs its file, and each consume decodes the
+    batches inside its task. ``coalesce(1)`` keeps a consumer from
+    splitting the small block into one task per batch, and from adding
+    an Exchange for the scan's unknown partitioning. Raises
+    ``KeyError`` for an id the index does not have."""
     key = index.block_key(block_id)
     if key is None:
         raise KeyError(block_id)
@@ -150,7 +155,38 @@ def read_block(spark: SparkSession, index: MicroBlockIndex, block_id: int) -> Da
     schema = T.StructType(
         [T.StructField(f.name, f.dataType, True, f.metadata) for f in schema]
     )
-    return spark.createDataFrame(table, schema).coalesce(1)
+    with _arrow_batch_relation(spark):
+        df = spark.createDataFrame(table, schema)
+    return df.coalesce(1)
+
+
+@contextmanager
+def _arrow_batch_relation(spark: SparkSession):
+    """Inside the ``with`` body, ``createDataFrame`` of an Arrow table or
+    pandas frame plans a scan of its Arrow batches (a ``LogicalRDD``
+    over a driver-side collection) instead of a ``LocalRelation`` of
+    rows; a table with no batches still gets an empty ``LocalRelation``.
+
+    Spark picks the RDD path when the batches' bytes exceed
+    ``spark.sql.execution.arrow.localRelationThreshold``, so the body
+    runs with it at 0 and the previous value (unset when it was unset)
+    is restored after. A ``LocalRelation`` holds every row in the plan,
+    and each analyzer and optimizer pass over a query on it walks them;
+    the RDD scan holds none. Small frames outside the body keep their
+    ``LocalRelation`` and its size statistics. The conf is
+    session-wide: while the module lock is held, a ``createDataFrame``
+    another thread runs in the same session also takes the RDD path.
+    Its rows are the same."""
+    with _LOCAL_RELATION_LOCK:
+        prev = spark.conf.get(_LOCAL_RELATION_CONF, None)
+        spark.conf.set(_LOCAL_RELATION_CONF, "0")
+        try:
+            yield
+        finally:
+            if prev is None:
+                spark.conf.unset(_LOCAL_RELATION_CONF)
+            else:
+                spark.conf.set(_LOCAL_RELATION_CONF, prev)
 
 
 def write_with_row_ids(

@@ -3,11 +3,11 @@
 Re-expresses the reference's ``BlockCache`` (OrderedDict LRU of
 block_id → Arrow table, reference block_cache.py:5-63). The cached
 value is what ``sources/microblock.read_block`` returns: a small
-DataFrame whose rows pyarrow already read into the driver (a Spark
-``LocalRelation``), so a hit re-reads no file, and neither ``put`` nor
-eviction runs a Spark job: eviction just drops the reference. Cached
-blocks therefore live in driver memory (capacity × block bytes; see
-DEPLOY.md).
+DataFrame over the block's Arrow IPC batches, which pyarrow already
+read into the driver, so a hit re-reads no file, and neither ``put``
+nor eviction runs a Spark job: eviction just drops the reference.
+Cached blocks therefore live in driver memory (capacity × block bytes;
+see DEPLOY.md).
 
 Deliberate fix over the reference: all mutation happens under a lock —
 the reference shares its cache between the query path and the prefetch

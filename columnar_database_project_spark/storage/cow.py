@@ -37,10 +37,7 @@ from columnar_database_project_spark.plans.predicate import (
     Pred,
     TruePred,
 )
-from columnar_database_project_spark.plans.sql_where import (
-    WhereParseError,
-    parse_where,
-)
+from columnar_database_project_spark.plans.sql_where import parse_conjuncts
 from columnar_database_project_spark.sources.index import MicroBlockIndex
 from columnar_database_project_spark.sources.microblock import (
     DEFAULT_BLOCK_ROWS,
@@ -72,17 +69,14 @@ MOR_DV_MAX_ROWS = 1_048_576
 
 
 def _pred_of(predicate) -> Pred:
-    """Boolean SQL string → Pred; outside the grammar, or a Column
-    (opaque to the parser) → TruePred (sound: every block becomes
-    touched)."""
+    """Boolean SQL string → Pred of its top-level conjuncts inside the
+    grammar (``parse_conjuncts``); none of them, or a Column (opaque to
+    the parser) → TruePred (sound: every block becomes touched)."""
     if isinstance(predicate, Pred):
         return predicate
     if not isinstance(predicate, str):
         return TruePred()
-    try:
-        return parse_where(predicate)
-    except WhereParseError:
-        return TruePred()
+    return parse_conjuncts(predicate)
 
 
 def _live(store: ManifestStore) -> Snapshot:

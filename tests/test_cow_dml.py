@@ -177,6 +177,27 @@ class TestChangeProportionalIO:
         assert df.count() == before
 
 
+class TestConjunctPruning:
+    def test_unparseable_conjunct_keeps_the_rest(self, spark, orders_df, tmp_path):
+        """A conjunct outside the pruning grammar (``%``) is dropped, not
+        the whole WHERE: the ``BETWEEN`` still confines the rewrite to
+        the one file its keys sit in."""
+        model = DuckModel(orders_df.toPandas())
+        store = ManifestStore(str(tmp_path / "m"))
+        n = orders_df.count()
+        init_manifest_table(
+            spark, store, orders_df.orderBy(KEY).coalesce(1), block_rows=-(-n // 4)
+        )
+        assert len(store.files_for()) == 4
+        pred = f"{KEY} BETWEEN 30 AND 40 AND {KEY} % 2 = 1"
+        model.update(pred, "o_orderstatus", "'U'")
+        rep = update_where_cow(spark, store, pred, {"o_orderstatus": "'U'"})
+        assert rep["files_rewritten"] == 1 and rep["files_carried"] == 3
+        want = model.state()
+        assert rep["updated"] == sum(1 for r in want if r[2] == "U") > 0
+        assert states_equal(sorted_state(store.read(spark).toPandas()), want)
+
+
 class TestTimeTravelAndVacuum:
     def test_every_version_reads_and_empty_table_reads(
         self, spark, orders_df, tmp_path_factory

@@ -18,6 +18,7 @@ from columnar_database_project_spark.plans.predicate import (
 from columnar_database_project_spark.plans.sql_where import (
     WhereParseError,
     extract_where,
+    parse_conjuncts,
     parse_where,
 )
 
@@ -192,3 +193,51 @@ class TestWhereParser:
 
     def test_extract_unparseable_falls_back(self):
         assert extract_where("SELECT * FROM t WHERE my_udf(a) = 3") == TruePred()
+
+    def test_extract_keeps_parseable_conjuncts(self):
+        p = extract_where("SELECT * FROM t WHERE a % 2 = 1 AND b = 3 ORDER BY a")
+        assert p == Cmp("=", "b", 3)
+
+
+class TestConjuncts:
+    """``parse_conjuncts`` drops only the top-level AND conjuncts the
+    grammar does not cover."""
+
+    def test_whole_clause_in_grammar_is_parse_where(self):
+        c = "a BETWEEN 1 AND 2 AND (b = 1 OR b = 2)"
+        assert parse_conjuncts(c) == parse_where(c)
+
+    def test_unparseable_conjunct_is_dropped(self):
+        assert parse_conjuncts("k BETWEEN 30 AND 31 AND k % 2 = 5") == Between("k", 30, 31)
+        assert parse_conjuncts("a = 1 AND lower(s) = 'x' AND b < 2") == And(
+            Cmp("=", "a", 1), Cmp("<", "b", 2)
+        )
+
+    def test_between_only(self):
+        # the AND of each BETWEEN stays inside its conjunct
+        assert parse_conjuncts(
+            "a BETWEEN 1 AND 2 AND k % 2 = 0 AND a NOT BETWEEN 5 AND 6"
+        ) == And(Between("a", 1, 2), Not(Between("a", 5, 6)))
+        assert parse_conjuncts("k % 2 BETWEEN 0 AND 1") == TruePred()
+
+    def test_top_level_or_is_not_split(self):
+        # a AND b OR c is (a AND b) OR c: a alone would prune c's rows
+        assert parse_conjuncts("a = 1 AND k % 2 = 0 OR b = 3") == TruePred()
+        assert parse_conjuncts("(a = 1 OR b = 3) AND k % 2 = 0") == Or(
+            Cmp("=", "a", 1), Cmp("=", "b", 3)
+        )
+
+    def test_and_inside_literals_parens_and_case_is_not_split(self):
+        assert parse_conjuncts("s = 'x AND y' AND k % 2 = 0") == Cmp("=", "s", "x AND y")
+        assert parse_conjuncts("(a = 1 AND k % 2 = 0) AND b = 2") == Cmp("=", "b", 2)
+        assert parse_conjuncts(
+            "CASE WHEN a = 1 AND b = 2 THEN false ELSE true END AND c = 3"
+        ) == Cmp("=", "c", 3)
+
+    def test_text_that_runs_past_the_clause_is_not_split(self):
+        for c in (
+            "a = 1 AND k % 2 = 0 UNION ALL SELECT * FROM t WHERE b = 2",
+            "a = 1 AND k % 2 = 0) AS x",
+            "a = 1 AND s = 'open",
+        ):
+            assert parse_conjuncts(c) == TruePred()

@@ -191,3 +191,89 @@ class TestVersionSchema:
         check(4)
         notes = [r["note"] for b in range(4) for r in read_block(spark, eng.index, b).collect()]
         assert sorted(n for n in notes if n) == ["hi"] * 10
+
+
+_THRESHOLD = "spark.sql.execution.arrow.localRelationThreshold"
+
+
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+class TestArrowBatchRelation:
+    """A block is planned over its Arrow batches (a ``LogicalRDD`` that
+    holds no rows), and the threshold conf that selects that path is
+    the same after the call as before it."""
+
+    @pytest.fixture(scope="class")
+    def idx(self, spark, tmp_path_factory):
+        path = str(tmp_path_factory.mktemp("arrow_rel") / "rg.parquet")
+        pq.write_table(pa.table({"k": list(range(2000)), "s": [f"v{i}" for i in range(2000)]}),
+                       path, row_group_size=100)
+        return MicroBlockIndex.build_from_files([path])
+
+    def test_plan_has_no_local_relation(self, spark, idx):
+        plan = _analyzed(read_block(spark, idx, 3))
+        assert "LogicalRDD" in plan
+        assert "LocalRelation" not in plan
+
+    @pytest.mark.parametrize("before", [None, "1MB"])
+    def test_threshold_conf_is_restored(self, spark, idx, before):
+        if before is not None:
+            spark.conf.set(_THRESHOLD, before)
+        try:
+            read_block(spark, idx, 0)
+            assert spark.conf.get(_THRESHOLD, None) == before
+        finally:
+            spark.conf.unset(_THRESHOLD)
+
+    def test_later_pandas_frames_keep_local_relation(self, spark, idx):
+        import pandas as pd
+
+        read_block(spark, idx, 0)
+        assert "LocalRelation" in _analyzed(spark.createDataFrame(pd.DataFrame({"a": [1, 2]})))
+
+    def test_concurrent_reads(self, spark, idx):
+        """Threads racing on the session conf: every block is still an
+        Arrow-batch relation with pyarrow's checksums, and the conf is
+        restored (an unlocked set/restore can leave it at 0)."""
+        import sys
+        from concurrent.futures import ThreadPoolExecutor
+
+        def sums(b):
+            df = read_block(spark, idx, b)
+            row = df.agg(F.count(F.lit(1)), F.sum("k")).first()
+            return "LocalRelation" in _analyzed(df), tuple(row)
+
+        before = spark.conf.get(_THRESHOLD, None)
+        ids = list(range(idx.num_blocks))
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            with ThreadPoolExecutor(8) as pool:
+                got = [f.result(timeout=120) for f in [pool.submit(sums, b) for b in ids]]
+        finally:
+            sys.setswitchinterval(interval)
+        path = idx.block_file(0)
+        assert got == [(False, _masked_sums(path, b, 100 * b, set())) for b in ids]
+        assert spark.conf.get(_THRESHOLD, None) == before
+
+    def test_block_with_every_row_deleted(self, spark, tmp_path):
+        store = ManifestStore(str(tmp_path / "m"))
+        init_manifest_table(spark, store, spark.range(100).withColumnRenamed("id", "k")
+                            .withColumn("s", F.col("k").cast("string")).coalesce(1),
+                            block_rows=25)
+        rep = delete_where_mor(spark, store, "k < 25")
+        assert rep["mode"] == "mor" and rep["deleted"] == 25
+        eng = MicroBlockEngine(spark)
+        eng.register_manifest("gone", store)
+        schema = store.snapshot().read(spark).schema
+        counts = []
+        for b in range(eng.index.num_blocks):
+            df = read_block(spark, eng.index, b)
+            assert df.schema == schema
+            counts.append(df.count())
+            if counts[-1] == 0:
+                row = df.agg(F.count(F.lit(1)), F.sum("k")).first()
+                assert tuple(row) == (0, None)
+        assert sorted(counts) == [0, 25, 25, 25]
