@@ -18,6 +18,8 @@ import pyarrow.parquet as _pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from columnar_database_project_spark.session import scoped_conf
+
 TESTDATA_TABLES = (
     "region",
     "nation",
@@ -290,18 +292,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # into the relation at spark.read time (verified empirically:
         # actions on the returned DataFrame succeed after restore), so
         # restoring here never breaks the caller's OTHER parquet reads.
-        conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-        prev = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, "true")
         try:
-            df = spark.read.parquet(path)
+            with scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
+                df = spark.read.parquet(path)
         except Exception:
             return _load_via_pyarrow(spark, path)
-        finally:
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
     else:
         df = spark.read.parquet(path)
     for c in nanos_cols:

@@ -16,7 +16,9 @@ descent parser covering exactly the pruning language (SURVEY §2.2):
              | col [NOT] IN '(' literal (',' literal)* ')'
              | col IS [NOT] NULL
 
-Anything outside this grammar raises ``WhereParseError``.
+Anything outside this grammar raises ``WhereParseError``, and so does
+a backslash in a string literal: Spark reads it as an escape, and
+a literal read differently from Spark would prune rows it matches.
 ``parse_conjuncts`` then keeps the top-level ``AND`` conjuncts that do
 parse, and falls back to scan-all only when none does (the reference's
 parse-failure behavior, query_enginev5.py:77-85). Literals follow the
@@ -50,7 +52,7 @@ _TOKEN_RE = re.compile(
     r"""
     \s*(
         (?P<num>-?\d+\.\d+|-?\d+)
-      | (?P<str>'(?:[^']|'')*')
+      | (?P<str>'(?:[^'\\]|'')*')
       | (?P<op><=|>=|!=|<>|=|<|>)
       | (?P<lpar>\()
       | (?P<rpar>\))
@@ -229,17 +231,23 @@ _CLAUSE_WORDS = {
 def _top_level_conjuncts(clause: str) -> list[str] | None:
     """The texts of ``clause``'s top-level ``AND`` conjuncts, or None
     when it cannot be split soundly: a top-level ``OR`` (``a AND b OR
-    c`` is ``(a AND b) OR c``), a query word outside parentheses, or an
-    unbalanced parenthesis, ``CASE`` or quote. Text inside literals,
-    parentheses and ``CASE … END`` is not split, and the ``AND`` of a
-    ``BETWEEN`` stays in its conjunct."""
+    c`` is ``(a AND b) OR c``), a query word outside parentheses, an
+    unbalanced parenthesis, ``CASE`` or quote, a comment (``--``,
+    ``/*``) outside literals, or a backslash anywhere. Spark drops
+    comments and reads a backslash in a literal as an escape, so text
+    this splitter would take for a conjunct can be commented out or
+    quoted there. Text inside literals, parentheses and ``CASE … END``
+    is not split, and the ``AND`` of a ``BETWEEN`` stays in its
+    conjunct."""
+    if "\\" in clause:
+        return None
     parts: list[str] = []
     start = depth = 0
     between = False
     for m in _SPLIT_TOKEN_RE.finditer(clause):
         tok = m.group()
         word = tok.upper()
-        if tok in ("'", '"', "`"):
+        if tok in ("'", '"', "`") or clause.startswith(("--", "/*"), m.start()):
             return None
         if tok == "(" or word == "CASE":
             depth += 1

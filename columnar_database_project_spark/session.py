@@ -9,6 +9,7 @@ different master.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -86,6 +87,23 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Inside the ``with`` body the session conf ``key`` is ``value``;
+    after it the previous value is back, or the key is unset when it was
+    unset. The conf is session-wide: work another thread runs in the
+    same session meanwhile sees ``value`` too."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def input_bytes(sf_dir: str) -> int:

@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
 
 from columnar_database_project_spark.catalog import micros_timestamps
+from columnar_database_project_spark.session import scoped_conf
 from columnar_database_project_spark.sources.index import MicroBlockIndex
 
 REFERENCE_BLOCK_ROWS = 16_384    # reference microblock_writer.py:5
@@ -109,9 +110,9 @@ def read_block(spark: SparkSession, index: MicroBlockIndex, block_id: int) -> Da
     schema's. Every column is nullable, as Spark's own reader makes it.
 
     The DataFrame is planned over the block's Arrow IPC batches, held
-    in the driver (``_arrow_batch_relation``): building it runs no job,
-    the DataFrame no longer needs its file, and each consume decodes the
-    batches inside its task. ``coalesce(1)`` keeps a consumer from
+    in the driver; the plan itself holds no rows. Building it runs no
+    job, the DataFrame no longer needs its file, and each consume
+    decodes the batches inside its task. ``coalesce(1)`` keeps a consumer from
     splitting the small block into one task per batch, and from adding
     an Exchange for the scan's unknown partitioning. Raises
     ``KeyError`` for an id the index does not have."""
@@ -155,38 +156,17 @@ def read_block(spark: SparkSession, index: MicroBlockIndex, block_id: int) -> Da
     schema = T.StructType(
         [T.StructField(f.name, f.dataType, True, f.metadata) for f in schema]
     )
-    with _arrow_batch_relation(spark):
+    # A LocalRelation holds every row in the plan, and each analyzer and
+    # optimizer pass over a query on it walks them. Spark plans a scan of
+    # the Arrow batches instead (a LogicalRDD that holds none) when their
+    # bytes exceed the threshold, so it is 0 for this one call; frames
+    # made elsewhere keep their LocalRelation and its size statistics
+    # (an empty block has no batches and gets an empty one).
+    # While the lock is held, a createDataFrame another thread runs in
+    # the same session also takes the RDD path. Its rows are the same.
+    with _LOCAL_RELATION_LOCK, scoped_conf(spark, _LOCAL_RELATION_CONF, "0"):
         df = spark.createDataFrame(table, schema)
     return df.coalesce(1)
-
-
-@contextmanager
-def _arrow_batch_relation(spark: SparkSession):
-    """Inside the ``with`` body, ``createDataFrame`` of an Arrow table or
-    pandas frame plans a scan of its Arrow batches (a ``LogicalRDD``
-    over a driver-side collection) instead of a ``LocalRelation`` of
-    rows; a table with no batches still gets an empty ``LocalRelation``.
-
-    Spark picks the RDD path when the batches' bytes exceed
-    ``spark.sql.execution.arrow.localRelationThreshold``, so the body
-    runs with it at 0 and the previous value (unset when it was unset)
-    is restored after. A ``LocalRelation`` holds every row in the plan,
-    and each analyzer and optimizer pass over a query on it walks them;
-    the RDD scan holds none. Small frames outside the body keep their
-    ``LocalRelation`` and its size statistics. The conf is
-    session-wide: while the module lock is held, a ``createDataFrame``
-    another thread runs in the same session also takes the RDD path.
-    Its rows are the same."""
-    with _LOCAL_RELATION_LOCK:
-        prev = spark.conf.get(_LOCAL_RELATION_CONF, None)
-        spark.conf.set(_LOCAL_RELATION_CONF, "0")
-        try:
-            yield
-        finally:
-            if prev is None:
-                spark.conf.unset(_LOCAL_RELATION_CONF)
-            else:
-                spark.conf.set(_LOCAL_RELATION_CONF, prev)
 
 
 def write_with_row_ids(
@@ -318,12 +298,8 @@ def exact_range_bounds(spark: SparkSession, points_per_partition: int):
     are exact quantiles, and the layout depends on the data alone. The
     conf is session-wide: a range shuffle another thread runs in the
     same session meanwhile samples as much."""
-    prev = spark.conf.get(_RANGE_SAMPLE_CONF)
-    spark.conf.set(_RANGE_SAMPLE_CONF, str(points_per_partition))
-    try:
+    with scoped_conf(spark, _RANGE_SAMPLE_CONF, str(points_per_partition)):
         yield
-    finally:
-        spark.conf.set(_RANGE_SAMPLE_CONF, prev)
 
 
 def zorder_sorted(df: DataFrame, cols, n_parts: int) -> DataFrame:

@@ -197,6 +197,25 @@ class TestConjunctPruning:
         assert rep["updated"] == sum(1 for r in want if r[2] == "U") > 0
         assert states_equal(sorted_state(store.read(spark).toPandas()), want)
 
+    def test_commented_out_conjunct_does_not_narrow(self, spark, orders_df, tmp_path):
+        """Spark drops a ``--`` comment, so the conjunct after one must
+        not prune: the first file's key is deleted though the commented
+        text names a key of the last file."""
+        model = DuckModel(orders_df.toPandas())
+        store = ManifestStore(str(tmp_path / "m"))
+        n = orders_df.count()
+        init_manifest_table(
+            spark, store, orders_df.orderBy(KEY).coalesce(1), block_rows=-(-n // 4)
+        )
+        assert len(store.files_for()) == 4
+        keys = sorted(r[0] for r in orders_df.select(KEY).collect())
+        pred = f"{KEY} = {keys[0]} -- AND {KEY} = {keys[-1]}"
+        model.delete(pred)
+        delete_where_cow(spark, store, pred)
+        want = model.state()
+        assert len(want) == n - 1
+        assert states_equal(sorted_state(store.read(spark).toPandas()), want)
+
 
 class TestTimeTravelAndVacuum:
     def test_every_version_reads_and_empty_table_reads(

@@ -241,3 +241,24 @@ class TestConjuncts:
             "a = 1 AND s = 'open",
         ):
             assert parse_conjuncts(c) == TruePred()
+
+    def test_comments_and_backslashes_are_not_split(self):
+        # Spark drops a comment and reads \' as a quote inside the
+        # literal, so no "k = 99" below is a conjunct there
+        for c in (
+            "k = 5 -- AND k = 99",
+            "k % 2 = 1 /* AND k = 99 */",
+            "s = 'a\\' AND k = 99 AND \\''",
+        ):
+            assert parse_conjuncts(c) == TruePred()
+        # inside a literal, -- and /* are text
+        assert parse_conjuncts("s = 'a--b/*' AND k % 2 = 0") == Cmp("=", "s", "a--b/*")
+
+    def test_backslash_in_literal_is_not_parsed(self):
+        import pytest
+
+        # Spark reads 'a\\b' as a\b: a literal read otherwise prunes its rows
+        with pytest.raises(WhereParseError):
+            parse_where("s = 'a\\\\b'")
+        assert parse_conjuncts("s = 'a\\\\b' AND k = 1") == TruePred()
+        assert extract_where("SELECT * FROM t WHERE s = 'a\\\\b'") == TruePred()
