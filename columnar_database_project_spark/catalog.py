@@ -80,7 +80,7 @@ def micros_timestamps(table):
 # just to rebuild an identical scan relation. Keyed by session id so a
 # restarted session never sees stale relations, and by a file
 # freshness token (mtime+size) so a table REGENERATED at the same path
-# mid-session (bench replicas, rebuilt test fixtures) is re-read
+# mid-session (scale replicas, rebuilt test fixtures) is re-read
 # instead of served from the stale cached plan.
 _RELATION_CACHE: dict[tuple[int, str, tuple], DataFrame] = {}
 _CACHE_SWEEP_LEN = 512
@@ -143,105 +143,6 @@ def cache_put(cache: dict, key: tuple, value) -> None:
     sweep_cache(cache, sid)
 
 
-# Layout overrides: an optimized physical materialization (the
-# bucketed/sorted fact layout, sources/bucketed.py) registers a
-# replacement relation here, and EVERY consumer — the whole query
-# registry loads via load_table — reads it transparently. At 100 TB
-# the layout decision (bucket fact tables on their join key so
-# repeated fact-to-fact joins plan with zero Exchange) belongs to the
-# catalog, not to each query; this is the switch that makes it the
-# engine default for a table dir without touching any query. Keyed by
-# session id so overrides never leak across sessions. Values carry the
-# SOURCE table's freshness token from registration time: an override
-# is a derived copy of sf_dir/<name>.parquet, so if that source is
-# regenerated mid-session (bench replicas, rebuilt fixtures — the
-# _RELATION_CACHE case above) the copy is stale and lookup must fall
-# through to the fresh source rather than keep serving it.
-_LAYOUT_OVERRIDES: dict[
-    tuple[int, str, str], tuple[DataFrame, dict[str, tuple | None]]
-] = {}
-
-
-def _layout_source_token(sf_dir: str, name: str) -> tuple | None:
-    """Freshness token of the table the override was derived from
-    (None when no source file exists — a purely in-memory override
-    has nothing to go stale against)."""
-    for ext in ("parquet", "orc"):
-        p = os.path.join(sf_dir, f"{name}.{ext}")
-        if os.path.exists(p):
-            return file_freshness(os.path.realpath(p))
-    return None
-
-
-def set_layout_override(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    df: DataFrame,
-    sources: list[str] | None = None,
-) -> None:
-    """Serve ``df`` for every ``load_table(spark, sf_dir, name)`` —
-    until a source table regenerates, which invalidates it.
-
-    ``sources`` names the base tables the override was derived from;
-    defaults to ``[name]`` (a re-layout of the table itself). A
-    DERIVED relation — e.g. the denormalized orders⋈customer layout
-    leg — passes both parents so regeneration of either invalidates
-    the copy."""
-    src = sources if sources is not None else [name]
-    _LAYOUT_OVERRIDES[(id(spark), os.path.realpath(sf_dir), name)] = (
-        df,
-        {s: _layout_source_token(sf_dir, s) for s in src},
-    )
-
-
-def get_layout_override(
-    spark: SparkSession, sf_dir: str, name: str
-) -> DataFrame | None:
-    """The FRESH override DataFrame for the relation, or None.
-
-    Check-and-fetch in ONE call: query builders that decided the
-    rewrite via ``has_layout_override`` and then loaded the leg with a
-    second ``load_table`` call raced source regeneration between the
-    two — the second call would drop the now-stale override and fall
-    through to a nonexistent ``<derived>.parquet``, raising instead of
-    degrading to the flat plan (ADVICE r11). A stale entry is dropped
-    here and None returned; callers take the flat branch on None."""
-    okey = (id(spark), os.path.realpath(sf_dir), name)
-    entry = _LAYOUT_OVERRIDES.get(okey)
-    if entry is None:
-        return None
-    df, tokens = entry
-    if all(
-        tok == _layout_source_token(sf_dir, s) for s, tok in tokens.items()
-    ):
-        return df
-    # A source regenerated since the override was built: the derived
-    # copy is stale. Drop it; the next materialize_fact_layout call
-    # rebuilds from the new data.
-    del _LAYOUT_OVERRIDES[okey]
-    return None
-
-
-def has_layout_override(
-    spark: SparkSession, sf_dir: str, name: str
-) -> bool:
-    """True when a FRESH override is registered for the relation."""
-    return get_layout_override(spark, sf_dir, name) is not None
-
-
-def clear_layout_overrides(
-    spark: SparkSession | None = None, sf_dir: str | None = None
-) -> None:
-    """Drop overrides for a session and/or dir (None = all)."""
-    real = os.path.realpath(sf_dir) if sf_dir is not None else None
-    for k in list(_LAYOUT_OVERRIDES):
-        if (spark is None or k[0] == id(spark)) and (
-            real is None or k[1] == real
-        ):
-            del _LAYOUT_OVERRIDES[k]
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table from ``sf_dir`` (a file or a directory of parts).
 
@@ -257,9 +158,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     pyarrow read with truncation to microseconds before handing the
     batches to Spark.
     """
-    override = get_layout_override(spark, sf_dir, name)
-    if override is not None:
-        return override
     path = os.path.join(sf_dir, f"{name}.parquet")
     if not os.path.exists(path):
         # ORC fallback: a dir holding <name>.orc serves the same

@@ -64,8 +64,6 @@ class MicroBlockEngine:
         cache: "BlockCache | None" = None,
         logger: "AccessLogger | None" = None,
         history: "GlobalHistory | None" = None,
-        bucketed_facts: "dict[str, str] | bool | None" = None,
-        layout_path: str | None = None,
     ) -> None:
         self.spark = spark
         self.tables: dict[str, DataFrame] = {}
@@ -79,11 +77,6 @@ class MicroBlockEngine:
         self._result_cache_stats = {"hits": 0, "misses": 0, "bypassed": 0}
         if table_dir:
             self.tables = register_dir(spark, table_dir)
-            if bucketed_facts:
-                self.use_bucketed_facts(
-                    None if bucketed_facts is True else bucketed_facts,
-                    layout_path,
-                )
 
     # ------------------------------------------------------------- catalog
     def register(self, name: str, df: DataFrame) -> None:
@@ -99,65 +92,6 @@ class MicroBlockEngine:
 
     def table(self, name: str) -> DataFrame:
         return self.tables[name]
-
-    def use_bucketed_facts(
-        self,
-        keys: dict[str, str] | None = None,
-        path: str | None = None,
-        n_buckets: int | None = None,
-    ) -> dict[str, str]:
-        """Prefer the bucketed/sorted materialization for the fact
-        tables (default lineitem/orders on the orderkey): builds or
-        reuses the layout under ``path`` (default: a dir next to the
-        Spark warehouse keyed by the table dir) and re-registers the
-        bucketed relations under the plain table names — the engine's
-        SQL surface AND every ``catalog.load_table`` consumer then
-        read the layout whose fact-to-fact joins plan with zero
-        Exchange (see sources/bucketed.py). Returns the table-name
-        map."""
-        import os
-
-        from columnar_database_project_spark.sources.bucketed import (
-            FACT_BUCKETS,
-            materialize_fact_layout,
-        )
-
-        if self._table_dir is None:
-            raise ValueError("engine has no table_dir to materialize")
-        if path is None:
-            from urllib.parse import urlparse
-
-            raw = self.spark.conf.get(
-                "spark.sql.warehouse.dir", "spark-warehouse"
-            )
-            parsed = urlparse(raw)
-            # file:///x and bare /x (or relative) both yield a local
-            # path; removeprefix("file:") would turn file:///x into
-            # ///x and os.path.join would mangle hdfs:/s3a: URIs —
-            # the layout dir is written with local-filesystem APIs,
-            # so a remote warehouse scheme needs an explicit ``path``.
-            if parsed.scheme in ("", "file"):
-                wh = parsed.path or raw
-            else:
-                raise ValueError(
-                    f"use_bucketed_facts needs an explicit path= when "
-                    f"the warehouse is non-local ({raw!r}): the layout "
-                    f"manifest is written with local file APIs"
-                )
-            digest = os.path.basename(
-                os.path.realpath(self._table_dir)
-            ).replace(".", "_")
-            path = os.path.join(wh, f"bucketed_layout_{digest}")
-        named = materialize_fact_layout(
-            self.spark,
-            self._table_dir,
-            path,
-            keys=keys,
-            n_buckets=FACT_BUCKETS if n_buckets is None else n_buckets,
-        )
-        for name, tbl in named.items():
-            self.register(name, self.spark.table(tbl))
-        return named
 
     # ---------------------------------------------------------- lifecycle
     def ingest_jsonl(self, src: str, name: str, dst: str) -> dict:

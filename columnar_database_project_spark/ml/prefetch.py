@@ -170,8 +170,8 @@ class PrefetchService:
         # Confidence floor (r8 prefetch economics): at 100 TB the
         # wasted speculative reads ARE the bill, so suggestions below
         # this sigmoid probability are dropped even inside the top-k.
-        # 0.0 keeps the reference's pure-top-k behavior; the benched
-        # operating point lives in BENCH prefetch_ab.min_prob_sweep.
+        # 0.0 keeps the reference's pure-top-k behavior;
+        # tools/prefetch_ab.py sweeps it (min_prob_sweep).
         self.min_prob = min_prob
         # Net-benefit gate (r9 #3): with the gate on, a cycle issues
         # NOTHING while the projected net benefit per prefetch is

@@ -255,8 +255,8 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # input size: the fixed cost (one row-group footer+column read, a few
 # ms, plus the pushed-filter plan delta) measured as a net LOSS below
 # ~1 MB inputs (sf0.01: 0.064→0.100 s) and a win from ~10 MB up
-# (sf0.1 +7%, sf2.5 +11%, r13 A/B — tools/topk_floor_decomp.py
-# postmortem has the term attribution).
+# (sf0.1 +7%, sf2.5 +11%, r13 A/B; the term attribution came from a
+# retired probe, git a8cd591).
 _TOPK_PREFILTER_MIN_BYTES = 8 * 1024 * 1024
 
 
@@ -309,7 +309,7 @@ def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     r13: TakeOrderedAndProject is the one operator in this path that
     runs row-at-a-time (per-row heap over a ColumnarToRow feed) — at
     sf2.5 it was ~0.2 s of the 0.25 s wall while the equivalent
-    vectorized scan term is ~0.03 s (tools/topk_floor_decomp.py). A
+    vectorized scan term is ~0.03 s (a retired probe, git a8cd591). A
     driver-side price floor (provably exact, see _topk_price_floor)
     turns it into a pushed vectorized filter + a ~10-row heap."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -397,43 +397,19 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         prior best     0.557 s  0.650 s  1.147 s  1.288 s
         semi-reduce    0.485 s  0.541 s  0.935 s  1.161 s
 
-    One plan for all regimes — no size branch to maintain.
-
-    Layout rewrite (r11): with the denormalized orders⋈customer leg
-    registered (sources/bucketed.py DENORM_NAME — it carries
-    c_mktsegment for exactly this query), the customer join vanishes:
-    the qualifying orderkeys come straight off the leg's pushed-down
-    segment+date filters, and the lineitem semi-join is co-bucketed —
-    zero Exchange before the aggregate in EVERY regime, including
-    forced-shuffle where the flat plan pays the custkey shuffle."""
-    from columnar_database_project_spark.catalog import get_layout_override
-    from columnar_database_project_spark.sources.bucketed import DENORM_NAME
-
+    One plan for all regimes — no size branch to maintain."""
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1996-03-15").cast("timestamp")
     )
-    # Single check-and-fetch (ADVICE r11): a stale leg degrades to the
-    # flat plan instead of racing load_table into a FileNotFoundError.
-    leg = get_layout_override(spark, sf_dir, DENORM_NAME)
-    if leg is not None:
-        keys = (
-            leg
-            .filter(
-                (F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp"))
-                & (F.col("c_mktsegment") == "BUILDING")
-            )
-            .select("o_orderkey")
-        )
-    else:
-        cust = load_table(spark, sf_dir, "customer").filter(
-            F.col("c_mktsegment") == "BUILDING"
-        )
-        orders = load_table(spark, sf_dir, "orders").filter(
-            F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp")
-        )
-        keys = orders.join(
-            cust, orders.o_custkey == cust.c_custkey, "left_semi"
-        ).select("o_orderkey")
+    cust = load_table(spark, sf_dir, "customer").filter(
+        F.col("c_mktsegment") == "BUILDING"
+    )
+    orders = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp")
+    )
+    keys = orders.join(
+        cust, orders.o_custkey == cust.c_custkey, "left_semi"
+    ).select("o_orderkey")
     return (
         li.join(keys, li.l_orderkey == keys.o_orderkey, "left_semi")
         .groupBy("l_orderkey")
@@ -457,17 +433,17 @@ def _region_nation_keys(
     pyarrow (freshness-cached). nation/region are FIXED-cardinality
     (25/5 rows at every SF): inlining them as literals removes two
     broadcast-build stage barriers from every consumer — the q5 floor
-    decomposition (r11) measured each such barrier at ~0.2 s on a
+    decomposition (r11, a retired probe, git a8cd591) measured each
+    such barrier at ~0.2 s on a
     15M-row query whose entire data term is 0.3 s. Same pattern as
     similarity._query_vectors: a fixed-size plan PARAMETER, not a
     scanned table."""
     from columnar_database_project_spark.catalog import file_freshness
 
     def dim_path(name: str) -> str:
-        # Mirror catalog._layout_source_token's parquet/orc probe: an
-        # ORC-only table dir is a supported layout (load_table's .orc
-        # branch, round-7 ORC twins) and must not raise here (ADVICE
-        # r11).
+        # Probe parquet then orc, as load_table does: an ORC-only
+        # table dir is a supported layout (load_table's .orc branch,
+        # round-7 ORC twins) and must not raise here (ADVICE r11).
         for ext in ("parquet", "orc"):
             p = os.path.join(sf_dir, f"{name}.{ext}")
             if os.path.exists(p):
@@ -539,24 +515,14 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-width shape (1.38 vs 1.61 s) but its ~8 dependent AQE stages
     pay job-launch latency that dominates at latency scale (0.93 vs
     0.46 s @ sf0.1, dragging the headline gate to 2.0×). A/B of all
-    three (tools/ab_q5_small.py, best-of-5 warmed, parity-checked):
-    hybrid 0.505 s @ sf0.1 / 0.927 s @ sf2.5 — at or under both
-    predecessors at BOTH scales, and without the pre-r9 shape's
-    cold-cache instability (full-width rows through two exchanges:
-    8.3 s first takes at sf2.5). Only the fixed-cardinality nation
-    frame is hint-broadcast; customer/supplier/orders stay size-gated
-    (AQE broadcasts them at bench scale, keyed shuffle at 100 TB).
-
-    Layout rewrite (r11, VERDICT r10 #1): when the catalog carries
-    the denormalized orders⋈customer leg (bucketed on o_orderkey,
-    sources/bucketed.py DENORM_NAME), the custkey join disappears —
-    lineitem joins the date+ASIA-filtered leg co-partitioned (zero
-    Exchange), leaving the slim suppkey join as the only fact shuffle
-    at true scale. Exact parity: the leg IS orders⋈customer, the
-    inner join this plan performs anyway."""
-    from columnar_database_project_spark.catalog import get_layout_override
-    from columnar_database_project_spark.sources.bucketed import DENORM_NAME
-
+    three (a probe of the retired harness, git a8cd591, best-of-5
+    warmed, parity-checked): hybrid 0.505 s @ sf0.1 / 0.927 s @ sf2.5
+    — at or under both predecessors at BOTH scales, and without the
+    pre-r9 shape's cold-cache instability (full-width rows through two
+    exchanges: 8.3 s first takes at sf2.5). Only the fixed-cardinality
+    nation frame is hint-broadcast; customer/supplier/orders stay
+    size-gated (AQE broadcasts them at small scale, keyed shuffle at
+    100 TB)."""
     # Literalized fixed dims (r11): region⋈nation collapses to 5
     # nation keys + a 5-entry key→name map, read driver-side (pyarrow,
     # freshness-cached). The ASIA predicate becomes an `isin` PUSHED
@@ -573,34 +539,6 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("s_nationkey").isin(keys))
         .withColumn("n_name", name_map[F.col("s_nationkey")])
     )
-    # Single check-and-fetch (ADVICE r11): stale leg → flat plan, never
-    # a FileNotFoundError from a second load_table racing regeneration.
-    leg_src = get_layout_override(spark, sf_dir, DENORM_NAME)
-    if leg_src is not None:
-        leg = (
-            leg_src
-            .filter(
-                (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-                & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-                & F.col("c_nationkey").isin(keys)
-            )
-            .select("o_orderkey", "c_nationkey")
-        )
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey",
-            "l_suppkey",
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev"),
-        )
-        return (
-            li.join(leg, F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(
-                supp_slim,
-                (F.col("l_suppkey") == F.col("s_suppkey"))
-                & (F.col("c_nationkey") == F.col("s_nationkey")),
-            )
-            .groupBy("n_name")
-            .agg(F.round(F.sum("rev"), 4).alias("revenue"))
-        )
     cust_slim = (
         load_table(spark, sf_dir, "customer")
         .select("c_custkey", "c_nationkey")

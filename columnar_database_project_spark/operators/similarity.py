@@ -307,9 +307,10 @@ def q_sim_bucket_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 N_IVF_CELLS = 16
 # Default operating point: smallest probe level with measured
-# recall@10 ≥ 0.75 on the sf0.5 recall curve (r8 BENCH: 0.44 @ 3,
-# 0.92 @ 12, 1.0 @ 16 — near-linear in probed fraction because the
-# synthetic embeddings are close to isotropic; see PLANS.md round-6).
+# recall@10 ≥ 0.75 on the sf0.5 recall curve (r8, retired harness,
+# git a8cd591: 0.44 @ 3, 0.92 @ 12, 1.0 @ 16 — near-linear in probed
+# fraction because the synthetic embeddings are close to isotropic;
+# see PLANS.md round-6).
 # A corpus with real cluster structure reaches the target at a much
 # smaller probed fraction; re-derive with ivf_nprobe_for_recall.
 N_PROBE = 12
@@ -483,7 +484,8 @@ def q_sim_ivf_topk(
     nearest cells only — the corpus side touched per query shrinks by
     ~cells/probes. The default is the recall@10 ≥ 0.75 operating
     point (see N_PROBE); pass a smaller ``n_probe`` to trade recall
-    for probe cost along the measured frontier (BENCH "ivf_recall").
+    for probe cost along the measured frontier (the retired harness's
+    ivf_recall section, git a8cd591).
 
     Scale path: assignment is a batched matmul scan (zero shuffle);
     the search is an equi-join on cell id — same subquadratic shape as

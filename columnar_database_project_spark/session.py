@@ -105,79 +105,3 @@ def scoped_conf(spark: SparkSession, key: str, value: str):
         else:
             spark.conf.set(key, prev)
 
-
-def input_bytes(sf_dir: str) -> int:
-    """Total bytes of the parquet tables under ``sf_dir``."""
-    total = 0
-    try:
-        for name in os.listdir(sf_dir):
-            if name.endswith(".parquet"):
-                p = os.path.join(sf_dir, name)
-                if os.path.isfile(p):
-                    total += os.path.getsize(p)
-    except OSError:
-        pass
-    return total
-
-
-# Three size regimes, each boundary MEASURED, not guessed:
-# - tiny (< TINY_INPUT_BYTES): latency-bound — per-stage scheduling +
-#   AQE's per-shuffle re-optimization barrier (~10-40 ms each,
-#   measured r5) dominate the data work, so fewer/larger knobs win
-#   (8 partitions, AQE off).
-# - mid (TINY..SMALL): the crossover band. A full-headline A/B on the
-#   80 MB sf0.5 replica (r6) measured the mid config (32 partitions,
-#   AQE on, 16 MB splits for scan parallelism) beating the tiny
-#   config on 10 of 14 queries, total 11.8 s -> 10.2 s; q3's join was
-#   the biggest win (1.93 -> 1.67), matching the forced-regime A/B.
-# - large (>= SMALL_INPUT_BYTES): the standard at-scale config —
-#   shuffle partitions track data volume, 128 MB splits. The 100 TB
-#   story is this branch.
-TINY_INPUT_BYTES = 64 * 1024 * 1024
-SMALL_INPUT_BYTES = 256 * 1024 * 1024
-
-
-def tune_for_scale(spark, sf_dir: str) -> dict[str, str]:
-    """Set size-aware runtime confs for queries over ``sf_dir``.
-
-    Mirrors what a resource estimator does on a real cluster: pick the
-    shuffle-partition count, AQE mode, and scan split size from input
-    volume (regime boundaries measured — see the constants above).
-    Returns the conf dict it applied (for tests/logging).
-    """
-    b = input_bytes(sf_dir)
-    if b and b < TINY_INPUT_BYTES:
-        conf = {
-            "spark.sql.shuffle.partitions": "8",
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024),
-        }
-    elif b and b < SMALL_INPUT_BYTES:
-        conf = {
-            "spark.sql.shuffle.partitions": str(DEFAULT_CPUS),
-            "spark.sql.adaptive.enabled": "true",
-            "spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024),
-        }
-    else:
-        parts = max(DEFAULT_CPUS, min(2000, b // (64 * 1024 * 1024) or DEFAULT_CPUS))
-        # Split size must track CORES AVAILABLE, not just data volume
-        # (r8 fix, measured): a flat 128 MB split put the 395 MB sf2.5
-        # lineitem on 3-4 scan tasks of a 32-thread box — scan-bound
-        # q6 ran 7.5 s vs 1.2 s with adequate splits (q5 17.9 s vs
-        # ~2 s). Target ~3 tasks per core so every scan saturates the
-        # executor pool, capped at 128 MB — at genuine cluster scale
-        # (b ≫ cores × 384 MB) the cap engages and this IS the
-        # standard 128 MB config; the floor keeps tiny-split overhead
-        # bounded.
-        split = min(
-            128 * 1024 * 1024,
-            max(16 * 1024 * 1024, b // (3 * DEFAULT_CPUS)),
-        )
-        conf = {
-            "spark.sql.shuffle.partitions": str(parts),
-            "spark.sql.adaptive.enabled": "true",
-            "spark.sql.files.maxPartitionBytes": str(split),
-        }
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    return conf

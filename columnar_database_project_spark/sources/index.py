@@ -467,8 +467,7 @@ class MicroBlockIndex:
         query_enginev3.py:212-213; SURVEY §2.5.2).
 
         ``use_blooms=False`` gives the zone-map-only answer for A/B
-        accounting (bench_bloom_pruning; ``engine.explain``'s
-        breakdown).
+        accounting (``engine.explain``'s breakdown).
         """
         out = []
         blooms = self.blooms if use_blooms else None

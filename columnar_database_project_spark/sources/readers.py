@@ -25,7 +25,8 @@ def read_csv(
     **options,
 ) -> DataFrame:
     """Schema'd CSV scan (predicate pushdown limited by format — CSV
-    has no zone maps; convert to microblocks for scan-heavy use)."""
+    has no zone maps; write it out with ``MicroBlockWriter`` for
+    scan-heavy use)."""
     return (
         spark.read.options(header=header, **options)
         .schema(schema)
@@ -54,29 +55,3 @@ def to_arrow(df: DataFrame):
     pandas intermediary."""
     return df.toArrow()
 
-
-def convert_to_microblocks(
-    spark: SparkSession,
-    src_path: str,
-    dst_path: str,
-    fmt: str,
-    schema: T.StructType | str | None = None,
-    block_rows: int | None = None,
-    **options,
-) -> None:
-    """Any supported source → microblock parquet layout (the S7
-    converter generalized beyond parquet)."""
-    from columnar_database_project_spark.sources.microblock import (
-        DEFAULT_BLOCK_ROWS,
-        MicroBlockWriter,
-    )
-
-    if fmt == "parquet":
-        df = spark.read.options(**options).parquet(src_path)
-    elif fmt == "csv":
-        df = read_csv(spark, src_path, schema, **options)
-    elif fmt in ("json", "jsonl"):
-        df = read_jsonl(spark, src_path, schema, **options)
-    else:
-        raise ValueError(f"unsupported source format: {fmt}")
-    MicroBlockWriter(block_rows=block_rows or DEFAULT_BLOCK_ROWS).write(df, dst_path)

@@ -21,7 +21,8 @@ answer.
 
 At 100 TB this is the difference between moving 100 TB per DELETE and
 moving the few blocks a selective predicate lands on — the reason
-Iceberg/Delta exist. Measured in bench.py::bench_cow_dml.
+Iceberg/Delta exist. Measured by the retired harness's CoW DML
+section (git a8cd591).
 """
 
 from __future__ import annotations
@@ -740,11 +741,11 @@ def compact_manifest(
 
 # --------------------------------------------------------------------
 # Merge-on-read auto-compaction policy (VERDICT r7 #3). The measured
-# MoR read tax (BENCH.json cow_dml.read_tax: 1.55x) is driven by the
-# fraction of rows that must scan through the per-row _metadata +
-# DV-filter path — 4 point-deleted rows tainting ~6% of the table's
-# rows already cost 1.55x — with the logically-deleted-row fraction a
-# secondary (wasted-IO) term. The defaults therefore trigger at 5%
+# MoR read tax (1.55x, from the retired harness, git a8cd591) is
+# driven by the fraction of rows that must scan through the per-row
+# _metadata + DV-filter path — 4 point-deleted rows tainting ~6% of
+# the table's rows already cost 1.55x — with the logically-deleted-row
+# fraction a secondary (wasted-IO) term. The defaults therefore trigger at 5%
 # row taint or 2% logical deletes: below that the steady-state tax
 # stays near 1.0, above it compaction buys the tax back (1.55 -> 1.0
 # measured) for one bounded rewrite of only the DV'd files.

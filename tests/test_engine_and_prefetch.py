@@ -170,7 +170,7 @@ class TestPrefetchStack:
         cache.clear()
 
     def test_lstm_prefetch_beats_lru_on_sequential_walk(self, spark, layout):
-        """The thesis number's invariant, pinned (bench_prefetch_ab
+        """The thesis number's invariant, pinned (tools/prefetch_ab.py
         measures it at scale): on a cyclic sequential walk over N
         blocks with cache capacity < N — LRU's pathological case,
         every revisit arrives exactly after eviction — plain LRU hits

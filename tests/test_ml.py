@@ -144,56 +144,6 @@ class TestScheduler:
         assert sched.suggest_topk_prefetch(sequence=seq[:30], k=3)
 
 
-class TestAltTrainer:
-    def test_c15_prefix_ce_pipeline(self):
-        # C15 (reference model.py:203-343): prefix dataset, CE loss,
-        # 80/20 split, accuracy eval. A sequential synthetic workload
-        # must be learnable far above chance.
-        from columnar_database_project_spark.ml.alt_trainer import (
-            build_prefix_dataset,
-            train_alt,
-        )
-
-        seq = generate_mixed_logs(1200, seed=11)
-        queries = [seq[i : i + 12] for i in range(0, len(seq) - 12, 12)]
-        inputs, labels, id2idx, _ = build_prefix_dataset(queries)
-        assert len(inputs) == len(labels) == sum(len(q) - 1 for q in queries)
-        assert all(1 <= lab < len(id2idx) + 1 for lab in labels)
-        assert max(len(s) for s in inputs) <= 20          # MAX_PREFIX cap
-
-        model, report = train_alt(queries, epochs=4, seed=3)
-        assert report["train_loss"][-1] < report["train_loss"][0]
-        chance = 3.0 / report["vocab_size"]
-        assert report["hit@3"] > 5 * chance               # learned, not random
-        assert 0.0 <= report["accuracy"] <= 1.0
-        assert report["n_eval"] > 0
-
-    def test_empty_dataset_raises(self):
-        # blocks with <2 accesses yield zero prefix samples — a clear
-        # error beats fitting an empty model
-        from columnar_database_project_spark.ml.alt_trainer import train_alt
-
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError, match="no prefix samples"):
-            train_alt([[7]], epochs=1)
-        with _pytest.raises(ValueError, match="no prefix samples"):
-            train_alt([], epochs=1)
-
-    def test_tiny_dataset_keeps_holdout_or_reports_none(self):
-        from columnar_database_project_spark.ml.alt_trainer import train_alt
-
-        # 2 samples → 1 train / 1 eval (holdout preserved)
-        _, rep = train_alt([[1, 2, 3]], epochs=1)
-        assert rep["n_train"] == 1 and rep["n_eval"] == 1
-        assert rep["accuracy"] is not None
-
-        # 1 sample → trained on it, eval metrics explicitly None
-        _, rep1 = train_alt([[4, 5]], epochs=1)
-        assert rep1["n_train"] == 1 and rep1["n_eval"] == 0
-        assert rep1["accuracy"] is None and rep1["mrr"] is None
-
-
 class TestBuildWithSpark:
     """C13's cluster-side builder: the r7 rewrite replaced the naive
     unpartitioned W.orderBy("ts") (single-task sort of the whole

@@ -19,6 +19,8 @@ from columnar_database_project_spark.operators.multimodal import (
 FAST_QUERIES = [
     "filter_between",
     "q1_pricing_summary",
+    "q3_shipping_priority",
+    "q5_local_supplier_volume",
     "q6_forecast_revenue",
     "topk",
     "join_broadcast",

@@ -3,6 +3,8 @@ the keeper-star cap under genuine hot-bucket skew (VERDICT r9 #4)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from columnar_database_project_spark.ml.prefetch import (
@@ -52,6 +54,39 @@ def _service(econ, gate=True):
     )
 
 
+def _make_skew_docs(src_dir: str, dst_dir: str, hot: int) -> None:
+    """documents.parquet = the source corpus + ``hot`` extra docs all
+    sharing ONE boilerplate text (identical shingle sets → identical
+    minhash signatures → every LSH band bucket holds the whole group)
+    — the templated-page pathology the keeper-star cap exists for."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(os.path.join(src_dir, "documents.parquet"))
+    base_max = int(t["doc_id"].combine_chunks().to_numpy().max())
+    boiler = (
+        "all rights reserved terms of service privacy policy cookie "
+        "notice subscribe to our newsletter follow us on social media "
+    ) * 6
+    hot_t = pa.table(
+        {
+            "doc_id": pa.array(
+                range(base_max + 1, base_max + 1 + hot), type=pa.int64()
+            ),
+            "text": pa.array([boiler] * hot, type=pa.string()),
+            "lang": pa.array(["en"] * hot, type=pa.string()),
+            "source": pa.array(["boilerplate"] * hot, type=pa.string()),
+            "n_chars": pa.array([len(boiler)] * hot, type=pa.int64()),
+        },
+        schema=pa.schema(
+            [(f.name, f.type) for f in t.schema]
+        ),
+    )
+    pq.write_table(
+        pa.concat_tables([t, hot_t]), os.path.join(dst_dir, "documents.parquet")
+    )
+
+
 class TestKeeperStarSkew:
     """The production cap on a corpus with a GENUINE over-cap hot
     bucket (VERDICT r9 #4): a boilerplate group larger than the cap
@@ -60,14 +95,12 @@ class TestKeeperStarSkew:
 
     @pytest.fixture(scope="class")
     def skew_bk(self, spark, sf_dir, tmp_path_factory):
-        import bench
-
         from columnar_database_project_spark.operators.dedup import (
             _band_keys,
         )
 
         d = str(tmp_path_factory.mktemp("skew"))
-        bench._make_skew_docs(sf_dir, d, hot=60)
+        _make_skew_docs(sf_dir, d, hot=60)
         return _band_keys(spark, d).localCheckpoint()
 
     def test_star_linearizes_hot_bucket(self, skew_bk):

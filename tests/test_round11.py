@@ -1,13 +1,9 @@
-"""Round-11 fixes: prefetch-economics attribution (ADVICE r10),
-layout-override freshness (ADVICE r10), and the slow-store prefetch
-gate flip (VERDICT r10 #3)."""
+"""Round-11 fixes: prefetch-economics attribution (ADVICE r10) and the
+slow-store prefetch gate flip (VERDICT r10 #3)."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
-from pyspark.sql import functions as F
 
 from columnar_database_project_spark.ml.prefetch import PrefetchEconomics
 
@@ -83,8 +79,8 @@ class TestGateFlipThreshold:
     outcome). Against a slow store with concurrent issue, the
     amortized per-GET cost drops by the issue width while the demand
     miss still pays the full round trip — the same formula crosses
-    zero. The bench slow_store leg measures this end-to-end; here the
-    threshold itself is pinned."""
+    zero. tools/prefetch_ab.py's slow_store legs measure this
+    end-to-end; here the threshold itself is pinned."""
 
     MISS, HIT, PRECISION = 0.25, 0.04, 0.25   # slow-store-like regime
 
@@ -154,88 +150,3 @@ class TestGateFlipThreshold:
         assert econ_serial.read_sec.value >= 0.1          # full latency
         assert econ_wide.read_sec.value < 0.06            # amortized
         assert wide.prefetch_read_sec < serial.prefetch_read_sec / 2
-
-
-class TestLayoutOverrideFreshness:
-    def test_stale_override_falls_through(self, spark, tmp_path):
-        from columnar_database_project_spark.catalog import (
-            clear_layout_overrides,
-            load_table,
-            set_layout_override,
-        )
-
-        d = str(tmp_path / "tables")
-        os.makedirs(d)
-        src = os.path.join(d, "t.parquet")
-        spark.range(5).withColumn("v", F.lit("old")).coalesce(
-            1
-        ).write.parquet(src)
-        try:
-            override = (
-                spark.range(5).withColumn("v", F.lit("override"))
-            )
-            set_layout_override(spark, d, "t", override)
-            assert (
-                load_table(spark, d, "t").select("v").first()[0]
-                == "override"
-            )
-            # regenerate the source in place — the derived override is
-            # now stale and must NOT be served (ADVICE r10: catalog.py
-            # bypassed file_freshness for overrides)
-            spark.range(5).withColumn("v", F.lit("new")).coalesce(
-                1
-            ).write.mode("overwrite").parquet(src)
-            assert load_table(spark, d, "t").select("v").first()[0] == "new"
-        finally:
-            clear_layout_overrides(spark)
-
-    def test_derived_leg_invalidates_on_either_parent(
-        self, spark, sf_dir, tmp_path
-    ):
-        """The denorm orders⋈customer leg must go stale when EITHER
-        parent regenerates — its freshness token carries both."""
-        import shutil
-
-        from columnar_database_project_spark.catalog import (
-            clear_layout_overrides,
-            has_layout_override,
-        )
-        from columnar_database_project_spark.sources.bucketed import (
-            DENORM_NAME,
-            materialize_fact_layout,
-        )
-
-        d = str(tmp_path / "tables")
-        shutil.copytree(sf_dir, d)
-        base = str(tmp_path / "layout")
-        named: dict = {}
-        try:
-            named = materialize_fact_layout(spark, d, base, n_buckets=4)
-            assert has_layout_override(spark, d, DENORM_NAME)
-            # regenerate customer (the SECOND parent) in place
-            cust = os.path.join(d, "customer.parquet")
-            os.utime(cust, (os.path.getmtime(cust) + 5,) * 2)
-            assert not has_layout_override(spark, d, DENORM_NAME)
-        finally:
-            clear_layout_overrides(spark)
-            for tbl in named.values():
-                spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-    def test_fresh_override_served(self, spark, tmp_path):
-        from columnar_database_project_spark.catalog import (
-            clear_layout_overrides,
-            load_table,
-            set_layout_override,
-        )
-
-        d = str(tmp_path / "tables")
-        os.makedirs(d)
-        src = os.path.join(d, "t.parquet")
-        spark.range(3).write.parquet(src)
-        try:
-            set_layout_override(
-                spark, d, "t", spark.range(3).withColumn("x", F.lit(1))
-            )
-            assert "x" in load_table(spark, d, "t").columns
-        finally:
-            clear_layout_overrides(spark)

@@ -2,12 +2,6 @@
 
 - ``_region_nation_keys`` must serve an ORC-only table dir (it
   previously hard-required ``nation.parquet``/``region.parquet``).
-- The denorm layout-leg manifest must round-trip directory-source
-  freshness tokens through JSON (previously the tuple-vs-list
-  mismatch silently rebuilt the orders⋈customer leg on every call).
-- ``catalog.get_layout_override`` is check-and-fetch in one call: a
-  leg whose parent regenerated between plan builds degrades q5/q3 to
-  the flat plan instead of raising FileNotFoundError.
 - ``streaming.vectors._store_relation`` invalidates on an IN-PLACE
   part-file overwrite inside a cell dir (dir-stat token missed it).
 """
@@ -19,11 +13,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from columnar_database_project_spark.catalog import (
-    clear_layout_overrides,
-    get_layout_override,
-    load_table,
-)
+from columnar_database_project_spark.catalog import load_table
 
 
 class TestRegionNationOrcFallback:
@@ -65,95 +55,6 @@ class TestRegionNationOrcFallback:
         assert got == want
 
 
-class TestDenormManifestDirSources:
-    def test_no_rebuild_on_directory_sources(self, spark, sf_dir, tmp_path):
-        """Spark-written (directory) orders/customer sources: the
-        second materialize call must REUSE the denorm leg — the r11
-        bug rebuilt it every time because the manifest held tuples of
-        tuples that never compared equal to json.load's lists."""
-        from columnar_database_project_spark.sources.bucketed import (
-            DENORM_NAME,
-            materialize_fact_layout,
-        )
-
-        d = str(tmp_path / "dir_sf")
-        os.makedirs(d)
-        for name in ("orders", "customer", "lineitem"):
-            load_table(spark, sf_dir, name).repartition(2).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(d, f"{name}.parquet"))
-        base = str(tmp_path / "layout")
-        named: dict = {}
-        try:
-            named = materialize_fact_layout(spark, d, base, n_buckets=4)
-            assert DENORM_NAME in named
-            manifest = os.path.join(
-                base, f"{DENORM_NAME}_layout_manifest.json"
-            )
-            t0 = os.path.getmtime(manifest)
-            materialize_fact_layout(spark, d, base, n_buckets=4)
-            assert os.path.getmtime(manifest) == t0, (
-                "denorm leg rebuilt despite fresh directory sources"
-            )
-            # fact tables with directory sources reuse too
-            fact_manifest = os.path.join(
-                base, "lineitem_layout_manifest.json"
-            )
-            t1 = os.path.getmtime(fact_manifest)
-            materialize_fact_layout(spark, d, base, n_buckets=4)
-            assert os.path.getmtime(fact_manifest) == t1
-        finally:
-            clear_layout_overrides(spark)
-            for tbl in named.values():
-                spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-
-class TestGetLayoutOverrideSingleCall:
-    def test_stale_leg_degrades_to_flat_plan(self, spark, sf_dir, tmp_path):
-        """Parent regeneration between the rewrite decision and the
-        leg fetch: q5 must fall back to the flat plan (same rows), not
-        raise — the old has_layout_override + load_table pair raced
-        exactly here."""
-        from columnar_database_project_spark.operators.relational import (
-            q5_local_supplier_volume,
-        )
-        from columnar_database_project_spark.sources.bucketed import (
-            DENORM_NAME,
-            materialize_fact_layout,
-        )
-
-        d = str(tmp_path / "race_sf")
-        os.makedirs(d)
-        for name in ("nation", "region", "customer", "supplier", "orders",
-                     "lineitem"):
-            load_table(spark, sf_dir, name).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(d, f"{name}.parquet"))
-        base = str(tmp_path / "layout")
-        named: dict = {}
-        try:
-            named = materialize_fact_layout(spark, d, base, n_buckets=4)
-            assert get_layout_override(spark, d, DENORM_NAME) is not None
-            want = sorted(
-                tuple(r)
-                for r in q5_local_supplier_volume(spark, d).collect()
-            )
-            # regenerate a parent in place → leg goes stale
-            load_table(spark, sf_dir, "customer").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(d, "customer.parquet"))
-            assert get_layout_override(spark, d, DENORM_NAME) is None
-            got = sorted(
-                tuple(r)
-                for r in q5_local_supplier_volume(spark, d).collect()
-            )
-            assert got == want  # same source rows → same result, flat plan
-        finally:
-            clear_layout_overrides(spark)
-            for tbl in named.values():
-                spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-
 class TestStoreRelationInPlaceOverwrite:
     def test_token_sees_part_file_rewrite(self, spark, tmp_path):
         from columnar_database_project_spark.streaming.vectors import (
@@ -193,123 +94,3 @@ class TestStoreRelationInPlaceOverwrite:
             os.remove(crc)
         n1 = _store_relation(spark, p).count()
         assert n1 == 5  # 3 rewritten rows in cell 0 + 2 in cell 1
-
-
-class TestBudgetedGate:
-    """r12 bench budget machinery (VERDICT r11 #1): quiesce waits and
-    retakes are charged against a global wall-clock budget; when the
-    budget cannot hold them the gate accepts a CONTENDED-flagged take
-    instead of burning time it does not have — a flagged take beats
-    the rc-124/parsed-null nothing the r11 driver run recorded."""
-
-    def _patch(self, monkeypatch, budget_sec, probe_ms=58.9, seed=37.0):
-        import bench
-
-        state = {"seeded": False}
-        clock = [0.0]
-
-        def fake_health():
-            if not state["seeded"]:
-                state["seeded"] = True
-                return {
-                    "single_thread_ms": seed,
-                    "parallel16_wall_over_single": 1.5,
-                    "loadavg_1m": 0.1,
-                    "loadavg_5m": 0.1,
-                }
-            return {
-                "single_thread_ms": probe_ms,  # degraded, never recovers
-                "parallel16_wall_over_single": 1.5,
-                "loadavg_1m": 0.1,
-                "loadavg_5m": 0.1,
-            }
-
-        monkeypatch.setattr(bench, "machine_health", fake_health)
-        monkeypatch.setattr(bench, "_NOMINAL_SINGLE_MS", float("inf"))
-        monkeypatch.setattr(bench, "BENCH_BUDGET_SEC", budget_sec)
-        monkeypatch.setattr(bench, "_QUIESCE_SPEND", 0.0)
-        monkeypatch.setattr(bench, "_BENCH_T0", 0.0)
-        monkeypatch.setattr(bench.os, "getloadavg", lambda: (0.1, 0.1, 0.1))
-        monkeypatch.setattr(bench.time, "time", lambda: clock[0])
-        monkeypatch.setattr(
-            bench.time,
-            "sleep",
-            lambda s: clock.__setitem__(0, clock[0] + s),
-        )
-        bench._observe_health()  # seed nominal as main() does
-        return bench, clock
-
-    def test_quiesce_spend_capped_globally(self, monkeypatch):
-        """A probe that never recovers must not burn 3 × 300 s of
-        quiesce waits: total spend stops at 20% of the budget, later
-        takes start immediately, and the result is flagged contended."""
-        bench, clock = self._patch(monkeypatch, budget_sec=900.0)
-        calls = []
-        out, meta = bench.health_gated("t", lambda: calls.append(1) or "ok")
-        assert out == "ok"
-        assert meta["contended"] is True
-        assert meta["accepted_take"] == len(meta["takes"])
-        cap = bench.QUIESCE_BUDGET_FRACTION * 900.0
-        assert bench._QUIESCE_SPEND <= cap + 16.0  # one sleep granule over
-        # without the cap three degraded takes wait 3×300 s; with it the
-        # whole gate finishes inside ~cap of fake wall-clock
-        assert clock[0] <= cap + 60.0
-
-    def test_retake_forbidden_when_budget_short(self, monkeypatch):
-        """A contended take whose retake cannot fit in the remaining
-        budget is ACCEPTED (flagged) — one take, not HEALTH_MAX_TAKES."""
-        bench, clock = self._patch(monkeypatch, budget_sec=900.0)
-        calls = []
-
-        def section():
-            calls.append(1)
-            clock[0] += 400.0  # the section itself eats 400 fake secs
-            return "ok"
-
-        out, meta = bench.health_gated("t", section)
-        assert out == "ok"
-        assert len(calls) == 1, "retake must be forbidden on short budget"
-        assert meta["contended"] is True
-        assert meta["takes"][0]["take_sec"] >= 400.0
-
-    def test_compact_line_headline_only_result(self):
-        """The FIRST incremental emit (headline + nothing else) must
-        already produce a parseable ≤1900-char compact line carrying
-        the budget/skip provenance — a kill right after section 1 is
-        the scenario the incremental protocol exists for."""
-        import json
-
-        import bench
-
-        result = {
-            "metric": "headline_queries_total_wall_clock",
-            "value": 4.2,
-            "unit": "sec",
-            "queries": {"q1_pricing_summary": 0.4},
-            "sf": 0.1,
-            "baseline_duckdb": {"q1_pricing_summary": 0.2},
-            "baseline_duckdb_total": 0.2,
-            "scaling": {},
-            "machine_health": {
-                "start": {},
-                "end": None,
-                "headline": {
-                    "takes": [{"probe_ratio": 1.0, "start_degraded": False}],
-                    "accepted_take": 1,
-                    "contended": False,
-                },
-            },
-            "budget": {
-                "budget_sec": 900.0,
-                "spent_sec": 123.4,
-                "quiesce_spent_sec": 0.0,
-                "skipped_sections": ["bloom_pruning"],
-                "sections_sec": {"headline": 120.0},
-            },
-        }
-        line = bench.build_compact(result)
-        assert len(line) <= 1900
-        d = json.loads(line)
-        assert d["value"] == 4.2
-        assert d["budget"]["skipped"] == ["bloom_pruning"]
-        assert d["budget"]["sec"] == 900.0

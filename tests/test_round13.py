@@ -1,326 +1,6 @@
-"""Round-13 bench-harness behaviors (VERDICT r12 #1/#2 + ADVICE r12).
-
-Pure-Python tests — no SparkSession: everything here exercises the
-budget/emission machinery with fakes, the way TestBudgetedGate does.
-"""
+"""Round-13 topk optimization: the driver-side price floor."""
 
 from __future__ import annotations
-
-import json
-import sys
-import os
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-import bench  # noqa: E402
-
-
-def _base_result() -> dict:
-    return {
-        "metric": "headline_queries_total_wall_clock",
-        "value": 1.0,
-        "unit": "sec",
-        "sf": 0.1,
-        "queries": {"q1_pricing_summary": 0.2},
-        "baseline_duckdb": {"q1_pricing_summary": 0.1},
-        "baseline_duckdb_total": 0.1,
-        "scaling": {},
-        "machine_health": {
-            "start": {},
-            "end": None,
-            "headline": {
-                "takes": [{"probe_ratio": 1.0, "start_degraded": False}],
-                "accepted_take": 1,
-                "contended": False,
-            },
-        },
-        "budget": {
-            "budget_sec": 1200.0,
-            "spent_sec": 100.0,
-            "quiesce_spent_sec": 0.0,
-            "skipped_sections": [],
-            "sections_sec": {"headline": 100.0},
-        },
-    }
-
-
-class TestCompactLineErrorShapes:
-    """ADVICE r12 (medium): run_section stores {'error': ...} dicts
-    into scaling sub-keys on section failure; build_compact must not
-    KeyError on them — one failed sf2.5 sub-section would otherwise
-    abort every remaining emit() and leave a traceback, not a JSON
-    line, as the stdout tail (the exact rc-124 failure mode the
-    incremental emitter exists to prevent)."""
-
-    def test_error_dicts_in_scaling_subsections(self):
-        r = _base_result()
-        r["scaling"] = {
-            "sf2.5": {
-                "queries": {"a": 1.0},
-                "baseline_duckdb": {"a": 0.5},
-                "ivf_recall": {"error": "ValueError('boom')"},
-                "near_survivors_chain": {"error": "boom"},
-                "bucketed_headliners": {"error": "boom"},
-                "scan_throughput": {"error": "boom"},
-            },
-            "sf0.5": {
-                "queries": {"a": 1.0},
-                "baseline_duckdb": {"a": 0.5},
-                "ivf_recall": {"error": "boom"},
-            },
-        }
-        r["prefetch_ab"] = {
-            "slow_store": {"error": "boom"},
-            "lru_only": {"error": "boom"},
-        }
-        for k in ("extras_r6", "cow_dml", "streaming"):
-            r[k] = {"error": "boom"}
-        line = bench.build_compact(r)  # must not raise
-        d = json.loads(line)
-        assert len(line) <= 1900
-        sec = d["scaling"]["sf2.5"]
-        assert "ivf_recall_at_10" not in sec
-        assert "dedup_chain_ratio" not in sec
-        assert sec["spark_total"] == 1.0
-
-    def test_good_shapes_carry_new_cells(self):
-        """The r13 compact additions: forced-regime Exchange counts,
-        the ivf/store per-take spread, and the pairwise truncation
-        marker all reach the line when present."""
-        r = _base_result()
-        r["scaling"] = {
-            "sf2.5": {
-                "queries": {"a": 1.0},
-                "baseline_duckdb": {"a": 0.5},
-                "ivf_recall": {
-                    "recall_at_10": 0.96,
-                    "ivf_vs_duckdb_exact": 2.4,
-                    "ivf_spread_pct": 7.1,
-                    "store_spread_pct": 9.5,
-                    "store_runs": 8,
-                },
-                "bucketed_headliners": {
-                    "queries": {"q5_local_supplier_volume": {"bucketed": 0.4}},
-                    "forced_shuffle_regime_q3": {
-                        "layout_speedup": 3.7,
-                        "exchanges_flat": 4,
-                        "exchanges_bucketed": 0,
-                    },
-                    "forced_shuffle_regime_q5": {
-                        "layout_speedup": 4.2,
-                        "exchanges_flat": 7,
-                        "exchanges_bucketed": 3,
-                    },
-                },
-                "run_protocol": {"truncated": ["topk"]},
-            }
-        }
-        d = json.loads(bench.build_compact(r))
-        sec = d["scaling"]["sf2.5"]
-        assert sec["forced_exchanges"] == {"q3": [4, 0], "q5": [7, 3]}
-        assert sec["forced_layout_speedup"] == {"q3": 3.7, "q5": 4.2}
-        assert sec["ivf_spread_pct"] == [7.1, 9.5]
-        assert sec["ivf_runs"] == 8
-        assert sec["truncated_n"] == 1
-
-    def test_slow_store_flip_outlives_detail_cells(self):
-        """DROP_ORDER reprioritization: when the line is over budget,
-        the slow-store gate-flip cell must survive the detail cells
-        (it was FIRST to drop in r12 — the strongest prefetch claim
-        was the first casualty of a long line)."""
-        r = _base_result()
-        r["prefetch_ab"] = {
-            "lru_only": {"hit_rate": 0.3, "total_sec": 30.0},
-            "lru_lstm": {"hit_rate": 0.5, "net_sec": -0.5},
-            "lru_lstm_gated": {"hit_rate": 0.5, "net_sec": 0.0},
-            "slow_store": {
-                "gate_issuing": True,
-                "gate_net_positive": True,
-                "lift_over_lru_only": 0.132,
-            },
-        }
-        r["extras_r6"] = {"spark": {"a": 1.0}, "duckdb": {"a": 1.0}}
-        r["streaming"] = {"t": {"rows_per_sec": 100}}
-        # pad the never-dropped core so the line sits JUST over 1900:
-        # one or two drops from the front of DROP_ORDER must suffice,
-        # proving the flip cell is not the first casualty
-        base_len = len(bench.build_compact(r))
-        pad = 1920 - base_len
-        assert pad > 0, "fixture already over budget — shrink it"
-        r["queries"]["padding_" + "x" * pad] = 0.1
-        line = bench.build_compact(r)
-        d = json.loads(line)
-        assert len(line) <= 1900
-        # detail cells dropped first…
-        assert "extras_r6" not in d
-        # …but the flip survived
-        assert d["prefetch_slow_store"]["gate_issuing"] is True
-        # and the static priority itself is pinned: the flip drops
-        # after every detail cell
-        order = bench.build_compact.__code__.co_consts  # noqa: F841
-        drop = [
-            "extras_r6",
-            "streaming",
-            "cow_bytes_ratio",
-            "ann",
-            "prefetch_hit_rates",
-            "prefetch_net_sec",
-        ]
-        src = open(bench.__file__.replace(".pyc", ".py")).read()
-        flip_pos = src.index('"prefetch_slow_store",\n        "budget"')
-        for k in drop:
-            assert src.index(f'"{k}",', src.index("DROP_ORDER")) < flip_pos
-
-
-class TestQuiesceDecayAcceptance:
-    """r13 quiesce economy: loadavg_1m is a ~60 s EMA, so after OUR OWN
-    heavy section the box reads loaded for minutes while the single-
-    thread probe is already at nominal — the r12 full run burned 495 s
-    waiting out its own decay tails. A clean probe + strictly-decaying
-    loadavg now releases the take."""
-
-    def _patch(self, monkeypatch, loads, probe_ms=37.0):
-        state = {"i": 0}
-        clock = [0.0]
-
-        def fake_health():
-            return {
-                "single_thread_ms": probe_ms,
-                "parallel16_wall_over_single": 1.5,
-                "loadavg_1m": loads[min(state["i"], len(loads) - 1)],
-                "loadavg_5m": 1.0,
-            }
-
-        def fake_loadavg():
-            i = min(state["i"], len(loads) - 1)
-            state["i"] += 1
-            return (loads[i], 1.0, 1.0)
-
-        monkeypatch.setattr(bench, "machine_health", fake_health)
-        monkeypatch.setattr(bench, "_NOMINAL_SINGLE_MS", float("inf"))
-        monkeypatch.setattr(bench, "BENCH_BUDGET_SEC", 1200.0)
-        monkeypatch.setattr(bench, "_QUIESCE_SPEND", 0.0)
-        monkeypatch.setattr(bench, "_BENCH_T0", 0.0)
-        monkeypatch.setattr(bench.os, "getloadavg", fake_loadavg)
-        monkeypatch.setattr(bench.time, "time", lambda: clock[0])
-        monkeypatch.setattr(
-            bench.time,
-            "sleep",
-            lambda s: clock.__setitem__(0, clock[0] + s),
-        )
-        bench._observe_health()
-        return clock
-
-    def test_decaying_tail_released_early(self, monkeypatch):
-        # idle-box decay: ~0.75×/sample — passes the 0.85 decay gate
-        clock = self._patch(monkeypatch, [8.0, 6.0, 4.5, 3.4, 2.5, 1.9])
-        bench._quiesce("t")
-        # released on the SECOND sample (first decay observation), not
-        # after waiting for loadavg < 1.5 (which these samples never hit)
-        assert clock[0] <= 40.0
-
-    def test_flat_load_still_waits(self, monkeypatch):
-        # live contention holds loadavg flat — decay gate must NOT
-        # fire; the wait runs until the global quiesce-spend cap
-        # (0.2 × 1200 = 240 s here) releases it contended
-        clock = self._patch(monkeypatch, [8.0] * 40)
-        bench._quiesce("t")
-        assert clock[0] >= 200.0
-
-
-class TestPairwiseBudgetTruncation:
-    """VERDICT r12 #2: the sf2.5 pairwise sweep checks the remaining
-    budget between queries; what cannot fit is recorded in
-    meta['truncated'] and skipped SYMMETRICALLY on both engines."""
-
-    def _stub(self, monkeypatch, cost_per_run=10.0):
-        clock = [0.0]
-
-        class FakeDF:
-            def toPandas(self):
-                clock[0] += cost_per_run
-                return None
-
-        class FakeCon:
-            def execute(self, sql):
-                return self
-
-            def df(self):
-                clock[0] += cost_per_run
-                return None
-
-            def fetchall(self):
-                return []
-
-            def close(self):
-                return None
-
-        class FakeReader:
-            def parquet(self, p):
-                return self
-
-            def limit(self, n):
-                return self
-
-            def collect(self):
-                return []
-
-        class FakeSpark:
-            read = FakeReader()
-
-        self.spark = FakeSpark()
-        names = ["qa", "qb", "qc"]
-        monkeypatch.setattr(
-            bench.entry_mod,
-            "queries",
-            lambda: {n: (lambda s, d: FakeDF()) for n in names},
-        )
-        monkeypatch.setattr(
-            bench.entry_mod,
-            "oracle_sql",
-            lambda: {n: f"SELECT '{n}'" for n in names},
-        )
-        monkeypatch.setattr(bench.duckdb, "connect", lambda: FakeCon())
-        monkeypatch.setattr(bench, "TESTDATA_TABLES", [])
-        monkeypatch.setattr(bench, "tune_for_scale", lambda s, d: None)
-        monkeypatch.setattr(bench.time, "time", lambda: clock[0])
-        return names, clock
-
-    def test_no_budget_pressure_times_everything(self, monkeypatch):
-        names, clock = self._stub(monkeypatch)
-        st, dt, meta = bench.bench_pairwise(
-            self.spark, "/nope", names, runs=2, warm_sweeps=1, remaining=None
-        )
-        assert sorted(st) == sorted(dt) == sorted(names)
-        assert meta["truncated"] == []
-
-    def test_short_budget_truncates_symmetrically(self, monkeypatch):
-        names, clock = self._stub(monkeypatch, cost_per_run=10.0)
-        # the global warms cost 60 fake-secs; one slow timed pair costs
-        # 20 with a 26-est + 30-reserve check — 130 holds exactly one
-        deadline = 130.0
-        st, dt, meta = bench.bench_pairwise(
-            self.spark,
-            "/nope",
-            names,
-            runs=2,
-            warm_sweeps=1,
-            remaining=lambda: deadline - clock[0],
-        )
-        assert meta["truncated"], "expected at least one truncated query"
-        assert sorted(st) == sorted(dt), "pairs must stay symmetric"
-        assert set(meta["truncated"]).isdisjoint(st)
-        assert set(st) | set(meta["truncated"]) == set(names)
-
-    def test_zero_budget_still_returns_parseable_meta(self, monkeypatch):
-        names, clock = self._stub(monkeypatch)
-        st, dt, meta = bench.bench_pairwise(
-            self.spark, "/nope", names, runs=2, warm_sweeps=1, remaining=lambda: 0.0
-        )
-        # first warm always runs (no estimate exists before it); the
-        # rest truncates — and nothing asymmetric leaks out
-        assert sorted(st) == sorted(dt)
-        assert set(st) | set(meta["truncated"]) == set(names)
 
 
 class TestTopkPriceFloor:

@@ -4,8 +4,7 @@ Covers the r4 verdict items: the IVF sample driver-memory bound, the
 approx_distinct HLL tolerance, the three 100 TB cap guards
 (LSH_MAX_BUCKET / RERANK_MAX_BUCKET / max_doc_freq) exercised on
 degenerate hot buckets, the prefetch hit-rate end-to-end threshold,
-and the r4 advice items (cache freshness, scale-aware tuning, replica
-decorrelation, alt-trainer split contract).
+and the r4 advice items (cache freshness, replica decorrelation).
 """
 
 from __future__ import annotations
@@ -279,72 +278,6 @@ class TestPrefetchHitRate:
         cache.clear()
 
 
-class TestScaleAwareTuning:
-    def test_small_input_latency_regime(self, spark, tmp_path):
-        from columnar_database_project_spark.session import tune_for_scale
-
-        p = str(tmp_path / "t.parquet")
-        pq.write_table(pa.table({"a": [1, 2]}), p)
-        conf = tune_for_scale(spark, str(tmp_path))
-        assert conf["spark.sql.adaptive.enabled"] == "false"
-        assert conf["spark.sql.shuffle.partitions"] == "8"
-
-    def test_mid_input_crossover_regime(self, spark, tmp_path, monkeypatch):
-        """64 MB..256 MB inputs take the measured crossover config:
-        AQE on, cluster-width partitions, small splits for scan
-        parallelism (the full-headline A/B on the 80 MB sf0.5 replica
-        showed this beating the tiny regime on 10 of 14 queries)."""
-        from columnar_database_project_spark import session as sess
-
-        monkeypatch.setattr(sess, "input_bytes", lambda d: 80 * 1024**2)
-        conf = sess.tune_for_scale(spark, str(tmp_path))
-        assert conf["spark.sql.adaptive.enabled"] == "true"
-        assert conf["spark.sql.files.maxPartitionBytes"] == str(16 * 1024**2)
-        monkeypatch.undo()
-        sess.tune_for_scale(spark, "/root/testdata/sf0.001")
-
-    def test_large_input_scales_partitions(self, spark, tmp_path, monkeypatch):
-        from columnar_database_project_spark import session as sess
-
-        monkeypatch.setattr(sess, "input_bytes", lambda d: 640 * 1024**3)
-        conf = sess.tune_for_scale(spark, str(tmp_path))
-        assert conf["spark.sql.adaptive.enabled"] == "true"
-        # 640 GB / 64 MB = 10240 → clamped to the 2000 ceiling
-        assert conf["spark.sql.shuffle.partitions"] == "2000"
-        # genuinely-large input: the 128 MB split cap engages
-        assert conf["spark.sql.files.maxPartitionBytes"] == str(128 * 1024**2)
-        # restore the small-scale test regime on the shared session
-        monkeypatch.undo()
-        sess.tune_for_scale(spark, "/root/testdata/sf0.001")
-
-    def test_large_branch_split_tracks_cores(self, spark, tmp_path, monkeypatch):
-        """r8 fix: a flat 128 MB split starved the box at sf2.5 (the
-        395 MB lineitem landed on 3-4 scan tasks of 32 threads; q6 ran
-        7.5 s vs 0.5 s). Just over the large boundary the split floors
-        at 16 MB so scans still saturate every core; the 128 MB config
-        is reserved for inputs that actually fill the cluster."""
-        from columnar_database_project_spark import session as sess
-
-        # the floor engages only when b < 3 * cores * 16 MB, which no
-        # large-branch input reaches below 6 cores: pin the 32-core box
-        monkeypatch.setattr(sess, "DEFAULT_CPUS", 32)
-        monkeypatch.setattr(sess, "input_bytes", lambda d: 400 * 1024**2)
-        conf = sess.tune_for_scale(spark, str(tmp_path))
-        assert conf["spark.sql.files.maxPartitionBytes"] == str(16 * 1024**2)
-        monkeypatch.undo()
-        # mid-large input: split = b / (3*cores), between the bounds.
-        # The input is sized from the core count (64 MiB per task, and
-        # at least the large boundary) so it lands there on any host.
-        mid_large = max(sess.SMALL_INPUT_BYTES, 3 * sess.DEFAULT_CPUS * 64 * 1024**2)
-        monkeypatch.setattr(sess, "input_bytes", lambda d: mid_large)
-        conf = sess.tune_for_scale(spark, str(tmp_path))
-        split = int(conf["spark.sql.files.maxPartitionBytes"])
-        assert split == mid_large // (3 * sess.DEFAULT_CPUS)
-        assert 16 * 1024**2 < split < 128 * 1024**2
-        monkeypatch.undo()
-        sess.tune_for_scale(spark, "/root/testdata/sf0.001")
-
-
 class TestRelationCacheFreshness:
     def test_rewritten_table_not_served_stale(self, spark, tmp_path):
         from columnar_database_project_spark.catalog import load_table
@@ -408,24 +341,6 @@ class TestReplicaDecorrelation:
         v1 = np.array(rep["embedding"].to_pylist()[n], dtype=np.float32)
         assert np.allclose(np.roll(v0, 1), v1)
         assert not np.allclose(v0, v1)  # not an exact clone
-
-
-class TestAltTrainerSplitContract:
-    def test_split_1_trains_on_everything(self):
-        from columnar_database_project_spark.ml.alt_trainer import train_alt
-
-        qb = [[1, 2, 3, 4], [2, 3, 4, 5]]
-        _, report = train_alt(qb, epochs=1, split=1.0)
-        assert report["n_eval"] == 0
-        assert report["n_train"] == 6  # all prefix samples
-        assert report["accuracy"] is None and report["mrr"] is None
-
-    def test_split_below_1_keeps_holdout(self):
-        from columnar_database_project_spark.ml.alt_trainer import train_alt
-
-        _, report = train_alt([[1, 2, 3, 4], [2, 3, 4, 5]], epochs=1, split=0.99)
-        assert report["n_eval"] >= 1
-        assert report["accuracy"] is not None
 
 
 class TestPipelineSplitPackFunnel:

@@ -232,172 +232,3 @@ class TestMultimodalDecode:
         ).collect()
         assert rows[0]["height"] == 3 and rows[0]["width"] == 4
         assert abs(rows[0]["channel_mean"] - 20.0) < 1e-6
-
-
-class TestHealthGate:
-    """bench.py's probe-based quiesce (r9): a take that STARTS degraded
-    must be retaken even when the end/start ratio looks 'improving' —
-    the fresh-boot r9 run recorded the sf2.5 corpus pipelines 2-26x
-    slow with probe_ratio 0.68 because the start sample was already
-    1.6x nominal."""
-
-    def _patch(self, monkeypatch, degraded_ms, post_samples, seed=37.0):
-        import bench
-
-        state = {"seeded": False}
-        post = list(post_samples)
-        clock = [0.0]
-
-        def fake_health():
-            # first call = main()'s nominal seed; while the fake clock
-            # is inside the degraded window every sample reads slow;
-            # after it, scripted recovery values (last one repeats)
-            if not state["seeded"]:
-                state["seeded"] = True
-                ms = seed
-            elif clock[0] <= bench.QUIESCE_MAX_WAIT_SEC:
-                ms = degraded_ms
-            else:
-                ms = post.pop(0) if len(post) > 1 else post[0]
-            return {
-                "single_thread_ms": ms,
-                "parallel16_wall_over_single": 1.5,
-                "loadavg_1m": 0.1,
-                "loadavg_5m": 0.1,
-            }
-
-        monkeypatch.setattr(bench, "machine_health", fake_health)
-        monkeypatch.setattr(bench, "_NOMINAL_SINGLE_MS", float("inf"))
-        # r12: quiesce waits are charged against a global wall budget
-        # (cap = 20% of it). These scenarios predate that and need the
-        # full 300 s per-take wait available — give them a budget whose
-        # cap exceeds it, and a clean spend/epoch. The budget-exhausted
-        # path is pinned separately in TestBudgetedGate.
-        monkeypatch.setattr(bench, "BENCH_BUDGET_SEC", 10_000.0)
-        monkeypatch.setattr(bench, "_QUIESCE_SPEND", 0.0)
-        monkeypatch.setattr(bench, "_BENCH_T0", 0.0)
-        monkeypatch.setattr(bench.os, "getloadavg", lambda: (0.1, 0.1, 0.1))
-        # fake clock so the quiesce wait-cap can expire without real
-        # sleeping (bench.time is the stdlib module; patch is
-        # test-scoped via monkeypatch)
-        monkeypatch.setattr(bench.time, "time", lambda: clock[0])
-        monkeypatch.setattr(
-            bench.time,
-            "sleep",
-            lambda s: clock.__setitem__(0, clock[0] + s),
-        )
-        return bench
-
-    def test_degraded_start_triggers_retake(self, monkeypatch):
-        # nominal seed 37 -> quiesce waits out its cap on a 58.9 ms
-        # probe and take 1 starts (and ends) degraded: the end/start
-        # ratio alone would accept it (the r9 fresh-boot trap, ratio
-        # 0.68) — start_degraded must force the retake; take 2 then
-        # starts clean.
-        bench = self._patch(
-            monkeypatch,
-            degraded_ms=58.9,  # every sample until the wait cap expires
-            post_samples=[40.0, 38.0, 39.0],  # quiesce t2, end t2, spare
-        )
-        bench._observe_health()  # seed nominal=37 as main() does
-        calls = []
-        out, meta = bench.health_gated("t", lambda: calls.append(1) or "ok")
-        assert out == "ok"
-        assert len(calls) == 2, "degraded-start take must be retaken"
-        assert meta["takes"][0]["start_degraded"] is True
-        # the pre-r9 gate (end/start ratio alone) would have accepted it
-        assert meta["takes"][0]["probe_ratio"] <= bench.HEALTH_PROBE_MAX_RATIO
-        assert meta["takes"][1]["start_degraded"] is False
-        assert meta["accepted_take"] == 2
-
-    def test_clean_start_single_take(self, monkeypatch):
-        bench = self._patch(
-            monkeypatch, degraded_ms=38.0, post_samples=[39.0]
-        )
-        bench._observe_health()
-        out, meta = bench.health_gated("t", lambda: "ok")
-        assert out == "ok" and meta["accepted_take"] == 1
-        assert meta["takes"][0]["start_degraded"] is False
-
-
-class TestCompactLine:
-    """bench.build_compact: the driver parses only the LAST line of a
-    ~2000-char stdout tail; r8's compact line regrew past 2 KB and the
-    round recorded parsed:null. The budget is enforced, optional keys
-    drop first, and the core (metric/value/queries) always survives."""
-
-    def _result(self, n_queries=14):
-        qs = {f"q{i:02d}": 0.123 for i in range(n_queries)}
-        return {
-            "metric": "headline_queries_total_wall_clock",
-            "value": 4.5,
-            "unit": "sec",
-            "sf": 0.1,
-            "queries": qs,
-            "baseline_duckdb": dict(qs),
-            "baseline_duckdb_total": 2.4,
-            "scaling": {
-                "sf2.5": {
-                    "queries": {"a": 1.0},
-                    "baseline_duckdb": {"a": 2.0},
-                    "near_survivors_chain": {"ratio_vs_duckdb": 0.19},
-                }
-            },
-            "overhead_floor": {
-                "spark_empty_scan": 0.019,
-                "duckdb_empty_scan": 0.002,
-            },
-            "machine_health": {
-                "headline": {
-                    "takes": [
-                        {"probe_ratio": 0.97, "start_degraded": False}
-                    ],
-                    "accepted_take": 1,
-                }
-            },
-            "extras_r6": {"spark": {"x": 1.0}, "duckdb": {"x": 2.0}},
-            "streaming": {"tumbling": {"rows_per_sec": 45000}},
-            "prefetch_ab": {"lru_lstm": {"hit_rate": 0.58}},
-            "cow_dml": {"bytes_ratio": 0.02},
-        }
-
-    def test_fits_budget_and_parses(self):
-        import json
-
-        import bench
-
-        line = bench.build_compact(self._result())
-        assert len(line) <= 1900
-        d = json.loads(line)
-        assert d["value"] == 4.5 and len(d["queries"]) == 14
-        assert d["scaling"]["sf2.5"]["dedup_chain_ratio"] == 0.19
-        assert d["health"]["headline_start_degraded"] is False
-
-    def test_oversize_drops_optional_keys_keeps_core(self):
-        import json
-
-        import bench
-
-        r = self._result(n_queries=60)  # queries alone near the budget
-        line = bench.build_compact(r)
-        d = json.loads(line)
-        # core survives every drop
-        assert d["metric"] and d["queries"] and "value" in d
-        # the first-dropped keys are gone before per-query spark times
-        assert "prefetch_hit_rates" not in d
-
-    def test_error_shaped_sections_do_not_crash(self):
-        import json
-
-        import bench
-
-        r = self._result()
-        r["overhead_floor"] = {"error": "boom"}
-        r["cow_dml"] = {"error": "boom"}
-        r["extras_r6"] = {"error": "boom"}
-        d = json.loads(bench.build_compact(r))
-        # r12: empty/None leaves are dropped outright (char budget goes
-        # to claims, not "{}" placeholders) — error-shaped sections must
-        # simply be absent, never crash the line builder.
-        assert "floor" not in d and "extras_r6" not in d
-        assert d["value"] == 4.5

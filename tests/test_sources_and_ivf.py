@@ -1,5 +1,5 @@
-"""CSV/JSONL readers, Arrow handoff, format converter, and IVF ANN
-recall against brute force."""
+"""CSV/JSONL readers, Arrow handoff, and IVF ANN recall against brute
+force."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from columnar_database_project_spark.catalog import load_table
 from columnar_database_project_spark.sources.readers import (
-    convert_to_microblocks,
     from_arrow,
     read_csv,
     read_jsonl,
@@ -49,19 +48,6 @@ class TestReaders:
         assert sorted(map(tuple, back.collect())) == sorted(
             map(tuple, orig.collect())
         )
-
-    def test_convert_csv_to_microblocks(self, spark, csv_path, tmp_path_factory):
-        dst = str(tmp_path_factory.mktemp("conv") / "nation_mb")
-        schema = "n_nationkey long, n_name string, n_regionkey long"
-        convert_to_microblocks(
-            spark, csv_path, dst, fmt="csv", schema=schema, block_rows=10
-        )
-        df = spark.read.parquet(dst)
-        assert df.count() == 25
-
-    def test_unknown_format_raises(self, spark):
-        with pytest.raises(ValueError):
-            convert_to_microblocks(spark, "/x", "/y", fmt="avro")
 
 
 class TestIVF:

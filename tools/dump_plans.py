@@ -1,4 +1,4 @@
-"""Dump the formatted physical plan of every bench HEADLINE query to
+"""Dump the formatted physical plan of every headline query to
 PLANS_APPENDIX.md — the inspectable evidence for PLANS.md's claims
 (pushdown, broadcast choices, TakeOrdered, partial aggregation).
 
@@ -14,12 +14,26 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from bench import HEADLINE  # noqa: E402
-from columnar_database_project_spark.session import (  # noqa: E402
-    get_spark,
-    tune_for_scale,
-)
+from columnar_database_project_spark.session import get_spark  # noqa: E402
 
+# Headline set: reference-canonical filter + TPC-H-ish classics + the
+# training-data pipeline operators.
+HEADLINE = [
+    "filter_between",
+    "q1_pricing_summary",
+    "q3_shipping_priority",
+    "q5_local_supplier_volume",
+    "q6_forecast_revenue",
+    "topk",
+    "window_rank",
+    "events_sessionize",
+    "text_token_stats",
+    "text_corpus_build",
+    "dedup_minhash_signatures",
+    "dedup_lsh_candidates",
+    "dedup_embedding_cosine",
+    "sim_topk_bruteforce",
+]
 
 # Non-headline operators whose plan shape PLANS.md or the round
 # analysis discusses — dumped after the headline so the claims about
@@ -74,14 +88,12 @@ def main() -> None:
         "dump_plans", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
     spark.sparkContext.setLogLevel("ERROR")
-    conf = tune_for_scale(spark, sf_dir)
     qs = entry_mod.queries()
     out = [
-        "# PLANS_APPENDIX — formatted physical plans of the bench HEADLINE",
+        "# PLANS_APPENDIX — formatted physical plans of the headline queries",
         "",
-        f"Generated by `tools/dump_plans.py` over `{sf_dir}` with "
-        f"size-tuned confs `{conf}`. Regenerate after any plan-shape "
-        "change; PLANS.md interprets these.",
+        f"Generated by `tools/dump_plans.py` over `{sf_dir}`. Regenerate "
+        "after any plan-shape change; PLANS.md interprets these.",
         "",
     ]
     names = list(HEADLINE) + [n for n in EXTRA_PLANS if n in qs]

@@ -1,5 +1,5 @@
 """Generate a larger scale factor by k-fold replication of an existing
-testdata directory — the third point for the bench scaling curve.
+testdata directory — a third point for a per-query scaling curve.
 
 Each copy i offsets every entity-key column by ``(max(key)+1) * i``,
 with one shared offset per key DOMAIN (custkey/orderkey/partkey/
