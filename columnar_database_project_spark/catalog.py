@@ -7,18 +7,32 @@ real catalog of temp views, which also fixes the reference's blind
 ``sql.replace(table_name, ...)`` rewrite bug (query_enginev5.py:302):
 Spark resolves table names through the catalog, never via string
 substitution.
+
+The reference registers each table once (DuckDB CREATE VIEW at connect
+time, query_enginev5.py:30-39); ``load_table`` keeps that property with
+``memo``, the one cache for every value derived from table files:
+relations, and the small arrays some operators build from a table. An
+entry holds the ``file_freshness`` token it was built at, so a file
+regenerated at the same path rebuilds it instead of being served stale;
+least recently used entries are dropped past a fixed bound.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
+from collections.abc import Callable
 from pathlib import Path
+from typing import TypeVar
 
 import pyarrow.parquet as _pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from columnar_database_project_spark.session import scoped_conf
+
+_T = TypeVar("_T")
 
 TESTDATA_TABLES = (
     "region",
@@ -72,20 +86,6 @@ def micros_timestamps(table):
     return table
 
 
-# Per-session relation cache: a returned DataFrame is an immutable
-# logical plan, so handing the same object to every caller is safe and
-# mirrors the reference's register-once view catalog (DuckDB CREATE
-# VIEW at connect time, reference query_enginev5.py:30-39) — without
-# it every query pays a fresh parquet footer read + py4j roundtrip
-# just to rebuild an identical scan relation. Keyed by session id so a
-# restarted session never sees stale relations, and by a file
-# freshness token (mtime+size) so a table REGENERATED at the same path
-# mid-session (scale replicas, rebuilt test fixtures) is re-read
-# instead of served from the stale cached plan.
-_RELATION_CACHE: dict[tuple[int, str, tuple], DataFrame] = {}
-_CACHE_SWEEP_LEN = 512
-
-
 def file_freshness(path: str) -> tuple:
     """Cheap change-detection token for a parquet file or a directory
     of part files: (mtime_ns, size) per relevant file.
@@ -122,25 +122,37 @@ def file_freshness(path: str) -> tuple:
         return ("missing",)
 
 
-def sweep_cache(cache: dict, session_key: int) -> None:
-    """Bound a (session, path, freshness)-keyed cache: once it outgrows
-    _CACHE_SWEEP_LEN, drop entries from other (likely stopped) sessions
-    so dead sessions and their plans are never pinned forever.
-    (Superseded-freshness entries are evicted inline on replacement.)"""
-    if len(cache) <= _CACHE_SWEEP_LEN:
-        return
-    for k in [k for k in cache if k[0] != session_key]:
-        del cache[k]
+# The memo (module docstring): without it every query pays a footer read
+# and a py4j roundtrip to rebuild an identical relation. A returned
+# DataFrame is an immutable logical plan, so handing the same object to
+# every caller is safe; its key carries ``id(spark)`` so a restarted
+# session never sees another session's plans, while numpy values are
+# session-free. One entry per key, (token, value); least recently used
+# keys go past _MEMO_LEN.
+_MEMO: OrderedDict = OrderedDict()
+_MEMO_LEN = 512
+_MEMO_LOCK = threading.Lock()
 
 
-def cache_put(cache: dict, key: tuple, value) -> None:
-    """Insert, evicting any entry for the same (session, path) with a
-    different (stale) freshness token, then sweeping if oversized."""
-    sid, path = key[0], key[1]
-    for k in [k for k in cache if k[0] == sid and k[1] == path and k != key]:
-        del cache[k]
-    cache[key] = value
-    sweep_cache(cache, sid)
+def memo(key: tuple, token, build: Callable[[], _T]) -> _T:
+    """The value stored under ``key`` when it was built at an equal
+    ``token``; otherwise ``build()``'s, stored in place of the old one.
+
+    ``build`` runs outside the lock: builds nest (``_minhash_wide``
+    loads its table through ``load_table``). Two threads that miss at
+    once both build, and the last store wins."""
+    with _MEMO_LOCK:
+        entry = _MEMO.get(key)
+        if entry is not None and entry[0] == token:
+            _MEMO.move_to_end(key)
+            return entry[1]
+    value = build()
+    with _MEMO_LOCK:
+        _MEMO[key] = (token, value)
+        _MEMO.move_to_end(key)
+        if len(_MEMO) > _MEMO_LEN:
+            _MEMO.popitem(last=False)
+    return value
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -162,43 +174,40 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if not os.path.exists(path):
         # ORC fallback: a dir holding <name>.orc serves the same
         # catalog surface (BASELINE approach line: "Parquet/ORC").
-        # ORC microblocks are always engine-written (MicroBlockWriter
-        # format="orc"), so no nanos-timestamp legacy handling applies.
         orc_path = os.path.join(sf_dir, f"{name}.orc")
         if os.path.exists(orc_path):
-            real = os.path.realpath(orc_path)
-            cache_key = (id(spark), real, file_freshness(real))
-            cached = _RELATION_CACHE.get(cache_key)
-            if cached is not None:
-                return cached
-            df = spark.read.orc(orc_path)
-            for field in df.schema.fields:
-                if field.dataType.typeName() == "timestamp_ntz":
-                    df = df.withColumn(
-                        field.name, F.col(field.name).cast("timestamp")
-                    )
-            cache_put(_RELATION_CACHE, cache_key, df)
-            return df
+            path = orc_path
     real = os.path.realpath(path)
-    cache_key = (id(spark), real, file_freshness(real))
-    cached = _RELATION_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
-    nanos_cols = _nanos_ts_columns(path)
-    if nanos_cols:
-        # Scope the conf to this read: the nanos→long schema is baked
-        # into the relation at spark.read time (verified empirically:
-        # actions on the returned DataFrame succeed after restore), so
-        # restoring here never breaks the caller's OTHER parquet reads.
-        try:
-            with scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
-                df = spark.read.parquet(path)
-        except Exception:
-            return _load_via_pyarrow(spark, path)
+    return memo(
+        ("load_table", id(spark), real),
+        file_freshness(real),
+        lambda: _read_relation(spark, path),
+    )
+
+
+def _read_relation(spark: SparkSession, path: str) -> DataFrame:
+    """``load_table``'s uncached read of one parquet or ORC table."""
+    if path.endswith(".orc"):
+        # ORC microblocks are always engine-written (MicroBlockWriter
+        # format="orc"), so no nanos-timestamp legacy handling applies.
+        df = spark.read.orc(path)
     else:
-        df = spark.read.parquet(path)
-    for c in nanos_cols:
-        df = df.withColumn(c, F.expr(f"timestamp_micros(CAST(`{c}` DIV 1000 AS BIGINT))"))
+        nanos_cols = _nanos_ts_columns(path)
+        if nanos_cols:
+            # Scope the conf to this read: the nanos→long schema is
+            # baked into the relation at spark.read time (verified
+            # empirically: actions on the returned DataFrame succeed
+            # after restore), so restoring here never breaks the
+            # caller's OTHER parquet reads.
+            try:
+                with scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
+                    df = spark.read.parquet(path)
+            except Exception:
+                return _load_via_pyarrow(spark, path)
+        else:
+            df = spark.read.parquet(path)
+        for c in nanos_cols:
+            df = df.withColumn(c, F.expr(f"timestamp_micros(CAST(`{c}` DIV 1000 AS BIGINT))"))
     # Parquet µs timestamps written without isAdjustedToUTC read back as
     # TIMESTAMP_NTZ; normalize to the session-tz TimestampType (session
     # tz is pinned to UTC, so the cast is value-identity) so every
@@ -208,7 +217,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for field in df.schema.fields:
         if field.dataType.typeName() == "timestamp_ntz":
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
-    cache_put(_RELATION_CACHE, cache_key, df)
     return df
 
 

@@ -43,9 +43,9 @@ from columnar_database_project_spark.functions.broadcast_policy import (
     bounded_broadcast,
 )
 from columnar_database_project_spark.catalog import (
-    cache_put,
     file_freshness,
     load_table,
+    memo,
 )
 from columnar_database_project_spark.functions import hashing as H
 from columnar_database_project_spark.functions.vector import (
@@ -217,9 +217,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MINHASH_WIDE_CACHE: dict[tuple[int, str, tuple], DataFrame] = {}
-
-
 def _minhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per doc with mh_0..mh_{N-1} signature columns.
 
@@ -242,14 +239,18 @@ def _minhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
       the generated Java source differs per query and Janino
       recompiles (~2 s) on each fresh DataFrame — measured 5× slower
       than this formulation;
-    - the built frame is memoized per (session, table) like
-      ``load_table`` relations, since three operators (signatures,
-      buckets, candidates) all derive from it."""
+    - the built frame is memoized per (session, table) through
+      ``catalog.memo`` like ``load_table`` relations, since three
+      operators (signatures, buckets, candidates) all derive from it."""
     doc_path = os.path.realpath(os.path.join(sf_dir, "documents.parquet"))
-    cache_key = (id(spark), doc_path, file_freshness(doc_path))
-    cached = _MINHASH_WIDE_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
+    return memo(
+        ("minhash_wide", id(spark), doc_path),
+        file_freshness(doc_path),
+        lambda: _build_minhash_wide(spark, sf_dir),
+    )
+
+
+def _build_minhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = F.split(F.trim(F.col("text")), r"\s+")
     n_sh = F.greatest(F.size(F.col("toks")) - SHINGLE_W, F.lit(0)) + 1
@@ -277,7 +278,6 @@ def _minhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(*per_seed_min)
     )
-    cache_put(_MINHASH_WIDE_CACHE, cache_key, wide)
     return wide
 
 

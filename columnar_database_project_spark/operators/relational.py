@@ -423,22 +423,19 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REGION_NATION_CACHE: dict = {}
-
-
 def _region_nation_keys(
     sf_dir: str, region_name: str
 ) -> tuple[list[int], dict[int, str]]:
     """Nation keys + names for one region, read driver-side with
-    pyarrow (freshness-cached). nation/region are FIXED-cardinality
-    (25/5 rows at every SF): inlining them as literals removes two
-    broadcast-build stage barriers from every consumer — the q5 floor
-    decomposition (r11, a retired probe, git a8cd591) measured each
-    such barrier at ~0.2 s on a
-    15M-row query whose entire data term is 0.3 s. Same pattern as
+    pyarrow (``catalog.memo`` on both files' freshness). nation/region
+    are FIXED-cardinality (25/5 rows at every SF): inlining them as
+    literals removes two broadcast-build stage barriers from every
+    consumer — the q5 floor decomposition (r11, a retired probe, git
+    a8cd591) measured each such barrier at ~0.2 s on a 15M-row query
+    whose entire data term is 0.3 s. Same pattern as
     similarity._query_vectors: a fixed-size plan PARAMETER, not a
     scanned table."""
-    from columnar_database_project_spark.catalog import file_freshness
+    from columnar_database_project_spark.catalog import file_freshness, memo
 
     def dim_path(name: str) -> str:
         # Probe parquet then orc, as load_table does: an ORC-only
@@ -463,41 +460,35 @@ def _region_nation_keys(
 
         return pq.read_table(path, columns=columns).to_pydict()
 
+    def build() -> tuple[list[int], dict[int, str]]:
+        region = read_cols(rpath, ["r_regionkey", "r_name"])
+        rkeys = {
+            k
+            for k, n in zip(region["r_regionkey"], region["r_name"])
+            if n == region_name
+        }
+        nation = read_cols(npath, ["n_nationkey", "n_name", "n_regionkey"])
+        keys = [
+            int(k)
+            for k, r in zip(nation["n_nationkey"], nation["n_regionkey"])
+            if r in rkeys
+        ]
+        names = {
+            int(k): n
+            for k, n, r in zip(
+                nation["n_nationkey"], nation["n_name"], nation["n_regionkey"]
+            )
+            if r in rkeys
+        }
+        return keys, names
+
     npath = dim_path("nation")
     rpath = dim_path("region")
-    key = (
-        npath,
-        rpath,
-        region_name,
-        file_freshness(npath),
-        file_freshness(rpath),
+    return memo(
+        ("region_nation_keys", npath, rpath, region_name),
+        (file_freshness(npath), file_freshness(rpath)),
+        build,
     )
-    hit = _REGION_NATION_CACHE.get(key)
-    if hit is not None:
-        return hit
-    region = read_cols(rpath, ["r_regionkey", "r_name"])
-    rkeys = {
-        k
-        for k, n in zip(region["r_regionkey"], region["r_name"])
-        if n == region_name
-    }
-    nation = read_cols(npath, ["n_nationkey", "n_name", "n_regionkey"])
-    keys = [
-        int(k)
-        for k, r in zip(nation["n_nationkey"], nation["n_regionkey"])
-        if r in rkeys
-    ]
-    names = {
-        int(k): n
-        for k, n, r in zip(
-            nation["n_nationkey"], nation["n_name"], nation["n_regionkey"]
-        )
-        if r in rkeys
-    }
-    if len(_REGION_NATION_CACHE) > 16:
-        _REGION_NATION_CACHE.clear()
-    _REGION_NATION_CACHE[key] = (keys, names)
-    return keys, names
 
 
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -525,7 +516,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB)."""
     # Literalized fixed dims (r11): region⋈nation collapses to 5
     # nation keys + a 5-entry key→name map, read driver-side (pyarrow,
-    # freshness-cached). The ASIA predicate becomes an `isin` PUSHED
+    # catalog.memo). The ASIA predicate becomes an `isin` PUSHED
     # INTO the customer/supplier/leg scans and the n_name lookup a
     # map literal — two broadcast-build stage barriers (~0.2 s each at
     # sf2.5, vs a 0.3 s total data term) disappear from every regime.

@@ -57,42 +57,37 @@ _PLANES = np.array(HYPERPLANES, dtype=np.float64)   # (P, D)
 # local file, one task per ~128 MB split at cluster scale.
 
 
-_QUERY_VECTOR_CACHE: dict = {}
-
-
 def _query_vectors(sf_dir: str) -> tuple[np.ndarray, np.ndarray]:
     """The N_QUERIES query vectors as (ids, raw matrix), read driver-
     side with pyarrow. The query set is a PARAMETER of the search (a
     client would hand it in), so fetching it is a pushdown-filtered
     row-group read — not a Spark job scheduled ahead of every search.
-    Freshness-keyed cache (same pattern as the centroids): the read
+    Memoized on the file's freshness (as the centroids are): the read
     is a fixed per-call cost on the single-query serving path, and a
     serving process answers many searches against one table version."""
     import pyarrow.dataset as ds
 
-    from columnar_database_project_spark.catalog import file_freshness
+    from columnar_database_project_spark.catalog import file_freshness, memo
 
     path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (os.path.realpath(path), file_freshness(os.path.realpath(path)))
-    hit = _QUERY_VECTOR_CACHE.get(key)
-    if hit is not None:
-        return hit
-    t = (
-        ds.dataset(path)
-        .to_table(
-            columns=["vec_id", "embedding"],
-            filter=ds.field("vec_id") < N_QUERIES,
+
+    def build() -> tuple[np.ndarray, np.ndarray]:
+        t = (
+            ds.dataset(path)
+            .to_table(
+                columns=["vec_id", "embedding"],
+                filter=ds.field("vec_id") < N_QUERIES,
+            )
+            .sort_by("vec_id")
         )
-        .sort_by("vec_id")
-    )
-    q_ids = np.asarray(t["vec_id"], dtype=np.int64)
-    q_mat = np.array(
-        [np.asarray(v, dtype=np.float64) for v in t["embedding"].to_pylist()]
-    )
-    if len(_QUERY_VECTOR_CACHE) > 16:   # bound: stale tokens never pile up
-        _QUERY_VECTOR_CACHE.clear()
-    _QUERY_VECTOR_CACHE[key] = (q_ids, q_mat)
-    return q_ids, q_mat
+        q_ids = np.asarray(t["vec_id"], dtype=np.int64)
+        q_mat = np.array(
+            [np.asarray(v, dtype=np.float64) for v in t["embedding"].to_pylist()]
+        )
+        return q_ids, q_mat
+
+    real = os.path.realpath(path)
+    return memo(("query_vectors", real), file_freshness(real), build)
 
 
 def q_sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -394,24 +389,20 @@ def _ivf_sample(sf_dir: str) -> np.ndarray:
     )
 
 
-_CENTROID_CACHE: dict[tuple, np.ndarray] = {}
-
-
 def ivf_centroids(sf_dir: str) -> np.ndarray:
     """Normalized (N_IVF_CELLS, D) centroids for one table directory —
     deterministic given the data, shared by the queries AND the SQL
     oracle builder so both sides see bit-identical centroids. Keyed by
     a file freshness token so a table regenerated at the same path is
     re-sampled, not served stale centroids."""
-    from columnar_database_project_spark.catalog import file_freshness
+    from columnar_database_project_spark.catalog import file_freshness, memo
 
     path = os.path.realpath(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (path, file_freshness(path))
-    if key not in _CENTROID_CACHE:
-        if len(_CENTROID_CACHE) > 16:  # bound: stale tokens never pile up
-            _CENTROID_CACHE.clear()
-        _CENTROID_CACHE[key] = _ivf_centroids(_ivf_sample(sf_dir))
-    return _CENTROID_CACHE[key]
+    return memo(
+        ("ivf_centroids", path),
+        file_freshness(path),
+        lambda: _ivf_centroids(_ivf_sample(sf_dir)),
+    )
 
 
 def q_sim_ivf_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1856,23 +1847,17 @@ PQ_KMEANS_ITERS = 10
 PQ_DECIMALS = 6              # distances rounded before argmin/rank →
                              # cross-engine deterministic (IVF pattern)
 
-_PQ_CACHE: dict[tuple, np.ndarray] = {}
-
 
 def pq_codebooks(sf_dir: str) -> np.ndarray:
     """(PQ_M, PQ_K, PQ_SUB) codebooks — deterministic per-subspace
     k-means (fixed seed, fixed iterations) over the same streamed
     strided sample the IVF centroids train on, so driver memory stays
-    O(sample) regardless of table size. Freshness-keyed cache shared
-    by the Spark queries AND the SQL-oracle builder: both sides see
-    bit-identical codebooks."""
-    from columnar_database_project_spark.catalog import file_freshness
+    O(sample) regardless of table size. Memoized on the file's
+    freshness and shared by the Spark queries AND the SQL-oracle
+    builder: both sides see bit-identical codebooks."""
+    from columnar_database_project_spark.catalog import file_freshness, memo
 
-    path = os.path.realpath(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (path, file_freshness(path))
-    if key not in _PQ_CACHE:
-        if len(_PQ_CACHE) > 16:
-            _PQ_CACHE.clear()
+    def build() -> np.ndarray:
         sample = _ivf_sample(sf_dir)          # raw (unnormalized) rows
         rng = np.random.RandomState(29)
         books = np.empty((PQ_M, PQ_K, PQ_SUB))
@@ -1887,8 +1872,10 @@ def pq_codebooks(sf_dir: str) -> np.ndarray:
                     if len(members):
                         cent[k] = members.mean(axis=0)
             books[m] = cent
-        _PQ_CACHE[key] = books
-    return _PQ_CACHE[key]
+        return books
+
+    path = os.path.realpath(os.path.join(sf_dir, "embeddings.parquet"))
+    return memo(("pq_codebooks", path), file_freshness(path), build)
 
 
 def _pq_assign(v: np.ndarray, books: np.ndarray) -> np.ndarray:

@@ -64,9 +64,9 @@ class MicroBlockWriter:
         self.compression = compression
         self.format = format
 
-    def write(self, df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    def write(self, df: DataFrame, path: str) -> None:
         """One row group (parquet) / stripe (orc) per file,
-        ``block_rows`` rows per block.
+        ``block_rows`` rows per block; ``path`` is overwritten.
 
         ``parquet.block.size`` / ``orc.stripe.size`` is set large so
         each file holds exactly one scan unit; ``maxRecordsPerFile``
@@ -74,7 +74,7 @@ class MicroBlockWriter:
         parallelism — each task emits ⌈task_rows / block_rows⌉ blocks.
         """
         w = (
-            df.write.mode(mode)
+            df.write.mode("overwrite")
             .option("maxRecordsPerFile", self.block_rows)
             .option("compression", self.compression)
         )
@@ -174,7 +174,6 @@ def write_with_row_ids(
     path: str,
     order_by: list[str],
     block_rows: int = DEFAULT_BLOCK_ROWS,
-    mode: str = "overwrite",
     num_partitions: int | None = None,
 ) -> None:
     """Write a microblock layout with an explicit global row-id column
@@ -235,7 +234,7 @@ def write_with_row_ids(
                 yield pdf
 
         with_rid = sorted_df.mapInPandas(assign, schema=out_schema)
-        MicroBlockWriter(block_rows=block_rows).write(with_rid, path, mode=mode)
+        MicroBlockWriter(block_rows=block_rows).write(with_rid, path)
     finally:
         sorted_df.unpersist()
 

@@ -119,11 +119,8 @@ def index_vectors_stream(
     )
 
 
-_STORE_RELATION_CACHE: dict = {}
-
-
 def _store_relation(spark: SparkSession, index_path: str) -> DataFrame:
-    """The store as a DataFrame, cached per (session, path, contents).
+    """The store as a DataFrame, memoized per (session, path, contents).
 
     ``spark.read.parquet`` lists the whole partition tree and infers
     schema eagerly — a fixed ~100 ms per call on the single-query
@@ -136,7 +133,7 @@ def _store_relation(spark: SparkSession, index_path: str) -> DataFrame:
     # which an in-place part overwrite does not change — the
     # out-of-band-rewrite case catalog.file_freshness documents;
     # ADVICE r11).
-    from columnar_database_project_spark.catalog import file_freshness
+    from columnar_database_project_spark.catalog import file_freshness, memo
 
     real = os.path.realpath(index_path)
     token = []
@@ -148,14 +145,11 @@ def _store_relation(spark: SparkSession, index_path: str) -> DataFrame:
                 )
     except OSError:
         token.append(("missing", 0, 0))
-    key = (id(spark), real, tuple(token))
-    df = _STORE_RELATION_CACHE.get(key)
-    if df is None:
-        if len(_STORE_RELATION_CACHE) > 16:
-            _STORE_RELATION_CACHE.clear()
-        df = spark.read.parquet(index_path)
-        _STORE_RELATION_CACHE[key] = df
-    return df
+    return memo(
+        ("store_relation", id(spark), real),
+        tuple(token),
+        lambda: spark.read.parquet(index_path),
+    )
 
 
 def search_index_store(

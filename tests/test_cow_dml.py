@@ -496,8 +496,8 @@ class TestManifestCompaction:
 
         real_write = MicroBlockWriter.write
 
-        def short_write(self, df, path, mode="overwrite"):
-            real_write(self, df.limit(1), path, mode=mode)
+        def short_write(self, df, path):
+            real_write(self, df.limit(1), path)
 
         monkeypatch.setattr(MicroBlockWriter, "write", short_write)
         with pytest.raises(RuntimeError, match="lost rows"):

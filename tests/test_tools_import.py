@@ -53,3 +53,29 @@ def test_tools_and_entry_import():
         timeout=300,
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr
+
+
+def test_verify_oracle_import_leaves_oracle_dir_unset():
+    """Importing ``tools/verify_oracle.py`` must not read ``sys.argv``
+    nor export the oracle table dir: a program run as ``x out.json``
+    that imports it would otherwise build its oracles from
+    ``out.json``."""
+    code = (
+        "import importlib.util, os, sys\n"
+        "path = sys.argv[1]\n"
+        "sys.argv = ['x', 'out.json']\n"
+        "spec = importlib.util.spec_from_file_location('_vo', path)\n"
+        "spec.loader.exec_module(importlib.util.module_from_spec(spec))\n"
+        "print(os.environ.get('SPARK_GRAFT_ORACLE_SF_DIR'))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_ORACLE_SF_DIR"}
+    proc = subprocess.run(
+        [sys.executable, "-c", code, os.path.join(REPO, "tools", "verify_oracle.py")],
+        cwd=REPO,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr
+    assert proc.stdout.strip().splitlines()[-1] == "None"

@@ -17,10 +17,12 @@ configurations:
                   latency and prefetch batches issued 10 wide,
   min_prob_sweep  lru_lstm at prediction floors 0.3 / 0.5 / 0.7.
 
-Reported per configuration: block-access hit rate and mean FOREGROUND
-access latency (prefetch work runs on the service thread in
-production, so it is excluded from foreground time and reported as
-prefetch_reads / prefetch_sec instead). LRU alone cannot anticipate a
+Every access consumes its block with a ``count()``, hit or miss, so a
+hit and a miss differ only by the block read. Reported per
+configuration: block-access hit rate and mean FOREGROUND access latency
+(prefetch work runs on the service thread in production, so it is
+excluded from foreground time and reported as prefetch_reads /
+prefetch_sec instead). LRU alone cannot anticipate a
 sequential walk's NEXT block (every first visit is a miss); the LSTM
 turns predicted-next misses into hits.
 
@@ -202,12 +204,11 @@ def prefetch_ab(spark, sf_dir: str) -> dict:
                 cache.put(b, df)
                 if delay:
                     time.sleep(delay)  # demand read pays the GET too
-            else:
-                df.count()             # serve from the driver-resident block
-                if b in pending:       # hit attributable to prefetch
-                    prefetch_hits += 1
-                    pending.discard(b)
-                    hit_bytes += os.path.getsize(index.block_file(b))
+            elif b in pending:         # hit attributable to prefetch
+                prefetch_hits += 1
+                pending.discard(b)
+                hit_bytes += os.path.getsize(index.block_file(b))
+            df.count()                 # consume the block, hit or miss
             dt = time.time() - t0
             lat.append(dt)
             (hit_lat if hit else miss_lat).append(dt)

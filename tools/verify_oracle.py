@@ -23,16 +23,6 @@ sys.path.insert(0, REPO)
 from columnar_database_project_spark.catalog import TESTDATA_TABLES  # noqa: E402
 from columnar_database_project_spark.session import get_spark  # noqa: E402
 
-# Data-dependent oracles (IVF centroid literals) must be derived from
-# the same table dir the comparison runs on — export it before the
-# registry import builds the SQL strings.
-_ARGS = [a for a in sys.argv[1:] if a not in ("--vanilla", "--record")]
-os.environ.setdefault(
-    "SPARK_GRAFT_ORACLE_SF_DIR", _ARGS[0] if _ARGS else "/root/testdata/sf0.01"
-)
-
-import __spark_entry__ as entrymod  # noqa: E402
-
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     """Canonical form: columns sorted by name, rows sorted by all
@@ -59,6 +49,11 @@ def main() -> int:
     record = "--record" in sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
+    # Data-dependent oracles (IVF centroid literals) must be derived
+    # from the same table dir the comparison runs on — export it before
+    # the registry import builds the SQL strings.
+    os.environ.setdefault("SPARK_GRAFT_ORACLE_SF_DIR", sf_dir)
+    import __spark_entry__ as entrymod
     spark = get_spark("verify_oracle")
     if vanilla:
         # Simulate the round driver's config-less SparkSession: same JVM,
