@@ -93,117 +93,6 @@ class MicroBlockEngine:
     def table(self, name: str) -> DataFrame:
         return self.tables[name]
 
-    # ---------------------------------------------------------- lifecycle
-    def ingest_jsonl(self, src: str, name: str, dst: str) -> dict:
-        """Ingest a raw JSONL document drop (staged parse + quarantine,
-        see ``sources.ingest``) into microblocks at ``dst`` and register
-        the result as table ``name``. Returns the ingestion report."""
-        from columnar_database_project_spark.sources.ingest import (
-            ingest_documents_jsonl,
-        )
-
-        report = ingest_documents_jsonl(self.spark, src, dst)
-        self.register(name, self.spark.read.parquet(dst))
-        return report
-
-    def ingest_stream_dedup(
-        self,
-        src: str,
-        name: str,
-        out_path: str,
-        checkpoint: str,
-    ) -> dict:
-        """Continuous-corpus ingestion through the façade: drain the
-        parquet drops currently in ``src`` through the store-backed
-        streaming dedup (``streaming.text.dedup_stream_against_store``
-        — availableNow trigger, so each call processes exactly the
-        files present), then register the deduplicated table as
-        ``name`` (the ManifestStore at ``out_path`` without its ``fp``
-        column). Repeated calls are the incremental-drop cadence: the
-        stored fingerprints carry survivors across calls, so a doc
-        seen in ANY earlier drop never re-enters the table. Returns
-        {"rows": n, "store_fingerprints": m}."""
-        from columnar_database_project_spark.storage.manifests import (
-            ManifestStore,
-        )
-        from columnar_database_project_spark.streaming.text import (
-            dedup_stream_against_store,
-            read_document_stream,
-        )
-
-        q = dedup_stream_against_store(
-            read_document_stream(self.spark, src), out_path, checkpoint
-        )
-        q.awaitTermination()
-        stored = ManifestStore(out_path).read(self.spark)
-        self.register(name, stored.drop("fp"))
-        return {
-            "rows": self.tables[name].count(),
-            "store_fingerprints": stored.select("fp").count(),
-        }
-
-    def ingest_stream_upsert(
-        self,
-        src: str,
-        name: str,
-        table_path: str,
-        checkpoint: str,
-        key: str,
-        order_col: str,
-        schema,
-    ) -> dict:
-        """Continuous CDC MERGE through the façade: drain the change
-        drops in ``src`` (parquet files matching ``schema``) through
-        ``streaming.dml.upsert_stream`` into the ManifestStore at
-        ``table_path`` (per-key last-writer-wins on ``order_col``),
-        then register the merged table as ``name``. Repeated calls are
-        the incremental-feed cadence; replayed or out-of-order drops
-        are idempotent under LWW. Returns {"rows": n}."""
-        from columnar_database_project_spark.storage.manifests import (
-            ManifestStore,
-        )
-        from columnar_database_project_spark.streaming.dml import (
-            upsert_stream,
-        )
-
-        changes = (
-            self.spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = upsert_stream(changes, table_path, key, order_col, checkpoint)
-        q.awaitTermination()
-        self.register(name, ManifestStore(table_path).read(self.spark))
-        return {"rows": self.tables[name].count()}
-
-    def stream_heavy_hitters(
-        self,
-        src: str,
-        store_path: str,
-        checkpoint: str,
-        capacity: int = 30,
-    ) -> DataFrame:
-        """Drain the drops in ``src`` through the streaming Misra-Gries
-        summary (``streaming.text.heavy_hitters_stream``) and return
-        the bounded (<= ``capacity``-entry) term-frequency summary as a
-        DataFrame — the façade's continuous-statistics surface."""
-        from columnar_database_project_spark.storage.manifests import (
-            ManifestStore,
-        )
-        from columnar_database_project_spark.streaming.text import (
-            heavy_hitters_stream,
-            read_document_stream,
-        )
-
-        q = heavy_hitters_stream(
-            read_document_stream(self.spark, src),
-            store_path,
-            checkpoint,
-            capacity=capacity,
-        )
-        q.awaitTermination()
-        return ManifestStore(store_path).read(self.spark)
-
     # ----------------------------------------------------------------- DML
     # Every verb commits a new version of a ManifestStore table
     # (storage/cow.py): CoW rewrites only the blocks the zone-map/Bloom

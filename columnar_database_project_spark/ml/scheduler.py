@@ -1,26 +1,21 @@
 """PrefetchScheduler — top-K next-block prediction from access history.
 
-Re-expresses reference prefetch_scheduler.py:36-182: load model +
-mappings, keep a per-query ring buffer of recent accesses, and suggest
-top-K blocks to prefetch — encode the last ≤64 ids (dropping unknowns;
-need ≥3 left, reference :110), score them with the model's
-one-sequence ``predict`` (no BLAS call, so a cycle leaves no BLAS
-workers spinning), mask the pad logit, sigmoid, top-k, drop
+Re-expresses reference prefetch_scheduler.py:36-182: suggest top-K
+blocks to prefetch from an access sequence — encode the last ≤64 ids
+(dropping unknowns; need ≥3 left, reference :110), score them with the
+model's one-sequence ``predict`` (no BLAS call, so a cycle leaves no
+BLAS workers spinning), mask the pad logit, sigmoid, top-k, drop
 cached/unknown ids.
 """
 
 from __future__ import annotations
 
-from collections import defaultdict, deque
-
 import numpy as np
 
 from columnar_database_project_spark.ml.lstm import PAD, LSTMPrefetcher
-from columnar_database_project_spark.ml.training_set import TrainingSet
 
 MAX_SEQ = 64        # reference prefetch_scheduler.py:171
 MIN_HISTORY = 3     # reference prefetch_scheduler.py:110
-RING = 64           # reference prefetch_scheduler.py:85-90
 
 
 class PrefetchScheduler:
@@ -33,34 +28,17 @@ class PrefetchScheduler:
         self.model = model
         self.id2idx = id2idx
         self.idx2id = idx2id
-        self._per_query: dict[str, deque[int]] = defaultdict(
-            lambda: deque(maxlen=RING)
-        )
-
-    @classmethod
-    def from_files(cls, model_path: str, mappings_path: str) -> "PrefetchScheduler":
-        id2idx, idx2id, _ = TrainingSet.load_mappings(mappings_path)
-        return cls(LSTMPrefetcher.load(model_path), id2idx, idx2id)
-
-    # ------------------------------------------------------------ access
-    def register_access(self, query_id: str, block_id: int) -> None:
-        self._per_query[query_id].append(int(block_id))
-
-    def sequence_for(self, query_id: str) -> list[int]:
-        return list(self._per_query[query_id])
 
     # --------------------------------------------------------- inference
     def suggest_topk_prefetch(
         self,
-        query_id: str = "GLOBAL",
-        sequence: list[int] | None = None,
+        sequence: list[int],
         k: int = 10,
         exclude_blocks: set[int] | None = None,
     ) -> list[tuple[int, float]] | None:
         """Top-K (block_id, probability), or None when history is too
         short after dropping unknown ids (reference :92-182)."""
-        seq = sequence if sequence is not None else self.sequence_for(query_id)
-        enc = [self.id2idx[b] for b in seq[-MAX_SEQ:] if b in self.id2idx]
+        enc = [self.id2idx[b] for b in sequence[-MAX_SEQ:] if b in self.id2idx]
         if len(enc) < MIN_HISTORY:
             return None
         logits = self.model.predict(enc)

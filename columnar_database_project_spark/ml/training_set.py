@@ -53,14 +53,6 @@ class TrainingSet:
                 f,
             )
 
-    @classmethod
-    def load_mappings(cls, mappings_path: str) -> tuple[dict, dict, int]:
-        with open(mappings_path) as f:
-            m = json.load(f)
-        id2idx = {int(k): v for k, v in m["id2idx"].items()}
-        idx2id = {int(k): v for k, v in m["idx2id"].items()}
-        return id2idx, idx2id, m["vocab_size"]
-
 
 def build_vocab(sequence: list[int]) -> tuple[dict[int, int], dict[int, int]]:
     """Vocab over distinct block ids, 0 reserved (reference :25-34).

@@ -4,9 +4,9 @@ The reference has no data stream at all — its only "streaming" is the
 prefetch daemon loop (reference prefetch_service.py:35-80). We treat
 the ``events`` table as the batch view of a stream and implement the
 standard streaming shapes (tumbling window, sessionization, JSON
-payload extraction, dedup-by-key) so the same logic runs under
-Structured Streaming (see ``columnar_database_project_spark.streaming``
-which reuses these transformations on a ``readStream`` source).
+payload extraction, dedup-by-key). ``sliding_counts`` and
+``purchase_view_join`` carry watermarks, so they run unchanged on a
+``readStream`` source as well.
 
 Scale notes: tumbling windows group on (bucket, type) — low
 cardinality, map-side combine; sessionization is one shuffle on
@@ -62,8 +62,7 @@ def _with_session_ids(ev: DataFrame) -> DataFrame:
 
 def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-minute inactivity gap): classic
-    lag → gap flag → cumulative session id. Streaming twin: session
-    window / applyInPandasWithState."""
+    lag → gap flag → cumulative session id."""
     with_sid = _with_session_ids(load_table(spark, sf_dir, "events"))
     return (
         with_sid.groupBy("user_id", "session_id")
@@ -140,8 +139,7 @@ def q_events_pivot_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_events_dedup_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-latest-per-key dedup (CDC upsert shape): last event per
-    (user_id, event_type) by time. Streaming twin: dropDuplicates
-    within watermark."""
+    (user_id, event_type) by time."""
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id", "event_type").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
@@ -234,13 +232,78 @@ def q_events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_events_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window counts (1 h window, 30 min slide) — runs the
-    STREAMING transformation (streaming/events.sliding_counts) on the
-    batch table: one definition, both execution modes. Window starts
-    formatted as strings for cross-engine comparison."""
-    from columnar_database_project_spark.streaming.events import sliding_counts
+def sliding_counts(
+    events: DataFrame,
+    window: str = "1 hour",
+    slide: str = "30 minutes",
+    watermark: str = "2 hours",
+) -> DataFrame:
+    """Sliding-window aggregation (overlapping windows): each event
+    lands in window/slide windows; watermark bounds state. Same plan
+    on batch and stream."""
+    return (
+        events.withWatermark("ts", watermark)
+        .groupBy(F.window("ts", window, slide).alias("win"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            F.col("win.start").alias("window_start"),
+            "event_type",
+            "n_events",
+        )
+    )
 
+
+def purchase_view_join(
+    events: DataFrame,
+    other: DataFrame,
+    max_lag: str = "1 hour",
+    watermark: str = "2 hours",
+) -> DataFrame:
+    """Stream-stream interval join: each 'purchase' event joined to
+    the same user's 'view' events in the preceding ``max_lag``
+    (attribution shape). Both sides carry watermarks so Spark can
+    discard buffered state once the interval can no longer match —
+    the state-bounding contract that makes stream-stream joins viable
+    at scale. Works identically on batch inputs."""
+    views = (
+        other.filter(F.col("event_type") == "view")
+        .withWatermark("ts", watermark)
+        .select(
+            F.col("user_id").alias("v_user_id"),
+            F.col("ts").alias("view_ts"),
+            F.col("event_id").alias("view_event_id"),
+        )
+    )
+    purchases = (
+        events.filter(F.col("event_type") == "purchase")
+        .withWatermark("ts", watermark)
+        .select(
+            "user_id",
+            F.col("ts").alias("purchase_ts"),
+            F.col("event_id").alias("purchase_event_id"),
+            "value",
+        )
+    )
+    return purchases.join(
+        views,
+        (F.col("user_id") == F.col("v_user_id"))
+        & (F.col("view_ts") <= F.col("purchase_ts"))
+        & (F.col("view_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {max_lag}")),
+    ).select(
+        "user_id",
+        "purchase_event_id",
+        "view_event_id",
+        "purchase_ts",
+        "view_ts",
+        "value",
+    )
+
+
+def q_events_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sliding-window counts (1 h window, 30 min slide) — runs
+    ``sliding_counts``, which also runs on a stream, on the batch
+    table. Window starts formatted as strings for cross-engine
+    comparison."""
     ev = load_table(spark, sf_dir, "events")
     return sliding_counts(ev).select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias(
@@ -253,13 +316,8 @@ def q_events_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_events_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Purchase→view attribution (each purchase joined to the same
-    user's views in the preceding hour) — the STREAMING stream-stream
-    interval join (streaming/events.purchase_view_join) applied to the
-    batch table."""
-    from columnar_database_project_spark.streaming.events import (
-        purchase_view_join,
-    )
-
+    user's views in the preceding hour) — the stream-stream interval
+    join ``purchase_view_join`` applied to the batch table."""
     ev = load_table(spark, sf_dir, "events")
     out = purchase_view_join(ev, ev)
     return out.select(

@@ -150,31 +150,6 @@ def decode_image(payload: bytes) -> "object":
         return np.asarray(im.convert("RGB"))
 
 
-def image_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Real-decode twin of ``fake_feature_batches`` — identical
-    mapInPandas plumbing (same input batch shape, fixed output
-    schema: doc_id, height, width, channel_mean), with
-    ``decode_image`` in the body. Swappable into any pipeline built on
-    the fake extractor; requires Pillow."""
-    import numpy as np
-
-    for pdf in batches:
-        arrs = [decode_image(b) for b in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "height": np.array([a.shape[0] for a in arrs], dtype="int32"),
-                "width": np.array([a.shape[1] for a in arrs], dtype="int32"),
-                "channel_mean": np.round(
-                    [float(a.mean()) for a in arrs], 6
-                ),
-            }
-        )
-
-
-IMAGE_FEATURE_SCHEMA = "doc_id long, height int, width int, channel_mean double"
-
-
 def fake_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Deterministic stand-in feature extractor (mapInPandas shape):
     consumes (doc_id, payload) Arrow batches, emits fixed-schema

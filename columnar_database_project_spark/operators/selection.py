@@ -63,8 +63,8 @@ def _quality_score(toks):
 
 def redacted_text_col():
     """The scrubbed-text expression (every email/phone/IPv4 match →
-    ``<PII>``) — shared by the audit, the streaming twin, and the
-    composed corpus recipe, so one scrub definition exists."""
+    ``<PII>``) — shared by the audit and the composed corpus recipe,
+    so one scrub definition exists."""
     return F.regexp_replace(
         F.regexp_replace(
             F.regexp_replace(F.col("text"), EMAIL_RE, PII_TOKEN),
@@ -77,10 +77,9 @@ def redacted_text_col():
 
 
 def pii_audit(docs: DataFrame) -> DataFrame:
-    """PII scrub over a ``documents``-shaped frame — shared by the
-    batch query below and the streaming twin
-    (``streaming/text.py:pii_redact_stream``), so both execution modes
-    apply the identical scrub definition. Pure stateless map work."""
+    """PII scrub over a ``documents``-shaped frame, the body of the
+    batch query below. Pure stateless map work, so it runs unchanged
+    on a stream."""
     redacted = redacted_text_col()
     n_email = F.regexp_count(F.col("text"), F.lit(EMAIL_RE))
     n_phone = F.regexp_count(F.col("text"), F.lit(PHONE_RE))
@@ -106,8 +105,8 @@ def q_text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def chunk_windows(docs: DataFrame) -> DataFrame:
     """Overlapping token-window chunking over a ``documents``-shaped
-    frame — shared by the batch query below and the streaming twin.
-    Stateless explode: rows stay on the document's partition."""
+    frame — shared by the two chunk queries below. Stateless explode:
+    rows stay on the document's partition."""
     toks = tokens_col()
     n_chunks = (F.floor((F.size(toks) - 1) / CHUNK_STRIDE) + 1).cast("int")
     chunked = docs.select(

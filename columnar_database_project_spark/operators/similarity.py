@@ -717,34 +717,6 @@ def q_emb_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def emb_top_principal_components(
-    spark: SparkSession, sf_dir: str, k: int = 4
-) -> dict:
-    """Top-k principal directions of the embedding corpus from the
-    distributed Gram matrix — the whitening/drift-monitoring building
-    block on top of ``q_emb_gram_matrix``. The heavy lifting (one
-    corpus scan, D x D partial matmuls) is the Spark job; the eigen
-    decomposition runs driver-side on the collected D x D matrix —
-    bounded control-plane work (D = 64 here; even D = 4096 is a
-    ~130 MB symmetric eig, still laptop-sized), the same policy as
-    IVF centroid training. Returns {"explained": [k variances as
-    fraction of trace], "components": (k, D) ndarray, "dim": D}."""
-    rows = q_emb_gram_matrix(spark, sf_dir).collect()
-    d = max(r["dim_j"] for r in rows) + 1
-    g = np.zeros((d, d))
-    for r in rows:
-        g[r["dim_i"], r["dim_j"]] = r["gram"]
-        g[r["dim_j"], r["dim_i"]] = r["gram"]
-    vals, vecs = np.linalg.eigh(g)          # ascending
-    order = np.argsort(vals)[::-1][:k]
-    top = vals[order]
-    return {
-        "explained": [float(v / vals.sum()) for v in top],
-        "components": vecs[:, order].T,
-        "dim": d,
-    }
-
-
 def q_emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label mean embedding (mean-pooled class centroid) as flat
     (label, dim, centroid) rows — the building block for class
@@ -1161,65 +1133,6 @@ def q_emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rms_dist"),
         )
     )
-
-
-def kmeans_min_argmin_margin(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = KMEANS_K,
-    iters: int = KMEANS_ITERS,
-) -> float:
-    """Audit for the hash-gate stability of ``q_emb_kmeans``: the
-    smallest raw (unrounded) gap between any vector's best and
-    second-best centroid distance, minimized over every Lloyd round
-    the fit actually performs.
-
-    The emb_kmeans oracles hash-check quantities whose cross-engine
-    equality rests on ROUND(dist, 6) absorbing float drift: a distance
-    landing within drift of a 0.5e-6 rounding boundary could flip an
-    argmin between engines and turn benign drift into a hash FAIL. A
-    min-margin comfortably above 2e-6 (two rounding quanta) proves no
-    such boundary tie exists on this corpus for these rounds —
-    asserted in tests/test_round9.py so a future data change degrades
-    to a diagnosable margin failure instead of a mysterious hash
-    mismatch."""
-    cents = _seed_centroids(sf_dir)[:k]
-    emb = load_table(spark, sf_dir, "embeddings").select("embedding")
-    overall = float("inf")
-    for _ in range(iters):
-        C = np.ascontiguousarray(cents, dtype=np.float64)
-
-        def margin_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            m = float("inf")
-            for pdf in batches:
-                V = stack_embeddings(pdf["embedding"])
-                d2 = np.empty((V.shape[0], C.shape[0]))
-                for kk in range(C.shape[0]):
-                    diff = V - C[kk]
-                    d2[:, kk] = np.einsum("ij,ij->i", diff, diff)
-                d = np.sort(np.sqrt(d2), axis=1)
-                m = min(m, float(np.min(d[:, 1] - d[:, 0])))
-            if np.isfinite(m):
-                yield pd.DataFrame({"m": [m]})
-
-        row = (
-            emb.mapInPandas(margin_fn, schema="m double")
-            .agg(F.min("m").alias("m"))
-            .first()
-        )
-        overall = min(overall, float(row["m"]))
-        # advance the centroids exactly as kmeans_fit does
-        rows = (
-            emb.mapInPandas(_kmeans_summary(cents), schema=_SUMMARY_SCHEMA)
-            .groupBy("cluster_id", "dim")
-            .agg(F.sum("psum").alias("ssum"), F.sum("pcnt").alias("scnt"))
-            .collect()
-        )
-        new = cents.copy()
-        for r in rows:
-            new[r["cluster_id"], r["dim"]] = r["ssum"] / r["scnt"]
-        cents = new
-    return overall
 
 
 CLUSTER_SAMPLE_M = 20

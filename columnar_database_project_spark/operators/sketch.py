@@ -71,15 +71,6 @@ def _mg_candidates(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     yield pd.DataFrame({"term": list(counters.keys())})
 
 
-def _mg_summaries(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Partition kernel emitting (term, cnt) MG entries — <= K rows per
-    partition, the bounded payload a driver-side merge may collect."""
-    counters = _mg_partition_summary(batches)
-    yield pd.DataFrame(
-        {"term": list(counters.keys()), "cnt": list(counters.values())}
-    )
-
-
 def q_sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact corpus heavy hitters (freq > n/(K+1)) via the two-phase
     MG sketch — see the module docstring for why the result is exact

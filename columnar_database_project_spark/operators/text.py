@@ -423,9 +423,8 @@ def q_text_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def funnel_flag_cols() -> tuple:
     """The funnel's per-document filter flags (len_ok, rep_ok, keep) as
-    column expressions over a ``text`` column — shared by the batch
-    funnel below and the streaming twin (``streaming/text.py``), so
-    both execution modes apply the identical filter definition."""
+    column expressions over a ``text`` column — shared by the funnel
+    queries, so each applies the identical filter definition."""
     toks = tokens_col()
     n_tokens = F.size(toks)
     distinct_ratio = F.size(F.array_distinct(toks)) / n_tokens.cast("double")

@@ -3,9 +3,8 @@
 The reference can't verify its own pruning (its benchmarks never check
 results or plans, SURVEY §2.5.4); we make both directions checkable:
 
-- ``pushed_filters(df)`` / ``scan_read_schema(df)``: parse the
-  formatted physical plan for the parquet scan's PushedFilters and
-  ReadSchema — asserts predicate pushdown and column pruning reached
+- ``pushed_filters(df)``: parse the formatted physical plan for the
+  parquet scan's PushedFilters — asserts predicate pushdown reached
   the scan (the Spark-native form of the reference's zone-map pruning).
 - ``assert_broadcast(df)`` / ``count_shuffles(df)``: join-strategy and
   shuffle-count checks for the 100 TB design review.
@@ -48,12 +47,6 @@ def pushed_filters(df: DataFrame) -> list[str]:
     return out
 
 
-def scan_read_schemas(df: DataFrame) -> list[str]:
-    """ReadSchema of every parquet scan (column-pruning check)."""
-    plan = formatted_plan(df)
-    return [m.group(1) for m in re.finditer(r"ReadSchema:\s*(\S+)", plan)]
-
-
 def count_shuffles(df: DataFrame) -> int:
     """Number of shuffle Exchange operators in the physical plan
     (broadcast exchanges excluded — they move only the small side)."""
@@ -72,26 +65,6 @@ def count_shuffles(df: DataFrame) -> int:
 def has_broadcast_join(df: DataFrame) -> bool:
     plan = formatted_plan(df)
     return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-
-
-def forced_broadcast_hints(df: DataFrame) -> int:
-    """How many explicit broadcast hints (``F.broadcast``/``/*+ BROADCAST */``)
-    survive analysis in this plan.
-
-    Spark honors an explicit hint REGARDLESS of the frame's actual size —
-    AQE never demotes a hinted broadcast — so a hint on a
-    corpus-proportional frame is an executor/driver OOM at 100 TB even
-    when it is correct and fast at test scale. Policy (see
-    DEPLOY.md §Broadcast-hint policy): hints are allowed only on frames
-    bounded by construction — dimension tables, 1-row/fixed-row
-    aggregates, bounded key spaces (e.g. a 2^16 signature space), or
-    capacity-capped sketches. Anything that grows with the corpus
-    (vocabulary tables, n-gram tables, candidate-pair sets, duplicate-id
-    lists) must be left unhinted so AQE size-gates the join strategy at
-    runtime. Counted from the analyzed logical plan, where every
-    ``F.broadcast`` shows as a ``ResolvedHint``."""
-    plan = df._jdf.queryExecution().analyzed().toString()
-    return len(re.findall(r"ResolvedHint", plan))
 
 
 def whole_stage_codegen_spans(df: DataFrame) -> int:

@@ -187,13 +187,6 @@ class BlockBloomIndex:
     def covers(self, column: str) -> bool:
         return column in self.columns
 
-    @property
-    def stale_encoding(self) -> bool:
-        """True when this sidecar predates the current _canon encoding
-        — lookups stay sound (see might_contain) but a rebuild
-        restores full pruning power for the newer encodings."""
-        return self.encoding_version < ENCODING_VERSION
-
     def might_contain(self, file_path: str, column: str, value) -> bool:
         """Three-valued membership: False = value provably absent from
         the block, True = maybe present (or the bloom cannot decide —
@@ -292,32 +285,6 @@ def _build_bitmaps(
         else:
             bitmaps[key] = part.copy()
     return bitmaps
-
-
-def extend_bloom_index(
-    spark, blooms: BlockBloomIndex, files: list[str]
-) -> BlockBloomIndex:
-    """Incremental maintenance: add bitmaps for NEW block files (e.g.
-    the files a CoW/MoR commit just wrote) with the sidecar's existing
-    (m, k) — one scan of only those files, no full rebuild. Files the
-    sidecar already covers are recomputed (idempotent overwrite, same
-    data → same bitmap). Returns ``blooms`` mutated in place for
-    chaining."""
-    if not files:
-        return blooms
-    from pyspark.sql import functions as F
-
-    src = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(*files)
-        .withColumn("_file", F.input_file_name())
-    )
-    present = [c for c in blooms.columns if c in src.columns]
-    src = src.select("_file", *[F.col(c) for c in present])
-    blooms.bitmaps.update(
-        _build_bitmaps(spark, src, present, blooms.m, blooms.k)
-    )
-    return blooms
 
 
 def build_bloom_index(

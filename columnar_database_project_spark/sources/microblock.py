@@ -36,7 +36,6 @@ from columnar_database_project_spark.sources.index import MicroBlockIndex
 
 REFERENCE_BLOCK_ROWS = 16_384    # reference microblock_writer.py:5
 DEFAULT_BLOCK_ROWS = 131_072     # reference benchmark2.py:242-243 guidance
-ROW_ID_COL = "_rid"
 _RANGE_SAMPLE_CONF = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
 _LOCAL_RELATION_CONF = "spark.sql.execution.arrow.localRelationThreshold"
 _LOCAL_RELATION_LOCK = threading.Lock()
@@ -169,87 +168,6 @@ def read_block(spark: SparkSession, index: MicroBlockIndex, block_id: int) -> Da
     return df.coalesce(1)
 
 
-def write_with_row_ids(
-    df: DataFrame,
-    path: str,
-    order_by: list[str],
-    block_rows: int = DEFAULT_BLOCK_ROWS,
-    num_partitions: int | None = None,
-) -> None:
-    """Write a microblock layout with an explicit global row-id column
-    (0-based, dense, ordered by ``order_by``).
-
-    This makes the reference's row-range scan (S8 —
-    ``MicroBlockReader.scan_range``, broken in the reference:
-    microblock_reader.py:8-19 calls methods that never existed) a
-    first-class, *pruned* operation: the row id is a physically sorted
-    column, so a BETWEEN filter on it prunes to exactly the covering
-    blocks via ordinary zone maps.
-
-    Scale path — no global window, no single-task sort:
-
-    1. range-partition by ``order_by`` (global order across
-       partitions) and sort within each partition,
-    2. persist, then count rows per partition (tiny agg → driver),
-    3. assign ``_rid = partition_offset + local_index`` with a narrow
-       Arrow-batched map — zero additional shuffles, parallel write.
-
-    The persist pins the range partitioning so the count pass and the
-    id-assignment pass see identical partitions.
-    """
-    from pyspark import StorageLevel, TaskContext
-
-    spark = df.sparkSession
-    n_parts = num_partitions or spark.sparkContext.defaultParallelism
-    sorted_df = (
-        df.repartitionByRange(n_parts, *[F.col(c) for c in order_by])
-        .sortWithinPartitions(*order_by)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    try:
-        sizes = {
-            r["pid"]: r["n"]
-            for r in sorted_df.groupBy(
-                F.spark_partition_id().alias("pid")
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        offsets: dict[int, int] = {}
-        acc = 0
-        for pid in range(max(sizes, default=-1) + 1):
-            offsets[pid] = acc
-            acc += sizes.get(pid, 0)
-
-        out_schema = T.StructType(
-            sorted_df.schema.fields + [T.StructField(ROW_ID_COL, T.LongType())]
-        )
-
-        def assign(iterator):
-            ctx = TaskContext.get()
-            nxt = offsets.get(ctx.partitionId() if ctx else 0, 0)
-            for pdf in iterator:
-                pdf[ROW_ID_COL] = np.arange(nxt, nxt + len(pdf), dtype="int64")
-                nxt += len(pdf)
-                yield pdf
-
-        with_rid = sorted_df.mapInPandas(assign, schema=out_schema)
-        MicroBlockWriter(block_rows=block_rows).write(with_rid, path)
-    finally:
-        sorted_df.unpersist()
-
-
-def scan_range(
-    spark: SparkSession, path: str, row_start: int, row_end: int
-) -> DataFrame:
-    """Rows with row_start <= _rid <= row_end (inclusive), reference
-    S8 semantics. The filter reaches the parquet scan, so only blocks
-    whose _rid zone maps intersect the range are read."""
-    return spark.read.parquet(path).filter(
-        F.col(ROW_ID_COL).between(row_start, row_end)
-    )
-
-
 Z_BITS = 16   # bucket resolution per dimension (2 dims → 32-bit z key)
 
 
@@ -317,54 +235,4 @@ def zorder_sorted(df: DataFrame, cols, n_parts: int) -> DataFrame:
         .repartitionByRange(n_parts, F.col("_z"))
         .sortWithinPartitions("_z")
         .drop("_z")
-    )
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: tuple,
-    block_rows: int = DEFAULT_BLOCK_ROWS,
-    num_partitions: int | None = None,
-) -> None:
-    """Write a microblock layout Z-ORDERED on two numeric columns, so
-    zone-map pruning stays selective for box predicates on EITHER or
-    BOTH columns — single-column sorting only ever helps one dimension.
-    The Morton curve keeps spatially-close (a, b) pairs in the same
-    blocks, so each block covers a small rectangle of the value space
-    and min/max stats become tight on both columns simultaneously —
-    the same technique Delta/Iceberg expose as OPTIMIZE ZORDER.
-
-    Scale shape: one 1-row bounds agg, one range shuffle on the z key
-    (bounds sampled from one block's worth of keys per partition, see
-    ``exact_range_bounds``), per-partition sort, parallel block write —
-    identical cost to any globally-sorted write.
-    """
-    spark = df.sparkSession
-    n_parts = num_partitions or spark.sparkContext.defaultParallelism
-    zdf = zorder_sorted(df, cols, n_parts)
-    with exact_range_bounds(spark, block_rows):
-        MicroBlockWriter(block_rows=block_rows).write(zdf, path)
-
-
-def write_hive_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    block_rows: int = DEFAULT_BLOCK_ROWS,
-) -> None:
-    """Hive-style partitioned microblock layout (``path/col=value/...``)
-    — the third pruning mechanism next to zone maps and Z-order:
-    a filter on a partition column never LISTS the other directories,
-    so pruning happens at metadata time before any footer is read.
-    Right for low-cardinality routing columns (lang, source, date);
-    wrong for high-cardinality keys (one directory per value — small
-    files, listing storms). Blocks inside each partition still follow
-    block=file."""
-    (
-        df.write.mode("overwrite")
-        .partitionBy(*partition_cols)
-        .option("maxRecordsPerFile", block_rows)
-        .option("parquet.block.size", 1 << 30)
-        .parquet(path)
     )

@@ -605,7 +605,6 @@ def append_cow(
     store: ManifestStore,
     df: "DataFrame",
     block_rows: int | None = None,
-    meta: dict | None = None,
 ) -> dict:
     """INSERT/append: the new rows land as new blocks, every existing
     block is carried by reference — the cheapest verb (zero reads of
@@ -616,19 +615,19 @@ def append_cow(
     after a metadata-only add_column) are allowed — they read as NULL;
     extra columns are an error. The appended row count is read from
     the new files' zone-map records."""
-    return _append(spark, store, store.snapshot(), df, block_rows, meta)
+    return _append(spark, store, store.snapshot(), df, block_rows)
 
 
-def _append(spark, store, snap, df, block_rows, meta=None) -> dict:
+def _append(spark, store, snap, df, block_rows) -> dict:
     if snap is None:
-        done = _replace(spark, store, None, df, block_rows, meta)
+        done = _replace(spark, store, None, df, block_rows)
         new_files, carried = done.files, ()
     else:
         df = _cast_to_manifest(snap, df, "append_cow", all_columns=False)
         v, stage = store.stage_next()
         MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(df, stage)
         new_files, carried = list_block_files(stage), snap.files
-        done = store.commit(snap, v, new_files, carried, meta=meta)
+        done = store.commit(snap, v, new_files, carried)
     return {
         "version": done.version,
         "appended_rows": done.live_rows(new_files),
@@ -646,12 +645,11 @@ def compact_manifest(
     zorder: bool = False,
 ) -> dict:
     """Compaction as a manifest commit — the engine's one compaction
-    verb. Every incrementally-ingested table develops small-file debt
-    (each drop writes its own tail block, e.g. from
-    ``append_stream_manifest``; at 100 TB, 10k drops leave 10k
-    undersized files whose per-file open/footer/task overhead
-    dominates scans). WITHOUT ``sort_by`` the compaction is itself
-    copy-on-write: only the undersized blocks are coalesced and
+    verb. Every incrementally-appended table develops small-file debt
+    (each ``append_cow`` writes its own tail block; at 100 TB, 10k
+    appends leave 10k undersized files whose per-file open/footer/task
+    overhead dominates scans). WITHOUT ``sort_by`` the compaction is
+    itself copy-on-write: only the undersized blocks are coalesced and
     rewritten, full blocks are carried by reference. The swap is the
     head-log commit, so a crash mid-compaction leaves the previous
     version current and orphan files for ``vacuum``; re-running
@@ -809,24 +807,19 @@ def init_manifest_table(
     store: ManifestStore,
     df: "DataFrame",
     block_rows: int | None = None,
-    meta: dict | None = None,
 ) -> dict:
     """Commit ``df`` as a full-replacement version: its blocks are
     the version's only files, nothing is carried from an earlier
     version, and the manifest schema is ``df``'s. On an empty store
     this is version 1; on a live one it replaces the snapshot
-    atomically (``upsert_stream`` and ``heavy_hitters_stream`` commit
-    every batch this way). ``meta`` is carried in the commit (the
-    streaming sink's first batch needs its ``txn.batch_id`` witness
-    here too)."""
-    done = _replace(spark, store, store.snapshot(), df, block_rows, meta)
+    atomically."""
+    done = _replace(spark, store, store.snapshot(), df, block_rows)
     return {"version": done.version, "files": len(done.files)}
 
 
-def _replace(spark, store, base, df, block_rows, meta) -> Snapshot:
+def _replace(spark, store, base, df, block_rows) -> Snapshot:
     v, stage = store.stage_next()
     MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(df, stage)
     return store.commit(
-        base, v, list_block_files(stage), [], schema_json=df.schema.json(),
-        meta=meta,
+        base, v, list_block_files(stage), [], schema_json=df.schema.json()
     )

@@ -125,15 +125,13 @@ class Snapshot:
 
     ``files``: block files in manifest order. ``dvs``: file → deleted
     row positions (``_metadata.row_index`` space), only for files that
-    have any. ``blocks``: file → zone-map records. ``meta``: the
-    commit's meta (e.g. ``{"txn": {"batch_id": N}}``)."""
+    have any. ``blocks``: file → zone-map records."""
 
     version: int
     files: tuple[str, ...]
     schema_json: str
     dvs: dict[str, tuple[int, ...]]
     blocks: dict[str, list[dict]]
-    meta: dict
 
     @classmethod
     def _parse(cls, root: str, doc: dict) -> "Snapshot":
@@ -141,8 +139,7 @@ class Snapshot:
         dvs = {at(f): tuple(p) for f, p in doc.get("dvs", {}).items()}
         blocks = {at(f): recs for f, recs in doc["blocks"].items()}
         return cls(
-            doc["version"], tuple(map(at, doc["files"])), doc["schema"],
-            dvs, blocks, doc.get("meta", {}),
+            doc["version"], tuple(map(at, doc["files"])), doc["schema"], dvs, blocks
         )
 
     def live_rows(self, files: Iterable[str]) -> int:
@@ -305,7 +302,6 @@ class ManifestStore:
         carried_files: Iterable[str],
         *,
         schema_json: str | None = None,
-        meta: dict | None = None,
         dvs: dict | None = None,
     ) -> Snapshot:
         """Publish ``version`` = carried (root-relative or absolute
@@ -322,8 +318,7 @@ class ManifestStore:
         still named: a rewritten file drops its deleted rows, a carried
         one keeps its vector. ``dvs`` (the merge-on-read verbs): the
         version's full file → row positions; a DV for an unnamed file
-        is an error. ``meta`` is stored verbatim (e.g. ``{"txn":
-        {"batch_id": N}}``, the streaming sink's exactly-once dedup)."""
+        is an error."""
         if schema_json is None:
             if base is None:
                 raise ValueError("commit: an empty store needs a schema")
@@ -356,8 +351,6 @@ class ManifestStore:
             "files": sorted(set(rel)),
             "schema": schema_json,
         }
-        if meta:
-            doc["meta"] = meta
         rel_set = set(rel)
         if dvs is None:
             dvs = {
@@ -394,22 +387,6 @@ class ManifestStore:
             json.dump(doc, fh)
         self._write_head(vs + [version])
         return Snapshot._parse(self.root, doc)
-
-    def txn_batch_ids(self) -> set[int]:
-        """Batch ids of every COMMITTED streaming-sink transaction —
-        the replay-dedup set (a crashed write never committed, so its
-        batch id is absent and the replay goes through). O(committed
-        versions) driver-side manifest reads: control plane, and only
-        versions that survive vacuum can dedup — vacuum past a
-        still-replayable batch would double-append, so keep retention
-        longer than the source's replay horizon (standard lakehouse
-        sink contract)."""
-        out: set[int] = set()
-        for v in self.versions():
-            bid = self._load(v).meta.get("txn", {}).get("batch_id")
-            if bid is not None:
-                out.add(int(bid))
-        return out
 
     # --------------------------------------------------------------- reads
     def read(self, spark: "SparkSession", version: int | None = None) -> "DataFrame":
@@ -456,8 +433,8 @@ class ManifestStore:
     # --------------------------------------------------------- observability
     def history(self) -> list[dict]:
         """DESCRIBE HISTORY: one record per committed version —
-        file/DV/schema facts plus txn meta, all from manifests (no
-        data IO). Newest last."""
+        file/DV/schema facts, all from manifests (no data IO). Newest
+        last."""
         out = []
         prev_files: set[str] = set()
         for v in self.versions():
@@ -472,7 +449,6 @@ class ManifestStore:
                     "dv_files": len(snap.dvs),
                     "dv_rows": sum(len(p) for p in snap.dvs.values()),
                     "columns": len(json.loads(snap.schema_json)["fields"]),
-                    "txn_batch_id": snap.meta.get("txn", {}).get("batch_id"),
                 }
             )
             prev_files = files

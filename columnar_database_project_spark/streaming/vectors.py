@@ -4,8 +4,7 @@ The batch suite builds its IVF-PQ structures inside each query's scan
 (`operators/similarity.py`); a production corpus is FED continuously,
 and retraining + reassigning the whole index per drop is the one cost
 you cannot pay at 100 TB. This module is the incremental form, a
-store-backed ``foreachBatch`` like
-``streaming/text.dedup_stream_against_store``:
+store-backed ``foreachBatch``:
 
 - centroids + codebooks are FROZEN artifacts (trained once on a
   reference sample — kilobytes, shipped in the kernel closure);

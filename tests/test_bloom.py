@@ -302,18 +302,15 @@ class TestTemporalColumnBloom:
             idx.attach_blooms(None)
 
 
-class TestIncrementalExtend:
-    def test_extend_covers_new_files_after_cow_commit(
+class TestSidecarAfterCowCommit:
+    def test_uncovered_new_files_answer_maybe(
         self, spark, sf_dir, tmp_path_factory
     ):
-        """The bloom-maintenance loop across DML: a CoW delete writes
-        new files the sidecar doesn't cover (sound MAYBE); one
-        extend_bloom_index scan of ONLY those files restores full
-        selectivity — no table-wide rebuild."""
+        """The sidecar across DML: a CoW delete writes new files the
+        sidecar doesn't cover, and for those the bloom answers MAYBE
+        (sound, unselective), so the live probe key is still found
+        end-to-end through the unrefreshed sidecar."""
         from columnar_database_project_spark.catalog import load_table
-        from columnar_database_project_spark.sources.bloom import (
-            extend_bloom_index,
-        )
         from columnar_database_project_spark.storage.cow import (
             delete_where_cow,
             init_manifest_table,
@@ -344,16 +341,11 @@ class TestIncrementalExtend:
         assert all(
             blooms.might_contain(f, "doc_id", 10**15) for f in new_files
         )
-        extend_bloom_index(spark, blooms, new_files)
-        # now covered: an absent key is provably absent from them too
-        assert not any(
-            blooms.might_contain(f, "doc_id", 10**15) for f in new_files
-        )
         # and the live probe key is still findable end-to-end
         idx = MicroBlockIndex.build_from_files(store.files_for())
         idx.attach_blooms(blooms)
         cands = idx.candidate_blocks(Cmp("=", "doc_id", probe))
-        assert 1 <= len(cands) <= 3
+        assert cands
         found = sum(
             read_block(spark, idx, b).filter(f"doc_id = {probe}").count()
             for b in cands

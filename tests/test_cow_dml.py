@@ -354,72 +354,6 @@ class TestSchemaEvolutionAndAppend:
         ) == {5, 6}
 
 
-class TestStreamingManifestSink:
-    def test_exactly_once_append_across_drains_and_replays(
-        self, spark, orders_df, tmp_path_factory
-    ):
-        """Two drains over a growing drop dir append each file's rows
-        exactly once; a simulated replay (re-invoking the batch
-        function with an already-committed batch id) is a no-op."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from columnar_database_project_spark.streaming.dml import (
-            append_stream_manifest,
-        )
-
-        base = tmp_path_factory.mktemp("msink")
-        drops = base / "drops"
-        drops.mkdir()
-        store = ManifestStore(str(base / "store"))
-        pdf = orders_df.limit(60).toPandas()
-        full = spark.createDataFrame(pdf)
-        init_manifest_table(spark, store, full.limit(0), block_rows=512)
-
-        def drop(i, sl):
-            pq.write_table(
-                pa.Table.from_pandas(pdf.iloc[sl], preserve_index=False),
-                str(drops / f"b{i}.parquet"),
-            )
-
-        schema_ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                               for f in spark.createDataFrame(pdf).schema.fields)
-        stream = lambda: spark.readStream.schema(schema_ddl).parquet(str(drops))
-
-        drop(0, slice(0, 20))
-        q = append_stream_manifest(stream(), store, str(base / "ckpt"))
-        q.awaitTermination(120)
-        assert store.read(spark).count() == 20
-
-        drop(1, slice(20, 50))
-        q = append_stream_manifest(stream(), store, str(base / "ckpt"))
-        q.awaitTermination(120)
-        assert store.read(spark).count() == 50
-
-        # replay simulation: a batch id that already committed must be
-        # skipped even though the data frame is non-empty
-        committed = store.txn_batch_ids()
-        assert committed  # at least one streamed batch landed
-        from columnar_database_project_spark.storage.cow import append_cow
-
-        bid = max(committed)
-        n_before = store.read(spark).count()
-        v_before = store.latest()
-        # what the sink's process() does on replay:
-        if bid in store.txn_batch_ids():
-            pass  # exactly-once skip
-        else:  # pragma: no cover - would be the bug
-            append_cow(spark, store, spark.createDataFrame(pdf.iloc[0:5]),
-                       meta={"txn": {"batch_id": bid}})
-        assert store.read(spark).count() == n_before
-        assert store.latest() == v_before
-
-        # an EMPTY drain commits nothing (no empty versions)
-        q = append_stream_manifest(stream(), store, str(base / "ckpt"))
-        q.awaitTermination(120)
-        assert store.latest() == v_before
-
-
 class TestManifestCompaction:
     def test_cow_compaction_rewrites_only_small_blocks(
         self, spark, orders_df, tmp_path_factory
@@ -967,6 +901,26 @@ class TestHistory:
         assert h[2]["dv_rows"] == 1 and h[2]["files_added"] == 0   # MoR
         assert h[3]["columns"] == h[2]["columns"] + 1  # add_column
         assert h[3]["files_added"] == 0                # metadata-only
+
+    def test_manifest_with_meta_key_still_reads(
+        self, spark, orders_df, tmp_path_factory
+    ):
+        """Manifests committed by earlier releases may carry a ``meta``
+        object (a stream sink's batch id); the reader ignores it."""
+        import json
+
+        store = ManifestStore(str(tmp_path_factory.mktemp("hist_meta")))
+        init_manifest_table(spark, store, orders_df.limit(20), block_rows=512)
+        path = store._manifest_path(store.latest())
+        with open(path) as fh:
+            doc = json.load(fh)
+        doc["meta"] = {"txn": {"batch_id": 0}}
+        with open(path, "w") as fh:
+            json.dump(doc, fh)
+        snap = store.snapshot()
+        assert snap.files and snap.version == store.latest()
+        assert store.read(spark).count() == 20
+        assert store.history()[-1]["files"] == len(snap.files)
 
 
 class TestMorOnEvolvedSchema:

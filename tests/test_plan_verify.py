@@ -13,11 +13,11 @@ from columnar_database_project_spark.plans.verify import (
     has_broadcast_join,
     pruning_report,
     pushed_filters,
-    scan_read_schemas,
     whole_stage_codegen_spans,
 )
 from columnar_database_project_spark.sources.index import MicroBlockIndex
 from columnar_database_project_spark.sources.microblock import MicroBlockWriter
+from plan_checks import scan_read_schemas
 
 
 class TestPushdownAndPruning:
@@ -451,9 +451,6 @@ class TestRound6LatePlans:
         assert "regr_slope" in plan or "partial_regr_slope" in plan
 
     def test_gapfill_prunes_scan_and_bounds_shuffles(self, spark, sf_dir):
-        from columnar_database_project_spark.plans.verify import (
-            scan_read_schemas,
-        )
         from columnar_database_project_spark.operators.events import (
             q_events_gapfill,
         )

@@ -4,7 +4,7 @@
    NO forced broadcast hint — AQE size-gates those joins — while
    bounded-by-construction frames (1-row aggregates, top-M LM tables)
    may keep theirs. Asserted on the analyzed logical plan via
-   ``plans.verify.forced_broadcast_hints`` for each of the four sites
+   ``plan_checks.forced_broadcast_hints`` for each of the four sites
    the round-5 review flagged.
 2. Bounded top-M bigram LM: equals the unbounded LM when M covers
    every distinct bigram; at finite M the per-doc score delta obeys
@@ -22,9 +22,7 @@ import os
 
 import pytest
 
-from columnar_database_project_spark.plans.verify import (
-    forced_broadcast_hints,
-)
+from plan_checks import forced_broadcast_hints
 
 
 # ---------------------------------------------------------------- hints
@@ -204,107 +202,6 @@ def test_quantize_constant_dimension_yields_zero_error(spark, tmp_path):
     assert out[0]["lo"] == out[0]["hi"] == 7.5
     assert out[0]["mean_abs_err"] == 0.0
     assert not math.isnan(out[1]["mean_abs_err"])
-
-
-# ------------------------------------------- facade streaming ingestion
-
-
-def test_engine_facade_streaming_dedup_e2e(spark, sf_dir, tmp_path_factory):
-    """The continuous-corpus path end-to-end THROUGH the facade: drop
-    parquet files -> store-backed streaming dedup -> the deduped table
-    is queryable via MicroBlockEngine.query, and a second drop with
-    already-seen content adds nothing."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from columnar_database_project_spark.catalog import load_table
-    from columnar_database_project_spark.engine import MicroBlockEngine
-
-    base = tmp_path_factory.mktemp("facade_stream")
-    drop_dir = base / "drops"
-    drop_dir.mkdir()
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .limit(40)
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    # in-drop duplicate: row 30-39 reuse the TEXT of rows 0-9
-    docs.loc[30:39, "text"] = docs.loc[0:9, "text"].values
-    pq.write_table(
-        pa.Table.from_pandas(docs.iloc[0:40], preserve_index=False),
-        str(drop_dir / "drop1.parquet"),
-    )
-
-    eng = MicroBlockEngine(spark)
-    out, ckpt = str(base / "out"), str(base / "ck")
-    rep1 = eng.ingest_stream_dedup(str(drop_dir), "corpus", out, ckpt)
-    assert rep1["rows"] == 30  # 40 docs - 10 planted dups
-    assert rep1["store_fingerprints"] == 30
-
-    # facade SQL sees the deduped table
-    n = eng.query("SELECT count(*) AS n FROM corpus").collect()[0]["n"]
-    assert n == 30
-    texts = eng.query("SELECT count(DISTINCT text) AS d FROM corpus")
-    assert texts.collect()[0]["d"] == 30
-
-    # second drop: 5 new docs + 5 whose text was already ingested
-    more = docs.iloc[10:20].copy()
-    more["doc_id"] = more["doc_id"] + 100000  # new ids, seen text
-    import pandas as pd
-
-    new = pd.DataFrame(
-        {
-            "doc_id": [900001 + i for i in range(5)],
-            "text": [f"fresh unseen document {i} zzz" for i in range(5)],
-            "lang": ["en"] * 5,
-            "source": ["test"] * 5,
-            "n_chars": [30] * 5,
-        }
-    )
-    drop2 = pd.concat([more, new], ignore_index=True)[docs.columns]
-    pq.write_table(
-        pa.Table.from_pandas(drop2, preserve_index=False),
-        str(drop_dir / "drop2.parquet"),
-    )
-    rep2 = eng.ingest_stream_dedup(str(drop_dir), "corpus", out, ckpt)
-    assert rep2["rows"] == 35  # only the 5 genuinely new docs appended
-    assert rep2["store_fingerprints"] == 35
-    n2 = eng.query("SELECT count(*) AS n FROM corpus").collect()[0]["n"]
-    assert n2 == 35
-    assert (
-        eng.query("SELECT count(*) AS n FROM corpus WHERE doc_id >= 900000")
-        .collect()[0]["n"]
-        == 5
-    )
-
-
-def test_engine_facade_stream_heavy_hitters(spark, sf_dir, tmp_path_factory):
-    """The facade's continuous-statistics surface returns a bounded
-    summary containing the corpus's true heavy terms."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from columnar_database_project_spark.catalog import load_table
-    from columnar_database_project_spark.engine import MicroBlockEngine
-
-    base = tmp_path_factory.mktemp("facade_mg")
-    drop_dir = base / "drops"
-    drop_dir.mkdir()
-    docs = load_table(spark, sf_dir, "documents").limit(50).toPandas()
-    pq.write_table(
-        pa.Table.from_pandas(docs, preserve_index=False),
-        str(drop_dir / "d.parquet"),
-    )
-    eng = MicroBlockEngine(spark)
-    summary = eng.stream_heavy_hitters(
-        str(drop_dir), str(base / "store"), str(base / "ck"), capacity=20
-    )
-    rows = summary.collect()
-    assert 0 < len(rows) <= 20
-    assert all(r["cnt"] > 0 for r in rows)
 
 
 def test_kmeans_inertia_non_increasing(spark, sf_dir):
@@ -810,43 +707,6 @@ def test_engine_update_versioned_chain(spark, tmp_path):
     assert v_merge == {1: 10.0, 2: 20.0, 3: 30.0}
 
 
-def test_streaming_upsert_lww(spark, tmp_path):
-    """Continuous CDC MERGE: per-key last-writer-wins on the version
-    column, across micro-batches and within one; a LATE drop carrying
-    an older version never clobbers newer data (replay idempotence)."""
-    drop_dir = tmp_path / "changes"
-    drop_dir.mkdir()
-    table = str(tmp_path / "snapshot")
-    ckpt1 = str(tmp_path / "ck1")
-
-    from columnar_database_project_spark.engine import MicroBlockEngine
-
-    schema = "id long, v string, ver long"
-    eng = MicroBlockEngine(spark)
-    # drop 1: three keys; key 2 appears twice (ver 1 then 2) in ONE file
-    spark.createDataFrame(
-        [(1, "a", 1), (2, "b1", 1), (2, "b2", 2), (3, "c", 1)], schema
-    ).coalesce(1).write.mode("overwrite").parquet(str(drop_dir / "d1"))
-    rep = eng.ingest_stream_upsert(
-        str(drop_dir / "d1"), "cdc_t", table, ckpt1, "id", "ver", schema
-    )
-    assert rep == {"rows": 3}
-    got = {r["id"]: (r["v"], r["ver"]) for r in eng.table("cdc_t").collect()}
-    assert got == {1: ("a", 1), 2: ("b2", 2), 3: ("c", 1)}
-    # drop 2 (separate dir/checkpoint = next feed increment): newer key 1,
-    # OLDER key 2 (late replay, must NOT clobber), new key 4
-    spark.createDataFrame(
-        [(1, "a9", 9), (2, "stale", 1), (4, "d", 1)], schema
-    ).coalesce(1).write.mode("overwrite").parquet(str(drop_dir / "d2"))
-    rep2 = eng.ingest_stream_upsert(
-        str(drop_dir / "d2"), "cdc_t", table, str(tmp_path / "ck2"),
-        "id", "ver", schema,
-    )
-    assert rep2 == {"rows": 4}
-    got2 = {r["id"]: (r["v"], r["ver"]) for r in eng.table("cdc_t").collect()}
-    assert got2 == {1: ("a9", 9), 2: ("b2", 2), 3: ("c", 1), 4: ("d", 1)}
-
-
 def test_snapshot_store_dml_chain_time_travel_rollback(spark, tmp_path):
     """ManifestStore lifecycle over chained DML: versions accrue, time
     travel reads any committed version, an orphan staged data dir is
@@ -912,10 +772,7 @@ def test_dml_plan_shapes(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from columnar_database_project_spark.catalog import load_table
-    from columnar_database_project_spark.plans.verify import (
-        count_shuffles,
-        forced_broadcast_hints,
-    )
+    from columnar_database_project_spark.plans.verify import count_shuffles
 
     orders = load_table(spark, sf_dir, "orders")
     updates = orders.filter(F.col("o_orderkey") % 10 == 0)
@@ -937,10 +794,7 @@ def test_update_plan_zero_shuffle(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from columnar_database_project_spark.catalog import load_table
-    from columnar_database_project_spark.plans.verify import (
-        count_shuffles,
-        forced_broadcast_hints,
-    )
+    from columnar_database_project_spark.plans.verify import count_shuffles
 
     orders = load_table(spark, sf_dir, "orders")
     cond = F.coalesce(F.col("o_totalprice") < 20000.0, F.lit(False))
@@ -973,7 +827,6 @@ def test_new_operator_plan_shapes(spark, sf_dir):
     )
     from columnar_database_project_spark.plans.verify import (
         count_shuffles,
-        forced_broadcast_hints,
         formatted_plan,
     )
 
@@ -1062,46 +915,6 @@ def test_cms_guarantees(spark, sf_dir):
     for r in est:
         assert r["overestimate"] >= 0, f"CMS underestimated {r['term']}"
         assert r["cms_estimate"] == r["exact_cnt"] + r["overestimate"]
-
-
-def test_streaming_upsert_batching_invariance(spark, tmp_path):
-    """The CDC-upsert result is invariant to how the change rows are
-    split into drops/micro-batches — the LWW-on-version compaction is
-    associative and commutative, so replays and re-batchings converge
-    to the same snapshot."""
-    from columnar_database_project_spark.engine import MicroBlockEngine
-
-    schema = "id long, v string, ver long"
-    rows = [
-        (1, "a1", 1), (1, "a3", 3), (1, "a2", 2),
-        (2, "b2", 2), (2, "b1", 1),
-        (3, "c1", 1),
-        (4, "d2", 2), (4, "d1", 1), (4, "d3", 3),
-    ]
-    expected = {1: ("a3", 3), 2: ("b2", 2), 3: ("c1", 1), 4: ("d3", 3)}
-    batchings = [
-        [rows],                                   # one drop
-        [[r] for r in rows],                      # one drop per row
-        [rows[:4], rows[4:7], rows[7:]],          # uneven splits
-        [rows[::-1]],                             # reversed arrival
-    ]
-    for bi, batches in enumerate(batchings):
-        eng = MicroBlockEngine(spark)
-        table = str(tmp_path / f"snap{bi}")
-        for di, batch in enumerate(batches):
-            drop = str(tmp_path / f"drop{bi}_{di}")
-            spark.createDataFrame(batch, schema).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(drop)
-            eng.ingest_stream_upsert(
-                drop, "cdc_inv", table,
-                str(tmp_path / f"ck{bi}_{di}"), "id", "ver", schema,
-            )
-        got = {
-            r["id"]: (r["v"], r["ver"])
-            for r in eng.table("cdc_inv").collect()
-        }
-        assert got == expected, (bi, got)
 
 
 def test_containment_bounds_and_dominates_jaccard(spark, sf_dir):

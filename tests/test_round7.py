@@ -1,5 +1,5 @@
-"""Round-7 additions: freshness-token recursion, streaming straggler
-semantics, funnel NULL alignment, store-backed IVF-PQ parity."""
+"""Round-7 additions: freshness-token recursion, funnel NULL
+alignment, store-backed IVF-PQ parity."""
 
 from __future__ import annotations
 
@@ -43,75 +43,6 @@ class TestFileFreshnessRecursion:
         assert file_freshness(str(tmp_path)) == file_freshness(str(tmp_path))
         st = os.stat(f)
         assert file_freshness(str(f)) == (st.st_mtime_ns, st.st_size)
-
-
-# ------------------------------------- streaming transition stragglers
-
-
-class _FakeState:
-    def __init__(self, value=None):
-        self._v = value
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-
-class TestTransitionStragglerDrop:
-    def _run(self, state, rows):
-        from columnar_database_project_spark.streaming.events import _transition_fn
-
-        pdf = pd.DataFrame(
-            {
-                "ts": pd.to_datetime([r[0] for r in rows], unit="s"),
-                "event_id": [r[1] for r in rows],
-                "event_type": [r[2] for r in rows],
-            }
-        )
-        (out,) = list(_transition_fn(("u1",), [pdf], state))
-        return out, state
-
-    def test_in_order_batches_emit_seam_pair(self):
-        state = _FakeState()
-        out, state = self._run(state, [(100, 1, "view"), (200, 2, "click")])
-        assert list(out["cur"]) == ["view"] and list(out["nxt"]) == ["click"]
-        out2, state = self._run(state, [(300, 3, "purchase")])
-        # the seam pair (click -> purchase) comes from carried state
-        assert list(out2["cur"]) == ["click"]
-        assert list(out2["nxt"]) == ["purchase"]
-        assert state.get == (300, 3, "purchase")
-
-    def test_cross_batch_straggler_dropped(self):
-        """An event sorting BEFORE the carried (epoch, event_id) is a
-        cross-seam straggler: emitting it would fabricate transitions
-        the true timeline never contained — it must be dropped and the
-        state left at the carried position."""
-        state = _FakeState()
-        _, state = self._run(state, [(100, 1, "view"), (200, 2, "click")])
-        out, state = self._run(
-            state, [(150, 9, "stray"), (300, 3, "purchase")]
-        )
-        # only the legitimate (click -> purchase) pair; no pair touches
-        # the straggler in either direction
-        assert list(out["cur"]) == ["click"]
-        assert list(out["nxt"]) == ["purchase"]
-        assert state.get == (300, 3, "purchase")
-
-    def test_duplicate_replay_dropped(self):
-        """Replaying the exact last event (at-least-once delivery)
-        must not emit a self-transition."""
-        state = _FakeState()
-        _, state = self._run(state, [(100, 1, "view")])
-        out, state = self._run(state, [(100, 1, "view")])
-        assert len(out) == 0
-        assert state.get == (100, 1, "view")
 
 
 # ------------------------------------------------- funnel NULL semantics
@@ -293,81 +224,6 @@ class TestIvfPqStoreLifecycle:
         # time pruning), NOT as a PushedFilter/post-scan filter
         pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
         assert pf and "cell" in pf[0] and "IN" in pf[0].upper()
-
-
-# ---------------------------- transition semantics, property-tested
-
-
-class TestTransitionProperty:
-    """For ANY batching of a user's event stream, _transition_fn must
-    emit exactly the consecutive pairs of the arrival-order GREEDY
-    MONOTONE subsequence (events kept iff they advance the carried
-    (epoch, event_id) position). For in-order streams that equals the
-    batch lead() pairs; stragglers and replays contribute nothing."""
-
-    def _expected(self, events):
-        kept, pos = [], None
-        for e in events:
-            key = (e[0], e[1])
-            if pos is not None and key <= pos:
-                continue
-            kept.append(e)
-            pos = key
-        return [(a[2], b[2]) for a, b in zip(kept, kept[1:])]
-
-    def test_random_batchings_match_greedy_semantics(self):
-        from hypothesis import given, settings, strategies as st
-
-        from columnar_database_project_spark.streaming.events import (
-            _transition_fn,
-        )
-
-        events_strategy = st.lists(
-            st.tuples(
-                st.integers(min_value=0, max_value=50),     # epoch seconds
-                st.integers(min_value=0, max_value=10**6),  # event_id
-                st.sampled_from(["view", "click", "purchase"]),
-            ),
-            min_size=0,
-            max_size=25,
-        )
-
-        @settings(max_examples=150, deadline=None)
-        @given(
-            events=events_strategy,
-            cuts=st.lists(st.integers(min_value=0, max_value=25), max_size=4),
-        )
-        def check(events, cuts):
-            # event_ids must be unique per the stream contract
-            seen = set()
-            events = [
-                e for e in events if not (e[1] in seen or seen.add(e[1]))
-            ]
-            bounds = sorted({c for c in cuts if c < len(events)})
-            batches, prev = [], 0
-            for b in bounds + [len(events)]:
-                if b > prev:
-                    batches.append(events[prev:b])
-                    prev = b
-            state = _FakeState()
-            got = []
-            for batch in batches:
-                pdf = pd.DataFrame(
-                    {
-                        "ts": pd.to_datetime([e[0] for e in batch], unit="s"),
-                        "event_id": [e[1] for e in batch],
-                        "event_type": [e[2] for e in batch],
-                    }
-                )
-                (out,) = list(_transition_fn(("u",), [pdf], state))
-                got.extend(zip(out["cur"], out["nxt"]))
-            # arrival order WITHIN a batch is its (ts, event_id) sort —
-            # the kernel's own contract — so expected pairs follow the
-            # concatenation of per-batch sorted events
-            arrival = [e for batch in batches for e in sorted(batch, key=lambda e: (e[0], e[1]))]
-            assert got == self._expected(arrival)
-
-        check()
 
 
 # --------------------- result-cache invalidation on in-place rewrite

@@ -195,49 +195,6 @@ class TestCommitBasenameGuard:
         assert store.read(spark).count() == 3
 
 
-class TestStreamFirstBatchInit:
-    def test_fresh_store_initialized_by_first_batch(
-        self, spark, tmp_path_factory
-    ):
-        """ADVICE low: first batch on a fresh ManifestStore raised
-        inside foreachBatch; now it initializes the store from the
-        batch schema with the txn witness attached."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from columnar_database_project_spark.streaming.dml import (
-            append_stream_manifest,
-        )
-
-        base = tmp_path_factory.mktemp("fresh_sink")
-        drops = base / "drops"
-        drops.mkdir()
-        store = ManifestStore(str(base / "store"))  # NO init_manifest_table
-        pdf = pd.DataFrame({"k": [1, 2, 3, 4], "v": ["a", "b", "c", "d"]})
-        pq.write_table(
-            pa.Table.from_pandas(pdf, preserve_index=False),
-            str(drops / "b0.parquet"),
-        )
-        stream = lambda: spark.readStream.schema("k bigint, v string").parquet(
-            str(drops)
-        )
-        q = append_stream_manifest(stream(), store, str(base / "ckpt"))
-        q.awaitTermination(120)
-        assert store.latest() is not None
-        assert store.read(spark).count() == 4
-        assert store.txn_batch_ids() == {0}  # exactly-once witness on init
-        # second drain appends normally
-        pq.write_table(
-            pa.Table.from_pandas(
-                pd.DataFrame({"k": [5], "v": ["e"]}), preserve_index=False
-            ),
-            str(drops / "b1.parquet"),
-        )
-        q = append_stream_manifest(stream(), store, str(base / "ckpt"))
-        q.awaitTermination(120)
-        assert store.read(spark).count() == 5
-
-
 class TestMorAutoCompaction:
     """VERDICT r7 #3: mechanized DV compaction — the threshold policy
     fires exactly at threshold, materializes the DVs, and preserves

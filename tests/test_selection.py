@@ -222,9 +222,7 @@ def test_selection_broadcast_hint_policy(spark, sf_dir):
     """DEPLOY.md hint policy: hints ONLY on bounded-by-construction
     frames — budget-select's <=20-row bucket-offset table and BM25's
     1-row stats aggregate; every corpus-proportional frame unhinted."""
-    from columnar_database_project_spark.plans.verify import (
-        forced_broadcast_hints,
-    )
+    from plan_checks import forced_broadcast_hints
 
     expected = {
         q_text_pii_redact: 0,

@@ -1,11 +1,13 @@
-"""Every script in tools/ and `__spark_entry__.py` import cleanly.
+"""Every script in tools/, every module of perfbench/ and
+`__spark_entry__.py` import cleanly.
 
 A script that still names a deleted package function fails here, in
-tier-1, instead of when someone next runs it. Each file is imported
-under a name other than ``__main__``, so its ``main`` does not run.
-The scripts import most package code inside functions, so every
-absolute ``from x import y`` in a file is resolved too, wherever it
-sits.
+tier-1, instead of when someone next runs it or the benchmark runs.
+Each file is imported under a name other than ``__main__``, so its
+``main`` does not run, with its own directory first on ``sys.path``,
+as when it runs as a script. The scripts import most package code
+inside functions, so every absolute ``from x import y`` in a file is
+resolved too, wherever it sits.
 """
 
 from __future__ import annotations
@@ -18,14 +20,18 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _CHECK = r"""
-import ast, importlib, importlib.util, sys, traceback
+import ast, importlib, importlib.util, os, sys, traceback
 
 paths, sys.argv = sys.argv[1:], sys.argv[:1]
 failures = []
 for i, path in enumerate(paths):
+    sys.path.insert(0, os.path.dirname(path))
     try:
         spec = importlib.util.spec_from_file_location(f"_checked_{i}", path)
-        spec.loader.exec_module(importlib.util.module_from_spec(spec))
+        # registered first, as an import does: a dataclass looks its
+        # module up in sys.modules
+        sys.modules[spec.name] = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(sys.modules[spec.name])
         for node in ast.walk(ast.parse(open(path).read())):
             if not isinstance(node, ast.ImportFrom) or node.level:
                 continue
@@ -35,6 +41,8 @@ for i, path in enumerate(paths):
                     importlib.import_module(f"{node.module}.{alias.name}")
     except Exception:
         failures.append(f"{path}:\n{traceback.format_exc()}")
+    finally:
+        sys.path.pop(0)
 print("\n".join(failures))
 sys.exit(1 if failures else 0)
 """
@@ -42,6 +50,7 @@ sys.exit(1 if failures else 0)
 
 def test_tools_and_entry_import():
     scripts = sorted(glob.glob(os.path.join(REPO, "tools", "*.py")))
+    scripts += sorted(glob.glob(os.path.join(REPO, "perfbench", "*.py")))
     scripts.append(os.path.join(REPO, "__spark_entry__.py"))
     # the check clears sys.argv first: a script that reads it at import
     # time sees no arguments
