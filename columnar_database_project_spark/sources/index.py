@@ -84,10 +84,6 @@ class BlockMetadata:
         self.last_access_ts = ts if ts is not None else time.time()
         self.ewma_usage = EWMA_ALPHA * 1.0 + (1 - EWMA_ALPHA) * self.ewma_usage
 
-    def decay(self) -> None:
-        """EWMA decay tick for blocks NOT accessed."""
-        self.ewma_usage = (1 - EWMA_ALPHA) * self.ewma_usage
-
 
 def _normalize_stat(v: Any) -> Any:
     if isinstance(v, bytes):
