@@ -156,15 +156,15 @@ def delete_where_cow(
 def _delete_cow(spark, store, snap, predicate, block_rows, blooms) -> dict:
     pred = _pred_of(predicate)
     touched, carried, n_blocks = _triage(snap, pred, "cow_delete", blooms)
-    v, stage = store.stage_next()
     new_files: list[str] = []
     if touched:
+        stage = store.stage()
         kept = snap.read(spark, touched).filter(~_cond(predicate))
         MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(kept, stage)
         new_files = list_block_files(stage)
-    done = store.commit(snap, v, new_files, carried)
+    done = store.commit(snap, new_files, carried)
     return {
-        "version": v,
+        "version": done.version,
         "deleted": snap.live_rows(touched) - done.live_rows(new_files),
         "blocks_total": n_blocks,
         "files_rewritten": len(touched),
@@ -248,10 +248,9 @@ def delete_where_mor(
         rep["mode"] = "cow_fallback"
         return rep
     merged, deleted = got
-    v, _stage = store.stage_next()
-    store.commit(snap, v, [], snap.files, dvs=merged)
+    done = store.commit(snap, [], snap.files, dvs=merged)
     return {
-        "version": v,
+        "version": done.version,
         "mode": "mor",
         "deleted": deleted,
         "dv_rows_total": sum(len(p) for p in merged.values()),
@@ -298,9 +297,9 @@ def update_where_mor(
         rep["mode"] = "cow_fallback"
         return rep
     merged, n_hit = got
-    v, stage = store.stage_next()
     new_files: list[str] = []
     if touched and n_hit:
+        stage = store.stage()
         live = snap.read(spark, touched).filter(_cond(predicate))
         types = dict(live.dtypes)
         cols = []
@@ -317,9 +316,9 @@ def update_where_mor(
         n_tasks = max(1, n_hit // writer.block_rows or 1)
         writer.write(live.select(*cols).coalesce(n_tasks), stage)
         new_files = list_block_files(stage)
-    store.commit(snap, v, new_files, snap.files, dvs=merged)
+    done = store.commit(snap, new_files, snap.files, dvs=merged)
     return {
-        "version": v,
+        "version": done.version,
         "mode": "mor",
         "updated": n_hit,
         "dv_rows_total": sum(len(p) for p in merged.values()),
@@ -420,12 +419,12 @@ def merge_mor(
         rep["mode"] = "cow_fallback"
         return rep
     merged, n_matched = got
-    v, stage = store.stage_next()
+    stage = store.stage()
     MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(updates, stage)
     new_files = list_block_files(stage)
-    store.commit(snap, v, new_files, snap.files, dvs=merged)
+    done = store.commit(snap, new_files, snap.files, dvs=merged)
     return {
-        "version": v,
+        "version": done.version,
         "mode": "mor",
         "update_rows": n_rows,
         "update_keys": len(counts),
@@ -471,12 +470,12 @@ def _update_cow(
     _check_assignments(snap, assignments, "update_where_cow")
     pred = _pred_of(predicate)
     touched, carried, n_blocks = _triage(snap, pred, "cow_update", blooms)
-    v, stage = store.stage_next()
     new_files: list[str] = []
     updated = 0
     if touched:
         from pyspark.sql import Observation
 
+        stage = store.stage()
         # the rewrite counts the updated rows: no separate count job
         observed = Observation()
         cond = _cond(predicate)
@@ -501,9 +500,9 @@ def _update_cow(
         )
         updated = observed.get["updated"]
         new_files = list_block_files(stage)
-    store.commit(snap, v, new_files, carried)
+    done = store.commit(snap, new_files, carried)
     return {
-        "version": v,
+        "version": done.version,
         "updated": updated,
         "blocks_total": n_blocks,
         "files_rewritten": len(touched),
@@ -576,7 +575,7 @@ def _merge_cow(
             }
         pred = InList(key, tuple(keys))
     touched, carried, n_blocks = _triage(snap, pred, "cow_merge", blooms)
-    v, stage = store.stage_next()
+    stage = store.stage()
     if touched:
         # reconciled read: touched blocks may predate a metadata-only
         # add_column — missing columns surface as typed NULL, exactly
@@ -589,9 +588,9 @@ def _merge_cow(
         out = updates
     MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(out, stage)
     new_files = list_block_files(stage)
-    store.commit(snap, v, new_files, carried)
+    done = store.commit(snap, new_files, carried)
     return {
-        "version": v,
+        "version": done.version,
         "update_rows": n_rows,
         "update_keys": n_keys,
         "blocks_total": n_blocks,
@@ -624,10 +623,10 @@ def _append(spark, store, snap, df, block_rows) -> dict:
         new_files, carried = done.files, ()
     else:
         df = _cast_to_manifest(snap, df, "append_cow", all_columns=False)
-        v, stage = store.stage_next()
+        stage = store.stage()
         MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(df, stage)
         new_files, carried = list_block_files(stage), snap.files
-        done = store.commit(snap, v, new_files, carried)
+        done = store.commit(snap, new_files, carried)
     return {
         "version": done.version,
         "appended_rows": done.live_rows(new_files),
@@ -650,10 +649,10 @@ def compact_manifest(
     appends leave 10k undersized files whose per-file open/footer/task
     overhead dominates scans). WITHOUT ``sort_by`` the compaction is
     itself copy-on-write: only the undersized blocks are coalesced and
-    rewritten, full blocks are carried by reference. The swap is the
-    head-log commit, so a crash mid-compaction leaves the previous
-    version current and orphan files for ``vacuum``; re-running
-    compacts. Row counts come from the version's zone-map records, so
+    rewritten, full blocks are carried by reference. The swap is one
+    manifest commit, so a crash before its publish leaves the previous
+    version current and orphan files (staged blocks, perhaps a temp
+    manifest) for ``vacuum``; re-running compacts. Row counts come from the version's zone-map records, so
     deciding what to compact reads no footer. Block ids change with the
     manifest, so an index over the table must be re-taken from the new
     version (``MicroBlockEngine.compact_manifest`` does).
@@ -702,9 +701,9 @@ def compact_manifest(
                 "blocks_after": len(files),
             }
         touched, carried = small, [f for f in files if f not in set(small)]
-    v, stage = store.stage_next()
     new_files: list[str] = []
     if touched:
+        stage = store.stage()
         df = snap.read(spark, touched)
         n_expect = sum(rows_of[f] - dv_rows[f] for f in touched)
         n_parts = max(1, sum(rows_of.values()) // block_rows)
@@ -726,10 +725,10 @@ def compact_manifest(
                 f"compact_manifest: rewrite lost rows ({n_got} != {n_expect});"
                 " nothing committed — previous version remains current"
             )
-    store.commit(snap, v, new_files, carried)
+    done = store.commit(snap, new_files, carried)
     return {
         "compacted": True,
-        "version": v,
+        "version": done.version,
         "blocks_before": len(files),
         "blocks_after": len(new_files) + len(carried),
         "files_rewritten": len(touched),
@@ -818,8 +817,8 @@ def init_manifest_table(
 
 
 def _replace(spark, store, base, df, block_rows) -> Snapshot:
-    v, stage = store.stage_next()
+    stage = store.stage()
     MicroBlockWriter(block_rows or DEFAULT_BLOCK_ROWS).write(df, stage)
     return store.commit(
-        base, v, list_block_files(stage), [], schema_json=df.schema.json()
+        base, list_block_files(stage), [], schema_json=df.schema.json()
     )

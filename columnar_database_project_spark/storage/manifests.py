@@ -8,19 +8,20 @@ each version as a MANIFEST (an explicit list of immutable block
 files), so a copy-on-write op writes only the blocks it changes and
 carries every untouched block BY REFERENCE into the next manifest —
 zero IO for the unchanged 99%. This is the core Iceberg/Delta design
-(snapshot = manifest of data files; commit = atomic pointer swap),
-scaled down to a single JSON per version.
+(snapshot = manifest of data files), scaled down to a single JSON per
+version.
 
 Layout:
 
-    <root>/data/c<version>/part-*.parquet   immutable block files,
-                                            grouped by the commit that
-                                            created them
+    <root>/data/c*/part-*.parquet           immutable block files, one
+                                            fresh directory per writer
+                                            (``stage``)
     <root>/_manifests/m<version>.json       {"version", "files"
                                             (root-relative), "schema",
-                                            "blocks"}
-    <root>/_manifest.json                   {"versions": [...]} head
-                                            log, atomic os.replace swap
+                                            "dvs", "blocks"}
+
+The ``_manifests/`` listing is the head: the committed versions are
+its ``m<version>.json`` files, the latest the highest.
 
 ``blocks`` maps each named file to its zone-map records (one per row
 group: row count and per-column min / max / null count, the
@@ -32,17 +33,18 @@ when a commit first names its file. The zone-map index of a version
 (``MicroBlockIndex.for_version``), the DML triage and the compaction
 debt read these records, not the files.
 
-An operation reads one ``Snapshot`` (``snapshot()``: the head log and
-one manifest, parsed once) and commits against it. Concurrency story:
-a commit whose base is no longer the head fails (``CommitConflict``),
-as does a second commit of one version number. The check catches a
-commit that landed before it ran; it is not atomic with the head swap,
-so two commits whose check→swap windows overlap can still race.
+Concurrency story: an operation reads one ``Snapshot`` (one listing
+and one manifest, parsed once), stages its new files in a directory of
+its own and commits version ``base.version + 1``: it writes the whole
+manifest to a temp file (a name no version matches) and hard-links it
+to ``m<version>.json``. The link is put-if-absent, as Delta's create of
+``_delta_log/N.json`` is, so commit order is version order; when
+another writer committed first, the link fails and ``CommitConflict``
+publishes nothing. There is no rebase: the loser re-runs.
 
-Crash story: a crash mid-write leaves data files and possibly an
-m*.json that the head log never names — invisible to readers,
-reclaimed by ``vacuum``. Readers resolve head log → manifest → files;
-never directory listings.
+Crash story: a crash before the link leaves staged files and maybe a
+temp manifest that no version names — invisible to readers, reclaimed
+by ``vacuum``. Readers resolve listing → manifest → files.
 
 ``vacuum`` is reference-counted: a block file created by commit 3 may
 be referenced by manifests 3..9, so files are deleted only when NO
@@ -55,7 +57,10 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import shutil
+import tempfile
+import time
 from dataclasses import dataclass
 from typing import TYPE_CHECKING, Iterable
 
@@ -214,56 +219,55 @@ class Snapshot:
         )
 
 
-class ManifestStore:
-    """Commit log over file-list manifests."""
+# A committed version's manifest; temp manifests never match it.
+MANIFEST = re.compile(r"m(\d{6,})\.json")
 
-    HEAD = "_manifest.json"
+
+class ManifestStore:
+    """Commit log over file-list manifests: the ``_manifests/`` listing
+    is the head."""
 
     def __init__(self, root: str) -> None:
         self.root = root
-        os.makedirs(os.path.join(root, "_manifests"), exist_ok=True)
+        self._mdir = os.path.join(root, "_manifests")
+        os.makedirs(self._mdir, exist_ok=True)
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
 
-    # ------------------------------------------------------------- head log
-    def _head_path(self) -> str:
-        return os.path.join(self.root, self.HEAD)
-
+    # ------------------------------------------------------------ manifests
     def versions(self) -> list[int]:
-        try:
-            with open(self._head_path()) as fh:
-                return sorted(json.load(fh)["versions"])
-        except (OSError, ValueError, KeyError):
-            return []
+        return sorted(
+            int(m.group(1))
+            for m in map(MANIFEST.fullmatch, os.listdir(self._mdir))
+            if m
+        )
 
     def latest(self) -> int | None:
         vs = self.versions()
         return vs[-1] if vs else None
 
-    def _write_head(self, versions: list[int]) -> None:
-        tmp = self._head_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"versions": sorted(versions)}, fh)
-        os.replace(tmp, self._head_path())
-
-    # ------------------------------------------------------------ manifests
     def _manifest_path(self, version: int) -> str:
-        return os.path.join(self.root, "_manifests", f"m{version:06d}.json")
+        return os.path.join(self._mdir, f"m{version:06d}.json")
+
+    def _doc(self, version: int) -> dict:
+        """The stored manifest of committed ``version``; ``ValueError``
+        when there is none."""
+        try:
+            with open(self._manifest_path(version)) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            raise ValueError(f"version {version!r} not committed") from None
 
     def _load(self, version: int) -> Snapshot:
-        with open(self._manifest_path(version)) as fh:
-            return Snapshot._parse(self.root, json.load(fh))
+        return Snapshot._parse(self.root, self._doc(version))
 
     def snapshot(self, version: int | None = None) -> Snapshot | None:
         """The committed ``version`` (default: the head) as a
-        ``Snapshot``: one head-log read and one manifest read. ``None``
-        when the head is asked of an empty store."""
-        vs = self.versions()
+        ``Snapshot``: one manifest read, after one listing for the
+        head. ``None`` when the head is asked of an empty store."""
         if version is None:
-            if not vs:
+            version = self.latest()
+            if version is None:
                 return None
-            version = vs[-1]
-        elif version not in vs:
-            raise ValueError(f"version {version!r} not committed")
         return self._load(version)
 
     def files_for(self, version: int | None = None) -> list[str]:
@@ -275,42 +279,48 @@ class ManifestStore:
         return list(snap.files)
 
     # -------------------------------------------------------------- writes
-    def stage_next(self) -> tuple[int, str]:
-        """(version, data dir) for the files a new commit will CREATE.
-        Carried-over files are named in the manifest, not copied.
-        The dir is NOT yet committed — invisible to readers until
-        ``commit``. Numbering continues past rollbacks, so a new write
-        never lands in a dir a rolled-back version still names."""
-        staged = [
-            int(d[1:])
-            for d in os.listdir(os.path.join(self.root, "data"))
-            if d.startswith("c") and d[1:].isdigit()
-        ]
-        logged = [
-            int(f[1:7])
-            for f in os.listdir(os.path.join(self.root, "_manifests"))
-            if f.startswith("m") and f[1:7].isdigit()
-        ]
-        v = max(staged + logged, default=0) + 1
-        return v, os.path.join(self.root, "data", f"c{v:06d}")
+    def stage(self) -> str:
+        """A fresh data directory, this writer's alone, for the files a
+        commit will CREATE; invisible to readers until a commit names
+        them. Its name starts with its creation time, so a later
+        writer's files sort after an earlier one's, as block ids (file
+        order) expect."""
+        return tempfile.mkdtemp(
+            prefix=f"c{time.time_ns():020d}-", dir=os.path.join(self.root, "data")
+        )
+
+    def _publish(self, doc: dict) -> Snapshot:
+        """Commit ``doc`` as its version: the link of a fully written
+        temp manifest to ``m<version>.json`` is the commit point, and
+        fails when that exists (``CommitConflict``: nothing published)."""
+        fd, tmp = tempfile.mkstemp(prefix=".m", suffix=".tmp", dir=self._mdir)
+        with os.fdopen(fd, "w") as fh:
+            json.dump(doc, fh)
+        try:
+            os.link(tmp, self._manifest_path(doc["version"]))
+        except FileExistsError:
+            os.unlink(tmp)
+            raise CommitConflict(
+                f"commit: v{doc['version']} was committed by another writer; "
+                "nothing committed"
+            ) from None
+        os.unlink(tmp)
+        return Snapshot._parse(self.root, doc)
 
     def commit(
         self,
         base: Snapshot | None,
-        version: int,
         new_files: list[str],
         carried_files: Iterable[str],
         *,
         schema_json: str | None = None,
         dvs: dict | None = None,
     ) -> Snapshot:
-        """Publish ``version`` = carried (root-relative or absolute
-        under root) + new files on top of ``base``, the snapshot the
-        operation read (``None`` for an empty store); return the
-        committed snapshot. ``CommitConflict`` if the head is no longer
-        ``base``. Manifest first, head-log swap second — a crash
-        between the two leaves an unreferenced manifest, never a
-        dangling head entry.
+        """Publish carried (root-relative or absolute under root) + new
+        files as the version after ``base``, the snapshot the operation
+        read (``None`` for an empty store: version 1); return the
+        committed snapshot. ``CommitConflict`` if that version exists,
+        i.e. the head is no longer ``base``.
 
         ``base`` supplies the schema (unless ``schema_json`` is given),
         the named files' zone-map records (a new file's footer is read)
@@ -347,7 +357,7 @@ class ManifestStore:
             by_base[b] = f
         # a path listed twice (e.g. carried and re-passed) is ONE file
         doc = {
-            "version": version,
+            "version": base.version + 1 if base else 1,
             "files": sorted(set(rel)),
             "schema": schema_json,
         }
@@ -373,20 +383,7 @@ class ManifestStore:
         for f in doc["files"]:
             path = os.path.join(self.root, f)
             doc["blocks"][f] = known[path] if path in known else footer_records(path)
-        # base check after the footer reads: next to the head swap
-        vs = self.versions()
-        if version in vs:
-            raise ValueError(f"commit: v{version} already committed")
-        head = vs[-1] if vs else None
-        if head != (base.version if base else None):
-            raise CommitConflict(
-                f"commit: v{version} read v{base.version if base else None} "
-                f"but the head is v{head}; nothing committed"
-            )
-        with open(self._manifest_path(version), "w") as fh:
-            json.dump(doc, fh)
-        self._write_head(vs + [version])
-        return Snapshot._parse(self.root, doc)
+        return self._publish(doc)
 
     # --------------------------------------------------------------- reads
     def read(self, spark: "SparkSession", version: int | None = None) -> "DataFrame":
@@ -426,9 +423,8 @@ class ManifestStore:
         parsed = T.StructType.fromDDL(f"`{name}` {ddl_type}")
         new_field = T.StructField(name, parsed.fields[0].dataType, True)
         new_schema = T.StructType(schema.fields + [new_field])
-        v, _stage = self.stage_next()
-        self.commit(snap, v, [], snap.files, schema_json=new_schema.json())
-        return {"version": v, "column": name, "type": ddl_type}
+        done = self.commit(snap, [], snap.files, schema_json=new_schema.json())
+        return {"version": done.version, "column": name, "type": ddl_type}
 
     # --------------------------------------------------------- observability
     def history(self) -> list[dict]:
@@ -455,22 +451,28 @@ class ManifestStore:
         return out
 
     # ----------------------------------------------------------- retention
-    def rollback(self, version: int) -> None:
-        vs = self.versions()
-        if version not in vs:
-            raise ValueError(f"rollback: v{version} is not committed")
-        self._write_head([v for v in vs if v <= version])
+    def rollback(self, version: int) -> Snapshot:
+        """Delta ``RESTORE``: commit ``version``'s files, schema,
+        deletion vectors and zone-map records, as stored, as the
+        version after the head. No footer is read and no version
+        is removed, so the versions in between still time-travel.
+        ``ValueError`` if ``version`` is not committed."""
+        return self._publish({**self._doc(version), "version": self.latest() + 1})
 
     def vacuum(self, keep_last: int = 1, dry_run: bool = False) -> dict:
         """Reference-counted retention: keep the last ``keep_last``
-        committed versions, then delete (a) manifests of dropped or
-        never-committed versions and (b) data files NO surviving
-        manifest references (a commit dir left with none goes whole,
-        sidecars included). Returns {"versions_removed",
-        "files_removed"}.
+        committed versions, then delete (a) the manifests below them,
+        oldest first, (b) temp manifests a crashed or failed commit
+        left and (c) data files NO surviving manifest references (a
+        commit dir left with none goes whole, sidecars included).
+        Returns {"versions_removed", "files_removed"}; the temp
+        manifests are listed as files. A version committed while it
+        runs is above the kept window, so it survives; the files an
+        in-flight writer has staged do not (one writer per table while
+        vacuum runs).
 
-        ``dry_run=True`` reports the same plan without touching head
-        log, manifests or files — the pre-flight every retention job at
+        ``dry_run=True`` reports the same plan without touching
+        manifests or files — the pre-flight every retention job at
         scale runs before an irreversible delete."""
         vs = self.versions()
         keep = vs[-keep_last:] if keep_last > 0 else []
@@ -479,11 +481,11 @@ class ManifestStore:
             referenced.update(
                 os.path.relpath(f, self.root) for f in self._load(v).files
             )
-        mdir = os.path.join(self.root, "_manifests")
-        stale = [
-            f
-            for f in sorted(os.listdir(mdir))
-            if f.startswith("m") and f[1:7].isdigit() and int(f[1:7]) not in keep
+        dropped = vs[: len(vs) - len(keep)]
+        temps = [
+            os.path.join("_manifests", f)
+            for f in sorted(os.listdir(self._mdir))
+            if not MANIFEST.fullmatch(f)
         ]
         files_removed: list[str] = []
         dirs_emptied: list[str] = []
@@ -499,16 +501,12 @@ class ManifestStore:
             files_removed += [f for f in data if f not in referenced]
             if not referenced.intersection(data):
                 dirs_emptied.append(cdir)
-        report = {
-            "versions_removed": [int(f[1:7]) for f in stale],
-            "files_removed": files_removed,
-        }
+        report = {"versions_removed": dropped, "files_removed": temps + files_removed}
         if dry_run:
             return {**report, "dry_run": True}
-        self._write_head(keep)
-        for f in stale:
-            os.unlink(os.path.join(mdir, f))
-        for f in files_removed:
+        for v in dropped:
+            os.unlink(self._manifest_path(v))
+        for f in report["files_removed"]:
             os.unlink(os.path.join(self.root, f))
         for cdir in dirs_emptied:
             shutil.rmtree(os.path.join(ddir, cdir))

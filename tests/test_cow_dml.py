@@ -20,7 +20,10 @@ from columnar_database_project_spark.storage.cow import (
     merge_cow,
     update_where_cow,
 )
-from columnar_database_project_spark.storage.manifests import ManifestStore
+from columnar_database_project_spark.storage.manifests import (
+    CommitConflict,
+    ManifestStore,
+)
 from dml_model import COLS, KEY, DuckModel, sorted_state, states_equal
 
 SEED = 0xC01D
@@ -556,18 +559,21 @@ class TestZorderCompaction:
         assert hit_b < nb
 
     def test_commit_conflict_is_detected(self, spark, orders_df, tmp_path_factory):
-        """Optimistic concurrency at the head log: two writers staging
-        the same next version — the second commit fails loudly instead
-        of silently clobbering (single-writer is the documented
-        contract; this is the guard that makes violating it safe)."""
+        """Optimistic concurrency at the manifest link: two writers
+        committing on the same base — the second commit fails loudly
+        instead of silently clobbering, and publishes nothing."""
         store = ManifestStore(str(tmp_path_factory.mktemp("cow_occ")))
         init_manifest_table(spark, store, orders_df.limit(10), block_rows=512)
         base = store.snapshot()
         files = store.files_for()
-        v, _ = store.stage_next()
-        store.commit(base, v, [], files)  # writer A wins
-        with pytest.raises(ValueError, match="already committed"):
-            store.commit(base, v, [], files)  # writer B must fail
+        won = store.commit(base, [], files)  # writer A wins
+        with pytest.raises(CommitConflict, match="another writer"):
+            store.commit(base, [], files)  # writer B must fail
+        assert store.versions() == [base.version, won.version]
+        # the loser's temp manifest is gone with it
+        assert sorted(os.listdir(os.path.join(store.root, "_manifests"))) == [
+            "m000001.json", "m000002.json"
+        ]
 
 
 class TestRegisterManifest:
@@ -980,9 +986,9 @@ class TestVacuumDryRunAndRollbackParity:
     def test_rollback_restores_model_state(
         self, spark, orders_df, tmp_path_factory
     ):
-        """Rollback is a head-log truncation: after a DELETE, an UPDATE
-        and a rollback to the DELETE's version, the table reads the
-        DuckDB model's state as of that DELETE."""
+        """Rollback commits an old version anew: after a DELETE, an
+        UPDATE and a rollback to the DELETE's version, the table reads
+        the DuckDB model's state as of that DELETE."""
         model = DuckModel(orders_df.toPandas())
         mstore = ManifestStore(str(tmp_path_factory.mktemp("rb")))
         init_manifest_table(

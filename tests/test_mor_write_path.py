@@ -146,7 +146,7 @@ class TestDvReadsMatchModel:
         path.parent.mkdir(parents=True)
         pq.write_table(pa.Table.from_pandas(_orders(6000), preserve_index=False), path)
         schema = spark.read.parquet(str(path)).schema.json()
-        store.commit(None, 1, [str(path)], [], schema_json=schema)
+        store.commit(None, [str(path)], [], schema_json=schema)
         model = DuckModel(_orders(6000))
         for pred in (f"{KEY} < 10", f"{KEY} BETWEEN 1000 AND 5999"):
             rep = delete_where_mor(spark, store, pred)

@@ -710,9 +710,9 @@ def test_engine_update_versioned_chain(spark, tmp_path):
 def test_snapshot_store_dml_chain_time_travel_rollback(spark, tmp_path):
     """ManifestStore lifecycle over chained DML: versions accrue, time
     travel reads any committed version, an orphan staged data dir is
-    invisible, reading an uncommitted version raises, rollback is
-    head-log-only (data files stay), numbering continues past a
-    rollback, and vacuum reclaims."""
+    invisible, reading an uncommitted version raises, rollback commits
+    the old version anew (data files stay, later versions still time
+    travel), every staged dir is fresh, and vacuum reclaims."""
     from columnar_database_project_spark.engine import MicroBlockEngine
 
     eng = MicroBlockEngine(spark)
@@ -735,32 +735,32 @@ def test_snapshot_store_dml_chain_time_travel_rollback(spark, tmp_path):
     v2 = {r["id"]: r["s"] for r in eng.time_travel_cow("vt", store, 2).collect()}
     assert v2 == {1: "a", 2: "B", 3: "c", 4: "d"}
     # orphan staged data dir (crash mid-write) is never resolved
-    v_orphan, orphan = store.stage_next()
-    assert orphan == os.path.join(store.root, "data", f"c{v_orphan:06d}")
-    os.makedirs(orphan)
+    orphan = store.stage()
+    assert os.path.dirname(orphan) == os.path.join(store.root, "data")
+    assert os.path.isdir(orphan)
     assert store.latest() == 3
     with pytest.raises(ValueError):
-        store.read(spark, v_orphan)
-    # rollback: head-log truncation, v3's data files retained
+        store.read(spark, 4)
+    # rollback: a new version v4 with v2's files; v3 and its files stay
     v3_files = store.files_for(3)
-    store.rollback(2)
-    assert store.versions() == [1, 2]
-    assert {r["id"] for r in eng.time_travel_cow("vt", store).collect()} == {
-        1, 2, 3, 4,
-    }
+    v3_rows = {r["id"] for r in eng.time_travel_cow("vt", store, 3).collect()}
+    restored = store.rollback(2)
+    assert restored.version == 4 and store.versions() == [1, 2, 3, 4]
+    assert store.files_for() == store.files_for(2)
+    assert {r["id"]: r["s"] for r in eng.time_travel_cow("vt", store).collect()} == v2
     assert v3_files and all(os.path.exists(f) for f in v3_files)
-    with pytest.raises(ValueError):
-        store.read(spark, 3)
-    # numbering never reuses a rolled-back or orphaned dir
-    v_next, _ = store.stage_next()
-    assert v_next == v_orphan + 1
+    assert {
+        r["id"] for r in eng.time_travel_cow("vt", store, 3).collect()
+    } == v3_rows == {2, 3, 4}
+    # a staged dir is never one another writer holds
+    assert store.stage() != orphan
     # vacuum keeps only the last committed version's files
     rep = store.vacuum(keep_last=1)
-    assert rep["versions_removed"] == [1, 3]
+    assert rep["versions_removed"] == [1, 2, 3]
     assert not os.path.exists(orphan)
     assert store.read(spark).count() == 4
-    # keep_last=0 empties the head log and the files together — a head
-    # entry must never name a deleted file
+    # keep_last=0 empties the manifests and the files together — a
+    # manifest must never name a deleted file
     store.vacuum(keep_last=0)
     assert store.versions() == [] and store.latest() is None
 

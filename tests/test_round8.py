@@ -182,7 +182,7 @@ class TestCommitBasenameGuard:
         dupe = os.path.join(dupe_dir, os.path.basename(files[0]))
         shutil.copyfile(files[0], dupe)
         with pytest.raises(ValueError, match="basename collision"):
-            store.commit(store.snapshot(), store.latest() + 1, [dupe], files)
+            store.commit(store.snapshot(), [dupe], files)
 
     def test_same_file_carried_once_is_fine(self, spark, tmp_path_factory):
         # the guard must not fire on a legitimately re-listed path
@@ -191,7 +191,7 @@ class TestCommitBasenameGuard:
         pdf = pd.DataFrame({"k": [1, 2, 3]})
         init_manifest_table(spark, store, spark.createDataFrame(pdf))
         files = store.files_for()
-        store.commit(store.snapshot(), store.latest() + 1, [], files + files)
+        store.commit(store.snapshot(), [], files + files)
         assert store.read(spark).count() == 3
 
 

@@ -90,7 +90,7 @@ def main() -> int:
     name = sys.argv[2] if len(sys.argv) > 2 else "mytable"
     spark = get_spark("sql-shell")
     mstore = None
-    if os.path.isfile(os.path.join(path, "_manifest.json")):
+    if os.path.isdir(os.path.join(path, "_manifests")):
         # a ManifestStore root: register the live snapshot + index
         from columnar_database_project_spark.engine import MicroBlockEngine
         from columnar_database_project_spark.storage.manifests import (
