@@ -14,7 +14,9 @@ the observability + caching + prefetch layer:
 - ``AccessLogger`` + ``GlobalHistory``: which blocks each query touched
   (reference access_logger.py:29-58) — the training-data tap.
 - ``BlockCache``: LRU of per-block DataFrames whose rows ``read_block``
-  already loaded into the driver (reference block_cache.py:5-44).
+  already loaded into the driver, and of prefetched blocks held as
+  pyarrow Tables until their first hit plans the DataFrame (reference
+  block_cache.py:5-44).
 - ``PrefetchService``: background predictor loop (reference
   prefetch_service.py:35-96).
 
@@ -51,7 +53,7 @@ class MicroBlockEngine:
     spark : the session.
     table_dir : directory of ``<name>.parquet`` tables to register.
     index : optional MicroBlockIndex for pruning prediction / logging.
-    cache : optional BlockCache (LRU over driver-resident block DataFrames).
+    cache : optional BlockCache (LRU over driver-resident blocks).
     logger : optional AccessLogger (JSONL access log).
     history : optional GlobalHistory (rolling deque of block ids).
     """

@@ -2,23 +2,26 @@
 
 Re-expresses reference prefetch.py:19-43 and prefetch_service.py:35-96
 in Spark terms: "prefetch block" = read the block into the driver with
-``read_block`` (one row group through pyarrow) and put it into the
-BlockCache. A load is just that read: it runs no Spark job, so
-prefetching cannot starve foreground queries of executor slots (the
-reference's daemon thread shares everything unsynchronized — SURVEY
-§2.5.6; here the cache is locked).
+``read_block_table`` (one row group through pyarrow) and put it into
+the BlockCache as a ``Pending`` entry, the block's pyarrow Table. The
+cache plans the block's DataFrame on its first hit, so a prefetched
+block evicted unread costs only its read. A load is just that read: it
+makes no Spark call, so prefetching cannot starve foreground queries
+of executor slots (the reference's daemon thread shares everything
+unsynchronized — SURVEY §2.5.6; here the cache is locked).
 """
 
 from __future__ import annotations
 
 import threading
 import time
+from functools import partial
 
 from columnar_database_project_spark.ml.scheduler import PrefetchScheduler
 from columnar_database_project_spark.sources import microblock
 from columnar_database_project_spark.sources.index import MicroBlockIndex
 from columnar_database_project_spark.storage.access_logger import GlobalHistory
-from columnar_database_project_spark.storage.block_cache import BlockCache
+from columnar_database_project_spark.storage.block_cache import BlockCache, Pending
 
 
 class _Ewma:
@@ -45,6 +48,11 @@ class PrefetchEconomics:
     projects the net benefit of the NEXT prefetch:
 
         projected = precision × (miss_sec − hit_sec) − read_sec
+
+    ``read_sec`` is the pyarrow read a prefetch makes
+    (``Prefetcher.prefetch_many``); the DataFrame of a prefetched block
+    is planned on its first hit, so that cost is charged to the
+    foreground access that hits it (``hit_sec``).
 
     ``None`` until ``warmup_issues`` prefetches have been observed
     (no evidence, no verdict). The service consults this before every
@@ -127,16 +135,18 @@ class Prefetcher:
 
     def prefetch_many(self, block_ids: list[int]) -> list[int]:
         """Read and put, in the given order, the blocks that are neither
-        cached nor unknown; return their ids in that order."""
+        cached nor unknown; return their ids in that order. Each is put
+        as a ``Pending`` Table whose DataFrame the cache plans on its
+        first hit."""
         loaded: list[int] = []
         for b in block_ids:
             if b in loaded or self.cache.contains(b):
                 continue
             try:
-                df = microblock.read_block(self.spark, self.index, b)
+                table, schema = microblock.read_block_table(self.index, b)
             except KeyError:   # not a block of this index
                 continue
-            self.cache.put(b, df)
+            self.cache.put(b, Pending(partial(microblock.block_frame, self.spark, table, schema)))
             loaded.append(b)
         return loaded
 

@@ -158,6 +158,19 @@ def _footer_bounds(stats) -> tuple[Any, Any]:
         )
 
 
+def list_block_files(path: str) -> list[str]:
+    """The data files of one Spark-written directory (sorted; crc /
+    _SUCCESS / hidden sidecars excluded)."""
+    out = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    if not out:
+        out = sorted(
+            p
+            for p in glob.glob(os.path.join(path, "part-*"))
+            if not p.endswith((".crc", "_SUCCESS"))
+        )
+    return out
+
+
 def footer_records(path: str) -> list[dict]:
     """Zone-map records of one Parquet block file, one per row group:
     ``{"rows": n, "columns": [{"name", "min", "max", "null_count",
@@ -280,16 +293,7 @@ class MicroBlockIndex:
         (stripe/row-index stats, asserted in
         tests/test_plan_verify.py::TestOrcPushdown).
         """
-        files = sorted(glob.glob(os.path.join(path, "*.parquet"))) if os.path.isdir(
-            path
-        ) else [path]
-        if os.path.isdir(path) and not files:
-            # spark-written directory: part-*.parquet (no extension filter miss)
-            files = sorted(
-                p
-                for p in glob.glob(os.path.join(path, "part-*"))
-                if not p.endswith((".crc", "_SUCCESS"))
-            )
+        files = list_block_files(path) if os.path.isdir(path) else [path]
         return cls.build_from_files(files, table_id=table_id)
 
     @classmethod

@@ -94,7 +94,15 @@ _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 def read_block(spark: SparkSession, index: MicroBlockIndex, block_id: int) -> DataFrame:
     """Load exactly one block into the driver and return it as a
     one-partition DataFrame (reference query_enginev5.py:278-282 reads
-    it with ``pf.read_row_group``).
+    it with ``pf.read_row_group``): ``read_block_table`` and then
+    ``block_frame``. Raises ``KeyError`` for an id the index does not
+    have."""
+    return block_frame(spark, *read_block_table(index, block_id))
+
+
+def read_block_table(index: MicroBlockIndex, block_id: int) -> tuple[pa.Table, T.StructType]:
+    """One block as a pyarrow Table and the Spark schema to serve it
+    with. Runs no Spark call.
 
     A Parquet block is one row group, read with pyarrow; an ORC block is
     its whole file (``pyarrow.orc``). The rows of the index's deletion
@@ -107,14 +115,7 @@ def read_block(spark: SparkSession, index: MicroBlockIndex, block_id: int) -> Da
     metadata-only ``add_column``) as typed nulls. Otherwise it is the
     one Spark wrote into the footer when there is one, else the Arrow
     schema's. Every column is nullable, as Spark's own reader makes it.
-
-    The DataFrame is planned over the block's Arrow IPC batches, held
-    in the driver; the plan itself holds no rows. Building it runs no
-    job, the DataFrame no longer needs its file, and each consume
-    decodes the batches inside its task. ``coalesce(1)`` keeps a consumer from
-    splitting the small block into one task per batch, and from adding
-    an Exchange for the scan's unknown partitioning. Raises
-    ``KeyError`` for an id the index does not have."""
+    Raises ``KeyError`` for an id the index does not have."""
     key = index.block_key(block_id)
     if key is None:
         raise KeyError(block_id)
@@ -155,6 +156,18 @@ def read_block(spark: SparkSession, index: MicroBlockIndex, block_id: int) -> Da
     schema = T.StructType(
         [T.StructField(f.name, f.dataType, True, f.metadata) for f in schema]
     )
+    return table, schema
+
+
+def block_frame(spark: SparkSession, table: pa.Table, schema: T.StructType) -> DataFrame:
+    """The one-partition DataFrame of a ``read_block_table`` result.
+
+    The DataFrame is planned over the block's Arrow IPC batches, held
+    in the driver; the plan itself holds no rows. Building it runs no
+    job, the DataFrame no longer needs its file, and each consume
+    decodes the batches inside its task. ``coalesce(1)`` keeps a consumer from
+    splitting the small block into one task per batch, and from adding
+    an Exchange for the scan's unknown partitioning."""
     # A LocalRelation holds every row in the plan, and each analyzer and
     # optimizer pass over a query on it walks them. Spark plans a scan of
     # the Arrow batches instead (a LogicalRDD that holds none) when their

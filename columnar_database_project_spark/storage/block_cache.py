@@ -1,31 +1,48 @@
 """BlockCache — locked LRU over per-block values.
 
 Re-expresses the reference's ``BlockCache`` (OrderedDict LRU of
-block_id → Arrow table, reference block_cache.py:5-63). The cached
-value is what ``sources/microblock.read_block`` returns: a small
+block_id → Arrow table, reference block_cache.py:5-63). A demand read
+caches what ``sources/microblock.read_block`` returns: a small
 DataFrame over the block's Arrow IPC batches, which pyarrow already
-read into the driver, so a hit re-reads no file, and neither ``put``
-nor eviction runs a Spark job: eviction just drops the reference.
-Cached blocks therefore live in driver memory (capacity × block bytes;
-see DEPLOY.md).
+read into the driver, so a hit re-reads no file. A prefetch caches a
+``Pending`` entry instead, the block's pyarrow Table from
+``read_block_table``, as the reference's prefetch caches the
+``read_row_group`` table; ``get`` plans its DataFrame on the first hit
+and keeps that in the entry's place, so a prefetched block evicted
+unread never costs a DataFrame. Neither ``put``, a first hit nor
+eviction runs a Spark job: eviction just drops the reference. Cached
+blocks therefore live in driver memory (capacity × block bytes; see
+DEPLOY.md).
 
 Deliberate fix over the reference: all mutation happens under a lock —
 the reference shares its cache between the query path and the prefetch
 daemon thread with no synchronization (reference
 prefetch_service.py:49 + query_enginev5.py:266-276; SURVEY §2.5.6).
+A pending entry is built under that lock too, so it is built once
+however many threads hit it.
 """
 
 from __future__ import annotations
 
 import threading
 from collections import OrderedDict
-from typing import Any
+from typing import Any, Callable
 
 DEFAULT_CAPACITY = 64  # reference block_cache.py:13
 
 
+class Pending:
+    """A cache value ``get`` builds on its first hit: ``build()``
+    returns the value that replaces the entry."""
+
+    __slots__ = ("build",)
+
+    def __init__(self, build: Callable[[], Any]) -> None:
+        self.build = build
+
+
 class BlockCache:
-    """LRU: block_id → block DataFrame (or any value).
+    """LRU: block_id → block DataFrame, ``Pending`` block (or any value).
 
     ``stats()`` matches the reference's surface (block_cache.py:58-63)
     plus hit/miss/eviction counters.
@@ -41,12 +58,16 @@ class BlockCache:
 
     # -------------------------------------------------------------- core
     def get(self, block_id: int) -> Any | None:
-        """Fetch + promote to MRU (reference block_cache.py:17-25)."""
+        """Fetch + promote to MRU (reference block_cache.py:17-25). A
+        ``Pending`` entry is built, and replaced by what it built."""
         with self._lock:
             if block_id in self._entries:
                 self._entries.move_to_end(block_id)
                 self.hits += 1
-                return self._entries[block_id]
+                value = self._entries[block_id]
+                if isinstance(value, Pending):
+                    value = self._entries[block_id] = value.build()
+                return value
             self.misses += 1
             return None
 

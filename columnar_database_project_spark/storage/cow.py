@@ -39,7 +39,7 @@ from columnar_database_project_spark.plans.predicate import (
     TruePred,
 )
 from columnar_database_project_spark.plans.sql_where import parse_conjuncts
-from columnar_database_project_spark.sources.index import MicroBlockIndex
+from columnar_database_project_spark.sources.index import MicroBlockIndex, list_block_files
 from columnar_database_project_spark.sources.microblock import (
     DEFAULT_BLOCK_ROWS,
     MicroBlockWriter,
@@ -49,7 +49,6 @@ from columnar_database_project_spark.sources.microblock import (
 from columnar_database_project_spark.storage.manifests import (
     ManifestStore,
     Snapshot,
-    list_block_files,
     read_with_schema,
     spark_file_name,
 )

@@ -54,7 +54,6 @@ cannot express.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
@@ -103,19 +102,6 @@ def spark_file_name(path: str) -> str:
 def _sql_str(s: str) -> str:
     """``s`` as a Spark SQL string literal."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def list_block_files(path: str) -> list[str]:
-    """The data files of one Spark-written directory (sorted; crc /
-    _SUCCESS / hidden sidecars excluded)."""
-    out = sorted(glob.glob(os.path.join(path, "*.parquet")))
-    if not out:
-        out = sorted(
-            p
-            for p in glob.glob(os.path.join(path, "part-*"))
-            if not p.endswith((".crc", "_SUCCESS"))
-        )
-    return out
 
 
 class CommitConflict(RuntimeError):

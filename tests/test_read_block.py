@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from columnar_database_project_spark.catalog import load_table
 from columnar_database_project_spark.engine import MicroBlockEngine
+from columnar_database_project_spark.ml.prefetch import Prefetcher
 from columnar_database_project_spark.sources.index import MicroBlockIndex
 from columnar_database_project_spark.sources.microblock import MicroBlockWriter, read_block
 from columnar_database_project_spark.storage.block_cache import BlockCache
@@ -34,6 +35,21 @@ SELECT id AS k,
        CAST(NULL AS INT) AS n
 FROM range(40)
 """
+
+
+@pytest.fixture
+def frames(spark):
+    """One entry per ``spark.createDataFrame`` call made meanwhile."""
+    made = []
+    real = spark.createDataFrame
+
+    def counting(*args, **kwargs):
+        made.append(1)
+        return real(*args, **kwargs)
+
+    spark.createDataFrame = counting
+    yield made
+    del spark.createDataFrame
 
 
 def _rows(df) -> list:
@@ -233,29 +249,53 @@ class TestArrowBatchRelation:
         read_block(spark, idx, 0)
         assert "LocalRelation" in _analyzed(spark.createDataFrame(pd.DataFrame({"a": [1, 2]})))
 
-    def test_concurrent_reads(self, spark, idx):
-        """Threads racing on the session conf: every block is still an
-        Arrow-batch relation with pyarrow's checksums, and the conf is
-        restored (an unlocked set/restore can leave it at 0)."""
+    def test_concurrent_reads(self, spark, idx, frames):
+        """Threads racing on the session conf and on one cache: reads,
+        prefetches and gets of each block. Every block is still an
+        Arrow-batch relation with pyarrow's checksums, each prefetched
+        block is planned once however many gets race for it, and the
+        conf is restored (an unlocked set/restore can leave it at 0)."""
         import sys
+        import time
         from concurrent.futures import ThreadPoolExecutor
 
-        def sums(b):
-            df = read_block(spark, idx, b)
+        ids = list(range(idx.num_blocks))
+        cache = BlockCache(capacity=len(ids))
+        pf = Prefetcher(spark, idx, cache)
+
+        def sums(df):
             row = df.agg(F.count(F.lit(1)), F.sum("k")).first()
             return "LocalRelation" in _analyzed(df), tuple(row)
 
+        def got(b):
+            # the block's prefetch is queued ahead of this task; None
+            # after the deadline fails the checks below instead of hanging
+            deadline = time.monotonic() + 60
+            while (df := cache.get(b)) is None and time.monotonic() < deadline:
+                time.sleep(0.001)
+            return df
+
         before = spark.conf.get(_THRESHOLD, None)
-        ids = list(range(idx.num_blocks))
         interval = sys.getswitchinterval()
         sys.setswitchinterval(1e-6)
         try:
             with ThreadPoolExecutor(8) as pool:
-                got = [f.result(timeout=120) for f in [pool.submit(sums, b) for b in ids]]
+                tasks = [
+                    (pool.submit(lambda b=b: sums(read_block(spark, idx, b))),
+                     pool.submit(pf.prefetch_many, [b]),
+                     pool.submit(got, b), pool.submit(got, b))
+                    for b in ids
+                ]
+                done = [tuple(f.result(timeout=120) for f in t) for t in tasks]
         finally:
             sys.setswitchinterval(interval)
         path = idx.block_file(0)
-        assert got == [(False, _masked_sums(path, b, 100 * b, set())) for b in ids]
+        want = [(False, _masked_sums(path, b, 100 * b, set())) for b in ids]
+        assert [read for read, *_ in done] == want
+        assert [loaded for _, loaded, *_ in done] == [[b] for b in ids]
+        assert all(first is second for *_, first, second in done)
+        assert [sums(first) for *_, first, _ in done] == want
+        assert len(frames) == 2 * len(ids)      # one per read, one per prefetched block
         assert spark.conf.get(_THRESHOLD, None) == before
 
     def test_block_with_every_row_deleted(self, spark, tmp_path):
@@ -277,3 +317,67 @@ class TestArrowBatchRelation:
                 row = df.agg(F.count(F.lit(1)), F.sum("k")).first()
                 assert tuple(row) == (0, None)
         assert sorted(counts) == [0, 25, 25, 25]
+
+
+class TestPrefetchPending:
+    """``Prefetcher.prefetch_many`` caches a block's pyarrow Table; the
+    cache plans its DataFrame on the first hit, once, and never for a
+    block evicted unread."""
+
+    @pytest.fixture(scope="class")
+    def idx(self, spark, tmp_path_factory):
+        path = str(tmp_path_factory.mktemp("pending") / "rg.parquet")
+        pq.write_table(pa.table({"k": list(range(600))}), path, row_group_size=100)
+        return MicroBlockIndex.build_from_files([path])
+
+    def test_prefetch_plans_no_frame(self, spark, idx, frames):
+        cache = BlockCache(capacity=idx.num_blocks)
+        assert Prefetcher(spark, idx, cache).prefetch_many(list(range(6))) == list(range(6))
+        assert frames == []
+        assert cache.cached_ids() == list(range(6))
+
+    def test_second_get_returns_the_first_frame(self, spark, idx, frames):
+        cache = BlockCache(capacity=idx.num_blocks)
+        Prefetcher(spark, idx, cache).prefetch_many([2])
+        df = cache.get(2)
+        assert cache.get(2) is df
+        assert len(frames) == 1
+        assert tuple(df.agg(F.count(F.lit(1)), F.sum("k")).first()) == \
+            _masked_sums(idx.block_file(2), 2, 200, set())
+        assert cache.hits == 2 and cache.misses == 0
+
+    def test_block_evicted_unread_is_never_planned(self, spark, idx, frames):
+        cache = BlockCache(capacity=2)
+        assert Prefetcher(spark, idx, cache).prefetch_many([0, 1, 2, 3]) == [0, 1, 2, 3]
+        assert cache.cached_ids() == [2, 3] and cache.evictions == 2
+        assert cache.get(0) is None and cache.get(1) is None
+        assert frames == []
+        assert cache.get(3) is not None
+        assert len(frames) == 1
+
+    def test_first_get_serves_the_version(self, spark, tmp_path, frames):
+        """A prefetched block of a ``for_version`` index with deletion
+        vectors and an ``add_column`` column: its first hit has the
+        version's schema and pyarrow's row count and checksums."""
+        store = ManifestStore(str(tmp_path / "m"))
+        init_manifest_table(spark, store, spark.range(100).withColumnRenamed("id", "k")
+                            .coalesce(1), block_rows=25)
+        rep = delete_where_mor(spark, store, "k % 10 = 3")
+        assert rep["mode"] == "mor" and rep["deleted"] == 10
+        store.add_column("note", "string")
+        eng = MicroBlockEngine(spark)
+        eng.register_manifest("evolved", store)
+        idx = eng.index
+        assert idx.num_blocks == 4 and idx.dvs
+        schema = store.snapshot().read(spark).schema
+        cache = BlockCache(capacity=4)
+        Prefetcher(spark, idx, cache).prefetch_many(list(range(4)))
+        frames.clear()
+        for b in range(4):
+            df = cache.get(b)
+            assert df.schema == schema and df.columns == ["k", "note"]
+            path, rg = idx.block_key(b)
+            assert rg == 0                       # one row group per file
+            row = df.agg(F.count(F.lit(1)), F.sum("k"), F.count("note")).first()
+            assert tuple(row) == (*_masked_sums(path, 0, 0, set(idx.dvs[path])), 0)
+        assert len(frames) == 4

@@ -8,7 +8,7 @@ from columnar_database_project_spark.storage.access_logger import (
     AccessLogger,
     GlobalHistory,
 )
-from columnar_database_project_spark.storage.block_cache import BlockCache
+from columnar_database_project_spark.storage.block_cache import BlockCache, Pending
 
 
 class TestBlockCache:
@@ -49,6 +49,17 @@ class TestBlockCache:
         assert new.storageLevel.useMemory
         assert not old.storageLevel.useMemory
         new.unpersist()
+
+    def test_pending_is_built_on_its_first_hit(self):
+        c = BlockCache(capacity=4)
+        built = []
+        c.put(1, Pending(lambda: built.append(1) or "frame"))
+        c.put(2, len)                             # a callable value is just a value
+        assert built == []
+        assert c.get(1) == "frame" and c.get(1) == "frame"
+        assert built == [1]
+        assert c.get(2) is len
+        assert c.hits == 3 and c.misses == 0
 
     def test_stats_surface(self):
         c = BlockCache(capacity=4)
