@@ -26,7 +26,8 @@ from __future__ import annotations
 
 import threading
 from collections import OrderedDict
-from typing import Any, Callable
+from collections.abc import Callable
+from typing import Any
 
 DEFAULT_CAPACITY = 64  # reference block_cache.py:13
 
